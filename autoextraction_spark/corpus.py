@@ -180,11 +180,12 @@ def doc_skeleton(
     # wave structure at scale (the cap reproduces the r5 big-run layout
     # exactly) while a small corpus runs one wave of full-size tasks.
     par = spark.sparkContext.defaultParallelism
-    est_docs = _estimate_doc_count(spark, sf_dir) * max(int(replicate), 1)
+    est_docs = _estimate_doc_count(spark, sf_dir)
     cap = max(par * int(waves_per_core), 16)
     if est_docs is None:
         n_parts = cap
     else:
+        est_docs *= max(int(replicate), 1)
         n_parts = min(cap, max(par, 16, -(-est_docs // _MIN_DOCS_PER_TASK)))
     if replicate > 1:
         # shift derives from the DATA (max id + 1), so replicas can never

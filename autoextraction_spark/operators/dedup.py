@@ -522,7 +522,9 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, simhash bigint) — 64-bit SimHash over whitespace tokens.
 
     Per token a portable 60-bit hash contributes ±1 to each bit position;
-    the sign vector packs back into a bigint.
+    the sign vector packs back into a bigint. ``text_col`` names a
+    top-level column literally: it is backtick-quoted into the SQL
+    expression, so dotted names and SQL keywords are safe.
 
     ZERO-SHUFFLE (r6, guide §2.4): the whole signature is one higher-order
     aggregate over the per-row token array — no explode, no groupBy(id)
@@ -535,8 +537,9 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     scale) so the per-token md5s never run serially above a 1-task scan.
     """
     df = spread_input(df)
+    quoted = "`" + text_col.replace("`", "``") + "`"
     hashes = (
-        f"transform(split({text_col}, ' '), t -> "
+        f"transform(split({quoted}, ' '), t -> "
         f"cast(conv(substring(md5(concat(t, '#simhash')), 1, 15), 16, 10) as bigint))"
     )
     counters = (

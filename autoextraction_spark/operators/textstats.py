@@ -578,80 +578,61 @@ def winnow_fingerprints(
     Output: one row per distinct selection (id, pos, fp) — pos the
     1-based gram position, fp the portable 60-bit hash — i.e. the posting
     table a fingerprint index is built from; expected density ~2/(w+1).
+    A text shorter than k (including ``""``) is one whole-string gram and
+    one selection at pos 1; a NULL text has no grams and emits no rows.
+    ``id_col`` must be a key: rows sharing an id are winnowed as one
+    document.
 
-    Scale shape: everything up to the final distinct is per-row array
-    expressions (no explode until selections, which are ~13% of grams at
-    w=15); the distinct is the only shuffle and carries (id, pos, fp)
-    triples, never text. The gram-hash array is MATERIALIZED as its own
-    projection before the window pass — left inline, Spark re-evaluates
-    the whole md5 chain for every window element. The per-window minimum
-    is a SPARSE-TABLE DOUBLING (the range-min-query classic): L =
-    floor(log2 w) zip_with passes build m_j[i] = rightmost-min of
-    [i, i+2^j), and each window combines TWO anchors — O(len·log w)
-    array-element ops instead of the naive per-window slice's O(len·w·5)
-    (higher-order functions evaluate interpreted, so constant factors
-    bite: the rewrite took the sf0.1 wall from 41 s to the few-second
-    band with byte-identical output; tie-rightmost is preserved because
-    the right anchor covers the window's suffix and wins ties at every
-    combine).
+    Scale shape: one exchange, hash-partitioning (id, normalized text) by
+    id into ``spark.sql.shuffle.partitions`` parts, so the shuffle carries
+    text (~1 byte per char), never per-gram rows. Above it are plain
+    whole-stage-codegen operators and two window passes over that same
+    partitioning (no second exchange, no higher-order function): gram
+    positions are exploded, each gram is hashed in codegen, and each
+    window's rightmost minimum is ``min(struct(fp, -pos))`` over the w-row
+    frame starting at the gram (the struct order makes the larger pos win
+    fp ties; Spark truncates trailing frames at the document end). Only
+    windows starting at pos ≤ max(n-w+1, 1) are kept. Under rightmost-min
+    the selected position never decreases as the window slides, so
+    repeated selections are adjacent and a ``lag`` filter replaces a
+    ``distinct`` shuffle.
     """
-    df = spread_input(df)
-    from .dedup import char_shingles, portable_hash64
+    from pyspark.sql import Window
 
-    # normalize in its OWN projection: passed inline, the lower/regexp
-    # composite lands inside the shingle lambda and interpreted HOF
-    # evaluation re-runs the full-text regex PER GRAM — O(len^2) regex
-    # work (measured: ~2/3 of the original 41 s sf0.1 wall)
-    norm = df.select(
-        F.col(id_col).alias("id"),
-        F.lower(F.regexp_replace(F.col(text_col), "\\s+", " ")).alias("nt"),
+    from .dedup import portable_hash64
+
+    # a fixed partition count: AQE would coalesce a by-column repartition
+    # by its text bytes, but every text byte fans out into a gram row of
+    # md5 + window work after the exchange (measured at 500 docs on 4
+    # cores: coalesced to 2 tasks, 15% slower than the 8 configured)
+    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    grams = (
+        df.filter(F.col(text_col).isNotNull())
+        .select(
+            F.col(id_col).alias("id"),
+            F.lower(F.regexp_replace(F.col(text_col), "\\s+", " ")).alias("nt"),
+        )
+        .repartition(n_parts, "id")
+        .withColumn("n", F.greatest(F.length("nt") - (k - 1), F.lit(1)))
+        .select("id", "nt", "n", F.explode(F.sequence(F.lit(1), F.col("n"))).alias("pos"))
+        .select(
+            "id",
+            "n",
+            F.col("pos").cast("long").alias("pos"),
+            portable_hash64(F.substring("nt", F.col("pos"), k), seed="#winnow").alias("fp"),
+        )
     )
-    hdf = norm.select(
-        "id",
-        F.transform(
-            char_shingles(F.col("nt"), k),
-            lambda g: portable_hash64(g, seed="#winnow"),
-        ).alias("hs"),
-    )
-
-    def pick(a, b):
-        # rightmost-min combine: the RIGHT operand covers later positions,
-        # so it wins ties; null b (zip_with padding past the array end)
-        # keeps a
-        return F.when(b.isNull() | (b["fp"] > a["fp"]), a).otherwise(b)
-
-    # m0[i] = (pos=i (1-based), fp=hs[i])
-    m = F.zip_with(
-        F.col("hs"),
-        F.sequence(F.lit(1), F.size(F.col("hs"))),
-        lambda v, j: F.struct(j.cast("long").alias("pos"), v.alias("fp")),
-    )
-    levels = 0
-    p = 1
-    while p * 2 <= w:
-        # m_{j+1} = zip_with(m_j, m_j shifted left by 2^j, pick); the
-        # shifted side is shorter, zip_with pads it with nulls, and pick
-        # keeps the unshifted entry there (truncated trailing windows)
-        m = F.zip_with(m, F.slice(m, p + 1, F.size(m)), pick)
-        levels += 1
-        p *= 2
-    mdf = hdf.select("id", F.size(F.col("hs")).alias("n"), m.alias("m"))
-
-    def _win(i):
-        # window [i, e] with e = min(i+w-1, n); anchors i and e-p+1 (the
-        # suffix block) cover it; get() is 0-based and null-safe
-        e = F.least(i + F.lit(w - 1), F.col("n"))
-        bi = F.greatest(e - F.lit(p - 1), i)
-        return pick(F.get(F.col("m"), i - 1), F.get(F.col("m"), bi - 1))
-
-    wins = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.col("n") - (w - 1), F.lit(1))),
-        _win,
+    by_pos = Window.partitionBy("id").orderBy("pos")
+    sel = F.min(F.struct(F.col("fp"), (-F.col("pos")).alias("neg_pos")))
+    wins = (
+        grams.withColumn("s", sel.over(by_pos.rowsBetween(0, w - 1)))
+        .filter(F.col("pos") <= F.greatest(F.col("n") - (w - 1), F.lit(1)))
+        .select("id", "pos", (-F.col("s.neg_pos")).alias("sel_pos"), F.col("s.fp").alias("sel_fp"))
     )
     return (
-        mdf.select("id", F.explode(wins).alias("s"))
-        .select("id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
-        .distinct()
+        wins.withColumn("prev", F.lag("sel_pos").over(by_pos))
+        .filter(~F.col("prev").eqNullSafe(F.col("sel_pos")))
+        .select("id", F.col("sel_pos").alias("pos"), F.col("sel_fp").alias("fp"))
     )
 
 
@@ -849,10 +830,10 @@ def cdc_chunks(
     this oracle checks).
 
     Scale shape: boundary selection is pure per-row codegen over array
-    expressions (the gram-hash array materialized ONCE per row, same rule
-    as winnow_fingerprints); the chunk explode is map-local (no shuffle
-    anywhere); text never leaves its partition — only (id, idx, start,
-    len, hash64) rows are emitted.
+    expressions (the gram-hash array materialized ONCE per row, so the md5
+    chain is not re-evaluated per array access); the chunk explode is
+    map-local (no shuffle anywhere); text never leaves its partition —
+    only (id, idx, start, len, hash64) rows are emitted.
     """
     df = spread_input(df)
     from .dedup import char_shingles, portable_hash64

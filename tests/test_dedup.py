@@ -70,6 +70,16 @@ def test_simhash_near_dups(dup_docs):
     assert (1, 4) not in pairs
 
 
+@pytest.mark.parametrize("name", ["body.text", "select", "we`ird"])
+def test_simhash_column_name_is_quoted(dup_docs, name):
+    """A dotted, keyword or backtick-bearing text column is read as that
+    literal column, with the same signatures as under a plain name."""
+    want = {r.id: r.simhash for r in dedup.simhash64(dup_docs, "doc_id", "text").collect()}
+    renamed = dup_docs.withColumnRenamed("text", name)
+    got = {r.id: r.simhash for r in dedup.simhash64(renamed, "doc_id", name).collect()}
+    assert got == want
+
+
 def test_prefix_filter_join_is_exact(spark):
     # the prefix-filter inverted index must find EVERY pair with J >= t —
     # cross-check against brute-force all-pairs on a pseudo-random corpus

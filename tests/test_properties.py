@@ -408,18 +408,18 @@ def test_full_sweep_artifact_matches_queries():
     rotated-out query could ride along unnoticed) must exist, must cover
     EXACTLY the current ``queries()`` surface, and must be all-green.
     Regenerate with ``python scripts/check_oracle.py --json-out
-    CORRECTNESS_full_r5.json`` after adding or changing a query."""
+    CORRECTNESS_full_r6.json`` after adding or changing a query."""
     import json
     import os
 
     import __spark_entry__ as entrymod
 
     path = os.path.join(
-        os.path.dirname(__file__), "..", "CORRECTNESS_full_r5.json"
+        os.path.dirname(__file__), "..", "CORRECTNESS_full_r6.json"
     )
     assert os.path.exists(path), (
-        "CORRECTNESS_full_r5.json missing — run scripts/check_oracle.py "
-        "--json-out CORRECTNESS_full_r5.json at HEAD and commit it"
+        "CORRECTNESS_full_r6.json missing — run scripts/check_oracle.py "
+        "--json-out CORRECTNESS_full_r6.json at HEAD and commit it"
     )
     with open(path) as fh:
         artifact = json.load(fh)

@@ -206,3 +206,17 @@ def test_skeleton_gate_matches_detect_relations(spark, sf_dir):
     fused = slot_fill.episodes_from_skeleton(corpus.doc_skeleton(spark, sf_dir))
     got = {(r.url, r.rel) for r in fused.select("url", "rel").distinct().collect()}
     assert got == gate
+
+
+def test_doc_skeleton_unsizeable_path_falls_back_to_wave_cap(spark, sf_dir):
+    """A skeleton path the filesystem cannot size (here a glob, which
+    Spark reads but getContentSummary does not resolve) takes the fixed
+    wave cap as its partition count, replicated or not."""
+    from autoextraction_spark import corpus
+
+    glob_dir = f"{sf_dir[:-1]}[{sf_dir[-1]}]"
+    assert corpus._estimate_doc_count(spark, glob_dir) is None
+    cap = max(spark.sparkContext.defaultParallelism * 4, 16)
+    for replicate in (1, 2):
+        skel = corpus.doc_skeleton(spark, glob_dir, replicate=replicate)
+        assert skel.rdd.getNumPartitions() == cap

@@ -318,6 +318,65 @@ def test_winnow_shared_substring_guarantee(spark):
     assert out.count() == out.distinct().count()
 
 
+WINNOW_TEXTS = [
+    "",  # one whole-string gram
+    "abc",  # shorter than k
+    "abcdefghijklm",  # shorter than w + k - 1 at (8, 15): one window
+    "a" * 40,  # all grams tie: rightmost-tie rule
+    "ab" * 30,  # two alternating gram hashes
+    "x \t\t\n  y\n\n\nz   \t w " * 4,  # whitespace runs collapse
+    "王伟任职于华信集团。" * 4,  # multi-byte chars
+    "The Quick  brown\tFOX jumps over the lazy dog " * 3,
+]
+
+
+@pytest.mark.parametrize("k,w", [(8, 15), (4, 7), (3, 1), (5, 2)])
+def test_winnow_matches_oracle_on_edge_texts(spark, k, w):
+    """The window-pass winnowing equals the DuckDB oracle's per-window
+    list_min definition on short, tied, periodic, whitespace-heavy and
+    CJK texts."""
+    import duckdb
+    import pandas as pd
+
+    from autoextraction_spark import oracle
+
+    rows = list(enumerate(WINNOW_TEXTS, start=1))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r.id, r.pos, r.fp)
+        for r in textstats.winnow_fingerprints(df, k=k, w=w).collect()
+    )
+    con = duckdb.connect()
+    documents = pd.DataFrame(rows, columns=["doc_id", "text"])
+    con.register("documents", documents)
+    want = sorted(map(tuple, con.sql(oracle.winnow_sql(k, w)).fetchall()))
+    assert got == want
+
+
+def test_winnow_null_text_emits_no_rows(spark):
+    """NULL text has no grams and no selections; "" is one whole-string
+    gram selected at pos 1."""
+    df = spark.createDataFrame([(1, None), (2, "")], "doc_id long, text string")
+    got = [tuple(r) for r in textstats.winnow_fingerprints(df).collect()]
+    empty_fp = int(hashlib.md5(b"#winnow").hexdigest()[:15], 16)
+    assert got == [(2, 1, empty_fp)]
+
+
+def test_winnow_plan_is_one_exchange_without_lambdas(spark):
+    """Winnowing runs as plain operators: no higher-order-function lambda
+    anywhere in the plan, and the id hash-partitioning is its only
+    exchange (no distinct shuffle, no window re-partition)."""
+    df = spark.createDataFrame(
+        [(1, "some text here"), (2, "other text")], "doc_id long, text string"
+    )
+    qe = textstats.winnow_fingerprints(df)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    physical = qe.executedPlan().toString()
+    assert "lambdafunction" not in optimized.lower()
+    assert physical.count("Exchange ") == 1, physical
+    assert "Exchange hashpartitioning(id" in physical
+
+
 def test_tfidf_keywords_rare_term_outranks_common(spark):
     from autoextraction_spark.operators.textstats import tfidf_keywords
 
