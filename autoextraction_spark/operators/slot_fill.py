@@ -6,31 +6,27 @@ every candidate mention for the chosen slot FORKS the state
 (Environment.py:186-224 ``step``: dedup at :198, fork loop :200-214), up to
 20 rounds (predict.py:86), until no slots remain.
 
-Spark-first design, two physical strategies for the same logical operator:
+Spark-first design: the episode is a pure function of a single row
+(text, rel, lang) — no step of it ever needs data from another row — so the
+whole bounded fork recursion runs inside ONE Arrow-vectorized
+``mapInPandas`` pass and emits the completed typed states
+``(url, rel, [text,] lang, assigned map<string,string>, remaining
+array<string>, score double, step int)`` directly. One narrow map stage
+over (pages × gated relations): zero shuffles, zero per-round lineage or
+checkpoint barriers, and the (large) text column crosses the Arrow
+boundary once instead of once per round.
 
-**fused (default)** — the episode is a pure function of a single row
-(text, rel, lang): no step of it ever needs data from another row, so the
-whole bounded fork recursion runs inside ONE Arrow-vectorized ``mapInPandas``
-pass and emits the completed typed states directly. At 100 TB this is the
-plan you want: one narrow map stage over (pages × gated relations) — zero
-shuffles, zero per-round lineage/checkpoint barriers, and the (large) text
-column crosses the Arrow boundary exactly once instead of once per round.
-This removed the round-1 bottleneck where the upstream generation →
-extraction → detection chain was recomputed per arity group (6.7× the
-recorded kg_triples baseline under the driver's cold run).
+One episode engine (``_episode_frame``), two entry points:
 
-**rounds** — the driver-orchestrated loop over a typed state DataFrame
-``(url, rel, text, lang, assigned map<string,string>, remaining
-array<string>, score double, step int)``: each iteration is one
-struct-returning ``mapInPandas`` pass {Q-score remaining slots → argmax
-ensemble → extract → score2prob → null fallback} followed by a shuffle-free
-``explode`` fork, with DISK_ONLY ``localCheckpoint`` barriers cutting
-lineage. Kept for unbounded/unknown schemas (per-round termination checks)
-and as the cross-check implementation — ``tests/test_slot_fill.py`` asserts
-fused ≡ rounds on every policy.
+- ``episodes_from_skeleton`` — stages A-C from the (doc_id, lang)
+  skeleton in one hop (the queries' path);
+- ``ordered_slot_fill`` — detected (url, rel, text, lang) rows, as emitted
+  by ``detect.detect_relations`` (pipeline, streaming, event queries).
 
-Both strategies bound loop depth by the max slot count (≤ ~6, cap 20 =
-reference episode cap DQN.py:21/predict.py:86).
+Loop depth is bounded by the max slot count (≤ ~6, cap 20 = reference
+episode cap DQN.py:21/predict.py:86). ``tests/test_slot_fill.py`` checks
+the engine against a plain depth-first recursion over
+``scorers.step_state`` on every policy.
 """
 
 from __future__ import annotations
@@ -39,8 +35,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .. import scorers
 from .. import schema as S
@@ -49,14 +43,6 @@ MAX_STEPS = 20  # reference episode cap, DQN.py:21 / predict.py:86
 
 STATE_COLS = ["url", "rel", "text", "lang", "assigned", "remaining", "score", "step"]
 
-_STEP_SCHEMA = (
-    "url string, rel string, text string, lang string, "
-    "assigned map<string,string>, "
-    "remaining array<string>, score double, step int, chosen string, "
-    "reward double, mentions array<string>, probs array<double>, "
-    "scores array<double>"
-)
-
 
 def initial_remaining(rel: str, lang: str) -> list[str]:
     """Slot schema per relation/event type (Environment.py:64-85,402-405)."""
@@ -64,41 +50,6 @@ def initial_remaining(rel: str, lang: str) -> list[str]:
         return list(S.EVENTS[rel]["roles"])
     return list(S.ZH_SLOTS) if lang == "zh" else list(S.EN_SLOTS)
 
-
-def initial_states(detected: DataFrame) -> DataFrame:
-    """Seed one state per gated (url, rel): empty cond, full slot schema.
-
-    Mirrors Environment.py:371-376 ``reset_with_input``; the slot schema is
-    the fixed two-slot relational schema per language
-    (Environment.py:402-405).
-    """
-    remaining = None
-    for etype, ev in S.EVENTS.items():
-        branch = F.when(
-            F.col("rel") == etype, F.array(*[F.lit(r) for r in ev["roles"]])
-        )
-        remaining = branch if remaining is None else remaining.when(
-            F.col("rel") == etype, F.array(*[F.lit(r) for r in ev["roles"]])
-        )
-    remaining = remaining.when(
-        F.col("lang") == "zh", F.array(*[F.lit(s) for s in S.ZH_SLOTS])
-    ).otherwise(F.array(*[F.lit(s) for s in S.EN_SLOTS]))
-    empty_map = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-    return detected.select(
-        "url",
-        "rel",
-        "text",
-        "lang",
-        empty_map.alias("assigned"),
-        remaining.alias("remaining"),
-        F.lit(0.0).alias("score"),
-        F.lit(0).alias("step"),
-    )
-
-
-# --------------------------------------------------------------- fused path
 
 def _episode_schema(carry_text: bool) -> str:
     cols = ["url string", "rel string"]
@@ -123,7 +74,7 @@ def _episode_frame(
 ) -> pd.DataFrame:
     """Run every (url, rel, text, lang) episode of one Arrow batch to
     completion and return the completed typed states as one DataFrame —
-    the shared wave engine behind ``fused_slot_fill`` and
+    the shared wave engine behind ``ordered_slot_fill`` and
     ``episodes_from_skeleton`` (one interior, two physical entry points)."""
     out: dict[str, list] = {c: [] for c in STATE_COLS}
     # per-row sets of already-emitted assignments (dedup_assignments):
@@ -260,7 +211,7 @@ def episodes_from_skeleton(
     ``mapInPandas`` over the (doc_id, lang) skeleton.
 
     The two-hop layout (corpus.web_pages python pass → JVM detect gate →
-    fused_slot_fill python pass) crosses the JVM↔python boundary twice per
+    ordered_slot_fill python pass) crosses the JVM↔python boundary twice per
     task and re-serializes the corpus text through Arrow in between. Every
     decision in between (the anchor gate) is a per-row pure function, so the
     whole chain is row-local — one python stage, the text NEVER crosses
@@ -269,7 +220,7 @@ def episodes_from_skeleton(
     task wall vs 8 ms CPU at sf0.1 — the boundary dominated).
 
     Output is byte-identical to
-    ``fused_slot_fill(detect_relations(web_pages(...)), carry_text=False)``:
+    ``ordered_slot_fill(detect_relations(web_pages(...)), carry_text=False)``:
     the gate replicates the anchor-presence predicate and the episode
     interior is the shared ``_episode_frame``. Cross-checked in
     tests/test_slot_fill.py."""
@@ -279,7 +230,7 @@ def episodes_from_skeleton(
     )
 
 
-def fused_slot_fill(
+def ordered_slot_fill(
     detected: DataFrame,
     policy: str = "rl",
     max_steps: int = MAX_STEPS,
@@ -307,184 +258,3 @@ def fused_slot_fill(
         _episode_batches(policy, max_steps, carry_text, dedup_assignments),
         schema=_episode_schema(carry_text),
     )
-
-
-# -------------------------------------------------------------- rounds path
-
-def _step_batches(policy: str):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            chosen, reward, mentions, probs, scores = [], [], [], [], []
-            for text, rel, lang, assigned_in, remaining in zip(
-                pdf["text"], pdf["rel"], pdf["lang"], pdf["assigned"], pdf["remaining"]
-            ):
-                if len(remaining) == 0:  # already complete: pass through
-                    chosen.append("")
-                    reward.append(0.0)
-                    mentions.append([""])
-                    probs.append([0.0])
-                    scores.append([0.0])
-                    continue
-                # Arrow MapType arrives as dict (or list of kv tuples on
-                # older conversions) — no JSON round-trip (round-1 wart)
-                assigned = assigned_in if isinstance(assigned_in, dict) else dict(assigned_in)
-                slot, cands, rw = scorers.step_state(
-                    text, rel, lang, assigned, list(remaining), policy
-                )
-                chosen.append(slot)
-                reward.append(rw)
-                mentions.append([c[0] for c in cands])
-                probs.append([c[1] for c in cands])
-                scores.append([c[2] for c in cands])
-            out = pdf.copy()
-            out["chosen"] = chosen
-            out["reward"] = reward
-            out["mentions"] = mentions
-            out["probs"] = probs
-            out["scores"] = scores
-            yield out
-
-    return run
-
-
-def fork_step(live: DataFrame, policy: str = "rl") -> DataFrame:
-    """One loop iteration: score → choose → extract → fork. Shuffle-free."""
-    stepped = live.mapInPandas(_step_batches(policy), schema=_STEP_SCHEMA)
-    cand = F.explode(
-        F.arrays_zip(F.col("mentions"), F.col("probs"), F.col("scores"))
-    ).alias("cand")
-    done = F.col("chosen") == ""
-    assigned_map = F.col("assigned")
-    return (
-        stepped.select("*", cand)
-        .select(
-            "url",
-            "rel",
-            "text",
-            "lang",
-            F.when(done, assigned_map)
-            .otherwise(
-                F.map_concat(
-                    assigned_map,
-                    F.create_map(F.col("chosen"), F.col("cand.mentions")),
-                )
-            )
-            .alias("assigned"),
-            F.when(done, F.col("remaining"))
-            .otherwise(F.array_remove("remaining", F.col("chosen")))
-            .alias("remaining"),
-            (F.col("score") + F.col("cand.scores")).alias("score"),
-            F.when(done, F.col("step")).otherwise(F.col("step") + 1).alias("step"),
-        )
-    )
-
-
-def _run_fixed(
-    detected: DataFrame, k: int, policy: str, checkpoint: bool, max_steps: int
-) -> DataFrame:
-    """Exactly-k fork rounds (uniform-arity episodes complete at depth k).
-
-    A DISK_ONLY materialization barrier separates consecutive Arrow stages
-    (chained python stages in one task pipeline poorly — per-batch socket
-    hops multiply); the LAST round chains straight into the consumer, which
-    reads it once.
-    """
-    states = initial_states(detected)
-    rounds = min(k, max_steps)
-    for i in range(rounds):
-        states = fork_step(states, policy)
-        if checkpoint and i < rounds - 1:
-            states = states.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
-    return states
-
-
-def rounds_slot_fill(
-    detected: DataFrame,
-    policy: str = "rl",
-    max_steps: int = MAX_STEPS,
-    checkpoint: bool = True,
-    n_slots: int | None = None,
-) -> DataFrame:
-    """Driver-orchestrated round loop; returns completed states.
-
-    ``n_slots``: every episode completes at exactly its schema arity (states
-    whose slots are exhausted pass through later rounds unchanged), so a
-    fixed ``max-arity`` round count needs NO per-iteration isEmpty action.
-    Defaults to arity-grouped fixed rounds (relations run 2, 3-role events
-    run 3, results union); pass 0 to force the general fixpoint loop with
-    per-round termination checks (unbounded/unknown schemas).
-    """
-    if n_slots is None:
-        # Group episodes by schema arity so a mixed corpus never pays
-        # max-arity passes for low-arity states: relations run 2 rounds,
-        # 3-role events run 3, results union. Each group's round count is
-        # static -> zero per-iteration driver actions.
-        groups: dict[int, list[str]] = {}
-        for rel, _, _ in S.RELATIONS:
-            groups.setdefault(2, []).append(rel)
-        for etype, ev in S.EVENTS.items():
-            groups.setdefault(len(ev["roles"]), []).append(etype)
-        if len(groups) > 1 and checkpoint:
-            # materialize the gate output ONCE: each arity group re-reads the
-            # checkpoint instead of re-running the (expensive) generation →
-            # text-extraction → detection upstream per group (the round-1
-            # scale bug flagged in VERDICT.md).
-            detected = detected.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
-        out: DataFrame | None = None
-        for k, rels in sorted(groups.items()):
-            subset = detected.filter(F.col("rel").isin(rels))
-            done = _run_fixed(subset, k, policy, checkpoint, max_steps)
-            out = done if out is None else out.unionByName(done)
-        assert out is not None
-        return out
-    if n_slots > 0:
-        return _run_fixed(detected, n_slots, policy, checkpoint, max_steps)
-    states = initial_states(detected)
-    completed: DataFrame | None = None
-    for _ in range(max_steps):
-        live = states.filter(F.size("remaining") > 0)
-        done = states.filter(F.size("remaining") == 0)
-        completed = done if completed is None else completed.unionByName(done)
-        if live.isEmpty():
-            break
-        states = fork_step(live, policy)
-        if checkpoint:
-            # DISK_ONLY: repeated/loop checkpoints must not accumulate on the
-            # heap — at scale the state table exceeds executor memory and
-            # MEMORY_AND_DISK eviction thrashes GC
-            states = states.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
-    assert completed is not None
-    return completed
-
-
-def ordered_slot_fill(
-    detected: DataFrame,
-    policy: str = "rl",
-    max_steps: int = MAX_STEPS,
-    checkpoint: bool = True,
-    n_slots: int | None = None,
-    mode: str = "fused",
-    carry_text: bool = True,
-    dedup_assignments: bool = False,
-) -> DataFrame:
-    """Run episodes to completion; returns completed states (remaining = []).
-
-    ``mode='fused'`` (default) runs the whole bounded episode inside one
-    Arrow pass (see module docstring); ``mode='rounds'`` is the per-round
-    DataFrame loop. Identical output by construction — cross-checked in
-    tests — because both call the same pure ``scorers.step_state``.
-    ``dedup_assignments`` (fused only): see ``fused_slot_fill``.
-    """
-    if mode == "fused" and n_slots is None:
-        return fused_slot_fill(
-            detected, policy, max_steps, carry_text, dedup_assignments
-        )
-    if dedup_assignments:
-        raise ValueError("dedup_assignments requires mode='fused'")
-    return rounds_slot_fill(detected, policy, max_steps, checkpoint, n_slots)

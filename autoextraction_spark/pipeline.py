@@ -17,10 +17,12 @@ used before any per-host grouped stage: salt → partial agg → final agg.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import time
+from importlib import resources
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -161,6 +163,26 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), on)
 
 
+def _digest_tree(node, h, prefix: str = "") -> None:
+    for child in sorted(node.iterdir(), key=lambda c: c.name):
+        path = f"{prefix}/{child.name}"
+        if child.is_dir():
+            _digest_tree(child, h, path)
+        elif child.name.endswith(".py"):
+            h.update(path.encode() + b"\0" + child.read_bytes())
+
+
+@functools.cache
+def _source_digest() -> str:
+    """Digest of every ``.py`` source of this package, computed once per
+    process — the code-version component of ``KgPipeline._fingerprint``.
+    Read through ``importlib.resources`` so a ``--py-files`` zip digests
+    the same as the source tree it was built from."""
+    h = hashlib.md5()
+    _digest_tree(resources.files(__package__), h)
+    return h.hexdigest()
+
+
 class KgPipeline:
     """Stages A-F with checkpoint/resume + manifest metrics."""
 
@@ -179,17 +201,18 @@ class KgPipeline:
         return os.path.join(self.workdir, f"manifest_{stage}.json")
 
     def _fingerprint(self, stage: str, upstream_fp: str) -> str:
-        """Config fingerprint: stage + sf_dir + policy + the UPSTREAM stage's
-        fingerprint, so a config change invalidates everything downstream."""
+        """Config fingerprint: stage + sf_dir + policy + package source
+        digest + the UPSTREAM stage's fingerprint, so a config or code
+        change invalidates everything downstream."""
         return hashlib.md5(
-            f"{stage}|{self.sf_dir}|{self.policy}|{upstream_fp}".encode()
+            f"{stage}|{self.sf_dir}|{self.policy}|{_source_digest()}|{upstream_fp}".encode()
         ).hexdigest()
 
     def is_done(self, stage: str, fingerprint: str | None = None) -> bool:
         """Stage is resumable iff manifest + _SUCCESS exist AND the recorded
-        fingerprint matches the current config — resume against a workdir
-        built from a different corpus/policy rebuilds instead of silently
-        returning stale outputs (ADVICE.md)."""
+        fingerprint matches the current config and code — resume against a
+        workdir built from a different corpus/policy/package source rebuilds
+        instead of silently returning stale outputs (ADVICE.md)."""
         if not (
             os.path.exists(self._manifest_path(stage))
             and os.path.exists(os.path.join(self._dir(stage), "_SUCCESS"))

@@ -44,7 +44,7 @@ def _process_batch(out_dir: str):
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         txt = with_extracted_text(batch_df)
         det = detect.detect_relations(txt)
-        completed = slot_fill.ordered_slot_fill(det, checkpoint=False, carry_text=False)
+        completed = slot_fill.ordered_slot_fill(det, carry_text=False)
         triples = output.to_triples(output.completed_filter(completed))
         # idempotent per epoch: foreachBatch re-runs a failed epoch with the
         # SAME epoch_id, and a blind append would re-append rows the failed

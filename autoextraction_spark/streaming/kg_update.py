@@ -18,8 +18,8 @@ partition with identical rows. This is the same upper-bound discipline as
 ``online_train``'s replay-window filter (ADVICE round-3).
 
 Scale shape: the per-batch work is stages A-D (one Arrow pass, see
-docs/PLANS.md) + ONE left_anti equi-join on the fact key against a
-partitioned parquet store pruned to the key columns; within-batch fact
+``slot_fill.ordered_slot_fill``) + ONE left_anti equi-join on the fact key
+against a partitioned parquet store pruned to the key columns; within-batch fact
 dedup is a min-struct aggregation (map-side combinable). Epochs are
 sequential, so the `_epoch < epoch_id` read is consistent without
 snapshot isolation; on Iceberg the store read becomes a snapshot read.
@@ -40,7 +40,7 @@ from .ingest import stream_pages
 def _batch_triples(batch_df: DataFrame) -> DataFrame:
     txt = with_extracted_text(batch_df)
     det = detect.detect_relations(txt)
-    completed = slot_fill.ordered_slot_fill(det, checkpoint=False, carry_text=False)
+    completed = slot_fill.ordered_slot_fill(det, carry_text=False)
     return output.to_triples(output.completed_filter(completed))
 
 

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
 """Single-core cProfile of the fused episode pass's python interior.
 
-The scaling decomposition (scripts/decompose_scaling.py) shows the ordered
-slot-filling stage is ~80% of the pipeline wall, and the stage telemetry
-(scripts/stage_metrics_probe.py) shows that wall is pure python-worker
-compute (JVM cpu ~= 0, gap ~= 0). This profiles exactly what one worker
+The round-4/5 scaling decomposition and stage telemetry (docs/ROUND5.md,
+BENCH/BASELINE.md) measured the ordered slot-filling stage at ~80% of the
+pipeline wall, all of it python-worker compute (JVM cpu ~= 0, gap ~= 0);
+``perfbench/run.py --trace 1`` reports the fused hop's per-layer walls and
+task p50/p90/python-wait today. This profiles exactly what one worker
 does — generation, extraction, detection gating, episode waves — WITHOUT
 Spark, on one core, so the function-level costs (regex scan vs regex
 compile vs python object churn) are visible and comparable across commits.

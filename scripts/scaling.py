@@ -41,7 +41,8 @@ from pyspark.storagelevel import StorageLevel
 # waves_per_core=8: measured at local[16], the finer tasks + post-explode
 # uniform partitions recover ~7% of wall vs the 4-wave default (stalled
 # cores hand their remaining work to the scheduler instead of dragging a
-# whole wave; see corpus.doc_skeleton and scripts/granularity_probe.py)
+# whole wave; see corpus.doc_skeleton, measured in docs/ROUND5.md and
+# BENCH/BASELINE.md)
 skel = corpus.doc_skeleton(spark, sf_dir, replicate, waves_per_core=8).localCheckpoint(
     eager=True, storageLevel=StorageLevel.DISK_ONLY)
 

@@ -23,3 +23,50 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def _state_key(url, rel, lang, assigned, remaining, score, step):
+    return (url, rel, lang, tuple(sorted(assigned.items())), tuple(remaining),
+            round(score, 9), step)
+
+
+@pytest.fixture(scope="session")
+def norm_states():
+    """Sorted ``_state_key`` tuples of a completed-state DataFrame."""
+    return lambda df: sorted(
+        _state_key(r.url, r.rel, r.lang, r.assigned, r.remaining, r.score, r.step)
+        for r in df.collect()
+    )
+
+
+@pytest.fixture(scope="session")
+def reference_states():
+    """Independent reference for the slot-fill engine: a depth-first
+    recursion running one ``scorers.step_state`` fork per state — the
+    reference's ``Environment.step`` (Environment.py:186-224) — with no
+    waves, batching or dedup. ``run(det, policy, max_steps)`` returns the
+    sorted ``_state_key`` tuples of the episodes of ``det``'s
+    (url, rel, text, lang) rows."""
+    from autoextraction_spark import schema as S
+    from autoextraction_spark import scorers
+
+    def run(det, policy, max_steps=20):
+        out = []
+
+        def walk(row, assigned, remaining, score, step):
+            url, rel, text, lang = row
+            if not remaining or step >= max_steps:
+                out.append(_state_key(url, rel, lang, assigned, remaining, score, step))
+                return
+            slot, cands, _rw = scorers.step_state(text, rel, lang, assigned, remaining, policy)
+            rest = [s for s in remaining if s != slot]
+            for mention, _prob, sc in cands:
+                walk(row, {**assigned, slot: mention}, rest, score + sc, step + 1)
+
+        for r in det.collect():
+            slots = S.EVENTS[r.rel]["roles"] if r.rel in S.EVENTS else (
+                S.ZH_SLOTS if r.lang == "zh" else S.EN_SLOTS)
+            walk((r.url, r.rel, r.text, r.lang), {}, list(slots), 0.0, 0)
+        return sorted(out)
+
+    return run

@@ -59,10 +59,10 @@ def test_batch_step_mlp_matches_per_state_choose_slot():
         assert got == scorers.step_state(*st, pol)
 
 
-def test_fused_equals_rounds_with_mlp(spark):
-    """The fused single-Arrow-pass runner and the per-round DataFrame loop
-    must stay equivalent under a non-linear policy (the round-2 invariant,
-    re-proven for the swap seam)."""
+def test_fused_equals_rounds_with_mlp(spark, norm_states, reference_states):
+    """The fused single-Arrow-pass engine must equal the reference's
+    round-by-round ``Environment.step`` recursion under a non-linear policy
+    (the round-2 invariant, re-proven for the swap seam)."""
     from autoextraction_spark.operators import slot_fill
 
     det = spark.createDataFrame(
@@ -71,16 +71,8 @@ def test_fused_equals_rounds_with_mlp(spark):
         "url string, rel string, text string, lang string",
     )
     pol = neural.mlp_policy(neural.MLPQ.init(hidden=8, seed=9))
-
-    def key(df):
-        return {
-            (r.url, r.rel, tuple(sorted(r.assigned.items())), r.step)
-            for r in df.collect()
-        }
-
-    fused = slot_fill.ordered_slot_fill(det, policy=pol, mode="fused")
-    rounds = slot_fill.ordered_slot_fill(det, policy=pol, mode="rounds")
-    assert key(fused) == key(rounds)
+    fused = slot_fill.ordered_slot_fill(det, policy=pol)
+    assert norm_states(fused) == reference_states(det, pol)
 
 
 def test_mlp_policy_full_corpus_parity(spark, sf_dir):

@@ -65,6 +65,22 @@ def test_resume_rebuilds_on_config_change(spark, sf_dir, tmp_path):
     )
 
 
+def test_resume_rebuilds_on_code_change(spark, sf_dir, tmp_path, monkeypatch):
+    # a workdir built by one version of the package sources must NOT serve
+    # stale stage outputs to a resume under changed code
+    from autoextraction_spark import pipeline
+
+    wd = str(tmp_path / "run4")
+    p = KgPipeline(spark, sf_dir, wd)
+    p.run(resume=False)
+    assert p.is_done("pages", p._fingerprint("pages", ""))
+    monkeypatch.setattr(pipeline, "_source_digest", lambda: "changed-code")
+    assert not p.is_done("pages", p._fingerprint("pages", ""))
+    before = os.path.getmtime(p._manifest_path("triples"))
+    p.run(resume=True)
+    assert os.path.getmtime(p._manifest_path("triples")) > before
+
+
 def test_salted_host_counts_match_direct(spark, sf_dir):
     pages = corpus.web_pages(spark, sf_dir)
     salted = {r.host: r.n_pages for r in salted_host_counts(pages, 16).collect()}

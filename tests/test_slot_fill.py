@@ -93,19 +93,17 @@ def test_cond_render_parse_roundtrip(tiny_pages):
 
 
 @pytest.mark.parametrize("policy", ["rl", "sequence", "reverse", "random"])
-def test_fused_equals_rounds(tiny_pages, policy):
-    # the single-pass fused runner and the per-round DataFrame loop are two
-    # physical strategies for the same logical operator — identical output
+def test_fused_equals_rounds(tiny_pages, norm_states, reference_states, policy):
+    # the single-pass wave engine emits exactly the states of the
+    # reference's round-by-round Environment.step recursion — for complete
+    # episodes and for episodes truncated by max_steps, where the cap's
+    # remaining/step values are compared too
     det = detect.detect_relations(tiny_pages)
-    def norm(df):
-        return {
-            (r.url, r.rel, r.lang, tuple(sorted(r.assigned.items())),
-             tuple(r.remaining), round(r.score, 9), r.step)
-            for r in df.collect()
-        }
-    fused = slot_fill.ordered_slot_fill(det, policy=policy, mode="fused")
-    rounds = slot_fill.ordered_slot_fill(det, policy=policy, mode="rounds")
-    assert norm(fused) == norm(rounds.select(*[c for c in fused.columns]))
+    for max_steps in (slot_fill.MAX_STEPS, 1):
+        ref = reference_states(det, policy, max_steps)
+        fused = slot_fill.ordered_slot_fill(det, policy=policy, max_steps=max_steps)
+        assert norm_states(fused) == ref
+    assert all(st[4] and st[6] == 1 for st in ref)  # max_steps=1 truncated all
 
 
 def test_fused_carry_text_false_drops_text(tiny_pages):
@@ -159,17 +157,11 @@ def test_dedup_assignments_equals_distinct_plan(spark, sf_dir):
     assert "hashpartitioning" in slow_plan.lower()  # the shuffle we removed
 
 
-def test_dedup_assignments_rejects_rounds_mode(tiny_pages):
-    det = detect.detect_relations(tiny_pages)
-    with pytest.raises(ValueError):
-        slot_fill.ordered_slot_fill(det, mode="rounds", dedup_assignments=True)
-
-
 def test_episodes_from_skeleton_equals_staged_pipeline(spark, sf_dir):
     """The r6 single-hop fusion (generation → extract → anchor gate →
     episodes in ONE mapInPandas over the skeleton) emits exactly the same
     completed states as the staged web_pages → detect_relations →
-    fused_slot_fill chain — the equivalence the optimization round leans on
+    ordered_slot_fill chain — the equivalence the optimization round leans on
     for every _pipeline_triples consumer."""
     from autoextraction_spark import corpus
 
