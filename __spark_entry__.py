@@ -16,13 +16,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from autoextraction_spark import corpus, oracle  # noqa: E402
 from autoextraction_spark import metrics as kgmetrics  # noqa: E402
 from autoextraction_spark import schema as KS  # noqa: E402
+from autoextraction_spark.materialize import ckpt  # noqa: E402
 from autoextraction_spark.operators import (  # noqa: E402
     bpe, classifier, compose, dedup, detect, graph, kge, linking, lm,
     multimodal, nested, output, rl_train, similarity, sketch, slot_fill,
@@ -331,7 +331,7 @@ def q_order_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # generation → extraction → detection upstream, which is materialized
     # once instead of running the corpus pass twice
     txt = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
-    det = detect.detect_relations(txt).localCheckpoint(eager=True)
+    det = ckpt(detect.detect_relations(txt), eager=True, level=None)
     runs = {}
     for policy in ("rl", "sequence"):
         completed = slot_fill.ordered_slot_fill(det, policy=policy, carry_text=False)
@@ -822,7 +822,7 @@ def q_kg_entity_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization; the oracle nests each operator's full SQL as a CTE so
     the composition interfaces verify jointly."""
     t = _pipeline_triples(spark, sf_dir)
-    e = graph._ckpt(graph.triple_edges(t))
+    e = ckpt(graph.triple_edges(t))
     pr = graph.entity_pagerank(e)
     cm = graph.label_propagation(e, iters=3)
     hc = graph.harmonic_centrality(e, max_depth=4)
@@ -1392,7 +1392,7 @@ def q_kg_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _pipeline_triples(spark, sf_dir)
     # the src/dst union reads the edge list twice — checkpoint it once so
     # the second branch replays the checkpoint, not the extraction pipeline
-    e = graph._ckpt(graph.triple_edges(t))
+    e = ckpt(graph.triple_edges(t))
     deg = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -1579,10 +1579,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # survivors feed BOTH the dsir gram explode and the final text join —
     # materialize once (the bm25/dsir checkpoint rule)
-    dk = (
-        docs.join(winners, "doc_id")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
+    dk = ckpt(docs.join(winners, "doc_id"))
     w = textstats.dsir_weights(dk, target=(F.col("doc_id") % 10 == 7))
     sel = dk.join(
         w.filter(F.col("log_weight") > 0).select("doc_id"), "doc_id"
@@ -1735,10 +1732,10 @@ def q_event_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.col("ts").cast("timestamp_ltz")),
         "yyyy-MM-dd HH:00:00",
     )
-    hourly = (
+    hourly = ckpt(
         ev.groupBy("event_type", hour.alias("hour"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt")),
+        eager=True,
     )
     stats = hourly.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1765,10 +1762,10 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT integer arithmetic (terms 2^(56-reg) as longs, one final IEEE
     division of a shared constant), and the linear-counting ln is absorbed
     by round(·, 6). Source checkpointed once for the three consumers."""
-    ev = (
+    ev = ckpt(
         _read(spark, sf_dir, "events")
-        .select("event_type", "user_id", "event_id")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select("event_type", "user_id", "event_id"),
+        eager=True,
     )
     est_u = sketch.hll_estimate(
         sketch.hll_registers(ev, "user_id", ["event_type"], seed="#hllu"),
@@ -1812,11 +1809,11 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     The gram explode is checkpointed once and feeds both the sketch and
     the exact count."""
     docs = _read(spark, sf_dir, "documents").select("lang", "text")
-    grams = (
+    grams = ckpt(
         docs.select(
             "lang", F.explode(dedup.char_shingles(F.col("text"), 4)).alias("g")
-        )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        ),
+        eager=True,
     )
     est = sketch.kmv_distinct(grams, "g", ["lang"], k=64)
     exact = (
@@ -1852,10 +1849,10 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.conv(((F.col("event_id") % 1024) + 1).cast("string"), 10, 2)
         ).cast("string"),
     )
-    ev = (
+    ev = ckpt(
         _read(spark, sf_dir, "events")
-        .select(hkey.alias("hkey"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select(hkey.alias("hkey")),
+        eager=True,
     )
     counters = sketch.cms_counters(ev, "hkey", d=sketch.CMS_D, w=sketch.CMS_W)
     exact = ev.groupBy("hkey").agg(
@@ -1888,16 +1885,16 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     key domain once, then broadcasts the decorated keys back onto the fact
     table. n_missed (true matches the filter dropped) is the no-false-
     negative guarantee as an oracled column: always 0."""
-    cust = (
+    cust = ckpt(
         _read(spark, sf_dir, "customer")
         .filter(F.col("c_nationkey") == 2)
-        .select("c_custkey")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select("c_custkey"),
+        eager=True,
     )
-    ord_proj = (
+    ord_proj = ckpt(
         _read(spark, sf_dir, "orders")
-        .select("o_custkey", "o_orderpriority")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select("o_custkey", "o_orderpriority"),
+        eager=True,
     )
     okeys = ord_proj.select("o_custkey").distinct()
     bits = sketch.bloom_bits(cust, "c_custkey")
@@ -1948,14 +1945,14 @@ def q_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative error, so the oracle verifies associativity itself, not just
     one estimate. Same register build as q_hll_distinct: map-side
     combinable max, at most 64 longs per (group, shard) cross the wire."""
-    ev = (
+    ev = ckpt(
         _read(spark, sf_dir, "events")
         .select(
             "event_type",
             "user_id",
             (F.col("event_id") % 8).cast("int").alias("shard"),
-        )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        ),
+        eager=True,
     )
     sharded = sketch.hll_registers(
         ev, "user_id", ["event_type", "shard"], seed="#hllu"
@@ -1999,23 +1996,21 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB must come from sketches because the exact pairwise distinct
     join is quadratic in strata and linear in corpus. One checkpointed
     word explode feeds both the sketches and the exact sets."""
-    words = (
+    words = ckpt(
         _read(spark, sf_dir, "documents")
-        .select("lang", F.explode(F.split(F.col("text"), " ")).alias("w"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select("lang", F.explode(F.split(F.col("text"), " ")).alias("w")),
+        eager=True,
     )
     # the sketch (<= 64 longs per lang) and the distinct word sets each
     # feed several joins downstream — materialize both once, or every
     # pair-join branch re-runs the window/distinct over the corpus
-    kept = sketch.kmv_kept(
-        words, "w", ["lang"], k=64, seed="#kmvo"
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    kept = ckpt(
+        sketch.kmv_kept(words, "w", ["lang"], k=64, seed="#kmvo"), eager=True
+    )
     est = sketch.kmv_jaccard(kept, "lang", k=64).withColumnsRenamed(
         {"ga": "lang_a", "gb": "lang_b"}
     )
-    dw = words.distinct().localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    dw = ckpt(words.distinct())
     sizes = dw.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n"))
     wa = dw.select(F.col("lang").alias("lang_a"), "w")
     wb = dw.select(F.col("lang").alias("lang_b"), "w")
@@ -2065,16 +2060,16 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-keyed equi-join + min aggregation (no window over the whole
     event history, no per-row Python); the event projection is
     checkpointed once and feeds all four step filters."""
-    ev = (
+    ev = ckpt(
         _read(spark, sf_dir, "events")
-        .select("user_id", "event_type", "ts")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select("user_id", "event_type", "ts"),
+        eager=True,
     )
-    t1 = (
+    t1 = ckpt(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.min("ts").alias("t")),
+        eager=True,
     )
 
     def step(prev: DataFrame, etype: str) -> DataFrame:
@@ -2084,12 +2079,12 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = ev.filter(F.col("event_type") == etype).select(
             "user_id", F.col("ts").alias("ets")
         )
-        return (
+        return ckpt(
             e.join(prev, "user_id")
             .filter(F.col("ets") > F.col("t"))
             .groupBy("user_id")
-            .agg(F.min("ets").alias("t"))
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            .agg(F.min("ets").alias("t")),
+            eager=True,
         )
 
     t2 = step(t1, "view")
@@ -2127,10 +2122,10 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, day) projection (one map-side-combinable distinct); the
     cohort table joins it user-keyed. Dates are UTC-session-stable and
     emitted as strings (the event_bursts idiom)."""
-    ev = (
+    ev = ckpt(
         _read(spark, sf_dir, "events")
-        .select("user_id", "event_type", "ts")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .select("user_id", "event_type", "ts"),
+        eager=True,
     )
     coh = (
         ev.filter(F.col("event_type") == "signup")
@@ -2194,13 +2189,13 @@ def q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("dig_a") == F.col("dig_b"), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    counts = (
+    # 4 rows; without this the total's crossJoin branch re-runs the
+    # full two-snapshot join a second time
+    counts = ckpt(
         j.select(status.alias("status"))
         .groupBy("status")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pages"))
-        # 4 rows; without this the total's crossJoin branch re-runs the
-        # full two-snapshot join a second time
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_pages")),
+        eager=True,
     )
     total = counts.agg(F.sum("n_pages").cast("long").alias("tot"))
     return counts.crossJoin(F.broadcast(total)).select(
@@ -2272,15 +2267,15 @@ def q_journey_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     second map-side-combinable count, never a broadcast of the corpus."""
     ev = _read(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
     win = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
+    pairs = ckpt(
         ev.select(
             F.col("event_type").alias("from_type"),
             F.lead("event_type").over(win).alias("to_type"),
         )
         .filter(F.col("to_type").isNotNull())
         .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        eager=True,
     )
     tot = pairs.groupBy("from_type").agg(F.sum("n").cast("long").alias("tot"))
     return pairs.join(tot, "from_type").select(
@@ -2314,12 +2309,12 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable agg, no ordered scan); the token explode is
     checkpointed once for its two consumers."""
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    tok = (
+    tok = ckpt(
         docs.select(
             F.expr("doc_id div 100").alias("bucket"),
             F.explode(F.split(F.col("text"), " ")).alias("tk"),
-        )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        ),
+        eager=True,
     )
     newb = (
         tok.groupBy("tk")
@@ -2394,9 +2389,9 @@ def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized fact-history table filtered twice and full-outer-joined
     on the fact key — the change-report a temporal KG serves without
     re-extracting anything."""
-    hist = output.fact_history(
-        _pipeline_triples(spark, sf_dir), preds=["born_in"]
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    hist = ckpt(
+        output.fact_history(_pipeline_triples(spark, sf_dir), preds=["born_in"])
+    )
     a = _asof(hist, ASOF_T1).select(
         "subj", "pred", F.col("obj").alias("obj_t1")
     )
@@ -2428,9 +2423,9 @@ def q_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     term set broadcasts; the intersection is a groupBy-having count, not
     an all-pairs join."""
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    tok = (
-        docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tk"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    tok = ckpt(
+        docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tk")),
+        eager=True,
     )
     top3 = (
         tok.groupBy("tk")
@@ -2456,12 +2451,12 @@ def q_lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same prediction the lang_id query emits."""
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     pred = textstats.lang_id(docs).select("doc_id", "lang_pred")
-    joined = (
+    joined = ckpt(
         docs.select("doc_id", F.col("lang").alias("true_lang"))
         .join(pred, "doc_id")
         .groupBy("true_lang", F.col("lang_pred").alias("pred_lang"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        eager=True,
     )
     tot = joined.groupBy("true_lang").agg(
         F.sum("n").cast("long").alias("tot")
@@ -2485,9 +2480,9 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates; the edge table is materialized once and self-joined for
     mutuality."""
     vecs = _read(spark, sf_dir, "embeddings")
-    edges = similarity.ann_topk(
-        vecs, vecs, k=5, n_planes=3, n_tables=4
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    edges = ckpt(
+        similarity.ann_topk(vecs, vecs, k=5, n_planes=3, n_tables=4), eager=True
+    )
     rev = edges.select(
         F.col("neighbor_id").alias("query_id"),
         F.col("query_id").alias("neighbor_id"),
@@ -2518,11 +2513,11 @@ def q_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", method="minhash", threshold=0.8
     )
     scored = textstats.quality_score(labeled)
-    t = (
+    t = ckpt(
         scored.select(
             F.col("keep_id").alias("cluster_id"), "doc_id", "quality"
-        )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        ),
+        eager=True,
     )
     mx = t.groupBy("cluster_id").agg(
         F.max("quality").alias("q"),
@@ -2591,12 +2586,12 @@ def q_host_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("string"),
         F.lit(".example.com"),
     )
-    hl = (
+    hl = ckpt(
         _read(spark, sf_dir, "documents")
         .select(host.alias("host"), "lang")
         .groupBy("host", "lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        eager=True,
     )
     agg = hl.groupBy("host").agg(
         F.sum("c").cast("long").alias("n"),

@@ -14,7 +14,9 @@ Pipeline stages (SURVEY.md §7):
   D. output semantics     operators/output.py         (completed filter, triples, F1)
   E. entity linking       operators/linking.py        (MinHash/LSH blocking)
   F. canonicalization     operators/canonicalize.py   (connected components)
-  G. materialization      operators/materialize.py    (partitioned, lineage)
+  G. materialization      pipeline.py                 (KgPipeline per-stage writes with
+                                                       _stage/_part_id lineage; triples
+                                                       partitioned by pred)
 Plus training-data-pipeline operators: dedup.py, similarity.py,
 textstats.py, multimodal.py, fileops.py.
 """

@@ -57,21 +57,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ..materialize import ckpt
 
 #: end-of-word marker symbol (Sennrich et al. 2016 §3.2)
 END_OF_WORD = "</w>"
 
 #: replace passes per merge step; resolves same-pair runs of length ≤ 2^3
 _REWRITE_PASSES = 3
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-
-
-def _eager(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
 def word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -124,17 +117,18 @@ def _bpe_loop(
     df: DataFrame, n_merges: int, text_col: str
 ) -> tuple[list[DataFrame], DataFrame]:
     """Run the merge loop; return (per-step 1-row best DFs, final vocab)."""
-    vocab = _ckpt(
+    vocab = ckpt(
         word_vocab(df, text_col).select(
             "word", _symbolize(F.col("word")).alias("r"), "freq"
         )
     )
     steps: list[DataFrame] = []
     for step in range(1, n_merges + 1):
-        best = _eager(
+        best = ckpt(
             _adjacent_pairs(vocab)
             .orderBy(F.col("cnt").desc(), F.col("pair").asc())
-            .limit(1)
+            .limit(1),
+            eager=True,
         )
         if best.isEmpty():  # every word fused to one symbol already
             raise ValueError(
@@ -142,7 +136,7 @@ def _bpe_loop(
                 f"n_merges (requested {n_merges})"
             )
         steps.append(best.withColumn("step", F.lit(step)))
-        vocab = _ckpt(
+        vocab = ckpt(
             vocab.crossJoin(
                 F.broadcast(best.select(F.col("pair").alias("_p")))
             ).select(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import ckpt
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """(u,v) edges → (v, min(Γ⁺(u))) for every neighbor v > u.
@@ -141,8 +143,8 @@ def connected_components(
     # job, and without this each would re-execute the caller's (expensive)
     # pair generation — a minhash/LSH/blocked-join chain in every
     # production caller — instead of scanning a tiny materialized edge list
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
+    raw = ckpt(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), eager=True, level=None
     )
     # one agg job over RAW: edge count + mean key width (cast covers
     # numeric ids). Sizing on raw (≥ the dedup'd edge set) keeps the
@@ -166,19 +168,19 @@ def connected_components(
         return _driver_union_find(
             raw.sparkSession, [(r[0], r[1]) for r in raw.collect()], node_type
         )
-    nodes = (
+    nodes = ckpt(
         raw.select("u").union(raw.select(F.col("v").alias("u"))).distinct()
-        .select(F.col("u").alias("node"))
-        .localCheckpoint(eager=True)
+        .select(F.col("u").alias("node")),
+        eager=True, level=None,
     )
-    e = (
+    e = ckpt(
         raw.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True, level=None,
     )
     converged = False
     for it in range(max_iter):
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        new_e = ckpt(_small_star(_large_star(e)), eager=True, level=None)
         if (it + 1) % check_every == 0 or it == max_iter - 1:
             # edge sets are distinct; equal count + empty difference ⇔ equal
             if new_e.count() == e.count() and new_e.exceptAll(e).isEmpty():

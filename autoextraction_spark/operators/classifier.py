@@ -33,16 +33,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..materialize import ckpt
 from .textstats import STOPWORDS, _word_count
 
 #: feature names in weight order; w0 pairs with the bias feature x0 = 1
 N_FEATURES = 5
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -78,17 +74,15 @@ def logreg_train(
     label_col: str = "y",
     lr: float = 2.0,
     iters: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Full-batch logistic-regression GD from w = 0; returns one row per
     weight snapshot: (iter, w0..w4 rounded to 6) for iter 0..iters.
 
     ``features`` must carry x0..x{N_FEATURES-1} and ``label_col`` (0/1).
     """
-    ck = _ckpt if materialize else (lambda df: df)
     wcols = [f"w{j}" for j in range(N_FEATURES)]
     xcols = [f"x{j}" for j in range(N_FEATURES)]
-    feats = ck(features.select(F.col(label_col).alias("y"), *xcols))
+    feats = ckpt(features.select(F.col(label_col).alias("y"), *xcols))
 
     spark = features.sparkSession
     w = spark.range(1).select(*[F.lit(0.0).alias(c) for c in wcols])
@@ -102,7 +96,7 @@ def logreg_train(
         g = joined.agg(
             *[F.avg(err * F.col(xc)).alias(f"g{j}") for j, xc in enumerate(xcols)]
         )
-        w = ck(
+        w = ckpt(
             w.crossJoin(F.broadcast(g)).select(
                 *[
                     (F.col(wc) - F.lit(float(lr)) * F.col(f"g{j}")).alias(wc)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import ckpt
 from .dedup import portable_hash64
 
 #: denominator of the exact-rate comparison: hash < rate * 2^60
@@ -214,13 +215,12 @@ def temperature_mixture(
     idiom); the keep filter is a broadcast equi-join + codegen comparison —
     the corpus is never shuffled.
     """
-    from pyspark.storagelevel import StorageLevel
 
     # the stratum counts feed FIVE derivations (total, shares, Z, max,
     # rates) — checkpoint the k-row table once so none of them replays the
     # corpus aggregation (the recompute-bug class the plan pins exist for)
     counts = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("n"))
-    counts = counts.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    counts = ckpt(counts)
     tot = counts.agg(F.sum("n").cast("double").alias("n_tot"))
     shares = counts.crossJoin(F.broadcast(tot)).select(
         stratum_col, (F.col("n") / F.col("n_tot")).alias("p")
@@ -318,10 +318,9 @@ def mixture_plan(
     then k-row arithmetic with 1-row broadcast normalizers — no collect,
     nothing corpus-sized after the count.
     """
-    from pyspark.storagelevel import StorageLevel
 
     counts = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("n"))
-    counts = counts.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    counts = ckpt(counts)
     tot = counts.agg(F.sum("n").cast("double").alias("n_tot"))
     shares = counts.crossJoin(F.broadcast(tot)).select(
         stratum_col, "n", (F.col("n") / F.col("n_tot")).alias("p")

@@ -25,7 +25,8 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from ..materialize import ckpt
 
 DEFAULT_NUM_PERM = 16
 DEFAULT_BANDS = 8
@@ -95,9 +96,7 @@ def exploded_shingles(
     return out.distinct() if distinct else out
 
 
-def shingle_sets(
-    df: DataFrame, id_col: str, shingle_expr: Column, materialize: bool = True
-) -> DataFrame:
+def shingle_sets(df: DataFrame, id_col: str, shingle_expr: Column) -> DataFrame:
     """(id, n, shs) — per-document DISTINCT shingle set and its size,
     computed ROW-LOCALLY (``array_distinct`` over the per-row shingle
     array): no explode, no shuffle (r6; replaces the explode → distinct →
@@ -111,7 +110,7 @@ def shingle_sets(
         )
         .select("id", F.size("shs").alias("n"), "shs")
     )
-    return _maybe_ckpt(out, materialize)
+    return ckpt(out)
 
 
 def minhash_signature_from_sets(
@@ -231,36 +230,31 @@ def spread_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     Inputs whose analyzed plan contains a wide node (join/agg/window/…)
     are returned UNCHANGED: their partitioning is already shuffle-sized,
     and probing them via ``.rdd`` would execute the upstream stages at
-    plan-build time (the AQE finalization side effect `_maybe_ckpt`
-    documents) — composed pipelines must not run twice.
+    plan-build time (under AQE, ``.rdd`` finalizes the plan and runs every
+    shuffle stage below the last) — composed pipelines must not run twice.
+    Only node names are matched (subquery plans included), never the plan
+    text, so a column named ``JoinDate`` does not make a scan look wide.
     """
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(node in plan for node in _WIDE_NODES):
-            return df
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            if any(w in node.nodeName() for w in _WIDE_NODES):
+                return df
+            for seq in (node.children(), node.innerChildren()):
+                stack.extend(seq.apply(i) for i in range(seq.size()))
         n = df.rdd.getNumPartitions()
     except Exception:
         return df
     return df.repartition(target) if n < target else df
 
 
-def _maybe_ckpt(df: DataFrame, materialize: bool) -> DataFrame:
-    """DISK_ONLY local checkpoint when ``materialize`` — note that under AQE
-    even ``eager=False`` finalizes and RUNS the upstream stages at plan
-    construction (``.rdd`` triggers adaptive execution), so pass
-    ``materialize=False`` from plan-only consumers (explain snapshots)."""
-    if not materialize:
-        return df
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-
-
 def exact_jaccard(
     pairs: DataFrame,
     shingled: DataFrame | None,
     threshold: float | None = None,
-    materialize: bool = True,
     sets: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) — exact set Jaccard per candidate pair.
@@ -284,8 +278,7 @@ def exact_jaccard(
     row per document — is lazily locally checkpointed: it feeds FOUR join
     builds (a/b sizes, a/b arrays), and without the checkpoint each build
     re-runs the whole corpus-scan → shingle → groupBy chain (profiled: the
-    documents parquet was scanned 6× per dedup query). Lazy (not eager) so
-    plan-only consumers (explain) stay side-effect-free; the length filter
+    documents parquet was scanned 6× per dedup query). The length filter
     still sees only (id, n) columns, so failing pairs never move arrays.
 
     Aggregates are SET-semantics (collect_set + its size, r6), so the
@@ -298,12 +291,11 @@ def exact_jaccard(
     per_id = (
         sets
         if sets is not None
-        else _maybe_ckpt(
+        else ckpt(
             shingled.groupBy("id").agg(
                 F.size(F.collect_set("sh")).alias("n"),
                 F.collect_set("sh").alias("shs"),
-            ),
-            materialize,
+            )
         )
     )
     sizes = per_id.select("id", "n")
@@ -341,7 +333,6 @@ def minhash_dup_pairs(
     bands: int = DEFAULT_BANDS,
     shingle: str = "word",
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs: shingle → minhash → LSH band join → exact
     Jaccard ≥ threshold. The full MinHash+LSH dedup operator."""
@@ -359,12 +350,12 @@ def minhash_dup_pairs(
     # candidate-pair verify joins — the parts that genuinely combine rows.
     # The set table is the one corpus-sized intermediate: materialized once
     # (DISK_ONLY), it feeds the signature AND both verify sides.
-    sets = shingle_sets(df, id_col, expr, materialize)
-    sig = _maybe_ckpt(minhash_signature_from_sets(sets, num_perm), materialize)
+    sets = shingle_sets(df, id_col, expr)
+    sig = ckpt(minhash_signature_from_sets(sets, num_perm))
     cands = lsh_candidate_pairs(sig, num_perm, bands)
-    return exact_jaccard(
-        cands, None, threshold, materialize, sets=sets
-    ).filter(F.col("jaccard") >= threshold)
+    return exact_jaccard(cands, None, threshold, sets=sets).filter(
+        F.col("jaccard") >= threshold
+    )
 
 
 def prefix_filter_candidates(shingled: DataFrame, threshold: float) -> DataFrame:
@@ -415,7 +406,6 @@ def jaccard_dup_pairs(
     threshold: float = 0.5,
     shingle: str = "word",
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs: shingle → prefix-filter inverted
     index (exact candidates) → exact set Jaccard ≥ threshold. Unlike the
@@ -433,10 +423,10 @@ def jaccard_dup_pairs(
     # Remaining shuffles: the document-frequency count + inverted-index
     # join inside prefix_filter_candidates and the pair-verify joins — the
     # genuinely cross-row parts of the SSJoin.
-    sets = shingle_sets(df, id_col, expr, materialize)
+    sets = shingle_sets(df, id_col, expr)
     shingled = sets.select("id", F.explode("shs").alias("sh"))
     cands = prefix_filter_candidates(shingled, threshold)
-    return exact_jaccard(cands, None, threshold, materialize, sets=sets).filter(
+    return exact_jaccard(cands, None, threshold, sets=sets).filter(
         F.col("jaccard") >= threshold
     )
 
@@ -597,7 +587,6 @@ def paragraph_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     sep: str = "\n",
-    materialize: bool = True,
 ) -> DataFrame:
     """CCNet-style corpus-wide paragraph deduplication (Wenzek et al. 2020
     §3.1): split every document into ``sep``-delimited paragraphs, keep only
@@ -630,7 +619,7 @@ def paragraph_dedup(
         )
         .withColumn("key", F.md5(F.col("line")))
     )
-    lines = _maybe_ckpt(lines, materialize)
+    lines = ckpt(lines)
     winners = lines.groupBy("key").agg(
         F.min(F.struct("id", "pos")).alias("w")
     )
@@ -748,7 +737,6 @@ def substring_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     length: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """ExactSubstr-style duplicate-span removal (Lee et al., *Deduplicating
     Training Data Makes Language Models Better*, ACL 2022): any run of
@@ -784,7 +772,7 @@ def substring_dedup(
         F.col(id_col).alias("id"),
         F.split(F.col(text_col), " ").alias("w"),
     ).withColumn("n_tok", F.size("w"))
-    toks = _maybe_ckpt(toks, materialize)
+    toks = ckpt(toks)
 
     grams = toks.filter(F.col("n_tok") >= L).select(
         "id",
@@ -795,7 +783,7 @@ def substring_dedup(
             )
         ).alias("pos", "key"),
     )
-    grams = _maybe_ckpt(grams, materialize)
+    grams = ckpt(grams)
 
     winners = grams.groupBy("key").agg(F.min(F.struct("id", "pos")).alias("wn"))
     dup_occ = grams.join(winners, "key").filter(
@@ -840,7 +828,6 @@ def incremental_minhash_dedup(
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
     shingle_n: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental near-dup dedup of a NEW crawl batch against an EXISTING
     corpus index — the production shape of web-scale dedup: the 100 TB
@@ -869,8 +856,8 @@ def incremental_minhash_dedup(
     expr = word_shingles(F.col(text_col), shingle_n)
     # row-local sets + signatures (r6): no shingle-keyed shuffle anywhere
     # in the incremental loop either (see minhash_dup_pairs)
-    sets_new = shingle_sets(new, id_col, expr, materialize)
-    sets_idx = shingle_sets(index, id_col, expr, materialize)
+    sets_new = shingle_sets(new, id_col, expr)
+    sets_idx = shingle_sets(index, id_col, expr)
     sig_new = minhash_signature_from_sets(sets_new, num_perm)
     sig_idx = minhash_signature_from_sets(sets_idx, num_perm)
 
@@ -913,9 +900,9 @@ def incremental_minhash_dedup(
     # arrays). The id spaces are disjoint, so the union IS a valid per-id
     # table.
     sets_all = sets_new.unionByName(sets_idx)
-    jac = exact_jaccard(
-        cands, None, threshold, materialize, sets=sets_all
-    ).filter(F.col("jaccard") >= threshold)
+    jac = exact_jaccard(cands, None, threshold, sets=sets_all).filter(
+        F.col("jaccard") >= threshold
+    )
     w = Window.partitionBy("id_a").orderBy(F.col("jaccard").desc(), F.col("id_b"))
     best = (
         jac.withColumn("_rn", F.row_number().over(w))
@@ -968,16 +955,15 @@ def host_mirror_pairs(
     the only corpus-size pass; the pair join is digest-keyed with the hot
     keys removed, the aggregations map-side combinable.
     """
-    hd = _maybe_ckpt(
+    hd = ckpt(
         df.select(
             F.col(host_col).alias("host"), F.md5(F.col(text_col)).alias("dg")
-        ).distinct(),
-        True,
+        ).distinct()
     )
     hot = hd.groupBy("dg").agg(F.count(F.lit(1)).alias("c")).filter(
         F.col("c") > max_hosts_per_digest
     ).select("dg")
-    hd2 = _maybe_ckpt(hd.join(hot, "dg", "left_anti"), True)
+    hd2 = ckpt(hd.join(hot, "dg", "left_anti"))
     sz = hd2.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
     sh = (
         hd2.alias("a")
@@ -1095,13 +1081,12 @@ def boilerplate_grams(
     broadcasts it).
     """
     df = spread_input(df)
-    grams = _maybe_ckpt(
+    grams = ckpt(
         df.select(
             F.col(id_col).alias("id"),
             F.col(host_col).alias("host"),
             F.explode(word_shingles(F.col(text_col), n)).alias("gram"),
-        ),
-        True,
+        )
     )
     hosts = (
         grams.select("gram", "host").distinct()

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import ckpt
+
 
 def load_csv(spark: SparkSession, path: str, sep: str = "\t", header: bool = False) -> DataFrame:
     """LoadCSV (ljqpy.py:116-128): tab-separated read."""
@@ -57,10 +59,10 @@ def _with_rank(df: DataFrame, order: str) -> DataFrame:
     (ADVICE.md; the same recompute hazard checkpointed against elsewhere).
     """
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    part = (
+    part = ckpt(
         df.repartitionByRange(nparts, F.col(order))
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .withColumn("_pid", F.spark_partition_id()),
+        eager=True, level=None,
     )
     counts = {
         r["_pid"]: r["cnt"]

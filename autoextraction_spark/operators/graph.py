@@ -31,18 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-
-
-def _eager(df: DataFrame) -> DataFrame:
-    """Eager DISK_ONLY checkpoint — the iterative-loop barrier: cuts lineage
-    AND materializes now, so the per-round convergence probe (isEmpty) reads
-    the checkpoint instead of re-running the round's joins."""
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+from ..materialize import ckpt
 
 
 def triple_edges(
@@ -67,14 +57,15 @@ def export_int_ids(triples: DataFrame) -> DataFrame:
     """
     from .fileops import _with_rank
 
-    t = _ckpt(triples.select("pred", "subj", "obj").distinct())
+    t = ckpt(triples.select("pred", "subj", "obj").distinct())
     ent_names = (
         t.select(F.col("subj").alias("name"))
         .union(t.select(F.col("obj").alias("name")))
         .distinct()
     )
-    ents = _eager(
-        _with_rank(ent_names, "name").select("name", F.col("_rn").alias("eid"))
+    ents = ckpt(
+        _with_rank(ent_names, "name").select("name", F.col("_rn").alias("eid")),
+        eager=True,
     )
     rels = _with_rank(t.select(F.col("pred").alias("name")).distinct(), "name").select(
         "name", F.col("_rn").alias("pid")
@@ -101,7 +92,7 @@ def conjunctive_query(
     """
     if not patterns:
         raise ValueError("conjunctive_query requires at least one pattern")
-    t = _ckpt(triples.select("pred", "subj", "obj").distinct())
+    t = ckpt(triples.select("pred", "subj", "obj").distinct())
     out = None
     seen: list[str] = []
     for sv, pred, ov in patterns:
@@ -173,7 +164,7 @@ def shared_neighbor_similarity(
     in-degree is vocabulary-bounded and the cap is unnecessary. Jaccard is
     rounded to 6 decimals for the SQL oracle (float-division parity).
     """
-    e = _eager(edges.select("src", "dst").distinct())
+    e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     a = e.select(F.col("src").alias("a"), "dst")
     b = e.select(F.col("src").alias("b"), "dst")
@@ -218,7 +209,7 @@ def rule_inference(
     """
     if not rules:
         raise ValueError("rule_inference requires at least one rule")
-    t = _ckpt(triples.select("subj", "pred", "obj"))
+    t = ckpt(triples.select("subj", "pred", "obj"))
     out = None
     for pa, pb, new_pred in rules:
         a = t.filter(F.col("pred") == pa).select(
@@ -263,23 +254,24 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     pair universe; production closures over deep hierarchies raise the cap
     or switch to the O(log d) doubling variant at the cost of join width.
     """
-    e = _eager(edges.select("src", "dst").distinct())
+    e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     paths = e.withColumn("depth", F.lit(1))
     known = e
     frontier = paths
     for d in range(2, max_depth + 1):
-        nxt = _eager(
+        nxt = ckpt(
             frontier.alias("p")
             .join(e.alias("q"), F.col("p.dst") == F.col("q.src"))
             .select(F.col("p.src").alias("src"), F.col("q.dst").alias("dst"))
             .distinct()
             .join(known, ["src", "dst"], "left_anti")
-            .withColumn("depth", F.lit(d))
+            .withColumn("depth", F.lit(d)),
+            eager=True,
         )
         if nxt.isEmpty():
             break
         paths = paths.union(nxt)
-        known = _ckpt(known.union(nxt.select("src", "dst")))
+        known = ckpt(known.union(nxt.select("src", "dst")))
         frontier = nxt
     return paths
 
@@ -299,20 +291,21 @@ def bfs_distances(
     at production scale the seed list is itself query output (millions of
     nodes), never a driver-side literal list.
     """
-    e = _eager(edges.select("src", "dst").distinct())
-    visited = _eager(seeds.select("node").distinct().withColumn("dist", F.lit(0)))
+    e = ckpt(edges.select("src", "dst").distinct(), eager=True)
+    visited = ckpt(seeds.select("node").distinct().withColumn("dist", F.lit(0)), eager=True)
     frontier = visited
     for d in range(1, max_depth + 1):
-        nxt = _eager(
+        nxt = ckpt(
             frontier.join(e, frontier.node == e.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), ["node"], "left_anti")
-            .withColumn("dist", F.lit(d))
+            .withColumn("dist", F.lit(d)),
+            eager=True,
         )
         if nxt.isEmpty():
             break
-        visited = _eager(visited.union(nxt))
+        visited = ckpt(visited.union(nxt), eager=True)
         frontier = nxt
     return visited
 
@@ -340,12 +333,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # the orientation join — unmaterialized, the upstream extraction plan
     # would execute 5× inside the oriented-checkpoint job (this hides from
     # the final-plan scan audit, which only sees the post-checkpoint reads)
-    und = _eager(
+    und = ckpt(
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     deg = (
         und.select(F.col("u").alias("n"))
@@ -355,7 +349,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
     du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))
-    oriented = _eager(
+    oriented = ckpt(
         und.join(du, "u")
         .join(dv, "v")
         .select(
@@ -365,14 +359,15 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
             F.when(
                 F.struct("du", "u") < F.struct("dv", "v"), F.col("v")
             ).otherwise(F.col("u")).alias("b"),
-        )
+        ),
+        eager=True,
     )
     e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = oriented.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = oriented.select(F.col("a").alias("x"), F.col("b").alias("z"))
     # checkpoint the enumerated triangles: the 3-branch membership union
     # below would otherwise re-run the two-join enumeration once per branch
-    tri = _ckpt(e1.join(e2, "y").join(e3, ["x", "z"]))
+    tri = ckpt(e1.join(e2, "y").join(e3, ["x", "z"]))
     members = (
         tri.select(F.col("x").alias("entity"))
         .union(tri.select(F.col("y").alias("entity")))
@@ -398,26 +393,28 @@ def hash_random_walks(edges: DataFrame, steps: int = 3) -> DataFrame:
     set is checkpointed once; each frontier is checkpointed (same loop
     discipline as transitive_closure).
     """
-    e = _eager(edges.select("src", "dst").distinct())
+    e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     frontier = e.select(F.col("src").alias("start")).distinct().select(
         "start", F.col("start").alias("node")
     )
     out = frontier.withColumn("step", F.lit(0))
     for k in range(1, steps + 1):
-        cand = _eager(
+        cand = ckpt(
             frontier.join(e, frontier.node == e.src).select(
                 "start",
                 F.col("dst").alias("nxt"),
                 F.md5(
                     F.concat_ws(":", F.col("node"), F.lit(str(k)), F.col("dst"))
                 ).alias("h"),
-            )
+            ),
+            eager=True,
         )
         best = cand.groupBy("start").agg(F.min("h").alias("h"))
-        frontier = _eager(
+        frontier = ckpt(
             cand.join(best, ["start", "h"]).select(
                 "start", F.col("nxt").alias("node")
-            )
+            ),
+            eager=True,
         )
         if frontier.isEmpty():
             # All walks hit sink nodes — same early exit as
@@ -444,17 +441,18 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     keyed aggregations, all partial-aggregated; the symmetrized edge set is
     checkpointed once.
     """
-    sym = _eager(
+    sym = ckpt(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
     for _ in range(iters):
-        labels = _ckpt(labels)
+        labels = ckpt(labels)
         nbr = sym.join(labels.withColumnRenamed("node", "v"), "v").select(
             F.col("u").alias("node"), "label"
         )
@@ -488,7 +486,7 @@ def personalized_pagerank(
     indicator is one extra left join on the base table, folded into the
     update expression as a 0/1 column. Ranks round to 6 decimals for the
     SQL oracle."""
-    edges = _ckpt(edges.select("src", "dst").distinct())
+    edges = ckpt(edges.select("src", "dst").distinct())
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -506,7 +504,7 @@ def personalized_pagerank(
         )
     )
     ns = base.agg(F.sum("is_seed").alias("ns"))
-    base = _ckpt(base.crossJoin(F.broadcast(ns)))
+    base = ckpt(base.crossJoin(F.broadcast(ns)))
 
     d = float(damping)
     omd = 1.0 - d
@@ -516,7 +514,7 @@ def personalized_pagerank(
     safe_ns = F.greatest(F.col("ns"), F.lit(1.0))
     ranks = base.withColumn("rank", F.col("is_seed") / safe_ns)
     for _ in range(iters):
-        ranks = _ckpt(ranks)
+        ranks = ckpt(ranks)
         dang = ranks.filter(F.col("out_deg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
         )
@@ -553,7 +551,6 @@ def entity_pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iters: int = 3,
-    materialize: bool = True,
     weight_col: str | None = None,
 ) -> DataFrame:
     """(entity, out_deg, in_deg, pagerank) over a distinct (src, dst) edge
@@ -575,8 +572,7 @@ def entity_pagerank(
     as unweighted. The unweighted path is bit-identical to before the
     parameter existed.
     """
-    ck = _ckpt if materialize else (lambda df: df)
-    edges = ck(edges)
+    edges = ckpt(edges)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -607,13 +603,13 @@ def entity_pagerank(
     # N rides along as a column (1-row agg crossJoined once): the loop body
     # needs it in expressions and must not collect it to the driver
     n_df = base.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    base = ck(base.crossJoin(F.broadcast(n_df)))
+    base = ckpt(base.crossJoin(F.broadcast(n_df)))
 
     d = float(damping)
     one_minus_d = 1.0 - d  # python float; the SQL oracle embeds repr() of this
     ranks = base.withColumn("rank", F.lit(1.0) / F.col("n"))
     for _ in range(iters):
-        ranks = ck(ranks)
+        ranks = ckpt(ranks)
         dang = ranks.filter(F.col("out_deg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
         )
@@ -673,18 +669,20 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 8) -> DataFrame:
     no-ops.
     """
     sym = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    e = _eager(
+    e = ckpt(
         sym.unionByName(
             sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
+        ).distinct(),
+        eager=True,
     )
     for _ in range(max_iter):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("src")
-        new_e = _eager(
+        new_e = ckpt(
             e.join(keep, "src", "left_semi").join(
                 keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            )
+            ),
+            eager=True,
         )
         if new_e.count() == e.count():
             return deg.filter(F.col("degree") >= k).select(
@@ -744,7 +742,7 @@ def strongly_connected(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     switch to forward-backward trimming (Blelloch et al. 2016) on the same
     DataFrame skeleton.
     """
-    cl = _eager(transitive_closure(edges, max_depth=max_depth).select("src", "dst"))
+    cl = ckpt(transitive_closure(edges, max_depth=max_depth).select("src", "dst"), eager=True)
     mutual = (
         cl.alias("f")
         .join(
@@ -759,7 +757,7 @@ def strongly_connected(edges: DataFrame, max_depth: int = 8) -> DataFrame:
         .distinct()
     )
     pairs = mutual.union(nodes.select("node", F.col("node").alias("peer")))
-    scc = _ckpt(pairs.groupBy("node").agg(F.min("peer").alias("scc_id")))
+    scc = ckpt(pairs.groupBy("node").agg(F.min("peer").alias("scc_id")))
     sizes = scc.groupBy("scc_id").agg(F.count(F.lit(1)).alias("scc_size"))
     return scc.join(sizes, "scc_id").select("node", "scc_id", "scc_size")
 
@@ -790,8 +788,8 @@ def condensation_levels(
     over the (small) condensation; per-round eager checkpoints provide the
     convergence probe.
     """
-    scc = _eager(strongly_connected(edges, max_depth).select("node", "scc_id"))
-    ce = _eager(
+    scc = ckpt(strongly_connected(edges, max_depth).select("node", "scc_id"), eager=True)
+    ce = ckpt(
         edges.join(scc.withColumnRenamed("node", "src"), "src")
         .withColumnRenamed("scc_id", "c_src")
         .join(
@@ -800,7 +798,8 @@ def condensation_levels(
         )
         .filter(F.col("c_src") != F.col("c_dst"))
         .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     nodes = scc.select(F.col("scc_id").alias("c")).distinct()
     roots = nodes.join(
@@ -809,11 +808,12 @@ def condensation_levels(
     arrivals = roots.withColumn("d", F.lit(0))
     frontier = arrivals
     for d in range(1, max_levels + 1):
-        nxt = _eager(
+        nxt = ckpt(
             frontier.join(ce, frontier["c"] == ce["src"])
             .select(F.col("dst").alias("c"))
             .distinct()
-            .withColumn("d", F.lit(d))
+            .withColumn("d", F.lit(d)),
+            eager=True,
         )
         if nxt.isEmpty():
             break
@@ -850,7 +850,7 @@ def entity_pmi(triples: DataFrame, url_col: str = "url") -> DataFrame:
     corpus size; N is a 1-row broadcast crossJoin, the marginal joins are
     entity-keyed.
     """
-    ue = _ckpt(
+    ue = ckpt(
         triples.select(
             F.col(url_col).alias("u"),
             F.explode(F.array("subj", "obj")).alias("e"),
@@ -907,7 +907,7 @@ def canonical_paths(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     min(path) aggregation; path strings carried only for surviving pairs,
     so state is O(closure), never O(all paths).
     """
-    e = _eager(edges.select("src", "dst").distinct())
+    e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     p = e.select(
         "src", "dst", F.concat(F.col("src"), F.lit("->"), F.col("dst")).alias("path")
     ).withColumn("depth", F.lit(1))
@@ -915,7 +915,7 @@ def canonical_paths(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     known = e
     frontier = p
     for d in range(2, max_depth + 1):
-        nxt = _eager(
+        nxt = ckpt(
             frontier.alias("p")
             .join(e.alias("q"), F.col("p.dst") == F.col("q.src"))
             .select(
@@ -926,12 +926,13 @@ def canonical_paths(edges: DataFrame, max_depth: int = 8) -> DataFrame:
             .join(known, ["src", "dst"], "left_anti")
             .groupBy("src", "dst")
             .agg(F.min("path").alias("path"))
-            .withColumn("depth", F.lit(d))
+            .withColumn("depth", F.lit(d)),
+            eager=True,
         )
         if nxt.isEmpty():
             break
         paths = paths.union(nxt)
-        known = _ckpt(known.union(nxt.select("src", "dst")))
+        known = ckpt(known.union(nxt.select("src", "dst")))
         frontier = nxt
     return paths.select("src", "dst", "depth", "path")
 
@@ -954,7 +955,7 @@ def adamic_adar(edges: DataFrame, min_shared: int = 2) -> DataFrame:
     pair; the in-degree table joins on the wedge key BEFORE the pair
     aggregation, so no post-agg lookups.
     """
-    e = _eager(edges.select("src", "dst").distinct())
+    e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("din"))
     a = e.select(F.col("src").alias("a"), "dst")
     b = e.select(F.col("src").alias("b"), "dst")
@@ -1002,9 +1003,10 @@ def weighted_shortest_paths(
     skew; per-round eager checkpoints cut lineage and feed the isEmpty
     convergence probe.
     """
-    e = _eager(edges.select("src", "dst", "w").distinct())
-    best = _eager(
-        seeds.select("node").distinct().withColumn("cost", F.lit(0).cast("long"))
+    e = ckpt(edges.select("src", "dst", "w").distinct(), eager=True)
+    best = ckpt(
+        seeds.select("node").distinct().withColumn("cost", F.lit(0).cast("long")),
+        eager=True,
     )
     frontier = best
     for _ in range(max_iter):
@@ -1017,11 +1019,12 @@ def weighted_shortest_paths(
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
         )
-        improved = _eager(
+        improved = ckpt(
             cand.alias("c")
             .join(best.alias("b"), "node", "left")
             .filter(F.col("b.cost").isNull() | (F.col("c.cost") < F.col("b.cost")))
-            .select("node", F.col("c.cost").alias("cost"))
+            .select("node", F.col("c.cost").alias("cost")),
+            eager=True,
         )
         if improved.isEmpty():
             break
@@ -1029,11 +1032,12 @@ def weighted_shortest_paths(
         # this equals the anti-join+replace form; groupBy sidesteps a
         # Catalyst constraint-rewrite bug the USING-key anti-join over two
         # checkpoint-derived frames trips in Spark 4.1)
-        best = _eager(
+        best = ckpt(
             best.select("node", "cost")
             .union(improved.select("node", "cost"))
             .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
+            .agg(F.min("cost").alias("cost")),
+            eager=True,
         )
         frontier = improved
     return best
@@ -1060,14 +1064,15 @@ def community_modularity(edges: DataFrame, iters: int = 3) -> DataFrame:
     (broadcast single row — the no-collect scalar idiom); every join is an
     entity-keyed equi-join and every count map-side combinable.
     """
-    ed = _eager(edges.select("src", "dst").distinct())
-    lab = _eager(label_propagation(ed, iters=iters))
-    und = _eager(
+    ed = ckpt(edges.select("src", "dst").distinct(), eager=True)
+    lab = ckpt(label_propagation(ed, iters=iters), eager=True)
+    und = ckpt(
         ed.filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
-        .distinct()
+        .distinct(),
+        eager=True,
     )
     mtot = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
     deg = (
@@ -1143,7 +1148,7 @@ def entity_type_inference(
     # facts feeds two slot projections, counts feeds the max and the
     # tiebreak join — checkpoint each ONCE or the upstream extraction
     # pipeline re-executes 4x (the round-3 recompute bug class)
-    f = _ckpt(facts.select("pred", "subj", "obj"))
+    f = ckpt(facts.select("pred", "subj", "obj"))
     votes = (
         f.select(F.col("subj").alias("entity"), case_for(0).alias("etype"))
         .unionAll(
@@ -1151,7 +1156,7 @@ def entity_type_inference(
         )
         .filter(F.col("etype").isNotNull())
     )
-    counts = _ckpt(
+    counts = ckpt(
         votes.groupBy("entity", "etype").agg(
             F.count(F.lit(1)).cast("long").alias("votes")
         )
@@ -1184,7 +1189,7 @@ def rule_mining(triples: DataFrame, min_support: int = 5) -> DataFrame:
     and the head equi-join on (s, o); aggregations are map-side
     combinable. No per-rule driver loop — the rule space IS a DataFrame.
     """
-    t = _ckpt(triples.select("subj", "pred", "obj").distinct())
+    t = ckpt(triples.select("subj", "pred", "obj").distinct())
     a = t.select(
         F.col("pred").alias("body_a"),
         F.col("subj").alias("s"),
@@ -1195,7 +1200,7 @@ def rule_mining(triples: DataFrame, min_support: int = 5) -> DataFrame:
         F.col("subj").alias("x"),
         F.col("obj").alias("o"),
     )
-    paths = _ckpt(a.join(b, "x").select("body_a", "body_b", "s", "o").distinct())
+    paths = ckpt(a.join(b, "x").select("body_a", "body_b", "s", "o").distinct())
     body = paths.groupBy("body_a", "body_b").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
     )
@@ -1238,7 +1243,7 @@ def implication_rules(triples: DataFrame, min_support: int = 2) -> DataFrame:
     One distinct fact table materialized once; both branches are fact-key
     equi-joins; sizes come from one map-side-combinable count.
     """
-    t = _ckpt(triples.select("subj", "pred", "obj").distinct())
+    t = ckpt(triples.select("subj", "pred", "obj").distinct())
     sizes = t.groupBy("pred").agg(F.count(F.lit(1)).cast("long").alias("n_p"))
     q_same = t.select(
         F.col("pred").alias("q"), "subj", "obj"
@@ -1293,7 +1298,7 @@ def apply_mined_rules(
     table (one bridge-entity self-join, materialized once and shared with
     the mining aggregates); novelty is one left_anti fact-key join.
     """
-    t = _ckpt(triples.select("subj", "pred", "obj").distinct())
+    t = ckpt(triples.select("subj", "pred", "obj").distinct())
     a = t.select(
         F.col("pred").alias("body_a"),
         F.col("subj").alias("s"),
@@ -1304,7 +1309,7 @@ def apply_mined_rules(
         F.col("subj").alias("x"),
         F.col("obj").alias("o"),
     )
-    paths = _ckpt(
+    paths = ckpt(
         a.join(b, "x").select("body_a", "body_b", "s", "o").distinct()
     )
     body = paths.groupBy("body_a", "body_b").agg(

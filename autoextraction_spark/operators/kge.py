@@ -35,10 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..materialize import ckpt
 from .fileops import _with_rank
-from .graph import _eager  # the shared iterative-loop checkpoint barrier
 
 
 def _eager_both(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -50,7 +49,7 @@ def _eager_both(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fa, fb = pool.submit(_eager, a), pool.submit(_eager, b)
+        fa, fb = pool.submit(ckpt, a, eager=True), pool.submit(ckpt, b, eager=True)
         return fa.result(), fb.result()
 
 
@@ -69,17 +68,19 @@ def _ranked_vocabs(t: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         fe = pool.submit(
-            lambda: _eager(
+            lambda: ckpt(
                 _with_rank(ent_names, "name").select(
                     "name", F.col("_rn").alias("rank")
-                )
+                ),
+                eager=True,
             )
         )
         fr = pool.submit(
-            lambda: _eager(
+            lambda: ckpt(
                 _with_rank(
                     t.select(F.col("pred").alias("name")).distinct(), "name"
-                ).select("name", F.col("_rn").alias("rank"))
+                ).select("name", F.col("_rn").alias("rank")),
+                eager=True,
             )
         )
         return fe.result(), fr.result()
@@ -139,7 +140,7 @@ def transe_train(
     branch. Updates are plain (not norm-projected) SGD — the closed-form
     variant the SQL oracle can replay exactly.
     """
-    t = _eager(triples.select("pred", "subj", "obj").distinct())
+    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
     # JVM-side two-pass global rank (fileops._with_rank) — no single-task
     # window, no zipWithIndex python round-trip; ents + rels built
     # concurrently (r6, guide §2.6)
@@ -157,7 +158,7 @@ def transe_train(
         )
         .select("pred", "subj", "obj", "neg")
     )
-    tr = _eager(tr)
+    tr = ckpt(tr, eager=True)
 
     ent_emb = _init_emb(ents, dim, ENT_INIT)
     rel_emb = _init_emb(rels, dim, REL_INIT)
@@ -188,7 +189,7 @@ def transe_train(
             .withColumn("g_t", F.expr("transform(dp, x -> -2.0d * x)"))
             .withColumn("g_n", F.expr("transform(dn, x -> 2.0d * x)"))
         )
-        j = _eager(j.select("pred", "subj", "obj", "neg", "g_hr", "g_t", "g_n"))
+        j = ckpt(j.select("pred", "subj", "obj", "neg", "g_hr", "g_t", "g_n"), eager=True)
 
         def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
             return df.select(
@@ -302,7 +303,7 @@ def rank_eval(
             9,
         ),
     ).select("subj", "pred", "obj", "cand", "score")
-    scored = scored.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    scored = ckpt(scored)
     if known is not None:
         # FILTERED setting: drop candidates that are themselves known-true
         # answers for this (subj, pred) query — except the queried tail,
@@ -388,11 +389,11 @@ def distmult_train(
     ∂/∂t = −h·r, ∂/∂n = h·r. Updates re-quantize with the same QUANT_EPS +
     round(·, 9) rule (one shared determinism story for every trainer).
     """
-    t = _eager(triples.select("pred", "subj", "obj").distinct())
+    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
     # ents + rels rank tables built concurrently (r6, guide §2.6)
     ents, rels = _ranked_vocabs(t)
     n_ent = ents.agg(F.count(F.lit(1)).alias("n_ent"))
-    tr = _eager(
+    tr = ckpt(
         t.join(ents.select(F.col("name").alias("obj"), F.col("rank").alias("t_rank")), "obj")
         .crossJoin(F.broadcast(n_ent))
         .withColumn("n_rank", (F.col("t_rank") + F.lit(neg_offset)) % F.col("n_ent"))
@@ -400,7 +401,8 @@ def distmult_train(
             ents.select(F.col("rank").alias("n_rank"), F.col("name").alias("neg")),
             "n_rank",
         )
-        .select("pred", "subj", "obj", "neg")
+        .select("pred", "subj", "obj", "neg"),
+        eager=True,
     )
 
     ent_emb = _init_emb(ents, dim, ENT_INIT)
@@ -442,7 +444,7 @@ def distmult_train(
             .withColumn("g_t", F.expr("transform(hr, x -> -x)"))
             .withColumn("g_n", F.col("hr"))
         )
-        j = _eager(j.select("pred", "subj", "obj", "neg", "g_h", "g_r", "g_t", "g_n"))
+        j = ckpt(j.select("pred", "subj", "obj", "neg", "g_h", "g_r", "g_t", "g_n"), eager=True)
 
         def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
             return df.select(
@@ -512,15 +514,16 @@ def link_predict_ann(
     """
     from .similarity import with_lsh_tables
 
-    ev = _eager(_as_vec(ent_emb))
+    ev = ckpt(_as_vec(ent_emb), eager=True)
     rv = _as_vec(rel_emb)
-    q = _eager(
+    q = ckpt(
         queries.select("subj", "pred")
         .distinct()
         .join(ev.select(F.col("name").alias("subj"), F.col("vec").alias("hv")), "subj")
         .join(rv.select(F.col("name").alias("pred"), F.col("vec").alias("rv")), "pred")
         .withColumn("qv", F.expr("zip_with(hv, rv, (a,b) -> a + b)"))
-        .select("subj", "pred", "qv")
+        .select("subj", "pred", "qv"),
+        eager=True,
     )
     qb = with_lsh_tables(q, "qv", n_planes, n_tables, dim).select(
         "subj", "pred", "table", "bucket"
@@ -548,7 +551,7 @@ def link_predict_ann(
         )
         .select("subj", "pred", "name", "score")
     )
-    scored = scored.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    scored = ckpt(scored)
     best = scored.groupBy("subj", "pred").agg(F.min("score").alias("score"))
     ann = (
         scored.join(best, ["subj", "pred", "score"])
@@ -612,7 +615,7 @@ def link_predict(
         )
         .select("subj", "pred", "predicted", "score")
     )
-    scored = scored.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    scored = ckpt(scored)
     best = scored.groupBy("subj", "pred").agg(F.min("score").alias("score"))
     return (
         scored.join(best, ["subj", "pred", "score"])
@@ -651,11 +654,11 @@ def complex_train(
     trajectory is engine-independent.
     """
     D = int(dim)
-    t = _eager(triples.select("pred", "subj", "obj").distinct())
+    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
     # ents + rels rank tables built concurrently (r6, guide §2.6)
     ents, rels = _ranked_vocabs(t)
     n_ent = ents.agg(F.count(F.lit(1)).alias("n_ent"))
-    tr = _eager(
+    tr = ckpt(
         t.join(ents.select(F.col("name").alias("obj"), F.col("rank").alias("t_rank")), "obj")
         .crossJoin(F.broadcast(n_ent))
         .withColumn("n_rank", (F.col("t_rank") + F.lit(neg_offset)) % F.col("n_ent"))
@@ -663,7 +666,8 @@ def complex_train(
             ents.select(F.col("rank").alias("n_rank"), F.col("name").alias("neg")),
             "n_rank",
         )
-        .select("pred", "subj", "obj", "neg")
+        .select("pred", "subj", "obj", "neg"),
+        eager=True,
     )
 
     ent_emb = _init_emb(ents, 2 * D, ENT_INIT)
@@ -741,7 +745,7 @@ def complex_train(
             )
             .withColumn("g_t", F.expr("transform(g_n, x -> -x)"))
         )
-        j = _eager(j.select("pred", "subj", "obj", "neg", "g_h", "g_r", "g_t", "g_n"))
+        j = ckpt(j.select("pred", "subj", "obj", "neg", "g_h", "g_r", "g_t", "g_n"), eager=True)
 
         def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
             return df.select(

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema as S
+from ..materialize import ckpt
 from . import dedup
 from .canonicalize import connected_components
 
@@ -241,7 +242,7 @@ def canonical_mapping(mentions: DataFrame, **kwargs) -> DataFrame:
     # node/edge checkpoints, and once more by the final left join — without
     # this every scan re-runs the upstream distinct over the triple table
     # (profiled at sf0.1: ~3.5s of pure recomputation on a 161-row vocab)
-    mentions = mentions.localCheckpoint(eager=True)
+    mentions = ckpt(mentions, eager=True, level=None)
     stats = mentions.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
@@ -294,9 +295,9 @@ def canonical_triples(triples: DataFrame, mapping: DataFrame | None = None) -> D
         # of recomputing the upstream pipeline twice; same for the mapping
         # (vocabulary-sized), whose plan would otherwise re-run per
         # broadcast build below
-        triples = triples.localCheckpoint(eager=True)
-        mapping = canonical_mapping(mention_vocab(triples)).localCheckpoint(
-            eager=True
+        triples = ckpt(triples, eager=True, level=None)
+        mapping = ckpt(
+            canonical_mapping(mention_vocab(triples)), eager=True, level=None
         )
     types = F.broadcast(rel_types(triples.sparkSession))
     m = F.broadcast(mapping)

@@ -38,11 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+from ..materialize import ckpt
 
 
 def _tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -60,18 +57,16 @@ def train_bigram_lm(
     ref_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Returns (bigrams, unigrams, vocab_n): ``bigrams`` = (w1, w2, c12),
     ``unigrams`` = (w1, c1) where c1 counts w1 as a bigram HISTORY (i.e.
     token occurrences excluding each document's last token — so that
     sum(c12) over w2 equals c1 exactly), ``vocab_n`` = 1-row (v) distinct
     token count. All three derive from one checkpointed token explode."""
-    ck = _ckpt if materialize else (lambda df: df)
-    toks = ck(_tokens(ref_df, id_col, text_col))
+    toks = ckpt(_tokens(ref_df, id_col, text_col))
     nxt = toks.select("_id", (F.col("pos") + 1).alias("pos"),
                       F.col("tok").alias("w1"))
-    pairs = ck(
+    pairs = ckpt(
         nxt.join(toks, ["_id", "pos"]).select("w1", F.col("tok").alias("w2"))
     )
     bigrams = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))

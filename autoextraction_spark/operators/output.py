@@ -10,9 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .. import schema as S
+from ..materialize import ckpt
 
 
 def completed_filter(states: DataFrame, keep_none: bool = False) -> DataFrame:
@@ -81,9 +81,7 @@ def resolve_by_recency(triples: DataFrame, preds: list[str] | None = None) -> Da
     # materialize: the keyed table feeds BOTH the max-key agg and the
     # winner join — unmaterialized, the upstream extraction pipeline would
     # execute twice (the audit_scans recompute class)
-    t = t.select("pred", "subj", "obj", rk.alias("rk")).localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    t = ckpt(t.select("pred", "subj", "obj", rk.alias("rk")))
     latest = t.groupBy("pred", "subj").agg(F.max("rk").alias("rk"))
     return (
         t.join(latest, ["pred", "subj", "rk"])

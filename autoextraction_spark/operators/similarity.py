@@ -17,6 +17,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import ckpt
+
 
 def auto_n_planes(n_vectors: int, target_bucket: int = 1024) -> int:
     """Plane count that keeps expected sign-LSH bucket occupancy near
@@ -321,7 +323,6 @@ def embedding_neardup_pairs(
     n_planes: int | None = None,
     n_tables: int = 4,
     dim: int = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by cosine ≥ threshold.
 
@@ -350,14 +351,10 @@ def embedding_neardup_pairs(
         joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
         pairs = joined.select("id_a", "id_b", "v_a", "v_b")
     else:
-        from .dedup import _maybe_ckpt
-
         # the (table, bucket) projection — n_tables × n_planes dot products
         # per vector — feeds BOTH sides of the self-join; one DISK_ONLY
         # materialization instead of computing the projections twice
-        bucketed = _maybe_ckpt(
-            with_lsh_tables(df, vec_col, n_planes, n_tables, dim), materialize
-        )
+        bucketed = ckpt(with_lsh_tables(df, vec_col, n_planes, n_tables, dim))
         a = bucketed.select(
             F.col(id_col).alias("id_a"), "table", "bucket"
         )
@@ -409,15 +406,13 @@ def kmeans_train(
     explodes only (cluster, d, val) rows — k·dim after partial aggregation.
     No driver collect anywhere in the loop.
     """
-    from pyspark.storagelevel import StorageLevel
 
     from .kge import QUANT_EPS
 
-    v = (
+    v = ckpt(
         vecs.select(
             F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     cents = v.filter(F.col("id") < k).select(
         F.col("id").cast("int").alias("cluster"), F.col("v").alias("cv")
@@ -431,7 +426,7 @@ def kmeans_train(
         9,
     )
     for _ in range(iters):
-        cents = cents.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        cents = ckpt(cents)
         assigned = (
             v.crossJoin(F.broadcast(cents))
             .withColumn("dist", dist)
@@ -482,16 +477,14 @@ def semdedup(
     whole point — k ≈ N/√N keeps cells ~√N); the intra-cluster self-join
     is an equi-join on cluster id, AQE-splittable under cluster-size skew.
     """
-    from pyspark.storagelevel import StorageLevel
 
     from .kge import QUANT_EPS
 
     cents = kmeans_train(vecs, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
-    v = (
+    v = ckpt(
         vecs.select(
             F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     dist = F.round(
         F.expr(
@@ -501,13 +494,12 @@ def semdedup(
         + F.lit(QUANT_EPS),
         9,
     )
-    assigned = (
+    assigned = ckpt(
         v.crossJoin(F.broadcast(cents))
         .withColumn("dist", dist)
         .groupBy("id")
         .agg(F.min(F.struct("dist", "cluster", "v")).alias("w"))
         .select("id", F.col("w.cluster").alias("cluster"), F.col("w.v").alias("v"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     a = assigned.select(
         F.col("id").alias("id_a"), F.col("cluster"), F.col("v").alias("v_a")
@@ -577,16 +569,18 @@ def pq_codes(
     same broadcast crossJoin + min(struct) with no extra corpus pass. The
     SQL oracle unrolls all m codebook trainings term-for-term.
     """
-    from pyspark.storagelevel import StorageLevel
 
     from .kge import QUANT_EPS
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
-    v = vecs.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("full")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    v = ckpt(
+        vecs.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("full"),
+        )
+    )
     dist = F.round(
         F.expr(
             "aggregate(zip_with(v, cv, (a, b) -> (a - b) * (a - b)),"

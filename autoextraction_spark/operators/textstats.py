@@ -11,8 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import ckpt
 from .dedup import spread_input
-from pyspark.storagelevel import StorageLevel
 
 # BPE-ish tokenization: letter runs | digit runs | single non-space symbol
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
@@ -411,10 +411,9 @@ def bm25_score(
     # The per-(doc, query-term) tf table feeds BOTH the df_t aggregation
     # and the scoring join; materialize it once so the documents scan +
     # explode is not replayed (it is tiny — a few rows per matching doc).
-    tf = (
+    tf = ckpt(
         toks.groupBy("id", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     )
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
     scored = (
@@ -512,7 +511,7 @@ def dsir_weights(
         "is_target",
         F.pmod(portable_hash64(F.col("gram"), seed), F.lit(B)).alias("bucket"),
     )
-    grams = grams.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    grams = ckpt(grams)
 
     raw = grams.groupBy("bucket").agg(F.count(F.lit(1)).alias("c_raw"))
     tgt = (
@@ -660,12 +659,11 @@ def shared_fingerprint_pairs(
     fingerprint (equi-join, AQE-splittable); the pair aggregation is
     map-side combinable.
     """
-    from pyspark.storagelevel import StorageLevel
 
-    f = (
+    f = ckpt(
         fps.select(F.col(id_col).alias("id"), F.col(fp_col).alias("fp"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        .distinct(),
+        eager=True,
     )
     hot = (
         f.groupBy("fp")
@@ -707,14 +705,13 @@ def tfidf_keywords(
     """
     df = spread_input(df)
     from pyspark.sql import Window as W
-    from pyspark.storagelevel import StorageLevel
 
-    tok = (
+    tok = ckpt(
         df.select(
             F.col(id_col).alias("doc_id"),
             F.explode(F.split(F.col(text_col), " ")).alias("term"),
-        )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        ),
+        eager=True,
     )
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -765,12 +762,8 @@ def collocations(
     partial-aggregated; the two c_x/c_y lookups are term-keyed equi-joins.
     """
     df = spread_input(df)
-    from pyspark.storagelevel import StorageLevel
 
-    arr = (
-        df.select(F.split(F.col(text_col), " ").alias("a"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
+    arr = ckpt(df.select(F.split(F.col(text_col), " ").alias("a")), eager=True)
     sz = F.size(F.col("a"))
     pairs = F.when(
         sz >= 2,

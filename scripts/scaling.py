@@ -25,6 +25,7 @@ import json, os, sys, time
 sys.path.insert(0, "/root/repo")
 from autoextraction_spark.session import get_spark
 from autoextraction_spark import corpus
+from autoextraction_spark.materialize import ckpt
 from autoextraction_spark.operators import detect, output, slot_fill
 
 cpus = int(sys.argv[1]); sf_dir = sys.argv[2]; replicate = int(sys.argv[3])
@@ -37,14 +38,12 @@ spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus)
 # page scan. Each timed pass still READS the materialized skeleton from disk
 # and runs the full generation->extraction->detection->slot-fill->triples
 # pipeline over it.
-from pyspark.storagelevel import StorageLevel
 # waves_per_core=8: measured at local[16], the finer tasks + post-explode
 # uniform partitions recover ~7% of wall vs the 4-wave default (stalled
 # cores hand their remaining work to the scheduler instead of dragging a
 # whole wave; see corpus.doc_skeleton, measured in docs/ROUND5.md and
 # BENCH/BASELINE.md)
-skel = corpus.doc_skeleton(spark, sf_dir, replicate, waves_per_core=8).localCheckpoint(
-    eager=True, storageLevel=StorageLevel.DISK_ONLY)
+skel = ckpt(corpus.doc_skeleton(spark, sf_dir, replicate, waves_per_core=8), eager=True)
 
 def job():
     # r6: the CURRENT stages A-D hot path — the fused single-hop pipeline

@@ -86,6 +86,7 @@ def build_pages(spark, n_docs: int):
 
 
 def run_job(spark, n_docs: int) -> dict:
+    from autoextraction_spark.materialize import ckpt
     from autoextraction_spark.operators import detect, linking, output, slot_fill
     from autoextraction_spark.operators.dedup import paragraph_dedup
     from autoextraction_spark.pipeline import salted_host_counts
@@ -104,9 +105,11 @@ def run_job(spark, n_docs: int) -> dict:
     completed = slot_fill.ordered_slot_fill(
         det, policy="rl", carry_text=False, dedup_assignments=True
     )
-    triples = output.to_triples(
-        output.completed_filter(completed), assume_unique=True
-    ).localCheckpoint(eager=True)
+    triples = ckpt(
+        output.to_triples(output.completed_filter(completed), assume_unique=True),
+        eager=True,
+        level=None,
+    )
     wall_extract = round(time.time() - t0, 3)
     t0 = time.time()
     n_canonical = linking.canonical_triples(triples).count()

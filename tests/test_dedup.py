@@ -378,3 +378,21 @@ def test_boilerplate_grams_stop_gram_mining(spark):
     # 2-host grams are below the stop-gram bar
     assert all(v.n_hosts >= 3 for v in out.values())
     assert not any(g.startswith("shared only") for g in out)
+
+
+def test_spread_input_matches_plan_nodes_not_plan_text(spark):
+    target = spark.sparkContext.defaultParallelism
+    assert target > 1
+    narrow = spark.range(0, 100, 1, 1)
+    # a wide-node name inside a column name is not a wide node
+    for name in ("id", "JoinDate", "SortOrder", "text_Window"):
+        df = narrow.withColumnRenamed("id", name)
+        assert dedup.spread_input(df).rdd.getNumPartitions() == target, name
+    joined = narrow.join(spark.range(0, 10, 1, 1), "id")
+    agg = narrow.groupBy((F.col("id") % 3).alias("k")).count()
+    narrow.createOrReplaceTempView("spread_t")
+    sub = spark.sql(
+        "SELECT * FROM spread_t WHERE id > (SELECT max(id) - 5 FROM spread_t)"
+    )
+    for df in (joined, agg, sub):
+        assert dedup.spread_input(df) is df
