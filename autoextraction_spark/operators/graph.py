@@ -675,6 +675,7 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 8) -> DataFrame:
         ).distinct(),
         eager=True,
     )
+    n = e.count()
     for _ in range(max_iter):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("src")
@@ -684,11 +685,12 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 8) -> DataFrame:
             ),
             eager=True,
         )
-        if new_e.count() == e.count():
+        new_n = new_e.count()
+        if new_n == n:
             return deg.filter(F.col("degree") >= k).select(
                 F.col("src").alias("node"), F.col("degree")
             )
-        e = new_e
+        e, n = new_e, new_n
     raise RuntimeError(
         f"k_core did not converge within {max_iter} iterations — raise "
         "max_iter (and extend the oracle's unroll to match)"

@@ -1,12 +1,20 @@
-"""Knowledge-graph embedding training (TransE) + link prediction — engine-new
+"""Knowledge-graph embedding training + link prediction — engine-new
 downstream of the north_rule's triple materialization: the standard next step
 after building a KG is to train an embedding for link prediction / KG
-completion (Bordes et al., *Translating Embeddings for Modeling
-Multi-relational Data*, NeurIPS 2013).
+completion.
 
-Distributed-training shape (the third trainer in the engine, after the
-logistic-regression quality classifier and the fitted-Q RL trainer — same
-design rules):
+One training loop (:func:`_train`) serves three score functions, each a
+public trainer that supplies only its hinge test and gradient arrays:
+
+- TransE (Bordes et al., *Translating Embeddings for Modeling
+  Multi-relational Data*, NeurIPS 2013): ‖h + r − t‖², lower is better;
+- DistMult (Yang et al., ICLR 2015): Σ_d h_d·r_d·t_d, higher is better;
+- ComplEx (Trouillon et al., ICML 2016): Re(Σ_j h_j·r_j·conj(t_j)) over
+  2·dim packed real coordinates, higher is better.
+
+Distributed-training shape (same design rules as the engine's other
+trainers, the logistic-regression quality classifier and the fitted-Q RL
+trainer):
 
 - The model IS a DataFrame: one (name, d, val) row per embedding coordinate.
   At web scale the entity vocabulary is billions of rows — a driver-side
@@ -33,64 +41,57 @@ embedding the resulting graph is engine-new (SURVEY.md engine-new inventory).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import concurrent.futures
+from collections.abc import Callable
+from functools import partial
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..materialize import ckpt
 from .fileops import _with_rank
 
 
-def _eager_both(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Materialize two INDEPENDENT eager checkpoints concurrently
-    (guide §2.6: driver actions are sequential only because the code calls
-    them sequentially). The entity/relation embedding tables never depend
-    on each other inside an iteration, so their two small checkpoint jobs
-    overlap instead of paying scheduling latency back-to-back."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa, fb = pool.submit(ckpt, a, eager=True), pool.submit(ckpt, b, eager=True)
-        return fa.result(), fb.result()
+def _both(session: SparkSession, fa: Callable, fb: Callable) -> tuple:
+    """Run two INDEPENDENT driver actions concurrently (guide §2.6: driver
+    actions are sequential only because the code calls them sequentially)
+    and return both results. Each pool thread inherits the caller's local
+    properties (job group, description, scheduler pool), so the jobs it
+    runs stay visible to and cancellable through the caller's group."""
+    with concurrent.futures.ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(inheritable_thread_target(session)(f)) for f in (fa, fb)]
+        return futs[0].result(), futs[1].result()
 
 
 def _ranked_vocabs(t: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(ents, rels) rank tables for a checkpointed triple table, built
-    CONCURRENTLY (guide §2.6): each _with_rank call runs ~3 small driver
-    jobs (range-sample, checkpoint, counts collect) and the two vocabs
-    depend only on ``t`` — overlapping them halves the rank-build latency
-    every trainer pays."""
+    """(ents, rels) rank tables for a checkpointed triple table: JVM-side
+    two-pass global ranks (fileops._with_rank; no single-task window, no
+    zipWithIndex python round-trip) built CONCURRENTLY — each _with_rank
+    call runs ~3 small driver jobs (range-sample, checkpoint, counts
+    collect) and the two vocabs depend only on ``t``, so overlapping them
+    halves the rank-build latency every trainer pays."""
+    def ranked(names: DataFrame) -> DataFrame:
+        return ckpt(
+            _with_rank(names, "name").select("name", F.col("_rn").alias("rank")),
+            eager=True,
+        )
+
     ent_names = (
         t.select(F.col("subj").alias("name"))
         .union(t.select(F.col("obj").alias("name")))
         .distinct()
     )
-    from concurrent.futures import ThreadPoolExecutor
+    rel_names = t.select(F.col("pred").alias("name")).distinct()
+    return _both(t.sparkSession, partial(ranked, ent_names), partial(ranked, rel_names))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fe = pool.submit(
-            lambda: ckpt(
-                _with_rank(ent_names, "name").select(
-                    "name", F.col("_rn").alias("rank")
-                ),
-                eager=True,
-            )
-        )
-        fr = pool.submit(
-            lambda: ckpt(
-                _with_rank(
-                    t.select(F.col("pred").alias("name")).distinct(), "name"
-                ).select("name", F.col("_rn").alias("rank")),
-                eager=True,
-            )
-        )
-        return fe.result(), fr.result()
 
 #: init constants — arbitrary coprime multipliers; values in [-0.5, 0.5)
 ENT_INIT = (37, 101, 97)
 REL_INIT = (53, 67, 89)
 
 #: boundary-avoiding quantization offset for the per-iteration round(·, 9)
-#: (see transe_train._update): large vs cross-engine float-sum noise
+#: (see _update): large vs cross-engine float-sum noise
 #: (~1e-13), small vs the 5e-11 decimal grid the default-lr updates live on.
 QUANT_EPS = 2e-11
 
@@ -119,6 +120,119 @@ def _as_vec(emb: DataFrame) -> DataFrame:
     )
 
 
+def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
+    return df.select(F.col(key).alias("name"), F.posexplode(grad).alias("d", "g"))
+
+
+def _update(emb: DataFrame, grad: DataFrame, lr: float) -> DataFrame:
+    # Re-quantize the stored coordinate to 9 decimals each iteration
+    # so the inter-iteration trajectory is engine-independent: the
+    # gradient sums feeding the next round's sp/sn are unordered
+    # float sums (Spark groupBy vs DuckDB GROUP BY), and without
+    # this re-quantization a last-ulp difference could compound
+    # across iterations and flip a later hinge branch.
+    #
+    # QUANT_EPS before the round avoids exact decimal half-
+    # boundaries: once values are 1e-9 multiples, the next update
+    # (lr=0.05 × 1e-9-quantized gradient sums) lands on a 5e-11
+    # decimal grid that CONTAINS the x.5e-9 rounding boundaries —
+    # there, sub-1e-14 cross-engine float noise decides the round
+    # and Spark (shortest-decimal HALF_UP) vs DuckDB (binary-scaled
+    # C round) flip coins independently. The 2e-11 offset (≫ noise,
+    # ≪ grid pitch, applied identically in both engines) keeps every
+    # quantized value ≥2e-11 away from every boundary, so both
+    # engines always round to the same decimal — and both then store
+    # the same double (nearest double to that decimal).
+    return emb.join(grad, ["name", "d"], "left").select(
+        "name",
+        "d",
+        F.round(
+            F.col("val")
+            - F.lit(float(lr)) * F.coalesce(F.col("g"), F.lit(0.0))
+            + F.lit(QUANT_EPS),
+            9,
+        ).alias("val"),
+    )
+
+
+def _train(
+    triples: DataFrame,
+    width: int,
+    iters: int,
+    lr: float,
+    neg_offset: int,
+    score_grads: Callable[[DataFrame], DataFrame],
+    grad_cols: tuple[str, str, str, str],
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The full-batch hinge loop every trainer runs. ``score_grads(j)``
+    takes the per-triple frame with vectors ``hv``/``rv``/``tv``/``nv``
+    (``width`` coordinates each), keeps the hinge-violating triples and adds
+    the gradient arrays named by ``grad_cols`` — the h, r, t and t' columns,
+    in that order (one column may serve several roles)."""
+    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
+    ents, rels = _ranked_vocabs(t)
+    n_ent = ents.agg(F.count(F.lit(1)).alias("n_ent"))
+
+    # corrupted tail by rank shift: two vocabulary joins, plan-built once
+    tr = (
+        t.join(ents.select(F.col("name").alias("obj"), F.col("rank").alias("t_rank")), "obj")
+        .crossJoin(F.broadcast(n_ent))
+        .withColumn("n_rank", (F.col("t_rank") + F.lit(neg_offset)) % F.col("n_ent"))
+        .join(
+            ents.select(F.col("rank").alias("n_rank"), F.col("name").alias("neg")),
+            "n_rank",
+        )
+        .select("pred", "subj", "obj", "neg")
+    )
+    tr = ckpt(tr, eager=True)
+
+    ent_emb = _init_emb(ents, width, ENT_INIT)
+    rel_emb = _init_emb(rels, width, REL_INIT)
+    g_h, g_r, g_t, g_n = grad_cols
+
+    for _ in range(iters):
+        # the two tables never depend on each other inside an iteration, so
+        # their two small checkpoint jobs overlap instead of paying
+        # scheduling latency back-to-back
+        ent_emb, rel_emb = _both(
+            t.sparkSession,
+            partial(ckpt, ent_emb, eager=True),
+            partial(ckpt, rel_emb, eager=True),
+        )
+        ev, rv = _as_vec(ent_emb), _as_vec(rel_emb)
+        j = (
+            tr.join(ev.select(F.col("name").alias("subj"), F.col("vec").alias("hv")), "subj")
+            .join(rv.select(F.col("name").alias("pred"), F.col("vec").alias("rv")), "pred")
+            .join(ev.select(F.col("name").alias("obj"), F.col("vec").alias("tv")), "obj")
+            .join(ev.select(F.col("name").alias("neg"), F.col("vec").alias("nv")), "neg")
+        )
+        j = ckpt(
+            score_grads(j).select("pred", "subj", "obj", "neg", *dict.fromkeys(grad_cols)),
+            eager=True,
+        )
+        ent_grad = (
+            _contrib(j, "subj", g_h)
+            .union(_contrib(j, "obj", g_t))
+            .union(_contrib(j, "neg", g_n))
+            .groupBy("name", "d")
+            .agg(F.sum("g").alias("g"))
+        )
+        rel_grad = _contrib(j, "pred", g_r).groupBy("name", "d").agg(
+            F.sum("g").alias("g")
+        )
+        ent_emb = _update(ent_emb, ent_grad, lr)
+        rel_emb = _update(rel_emb, rel_grad, lr)
+
+    return ent_emb, rel_emb, tr
+
+
+def _emb_table(ent: DataFrame, rel: DataFrame) -> DataFrame:
+    """``(kind, name, d, val)`` — ent + rel rows, values rounded to 6."""
+    return ent.select(F.lit("ent").alias("kind"), "name", "d", F.round("val", 6).alias("val")).union(
+        rel.select(F.lit("rel").alias("kind"), "name", "d", F.round("val", 6).alias("val"))
+    )
+
+
 def transe_train(
     triples: DataFrame,
     dim: int = 4,
@@ -140,38 +254,8 @@ def transe_train(
     branch. Updates are plain (not norm-projected) SGD — the closed-form
     variant the SQL oracle can replay exactly.
     """
-    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
-    # JVM-side two-pass global rank (fileops._with_rank) — no single-task
-    # window, no zipWithIndex python round-trip; ents + rels built
-    # concurrently (r6, guide §2.6)
-    ents, rels = _ranked_vocabs(t)
-    n_ent = ents.agg(F.count(F.lit(1)).alias("n_ent"))
 
-    # corrupted tail by rank shift: two vocabulary joins, plan-built once
-    tr = (
-        t.join(ents.select(F.col("name").alias("obj"), F.col("rank").alias("t_rank")), "obj")
-        .crossJoin(F.broadcast(n_ent))
-        .withColumn("n_rank", (F.col("t_rank") + F.lit(neg_offset)) % F.col("n_ent"))
-        .join(
-            ents.select(F.col("rank").alias("n_rank"), F.col("name").alias("neg")),
-            "n_rank",
-        )
-        .select("pred", "subj", "obj", "neg")
-    )
-    tr = ckpt(tr, eager=True)
-
-    ent_emb = _init_emb(ents, dim, ENT_INIT)
-    rel_emb = _init_emb(rels, dim, REL_INIT)
-
-    for _ in range(iters):
-        ent_emb, rel_emb = _eager_both(ent_emb, rel_emb)
-        ev, rv = _as_vec(ent_emb), _as_vec(rel_emb)
-        j = (
-            tr.join(ev.select(F.col("name").alias("subj"), F.col("vec").alias("hv")), "subj")
-            .join(rv.select(F.col("name").alias("pred"), F.col("vec").alias("rv")), "pred")
-            .join(ev.select(F.col("name").alias("obj"), F.col("vec").alias("tv")), "obj")
-            .join(ev.select(F.col("name").alias("neg"), F.col("vec").alias("nv")), "neg")
-        )
+    def score_grads(j: DataFrame) -> DataFrame:
         # pure-codegen array math: diffs, squared norms, hinge on a ROUNDED
         # margin so the branch is engine-portable
         j = (
@@ -184,72 +268,44 @@ def transe_train(
         # per-triple gradient arrays: ∂loss/∂h = ∂loss/∂r = 2(t'−t), written
         # as 2(dp−dn) so the SQL oracle computes the BIT-IDENTICAL formula
         # from its dp/dn columns (2(t'−t) differs in the last ulp)
-        j = (
+        return (
             j.withColumn("g_hr", F.expr("zip_with(dp, dn, (p,q) -> 2.0d * (p - q))"))
             .withColumn("g_t", F.expr("transform(dp, x -> -2.0d * x)"))
             .withColumn("g_n", F.expr("transform(dn, x -> 2.0d * x)"))
         )
-        j = ckpt(j.select("pred", "subj", "obj", "neg", "g_hr", "g_t", "g_n"), eager=True)
 
-        def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
-            return df.select(
-                F.col(key).alias("name"), F.posexplode(grad).alias("d", "g")
-            )
-
-        ent_grad = (
-            _contrib(j, "subj", "g_hr")
-            .union(_contrib(j, "obj", "g_t"))
-            .union(_contrib(j, "neg", "g_n"))
-            .groupBy("name", "d")
-            .agg(F.sum("g").alias("g"))
-        )
-        rel_grad = _contrib(j, "pred", "g_hr").groupBy("name", "d").agg(
-            F.sum("g").alias("g")
-        )
-
-        def _update(emb: DataFrame, grad: DataFrame) -> DataFrame:
-            # Re-quantize the stored coordinate to 9 decimals each iteration
-            # so the inter-iteration trajectory is engine-independent: the
-            # gradient sums feeding the next round's sp/sn are unordered
-            # float sums (Spark groupBy vs DuckDB GROUP BY), and without
-            # this re-quantization a last-ulp difference could compound
-            # across iterations and flip a later hinge branch.
-            #
-            # QUANT_EPS before the round avoids exact decimal half-
-            # boundaries: once values are 1e-9 multiples, the next update
-            # (lr=0.05 × 1e-9-quantized gradient sums) lands on a 5e-11
-            # decimal grid that CONTAINS the x.5e-9 rounding boundaries —
-            # there, sub-1e-14 cross-engine float noise decides the round
-            # and Spark (shortest-decimal HALF_UP) vs DuckDB (binary-scaled
-            # C round) flip coins independently. The 2e-11 offset (≫ noise,
-            # ≪ grid pitch, applied identically in both engines) keeps every
-            # quantized value ≥2e-11 away from every boundary, so both
-            # engines always round to the same decimal — and both then store
-            # the same double (nearest double to that decimal).
-            return emb.join(grad, ["name", "d"], "left").select(
-                "name",
-                "d",
-                F.round(
-                    F.col("val")
-                    - F.lit(float(lr)) * F.coalesce(F.col("g"), F.lit(0.0))
-                    + F.lit(QUANT_EPS),
-                    9,
-                ).alias("val"),
-            )
-
-        ent_emb = _update(ent_emb, ent_grad)
-        rel_emb = _update(rel_emb, rel_grad)
-
-    return ent_emb, rel_emb, tr
+    return _train(
+        triples, dim, iters, lr, neg_offset, score_grads, ("g_hr", "g_hr", "g_t", "g_n")
+    )
 
 
 def transe_embeddings(triples: DataFrame, **kw) -> DataFrame:
     """Trained embedding table ``(kind, name, d, val)`` — ent + rel rows,
     values rounded to 6 decimals so the SQL oracle's order-insensitive
     float sums compare exactly (the pagerank/quality_classifier rule)."""
-    ent, rel, _ = transe_train(triples, **kw)
-    return ent.select(F.lit("ent").alias("kind"), "name", "d", F.round("val", 6).alias("val")).union(
-        rel.select(F.lit("rel").alias("kind"), "name", "d", F.round("val", 6).alias("val"))
+    return _emb_table(*transe_train(triples, **kw)[:2])
+
+
+#: squared TransE distance ‖h + r − c‖² of candidate vector ``cv`` from the
+#: query point — the score link_predict argmins and rank_eval ranks by
+TRANSE_DIST = (
+    "aggregate(zip_with(zip_with(hv, rv, (a,b) -> a + b), cv,"
+    " (s,c) -> s - c), cast(0.0 as double), (acc,x) -> acc + x*x)"
+)
+
+
+def _best_tail(scored: DataFrame, cand: str) -> DataFrame:
+    """(subj, pred, predicted, score) — the two-step argmin of a
+    (subj, pred, ``cand``, score) table, checkpointed once: min score per
+    query, then min candidate name at that score (no engine-specific
+    argmin-over-struct)."""
+    scored = ckpt(scored)
+    best = scored.groupBy("subj", "pred").agg(F.min("score").alias("score"))
+    return (
+        scored.join(best, ["subj", "pred", "score"])
+        .groupBy("subj", "pred", "score")
+        .agg(F.min(cand).alias("predicted"))
+        .select("subj", "pred", "predicted", "score")
     )
 
 
@@ -295,13 +351,7 @@ def rank_eval(
     cand = ev.select(F.col("name").alias("cand"), F.col("vec").alias("cv"))
     scored = q.crossJoin(cand).withColumn(
         "score",
-        F.round(
-            F.expr(
-                "aggregate(zip_with(zip_with(hv, rv, (a,b) -> a + b), cv,"
-                " (s,c) -> s - c), cast(0.0 as double), (acc,x) -> acc + x*x)"
-            ),
-            9,
-        ),
+        F.round(F.expr(TRANSE_DIST), 9),
     ).select("subj", "pred", "obj", "cand", "score")
     scored = ckpt(scored)
     if known is not None:
@@ -389,34 +439,8 @@ def distmult_train(
     ∂/∂t = −h·r, ∂/∂n = h·r. Updates re-quantize with the same QUANT_EPS +
     round(·, 9) rule (one shared determinism story for every trainer).
     """
-    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
-    # ents + rels rank tables built concurrently (r6, guide §2.6)
-    ents, rels = _ranked_vocabs(t)
-    n_ent = ents.agg(F.count(F.lit(1)).alias("n_ent"))
-    tr = ckpt(
-        t.join(ents.select(F.col("name").alias("obj"), F.col("rank").alias("t_rank")), "obj")
-        .crossJoin(F.broadcast(n_ent))
-        .withColumn("n_rank", (F.col("t_rank") + F.lit(neg_offset)) % F.col("n_ent"))
-        .join(
-            ents.select(F.col("rank").alias("n_rank"), F.col("name").alias("neg")),
-            "n_rank",
-        )
-        .select("pred", "subj", "obj", "neg"),
-        eager=True,
-    )
 
-    ent_emb = _init_emb(ents, dim, ENT_INIT)
-    rel_emb = _init_emb(rels, dim, REL_INIT)
-
-    for _ in range(iters):
-        ent_emb, rel_emb = _eager_both(ent_emb, rel_emb)
-        ev, rv = _as_vec(ent_emb), _as_vec(rel_emb)
-        j = (
-            tr.join(ev.select(F.col("name").alias("subj"), F.col("vec").alias("hv")), "subj")
-            .join(rv.select(F.col("name").alias("pred"), F.col("vec").alias("rv")), "pred")
-            .join(ev.select(F.col("name").alias("obj"), F.col("vec").alias("tv")), "obj")
-            .join(ev.select(F.col("name").alias("neg"), F.col("vec").alias("nv")), "neg")
-        )
+    def score_grads(j: DataFrame) -> DataFrame:
         j = (
             j.withColumn("hr", F.expr("zip_with(hv, rv, (a,b) -> a * b)"))
             .withColumn(
@@ -437,56 +461,23 @@ def distmult_train(
         )
         # gradients from shared intermediates: nmt = n − t once, then
         # r·nmt / h·nmt / ∓h·r — the oracle computes the SAME trees
-        j = (
+        return (
             j.withColumn("nmt", F.expr("zip_with(nv, tv, (a,b) -> a - b)"))
             .withColumn("g_h", F.expr("zip_with(rv, nmt, (a,b) -> a * b)"))
             .withColumn("g_r", F.expr("zip_with(hv, nmt, (a,b) -> a * b)"))
             .withColumn("g_t", F.expr("transform(hr, x -> -x)"))
             .withColumn("g_n", F.col("hr"))
         )
-        j = ckpt(j.select("pred", "subj", "obj", "neg", "g_h", "g_r", "g_t", "g_n"), eager=True)
 
-        def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
-            return df.select(
-                F.col(key).alias("name"), F.posexplode(grad).alias("d", "g")
-            )
-
-        ent_grad = (
-            _contrib(j, "subj", "g_h")
-            .union(_contrib(j, "obj", "g_t"))
-            .union(_contrib(j, "neg", "g_n"))
-            .groupBy("name", "d")
-            .agg(F.sum("g").alias("g"))
-        )
-        rel_grad = _contrib(j, "pred", "g_r").groupBy("name", "d").agg(
-            F.sum("g").alias("g")
-        )
-
-        def _update(emb: DataFrame, grad: DataFrame) -> DataFrame:
-            return emb.join(grad, ["name", "d"], "left").select(
-                "name",
-                "d",
-                F.round(
-                    F.col("val")
-                    - F.lit(float(lr)) * F.coalesce(F.col("g"), F.lit(0.0))
-                    + F.lit(QUANT_EPS),
-                    9,
-                ).alias("val"),
-            )
-
-        ent_emb = _update(ent_emb, ent_grad)
-        rel_emb = _update(rel_emb, rel_grad)
-
-    return ent_emb, rel_emb, tr
+    return _train(
+        triples, dim, iters, lr, neg_offset, score_grads, ("g_h", "g_r", "g_t", "g_n")
+    )
 
 
 def distmult_embeddings(triples: DataFrame, **kw) -> DataFrame:
     """Trained DistMult (kind, name, d, val) table, rounded to 6 — same
     output contract as transe_embeddings."""
-    ent, rel, _ = distmult_train(triples, **kw)
-    return ent.select(F.lit("ent").alias("kind"), "name", "d", F.round("val", 6).alias("val")).union(
-        rel.select(F.lit("rel").alias("kind"), "name", "d", F.round("val", 6).alias("val"))
-    )
+    return _emb_table(*distmult_train(triples, **kw)[:2])
 
 
 def link_predict_ann(
@@ -551,14 +542,7 @@ def link_predict_ann(
         )
         .select("subj", "pred", "name", "score")
     )
-    scored = ckpt(scored)
-    best = scored.groupBy("subj", "pred").agg(F.min("score").alias("score"))
-    ann = (
-        scored.join(best, ["subj", "pred", "score"])
-        .groupBy("subj", "pred", "score")
-        .agg(F.min("name").alias("predicted"))
-        .select("subj", "pred", "predicted", "score")
-    )
+    ann = _best_tail(scored, "name")
     bf = link_predict(ent_emb, rel_emb, queries.select("subj", "pred").distinct()).select(
         "subj", "pred", F.col("predicted").alias("predicted_bf")
     )
@@ -603,26 +587,10 @@ def link_predict(
     cand = ev.select(F.col("name").alias("predicted"), F.col("vec").alias("cv"))
     scored = (
         q.crossJoin(cand)
-        .withColumn(
-            "score",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(zip_with(hv, rv, (a,b) -> a + b), cv,"
-                    " (s,c) -> s - c), cast(0.0 as double), (acc,x) -> acc + x*x)"
-                ),
-                9,
-            ),
-        )
+        .withColumn("score", F.round(F.expr(TRANSE_DIST), 9))
         .select("subj", "pred", "predicted", "score")
     )
-    scored = ckpt(scored)
-    best = scored.groupBy("subj", "pred").agg(F.min("score").alias("score"))
-    return (
-        scored.join(best, ["subj", "pred", "score"])
-        .groupBy("subj", "pred", "score")
-        .agg(F.min("predicted").alias("predicted"))
-        .select("subj", "pred", "predicted", "score")
-    )
+    return _best_tail(scored, "predicted")
 
 
 def complex_train(
@@ -654,34 +622,8 @@ def complex_train(
     trajectory is engine-independent.
     """
     D = int(dim)
-    t = ckpt(triples.select("pred", "subj", "obj").distinct(), eager=True)
-    # ents + rels rank tables built concurrently (r6, guide §2.6)
-    ents, rels = _ranked_vocabs(t)
-    n_ent = ents.agg(F.count(F.lit(1)).alias("n_ent"))
-    tr = ckpt(
-        t.join(ents.select(F.col("name").alias("obj"), F.col("rank").alias("t_rank")), "obj")
-        .crossJoin(F.broadcast(n_ent))
-        .withColumn("n_rank", (F.col("t_rank") + F.lit(neg_offset)) % F.col("n_ent"))
-        .join(
-            ents.select(F.col("rank").alias("n_rank"), F.col("name").alias("neg")),
-            "n_rank",
-        )
-        .select("pred", "subj", "obj", "neg"),
-        eager=True,
-    )
 
-    ent_emb = _init_emb(ents, 2 * D, ENT_INIT)
-    rel_emb = _init_emb(rels, 2 * D, REL_INIT)
-
-    for _ in range(iters):
-        ent_emb, rel_emb = _eager_both(ent_emb, rel_emb)
-        ev, rv = _as_vec(ent_emb), _as_vec(rel_emb)
-        j = (
-            tr.join(ev.select(F.col("name").alias("subj"), F.col("vec").alias("hv")), "subj")
-            .join(rv.select(F.col("name").alias("pred"), F.col("vec").alias("rv")), "pred")
-            .join(ev.select(F.col("name").alias("obj"), F.col("vec").alias("tv")), "obj")
-            .join(ev.select(F.col("name").alias("neg"), F.col("vec").alias("nv")), "neg")
-        )
+    def score_grads(j: DataFrame) -> DataFrame:
         # Re/Im split by index arithmetic on the packed arrays; hr = the
         # complex product h·r, whose components are the t/n gradients.
         j = (
@@ -717,7 +659,7 @@ def complex_train(
         )
         # gradients from shared intermediates (nmt = n − t over the packed
         # layout); each branch is the EXACT tree the oracle writes per part
-        j = (
+        return (
             j.withColumn("nmt", F.expr("zip_with(nv, tv, (a,b) -> a - b)"))
             .withColumn(
                 "g_h",
@@ -745,47 +687,14 @@ def complex_train(
             )
             .withColumn("g_t", F.expr("transform(g_n, x -> -x)"))
         )
-        j = ckpt(j.select("pred", "subj", "obj", "neg", "g_h", "g_r", "g_t", "g_n"), eager=True)
 
-        def _contrib(df: DataFrame, key: str, grad: str) -> DataFrame:
-            return df.select(
-                F.col(key).alias("name"), F.posexplode(grad).alias("d", "g")
-            )
-
-        ent_grad = (
-            _contrib(j, "subj", "g_h")
-            .union(_contrib(j, "obj", "g_t"))
-            .union(_contrib(j, "neg", "g_n"))
-            .groupBy("name", "d")
-            .agg(F.sum("g").alias("g"))
-        )
-        rel_grad = _contrib(j, "pred", "g_r").groupBy("name", "d").agg(
-            F.sum("g").alias("g")
-        )
-
-        def _update(emb: DataFrame, grad: DataFrame) -> DataFrame:
-            return emb.join(grad, ["name", "d"], "left").select(
-                "name",
-                "d",
-                F.round(
-                    F.col("val")
-                    - F.lit(float(lr)) * F.coalesce(F.col("g"), F.lit(0.0))
-                    + F.lit(QUANT_EPS),
-                    9,
-                ).alias("val"),
-            )
-
-        ent_emb = _update(ent_emb, ent_grad)
-        rel_emb = _update(rel_emb, rel_grad)
-
-    return ent_emb, rel_emb, tr
+    return _train(
+        triples, 2 * D, iters, lr, neg_offset, score_grads, ("g_h", "g_r", "g_t", "g_n")
+    )
 
 
 def complex_embeddings(triples: DataFrame, **kw) -> DataFrame:
     """Trained ComplEx (kind, name, d, val) table, rounded to 6 — same
     output contract as transe_embeddings/distmult_embeddings (d < dim is
     the real part, d ≥ dim the imaginary part)."""
-    ent, rel, _ = complex_train(triples, **kw)
-    return ent.select(F.lit("ent").alias("kind"), "name", "d", F.round("val", 6).alias("val")).union(
-        rel.select(F.lit("rel").alias("kind"), "name", "d", F.round("val", 6).alias("val"))
-    )
+    return _emb_table(*complex_train(triples, **kw)[:2])

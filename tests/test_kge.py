@@ -1,4 +1,5 @@
-"""TransE KG-embedding training + link prediction (operators/kge.py)."""
+"""KG-embedding training (TransE, DistMult, ComplEx) + link prediction
+(operators/kge.py)."""
 
 from decimal import ROUND_HALF_UP, Decimal
 
@@ -67,21 +68,6 @@ def tiny_kg(spark):
     ]
     df = spark.createDataFrame(rows, "pred string, subj string, obj string")
     return rows, df
-
-
-def test_transe_matches_numpy_reference(tiny_kg):
-    rows, df = tiny_kg
-    ent, rel, _ = kge.transe_train(df, dim=4, iters=2)
-    ents, rels, E, R = _reference_transe(rows, dim=4, iters=2)
-    got_e = {(r.name, r.d): r.val for r in ent.collect()}
-    got_r = {(r.name, r.d): r.val for r in rel.collect()}
-    assert len(got_e) == len(ents) * 4 and len(got_r) == len(rels) * 4
-    for i, e in enumerate(ents):
-        for d in range(4):
-            assert got_e[(e, d)] == pytest.approx(E[i, d], abs=1e-9), (e, d)
-    for i, r in enumerate(rels):
-        for d in range(4):
-            assert got_r[(r, d)] == pytest.approx(R[i, d], abs=1e-9), (r, d)
 
 
 def test_transe_training_reduces_hinge_loss(tiny_kg):
@@ -248,21 +234,6 @@ def _reference_distmult(triples, dim=4, iters=2, lr=0.05, margin=1.0, neg_offset
     return ents, rels, E, R
 
 
-def test_distmult_matches_numpy_reference(tiny_kg):
-    rows, df = tiny_kg
-    ent, rel, _ = kge.distmult_train(df, dim=4, iters=2)
-    ents, rels, E, R = _reference_distmult(rows, dim=4, iters=2)
-    got_e = {(r.name, r.d): r.val for r in ent.collect()}
-    got_r = {(r.name, r.d): r.val for r in rel.collect()}
-    assert len(got_e) == len(ents) * 4 and len(got_r) == len(rels) * 4
-    for i, e in enumerate(ents):
-        for d in range(4):
-            assert got_e[(e, d)] == pytest.approx(E[i, d], abs=1e-9), (e, d)
-    for i, r in enumerate(rels):
-        for d in range(4):
-            assert got_r[(r, d)] == pytest.approx(R[i, d], abs=1e-9), (r, d)
-
-
 def test_distmult_training_moves_weights(tiny_kg):
     rows, _ = tiny_kg
     _, _, E0, R0 = _reference_distmult(rows, iters=0)
@@ -334,19 +305,71 @@ def _reference_complex(triples, dim=4, iters=2, lr=0.05, margin=1.0, neg_offset=
     return ents, rels, E, R
 
 
-def test_complex_matches_numpy_reference(tiny_kg):
+#: (trainer, numpy reference, coordinates per dim) — every public trainer
+#: runs through the shared kge._train loop
+TRAINERS = [
+    pytest.param(kge.transe_train, _reference_transe, 1, id="transe"),
+    pytest.param(kge.distmult_train, _reference_distmult, 1, id="distmult"),
+    pytest.param(kge.complex_train, _reference_complex, 2, id="complex"),
+]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        pytest.param({}, id="defaults"),
+        pytest.param(
+            dict(dim=3, iters=3, lr=0.1, margin=0.5, neg_offset=2), id="custom"
+        ),
+    ],
+)
+@pytest.mark.parametrize("train, reference, width", TRAINERS)
+def test_trainer_matches_numpy_reference(tiny_kg, train, reference, width, kw):
+    """Every hyperparameter reaches the shared loop: the Spark trajectory
+    equals the numpy replay at the defaults and at a non-default set."""
     rows, df = tiny_kg
-    ent, rel, _ = kge.complex_train(df, dim=4, iters=2)
-    ents, rels, E, R = _reference_complex(rows, dim=4, iters=2)
+    ent, rel, _ = train(df, **kw)
+    ents, rels, E, R = reference(rows, **kw)
+    n = width * kw.get("dim", 4)
     got_e = {(r.name, r.d): r.val for r in ent.collect()}
     got_r = {(r.name, r.d): r.val for r in rel.collect()}
-    assert len(got_e) == len(ents) * 8 and len(got_r) == len(rels) * 8
+    assert len(got_e) == len(ents) * n and len(got_r) == len(rels) * n
     for i, e in enumerate(ents):
-        for d in range(8):
+        for d in range(n):
             assert got_e[(e, d)] == pytest.approx(E[i, d], abs=1e-9), (e, d)
     for i, r in enumerate(rels):
-        for d in range(8):
+        for d in range(n):
             assert got_r[(r, d)] == pytest.approx(R[i, d], abs=1e-9), (r, d)
+    _, _, E0, R0 = reference(rows, **{**kw, "iters": 0})
+    # a hinge fired: some weight moved by more than the 9-decimal re-quantization
+    assert not (np.allclose(E0, E) and np.allclose(R0, R))
+
+
+def test_trainer_jobs_keep_caller_job_group(spark, tiny_kg):
+    """Jobs the trainer runs on its concurrent checkpoint threads carry the
+    caller's job group: the group holds every job between two marker jobs,
+    so group-level job accounting and cancelJobGroup see the whole call."""
+    _, df = tiny_kg
+    sc = spark.sparkContext
+
+    def marker():
+        sc.setJobGroup("kge-marker", "marker")
+        sc.parallelize([0], 1).count()
+
+    marker()
+    try:
+        sc.setJobGroup("kge-caller", "trainer call")
+        ent, _, _ = kge.transe_train(df, iters=1)
+        ent.collect()
+        marker()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    m0, m1 = sorted(st.getJobIdsForGroup("kge-marker"))
+    in_group = st.getJobIdsForGroup("kge-caller")
+    assert m1 - m0 - 1 > 0
+    assert len(in_group) == m1 - m0 - 1
 
 
 def test_complex_training_moves_weights_and_reduces_loss(tiny_kg):
