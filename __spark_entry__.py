@@ -44,7 +44,7 @@ def _pipeline_triples(
     # inside a single mapInPandas over the (doc_id, lang) skeleton — the
     # corpus text never crosses the Arrow boundary at all (the two-hop
     # layout re-serialized it between the generator pass and the episode
-    # pass, and paid the per-task python protocol latency twice). Identical
+    # pass, and paid the per-task python worker setup twice). Identical
     # output to detect.detect_relations → ordered_slot_fill by construction
     # (shared wave engine + the same anchor-presence gate; cross-checked in
     # tests/test_slot_fill.py). ``where`` filters the doc skeleton BELOW the

@@ -112,12 +112,12 @@ def web_pages(
     return pages_from_skeleton(skel, with_text=with_text, emit_html=emit_html)
 
 
-#: ~119 bytes/row measured on the driver's documents.parquet (zstd'd
-#: doc_id/lang/text skeleton); only order-of-magnitude accuracy matters —
-#: the estimate is clamped to [parallelism, waves_per_core·parallelism].
+#: Order of magnitude only: ~119 B/doc on sf0.1's documents.parquet, ~255
+#: B/doc on perfbench's generated corpora (2000 docs in ~510 kB);
+#: doc_skeleton's clamp to [parallelism, cap] bounds the error.
 _SKEL_BYTES_PER_DOC = 120
-#: Below this many docs per task the fixed python-task protocol latency
-#: dominates the task's compute (~2500 docs ≈ 400 ms of episode work).
+#: Docs per python task: below this a task's fixed worker setup (150-290 ms,
+#: see doc_skeleton) outweighs its episode work (~300 ms per 2500 docs).
 _MIN_DOCS_PER_TASK = 2500
 
 
@@ -168,17 +168,20 @@ def doc_skeleton(
     # core's remaining work elsewhere, and the stall tax drops from a whole
     # wave to stall/cores — measured worth ~7% of wall at local[16].
     #
-    # SCALE-ADAPTIVE (r6, guide §2): the wave count is derived from the
-    # input size instead of a constant tuned to the big-run scale. Every
-    # python task costs a fixed JVM↔worker protocol latency (~250-500 ms in
-    # this sandbox, measured via event-log task metrics: 480 ms median task
-    # wall vs 8 ms CPU on a 78-doc partition), so a 5k-doc corpus at 4
-    # waves/core pays 4 waves of pure protocol for ~50 ms of compute. Docs
-    # are estimated from the parquet footprint (a filesystem metadata call,
-    # zero Spark jobs); partitions = clamp(docs/_MIN_DOCS_PER_TASK,
-    # parallelism, waves_per_core·parallelism) keeps one straggler-absorbing
-    # wave structure at scale (the cap reproduces the r5 big-run layout
-    # exactly) while a small corpus runs one wave of full-size tasks.
+    # SCALE-ADAPTIVE: partitions = clamp(est_docs/_MIN_DOCS_PER_TASK,
+    # parallelism, cap), docs estimated from the parquet footprint (a
+    # filesystem metadata call, zero Spark jobs). A corpus under
+    # parallelism·_MIN_DOCS_PER_TASK docs runs one wave of parallelism
+    # full-size tasks; at scale the cap keeps the straggler-absorbing waves
+    # (it reproduces the r5 big-run layout). The per-task cost being
+    # amortized sits in the python worker, not the JVM protocol: at task
+    # start pyspark's worker calls importlib.invalidate_caches()
+    # (worker_util.setup_spark_files), which on Python 3.11 re-reads the zip
+    # directory behind every zipimporter — ~14 pyspark.zip entries at 6-12 ms
+    # and two spark-core_2.13-4.1.2.jar entries at 26-55 ms: 150-290 ms per
+    # task against ~7 ms of JVM CPU (4-vCPU VM, timed by wrapping the call in
+    # a worker sitecustomize). That is the installation's cost; the number of
+    # python tasks paying it is this function's.
     par = spark.sparkContext.defaultParallelism
     est_docs = _estimate_doc_count(spark, sf_dir)
     cap = max(par * int(waves_per_core), 16)
@@ -186,7 +189,7 @@ def doc_skeleton(
         n_parts = cap
     else:
         est_docs *= max(int(replicate), 1)
-        n_parts = min(cap, max(par, 16, -(-est_docs // _MIN_DOCS_PER_TASK)))
+        n_parts = min(cap, max(par, -(-est_docs // _MIN_DOCS_PER_TASK)))
     if replicate > 1:
         # shift derives from the DATA (max id + 1), so replicas can never
         # collide with base ids however large the skeleton grows (ADVICE.md);

@@ -212,3 +212,41 @@ def test_doc_skeleton_unsizeable_path_falls_back_to_wave_cap(spark, sf_dir):
     for replicate in (1, 2):
         skel = corpus.doc_skeleton(spark, glob_dir, replicate=replicate)
         assert skel.rdd.getNumPartitions() == cap
+
+
+def test_doc_skeleton_sized_by_docs_per_task(spark, sf_dir):
+    """Partitions = clamp(⌈est_docs / 2500⌉, parallelism, wave cap) with no
+    constant floor: a 500-doc corpus runs one wave of `parallelism` tasks,
+    a replicated corpus past parallelism·2500 docs gets one task per 2500
+    estimated docs, and a very large one stops at the cap."""
+    from autoextraction_spark import corpus
+
+    par = spark.sparkContext.defaultParallelism
+    assert par == 4  # the test session's local[4]
+    cap = max(par * 4, 16)
+    est = corpus._estimate_doc_count(spark, sf_dir)
+    parts = lambda r: corpus.doc_skeleton(spark, sf_dir, replicate=r).rdd.getNumPartitions()
+    assert parts(1) == par
+    assert est * 20 > par * corpus._MIN_DOCS_PER_TASK
+    assert parts(20) == -(-est * 20 // corpus._MIN_DOCS_PER_TASK) == 5
+    assert parts(1000) == cap
+
+
+def test_triples_invariant_to_skeleton_partitions(spark, sf_dir):
+    """The fused hop's triple set does not depend on how the skeleton is
+    partitioned (dedup_assignments dedups per row, never across a task), so
+    the skeleton's partition count is a pure performance choice."""
+    from autoextraction_spark import corpus
+
+    skel = corpus.doc_skeleton(spark, sf_dir)
+    par = spark.sparkContext.defaultParallelism
+    triples = {}
+    for n in (1, par, 16):
+        part = skel.repartition(n)
+        assert part.rdd.getNumPartitions() == n
+        done = output.completed_filter(slot_fill.episodes_from_skeleton(part))
+        rows = output.to_triples(done, assume_unique=True).collect()
+        assert len(rows) == len(set(rows)), n
+        triples[n] = set(rows)
+    assert triples[1] == triples[par] == triples[16]
+    assert len(triples[1]) > 0
