@@ -18,7 +18,7 @@ Pipeline stages (SURVEY.md §7):
                                                        _stage/_part_id lineage; triples
                                                        partitioned by pred)
 Plus training-data-pipeline operators: dedup.py, similarity.py,
-textstats.py, multimodal.py, fileops.py.
+textstats.py, multimodal.py.
 """
 
 __version__ = "0.1.0"

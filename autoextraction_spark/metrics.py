@@ -1,13 +1,10 @@
-"""Evaluation metrics beyond MetricF1 (output.py): char-bag F1 (O7) and the
-order-sensitivity hard-split constructor (O8).
-"""
+"""Evaluation metrics beyond MetricF1 (output.py): char-bag F1 (O7)."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,17 +25,3 @@ def char_f1(pred: str, gold: str) -> float:
 @F.pandas_udf(T.DoubleType())
 def char_f1_udf(pred: pd.Series, gold: pd.Series) -> pd.Series:
     return pd.Series([char_f1(p, g) for p, g in zip(pred, gold)])
-
-
-def order_sensitivity_split(
-    run_a: DataFrame, run_b: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
-    """O8 (data_filter.py:174-242): run the pipeline under two slot-order
-    policies; keep the urls where their outputs DISAGREE — the 'hard' eval
-    split that motivates learned ordering. Distributed equivalent of the
-    reference's two-env compare: symmetric difference → distinct urls."""
-    keys = keys or ["url", "pred", "subj", "obj"]
-    a = run_a.select(*keys)
-    b = run_b.select(*keys)
-    disagree = a.exceptAll(b).union(b.exceptAll(a))
-    return disagree.select("url").distinct()

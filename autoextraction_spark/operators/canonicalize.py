@@ -53,6 +53,32 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return attach_nbrs.union(attach_self).distinct()
 
 
+def _min_labels(nodes, pairs) -> dict:
+    """{node: smallest node of its component}, in ``nodes`` order: exact
+    union-find with path compression over the ``pairs`` edges, then one
+    min-label pass per root. Every pair member must be in ``nodes``."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[ru] = rv
+    comp_min: dict = {}
+    for n in parent:
+        r = find(n)
+        if r not in comp_min or n < comp_min[r]:
+            comp_min[r] = n
+    return {n: comp_min[find(n)] for n in parent}
+
+
 def _driver_union_find(spark, raw_rows: list, node_type: str) -> DataFrame:
     """Small-graph fast path: exact union-find at the driver.
 
@@ -67,38 +93,10 @@ def _driver_union_find(spark, raw_rows: list, node_type: str) -> DataFrame:
     output to the distributed path (cross-checked in tests and by the
     driver oracle).
     """
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    node_seen: set = set()
-    node_rows: list = []
-    for u, v in raw_rows:
-        for n in (u, v):
-            if n not in node_seen:
-                node_seen.add(n)
-                node_rows.append(n)
-                parent[n] = n
-    for u, v in raw_rows:
-        if u == v:
-            continue
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            parent[ru] = rv
-    comp_min: dict = {}
-    for n in parent:
-        r = find(n)
-        if r not in comp_min or n < comp_min[r]:
-            comp_min[r] = n
-    out = [(n, comp_min[find(n)]) for n in node_rows]
+    nodes = dict.fromkeys(n for edge in raw_rows for n in edge)
     return spark.createDataFrame(
-        out, f"node {node_type}, component {node_type}"
+        list(_min_labels(nodes, raw_rows).items()),
+        f"node {node_type}, component {node_type}",
     )
 
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt
+from ..materialize import ckpt, with_rank
 
 
 def triple_edges(
@@ -51,12 +51,10 @@ def export_int_ids(triples: DataFrame) -> DataFrame:
     for GNN training / external graph engines, where string keys are
     wasted shuffle bytes.
 
-    Ids come from fileops._with_rank — the JVM-side two-pass global rank
+    Ids come from materialize.with_rank — the JVM-side two-pass global rank
     (no single-task window, no zipWithIndex python round-trip); the two
     entity-vocab joins reuse ONE checkpointed rank table.
     """
-    from .fileops import _with_rank
-
     t = ckpt(triples.select("pred", "subj", "obj").distinct())
     ent_names = (
         t.select(F.col("subj").alias("name"))
@@ -64,10 +62,10 @@ def export_int_ids(triples: DataFrame) -> DataFrame:
         .distinct()
     )
     ents = ckpt(
-        _with_rank(ent_names, "name").select("name", F.col("_rn").alias("eid")),
+        with_rank(ent_names, "name").select("name", F.col("_rn").alias("eid")),
         eager=True,
     )
-    rels = _with_rank(t.select(F.col("pred").alias("name")).distinct(), "name").select(
+    rels = with_rank(t.select(F.col("pred").alias("name")).distinct(), "name").select(
         "name", F.col("_rn").alias("pid")
     )
     return (

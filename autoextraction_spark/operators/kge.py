@@ -49,8 +49,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt
-from .fileops import _with_rank
+from ..materialize import ckpt, with_rank
 
 
 def _both(session: SparkSession, fa: Callable, fb: Callable) -> tuple:
@@ -66,14 +65,14 @@ def _both(session: SparkSession, fa: Callable, fb: Callable) -> tuple:
 
 def _ranked_vocabs(t: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(ents, rels) rank tables for a checkpointed triple table: JVM-side
-    two-pass global ranks (fileops._with_rank; no single-task window, no
-    zipWithIndex python round-trip) built CONCURRENTLY — each _with_rank
+    two-pass global ranks (materialize.with_rank; no single-task window, no
+    zipWithIndex python round-trip) built CONCURRENTLY — each with_rank
     call runs ~3 small driver jobs (range-sample, checkpoint, counts
     collect) and the two vocabs depend only on ``t``, so overlapping them
     halves the rank-build latency every trainer pays."""
     def ranked(names: DataFrame) -> DataFrame:
         return ckpt(
-            _with_rank(names, "name").select("name", F.col("_rn").alias("rank")),
+            with_rank(names, "name").select("name", F.col("_rn").alias("rank")),
             eager=True,
         )
 

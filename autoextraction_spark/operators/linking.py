@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from .. import schema as S
 from ..materialize import ckpt
 from . import dedup
-from .canonicalize import connected_components
+from .canonicalize import _min_labels, connected_components
 
 NUM_PERM = 16
 BANDS = 8  # r=2 rows/band: r=1 made the hottest band bucket quadratic at scale
@@ -183,8 +183,9 @@ def _driver_canonical_mapping(rows: list) -> list:
     (provably exhaustive for the verifier), verify within buckets,
     union-find, min-mention label. Components cannot span buckets — the
     block key is a function of the mention alone, so every verified pair
-    shares it — but a single global union-find is simplest. Returns None
-    never; caller guards the pair budget."""
+    shares it — so the smallest ``(ent_type, mention)`` node of a component
+    carries its smallest mention. Returns None never; caller guards the
+    pair budget."""
     from collections import defaultdict
 
     buckets: dict = defaultdict(list)
@@ -192,35 +193,15 @@ def _driver_canonical_mapping(rows: list) -> list:
         blk = " ".join(t[:MIN_ABBREV_LEN] for t in mention.lower().split(" "))
         buckets[(ent_type, blk)].append(mention)
 
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for (ent_type, _), ms in buckets.items():
-        for i in range(len(ms)):
-            for j in range(i + 1, len(ms)):
-                if _variant_pair_py(ms[i], ms[j]):
-                    a, b = (ent_type, ms[i]), (ent_type, ms[j])
-                    parent.setdefault(a, a)
-                    parent.setdefault(b, b)
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        parent[ra] = rb
-    comp_min: dict = {}
-    for k in parent:
-        r = find(k)
-        if r not in comp_min or k[1] < comp_min[r]:
-            comp_min[r] = k[1]
-    return [
-        (et, m, comp_min[find((et, m))] if (et, m) in parent else m)
-        for et, m in rows
-    ]
+    pairs = (
+        ((et, ms[i]), (et, ms[j]))
+        for (et, _), ms in buckets.items()
+        for i in range(len(ms))
+        for j in range(i + 1, len(ms))
+        if _variant_pair_py(ms[i], ms[j])
+    )
+    labels = _min_labels(rows, pairs)
+    return [(et, m, labels[(et, m)][1]) for et, m in rows]
 
 
 def canonical_mapping(mentions: DataFrame, **kwargs) -> DataFrame:

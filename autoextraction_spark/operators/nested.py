@@ -57,21 +57,6 @@ def flatten_spo(df: DataFrame, spo_col: str = "spo", out_col: str = "assigned") 
     return df.withColumn(out_col, F.map_from_entries(entries))
 
 
-def spo_slot_schema(spo_col: str = "spo") -> Column:
-    """Slot schema of a flattened spo (Environment.py:71-80): the ordered
-    array ['头实体-'+subject_type, '尾实体-'+object_type[k]…]. The reference
-    iterates JSON-object insertion order; Spark map columns carry no order,
-    so roles are sorted by key — '@value' (the primary object) sorts first,
-    matching the DuIE schema files' layout."""
-    spo = F.col(spo_col)
-    head = F.array(F.concat(F.lit("头实体-"), spo["subject_type"]))
-    tails = F.transform(
-        F.array_sort(F.map_entries(spo["object_type"])),
-        lambda e: F.concat(F.lit("尾实体-"), e["value"]),
-    )
-    return F.concat(head, tails)
-
-
 def truncate_cond(
     df: DataFrame,
     cond_col: str = "cond",

@@ -265,13 +265,6 @@ def parse_cond(df: DataFrame, cond_col: str = "cond") -> DataFrame:
     ).withColumn("parsed_assigned", F.when(is_zh, zh_map).otherwise(en_map))
 
 
-def triple_text(triples: DataFrame) -> DataFrame:
-    """O3 ``spo2text``: 'pred|subj|obj' (predict.py:129-131)."""
-    return triples.withColumn(
-        "triple", F.concat_ws("|", F.col("pred"), F.col("subj"), F.col("obj"))
-    )
-
-
 def slot_accounting_f1(
     pred: DataFrame,
     gold: DataFrame,

@@ -42,11 +42,11 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
+def with_cosine(df: DataFrame, a: str, b: str) -> DataFrame:
+    """Adds ``cosine``: the cosine of vector columns ``a`` and ``b``,
+    computed JVM-side over ``array<double>`` casts."""
     ca, cb = F.col(a).cast("array<double>"), F.col(b).cast("array<double>")
-    return df.withColumn(
-        out, _dot(ca, cb) / (_norm(ca) * _norm(cb))
-    )
+    return df.withColumn("cosine", _dot(ca, cb) / (_norm(ca) * _norm(cb)))
 
 
 def cosine_topk(
@@ -73,17 +73,9 @@ def cosine_topk(
     c = spread_input(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_vec").cast("array<double>"), F.col("c_vec").cast("array<double>"))
-            / (
-                _norm(F.col("q_vec").cast("array<double>"))
-                * _norm(F.col("c_vec").cast("array<double>"))
-            ),
-        )
+    scored = with_cosine(
+        q.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id")),
+        "q_vec", "c_vec",
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -105,22 +97,6 @@ def hyperplane_weights(n_planes: int, dim: int, seed: str = "ann") -> list[list[
             row.append((h % 2001 - 1000) / 1000.0)
         planes.append(row)
     return planes
-
-
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: str = "ann",
-) -> DataFrame:
-    """Adds ``bucket``: the n_planes sign bits of hyperplane dot products."""
-    v = F.col(vec_col).cast("array<double>")
-    bucket = F.lit(0)
-    for p, weights in enumerate(hyperplane_weights(n_planes, dim, seed)):
-        plane = F.array(*[F.lit(w) for w in weights])
-        bucket = bucket + F.when(_dot(v, plane) > 0, F.lit(2 ** p)).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket)
 
 
 def with_lsh_tables(
@@ -293,17 +269,9 @@ def ivf_topk(
             F.transform(F.slice("_cells", 1, n_probe), lambda s: s["cell"])
         ).alias("cell"),
     )
-    scored = (
-        q_assigned.join(c_assigned, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("q_vec").cast("array<double>"), F.col("c_vec").cast("array<double>"))
-            / (
-                _norm(F.col("q_vec").cast("array<double>"))
-                * _norm(F.col("c_vec").cast("array<double>"))
-            ),
-        )
+    scored = with_cosine(
+        q_assigned.join(c_assigned, "cell").filter(F.col("query_id") != F.col("neighbor_id")),
+        "q_vec", "c_vec",
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -370,11 +338,7 @@ def embedding_neardup_pairs(
         va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
         vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
         pairs = cand.join(va, "id_a").join(vb, "id_b")
-    scored = pairs.withColumn(
-        "cosine",
-        _dot(F.col("v_a").cast("array<double>"), F.col("v_b").cast("array<double>"))
-        / (_norm(F.col("v_a").cast("array<double>")) * _norm(F.col("v_b").cast("array<double>"))),
-    )
+    scored = with_cosine(pairs, "v_a", "v_b")
     return scored.filter(F.col("cosine") >= threshold).select(
         "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     )

@@ -1,5 +1,5 @@
-"""P9-P12 — tokenize-with-offsets pair encoding, span labeling, collate:
-the reference's training-data-generation core, Arrow-vectorized.
+"""P9-P11 — tokenize-with-offsets pair encoding and span labeling: the
+reference's training-data-generation core, Arrow-vectorized.
 
 Reference parity (SURVEY.md §2.2):
 - P9  pair-encode ``(cond, text)`` keeping ``offset_mapping`` +
@@ -19,11 +19,8 @@ Reference parity (SURVEY.md §2.2):
   Spans are (s, e) with e INCLUSIVE (``labels[s][e] = 1``), and the
   reference's not-found fallback (s = e = 0, i.e. labels[0][0]) is
   reproduced byte-for-byte.
-- P12 pad-and-stack collate — dataset/nyt.py:185-207 ``collate_fn_cuda``:
-  fixed-size batches padded to the batch max length. In Spark the natural
-  collate IS the Arrow record batch; this operator materializes explicit
-  padded matrices for consumers that need tensor-shaped input
-  (per-partition batching ≡ per-DataLoader-worker batching).
+- P12 pad-and-stack collate (dataset/nyt.py:185-207) has no operator: in
+  Spark the natural collate IS the Arrow record batch.
 
 Scale shape: every operator is ONE ``mapInPandas`` pass — a narrow map, no
 shuffle; the per-row loop runs inside the Arrow batch (the same fused-episode
@@ -239,63 +236,3 @@ def label_spans_char(
         id_fields + ["slot string", "value string", "s long", "e long"]
     )
     return df.mapInPandas(run, schema=schema)
-
-
-def collate_batches(
-    df: DataFrame,
-    seq_col: str = "input_ids",
-    batch_size: int = 8,
-    pad: int = 0,
-) -> DataFrame:
-    """P12 pad-and-stack collate (dataset/nyt.py:185-207).
-
-    Groups rows into fixed-size batches WITHIN each partition (a Spark
-    partition plays the DataLoader-worker role) and pads every sequence to
-    the batch max length — the ``pad_sequence(batch_first=True)``
-    semantics. Output: (part_id, batch_id, n, maxlen, padded, mask) where
-    ``padded`` is the batch_size×maxlen matrix and ``mask`` marks real
-    tokens. ``batch_id`` is GLOBALLY unique — the partition id is folded
-    into its high bits (and exposed as ``part_id``), so joins/groupBys on
-    batch identity never conflate batches from different partitions
-    (ADVICE.md).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext  # noqa: PLC0415
-
-        pid = TaskContext.get().partitionId()
-        buf: list[list[int]] = []
-        local_bid = 0
-
-        def flush():
-            nonlocal local_bid, buf
-            maxlen = max(len(s) for s in buf)
-            padded = [s + [pad] * (maxlen - len(s)) for s in buf]
-            mask = [[1] * len(s) + [0] * (maxlen - len(s)) for s in buf]
-            pdf = pd.DataFrame(
-                {
-                    "part_id": [pid],
-                    "batch_id": [(pid << 32) | local_bid],
-                    "n": [len(buf)],
-                    "maxlen": [maxlen],
-                    "padded": [padded],
-                    "mask": [mask],
-                }
-            )
-            local_bid += 1
-            buf = []
-            return pdf
-
-        for pdf in batches:
-            for seq in pdf[seq_col]:
-                buf.append([int(x) for x in seq])
-                if len(buf) == batch_size:
-                    yield flush()
-        if buf:
-            yield flush()
-
-    return df.mapInPandas(
-        run,
-        schema="part_id int, batch_id long, n long, maxlen long, "
-               "padded array<array<long>>, mask array<array<long>>",
-    )

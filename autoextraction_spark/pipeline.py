@@ -121,48 +121,6 @@ def incremental_delta(new_triples: DataFrame, kg_snapshot: DataFrame) -> DataFra
     ).select(*new_triples.columns)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_col: str = "subj",
-    n_buckets: int = 16,
-) -> None:
-    """Stage G bucketed layout: hash-bucketed + sorted parquet table.
-
-    At 100 TB the triple table is re-joined constantly (linking rewrites,
-    entity lookups, triple⋈triple multi-hop). Writing it ``bucketBy`` on the
-    join key makes every later equi-join against a same-bucketed table
-    SHUFFLE-FREE — the scan reports ``Bucketed: true`` and the join plans
-    with zero Exchange (asserted in tests). This is Spark's native form of
-    Iceberg's storage-partitioned join; the Iceberg catalog jar is absent in
-    this container (re-checked this round: no iceberg jar under pyspark/
-    jars), so parquet bucketing via ``saveAsTable`` carries the same
-    co-location contract with a one-line swap to an Iceberg ``CREATE TABLE
-    … PARTITIONED BY (bucket(N, col))`` when a catalog is available.
-
-    ``n_buckets`` fixes reducer fan-in for ALL future joins — size it to
-    target bucket files of 128-512 MB at the expected table size (e.g. a
-    10 TB triple table → ~32k buckets).
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str = "subj"
-) -> DataFrame:
-    """Equi-join two same-bucketed tables on the bucket key — co-located,
-    no Exchange on either side (bucketing metadata drives the planner)."""
-    return spark.table(left_table).join(spark.table(right_table), on)
-
-
 def _digest_tree(node, h, prefix: str = "") -> None:
     for child in sorted(node.iterdir(), key=lambda c: c.name):
         path = f"{prefix}/{child.name}"

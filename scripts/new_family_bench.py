@@ -3,10 +3,16 @@
 (calibration probe bracketing each pass, min over quiet passes, raw walls
 kept) rather than the bare min-of-2 the r4 verdict criticized. Run ALONE.
 
-Defaults reproduce the round-5 session-4 capture
-(BENCH/new_family_r5s4.json); override with
-SPARK_GRAFT_FAMILY_QUERIES=<comma-list> and
-SPARK_GRAFT_FAMILY_OUT=<BENCH-relative filename>.
+Prints one JSON line. The default query list is the round-5 session-4
+family (captured in BENCH/new_family_r5s4.json); choose others with
+SPARK_GRAFT_FAMILY_QUERIES=<comma-list>. The JSON is also written to
+BENCH/<name> only when SPARK_GRAFT_FAMILY_OUT=<name> is set, so a default
+run never overwrites a committed capture. The heavy non-headline family
+of BENCH/family_extra_r6.json is
+
+  SPARK_GRAFT_FAMILY_QUERIES=winnow,quote_pairs,cdc_chunks,tfidf_keywords,\
+knn_graph,dedup_recall_eval,incremental_dedup,dedup_best_survivor,\
+kg_rule_mining,host_profile,kg_scc,kg_closure,bpe_train
 """
 
 from __future__ import annotations
@@ -32,7 +38,7 @@ QUERIES = [
     ).split(",")
     if q
 ]
-OUT_NAME = os.environ.get("SPARK_GRAFT_FAMILY_OUT", "new_family_r5s4.json")
+OUT_NAME = os.environ.get("SPARK_GRAFT_FAMILY_OUT")
 
 
 def main() -> int:
@@ -91,12 +97,13 @@ def main() -> int:
             "per_pass": cal_per_pass,
         },
     }
-    dest = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BENCH", OUT_NAME,
-    )
-    with open(dest, "w") as fh:
-        json.dump(out, fh, indent=1)
+    if OUT_NAME:
+        dest = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "BENCH", OUT_NAME,
+        )
+        with open(dest, "w") as fh:
+            json.dump(out, fh, indent=1)
     print(json.dumps(out))
     return 0
 

@@ -1,12 +1,13 @@
-"""The one checkpoint primitive (materialize.ckpt) and a guard that keeps
-it the only one."""
+"""The one checkpoint primitive (materialize.ckpt), a guard that keeps it
+the only one, and the global-rank primitive built on it (with_rank)."""
 
 import ast
 import pathlib
 
 import pytest
+from pyspark.sql import functions as F
 
-from autoextraction_spark.materialize import ckpt
+from autoextraction_spark.materialize import ckpt, with_rank
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -25,6 +26,23 @@ def test_ckpt_cuts_lineage_at_level(spark, kwargs, level):
     assert plan.nodeName() == "LogicalRDD"
     assert plan.rdd().getStorageLevel().toString() == level
     assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_with_rank_stays_jvm_side(spark):
+    # the rank must not round-trip rows through Python (no RDD scan in the
+    # plan) and must be a dense 0..n-1 sequence under any partition layout
+    a = spark.range(0, 97).select((F.col("id") * 3 % 97).alias("k")).repartition(7)
+    ranked = with_rank(a, "k")
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
+    # the eager localCheckpoint (recompute guard) legitimately scans a JVM
+    # ExistingRDD of InternalRows; what must NOT appear is any Python
+    # round-trip — no python UDF stage in the plan, no PythonRDD (pickled
+    # rows) anywhere in the materialized lineage
+    assert "EvalPython" not in plan
+    assert "PythonRDD" not in ranked._jdf.rdd().toDebugString()
+    rows = ranked.orderBy("_rn").collect()
+    assert [r._rn for r in rows] == list(range(97))
+    assert [r.k for r in rows] == sorted(r.k for r in rows)
 
 
 def _library_sources():

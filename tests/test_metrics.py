@@ -1,10 +1,8 @@
-"""Char-bag F1 (O7) and order-sensitivity split (O8)."""
+"""Char-bag F1 (O7) and recency resolution."""
 
 import math
 
-from autoextraction_spark import corpus, metrics
-from autoextraction_spark.operators import detect, output, slot_fill
-from autoextraction_spark.operators.text_extract import with_extracted_text
+from autoextraction_spark import metrics
 
 
 def test_char_f1_reference_math():
@@ -20,22 +18,6 @@ def test_char_f1_udf(spark):
     df = spark.createDataFrame([("ab", "abb")], "p string, g string")
     got = df.select(metrics.char_f1_udf("p", "g").alias("f1")).collect()[0].f1
     assert math.isclose(got, 0.8)
-
-
-def test_order_sensitivity_split(spark, sf_dir):
-    pages = with_extracted_text(corpus.web_pages(spark, sf_dir))
-    det = detect.detect_relations(pages)
-    rl = output.to_triples(
-        output.completed_filter(slot_fill.ordered_slot_fill(det))
-    )
-    seq = output.to_triples(
-        output.completed_filter(slot_fill.ordered_slot_fill(det, policy="sequence"))
-    )
-    hard = metrics.order_sensitivity_split(rl, seq)
-    n = hard.count()
-    assert n > 0  # alt-phrased docs exist -> hard split is non-empty
-    # every hard url has an alt-phrased fact the sequence policy missed
-    assert n < pages.count()
 
 
 def test_resolve_by_recency_functional_predicate(spark):

@@ -2,8 +2,6 @@
 
 import math
 
-from pyspark.sql import functions as F
-
 from autoextraction_spark.operators import nested
 
 SPO_DDL = (
@@ -32,8 +30,6 @@ def test_flatten_spo_composes_roles_and_fills_none(spark):
         "尾实体-奖项": "金像奖",
         "尾实体-作品": "[None]",
     }
-    schema = df.select(nested.spo_slot_schema().alias("s")).collect()[0].s
-    assert schema == ["头实体-人物", "尾实体-奖项", "尾实体-作品"]
 
 
 def test_flatten_spo_empty_subject(spark):

@@ -99,39 +99,6 @@ def test_salted_host_counts_match_direct(spark, sf_dir):
     assert direct["site0.example.com"] / total > 0.15
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    # stage G co-location: two tables bucketed on the join key must join
-    # with ZERO Exchange (the parquet-bucketing form of Iceberg's
-    # storage-partitioned join)
-    from pyspark.sql import functions as F
-
-    from autoextraction_spark import pipeline
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        triples = spark.range(0, 5000).select(
-            F.concat(F.lit("ent"), (F.col("id") % 700).cast("string")).alias("subj"),
-            F.lit("works_for").alias("pred"),
-            F.concat(F.lit("org"), F.col("id").cast("string")).alias("obj"),
-        )
-        dim = spark.range(0, 700).select(
-            F.concat(F.lit("ent"), F.col("id").cast("string")).alias("subj"),
-            (F.col("id") % 7).alias("grade"),
-        )
-        pipeline.write_bucketed(triples, "t_bkt", str(tmp_path / "t_bkt"), "subj", 8)
-        pipeline.write_bucketed(dim, "d_bkt", str(tmp_path / "d_bkt"), "subj", 8)
-        j = pipeline.bucketed_join(spark, "t_bkt", "d_bkt", on="subj")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "Bucketed: true" in plan
-        assert j.count() == 5000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_bkt")
-        spark.sql("DROP TABLE IF EXISTS d_bkt")
-
-
 def test_incremental_delta_emits_only_novel_facts(spark):
     from autoextraction_spark.pipeline import incremental_delta
 

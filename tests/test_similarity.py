@@ -61,14 +61,6 @@ def test_ivf_recall_improves_with_probes(vectors):
             assert abs(exact_cos[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
 
 
-def test_lsh_bucket_deterministic(vectors):
-    b1 = similarity.with_lsh_bucket(vectors).select("vec_id", "bucket")
-    b2 = similarity.with_lsh_bucket(vectors).select("vec_id", "bucket")
-    assert b1.exceptAll(b2).isEmpty()
-    n_buckets = b1.select("bucket").distinct().count()
-    assert 2 <= n_buckets <= 256
-
-
 def test_embedding_neardup_blocked(spark):
     rows = [
         (1, [1.0, 0.0], 0),

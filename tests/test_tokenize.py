@@ -1,5 +1,5 @@
-"""P9-P12 tokenize/span-label/collate operator tests (reference semantics:
-dataset/nyt.py:122-153, webnlg.py:114-137, duee.py:136-160, nyt.py:185-207).
+"""P9-P11 tokenize/span-label operator tests (reference semantics:
+dataset/nyt.py:122-153, webnlg.py:114-137, duee.py:136-160).
 """
 
 from __future__ import annotations
@@ -124,25 +124,6 @@ def test_search_and_char_agree_on_gold_tuples(spark, sf_dir):
     t.unpersist()
 
 
-def test_collate_batches_shapes(spark):
-    df = spark.createDataFrame(
-        [([1, 2, 3],), ([4],), ([5, 6],), ([7, 8, 9, 10],), ([11],)],
-        "input_ids array<long>",
-    ).coalesce(1)
-    batches = tokenize.collate_batches(df, batch_size=2).collect()
-    assert [b.n for b in batches] == [2, 2, 1]
-    for b in batches:
-        assert all(len(row) == b.maxlen for row in b.padded)
-        assert all(len(row) == b.maxlen for row in b.mask)
-        # mask marks exactly the unpadded prefix
-        for row, m in zip(b.padded, b.mask):
-            n_real = sum(m)
-            assert m == [1] * n_real + [0] * (b.maxlen - n_real)
-    # every sequence survives, padded with 0
-    flat = [row for b in batches for row in b.padded]
-    assert sorted(len([x for x in r if x != 0]) for r in flat) == [1, 1, 2, 3, 4]
-
-
 def test_encode_pairs_dataframe(spark):
     df = spark.createDataFrame(
         [(7, "language en", "alpha beta")], "doc_id long, cond string, text string"
@@ -157,18 +138,6 @@ def test_encode_pairs_dataframe(spark):
     assert [r.type_id for r in rows] == [0, 0, 0, 0, 1, 1, 1]
     assert (rows[4].tok_start, rows[4].tok_end) == (0, 5)
     assert (rows[5].tok_start, rows[5].tok_end) == (6, 10)
-
-
-def test_collate_batch_ids_globally_unique(spark):
-    """batch_id carries the partition id in its high bits — no collisions
-    across partitions for consumers keying on batch identity (ADVICE.md)."""
-    df = spark.createDataFrame(
-        [([i, i + 1],) for i in range(20)], "input_ids array<long>"
-    ).repartition(4)
-    batches = tokenize.collate_batches(df, batch_size=2).collect()
-    ids = [b.batch_id for b in batches]
-    assert len(ids) == len(set(ids))
-    assert all((b.batch_id >> 32) == b.part_id for b in batches)
 
 
 def test_hf_tokenizer_parity_skip_if_absent():
