@@ -7,7 +7,8 @@ reproduce, so every operator has a SQL oracle.
 
 Scale notes (the 100 TB story):
 - exact dedup groups by the 128-bit digest, never shuffling document bodies;
-- MinHash signatures are one explode + one groupBy(id) (single shuffle);
+- shingle sets and MinHash signatures are row-local expressions (no
+  shuffle);
 - LSH banding turns the quadratic all-pairs problem into an equi-join on
   (band_idx, band_hash) — the only join key, salt-friendly, AQE-splittable;
 - candidate pairs are verified with EXACT shingle-set Jaccard (a semi-join
@@ -74,28 +75,6 @@ def word_shingles(col: Column, n: int = 3, sep: str = " ") -> Column:
     )
 
 
-def exploded_shingles(
-    df: DataFrame, id_col: str, shingle_expr: Column, distinct: bool = True
-) -> DataFrame:
-    """(id, sh) one row per (id, shingle) — the set representation when
-    ``distinct=True`` (one row per DISTINCT shingle).
-
-    ``distinct=False`` (r6) skips the full-table dedup EXCHANGE — the
-    largest shuffle of the minhash path. Safe whenever every consumer is
-    dup-insensitive: the signature's per-permutation ``min`` is idempotent
-    and the verify aggregates with ``collect_set``/distinct counts. The
-    prefix-filter (SSJoin) path must keep ``distinct=True`` — its
-    document-frequency ordering counts documents per shingle.
-
-    The input is spread to cluster parallelism first (no-op at scale): the
-    shingle transform + explode is the CPU-heavy part of every dedup
-    operator and must not run at a 1-task scan's parallelism."""
-    out = spread_input(df).select(
-        F.col(id_col).alias("id"), F.explode(shingle_expr).alias("sh")
-    )
-    return out.distinct() if distinct else out
-
-
 def shingle_sets(df: DataFrame, id_col: str, shingle_expr: Column) -> DataFrame:
     """(id, n, shs) — per-document DISTINCT shingle set and its size,
     computed ROW-LOCALLY (``array_distinct`` over the per-row shingle
@@ -113,14 +92,23 @@ def shingle_sets(df: DataFrame, id_col: str, shingle_expr: Column) -> DataFrame:
     return ckpt(out)
 
 
+def _text_sets(df: DataFrame, id_col: str, text_col: str, shingle_expr: Column) -> DataFrame:
+    """``shingle_sets`` over the rows whose text is not NULL: NULL text has
+    no shingle set, so it never pairs with anything, while ``""`` stays an
+    ordinary document (the winnowing contract)."""
+    return shingle_sets(df.filter(F.col(text_col).isNotNull()), id_col, shingle_expr)
+
+
 def minhash_signature_from_sets(
     sets_df: DataFrame, num_perm: int = DEFAULT_NUM_PERM
 ) -> DataFrame:
-    """(id, mh0..mh{k-1}) ROW-LOCALLY from (id, …, shs): one md5 pass over
-    the per-row set, then k ``array_min`` folds — zero shuffle (r6). Bit-
-    identical to :func:`minhash_signature`: the per-permutation min over a
-    document's shingle set equals the grouped min over its exploded rows
-    (md5(concat(s, '')) ≡ md5(s); same Mersenne-prime arithmetic)."""
+    """(id, mh0..mh{k-1}) ROW-LOCALLY from (id, …, shs) — zero shuffle (r6).
+
+    One md5 per shingle, not per shingle×perm: permutation k is
+    ``(a_k·h + b_k) mod P`` over the 60-bit base hash (``portable_hash64``
+    with an empty seed) reduced mod the Mersenne prime P=2^31-1 — the
+    classic universal-hash MinHash family — and k ``array_min`` folds take
+    each permutation's minimum over the document's set."""
     h = F.expr(
         "transform(shs, s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)"
         f" % {MINHASH_P}L)"
@@ -135,36 +123,15 @@ def minhash_signature_from_sets(
     return proj.select("id", *mins)
 
 
-def minhash_signature(
-    shingled: DataFrame, num_perm: int = DEFAULT_NUM_PERM
-) -> DataFrame:
-    """(id, mh0..mh{k-1}) — min over k linear permutations of ONE base hash.
-
-    One md5 per shingle (not per shingle×perm — round 1 computed 16 md5s per
-    shingle row, the dominant CPU cost of the minhash stage); permutation k
-    is ``(a_k·h + b_k) mod P`` over the 60-bit base hash reduced mod the
-    Mersenne prime P=2^31-1 — the classic universal-hash MinHash family.
-    One shuffle (groupBy id); min is idempotent so upstream need not dedup.
-    """
-    h = (portable_hash64(F.col("sh")) % MINHASH_P).alias("_h")
-    aggs = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_P).alias(f"mh{k}")
-        for k, (a, b) in enumerate(minhash_coeffs(num_perm))
-    ]
-    return shingled.select("id", h).groupBy("id").agg(*aggs)
-
-
 def lsh_candidate_pairs(
     sig: DataFrame,
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
-    block_col: str | None = None,
 ) -> DataFrame:
     """Distinct candidate (id_a, id_b) with id_a < id_b sharing ≥1 LSH band.
 
     Banding: num_perm//bands rows per band; band key = md5 of the
-    concatenated row hashes. ``block_col`` adds a hard blocking key (e.g.
-    entity type / language) into every band.
+    concatenated row hashes.
     """
     r = num_perm // bands
     assert r * bands == num_perm, "bands must divide num_perm"
@@ -177,16 +144,16 @@ def lsh_candidate_pairs(
                 F.md5(F.concat_ws("_", *rows)).alias("band_hash"),
             )
         )
-    cols = ["id"] + ([block_col] if block_col else [])
     melted = sig.select(
-        *cols, F.explode(F.array(*band_structs)).alias("band")
-    ).select(*cols, "band.band_idx", "band.band_hash")
-    join_keys = ["band_idx", "band_hash"] + ([block_col] if block_col else [])
+        "id", F.explode(F.array(*band_structs)).alias("band")
+    ).select("id", "band.band_idx", "band.band_hash")
     a = melted.alias("a")
     b = melted.alias("b")
-    cond = (F.col("a.id") < F.col("b.id"))
-    for k in join_keys:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    cond = (
+        (F.col("a.id") < F.col("b.id"))
+        & (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_hash") == F.col("b.band_hash"))
+    )
     return (
         a.join(b, cond)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
@@ -215,7 +182,7 @@ _WIDE_NODES = (
 )
 
 
-def spread_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread_input(df: DataFrame) -> DataFrame:
     """Round-robin repartition a narrow scan-shaped input to cluster
     parallelism when its plan has FEWER partitions than cores.
 
@@ -236,7 +203,7 @@ def spread_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     text, so a column named ``JoinDate`` does not make a scan look wide.
     """
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         while stack:
@@ -252,12 +219,10 @@ def spread_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 
 def exact_jaccard(
-    pairs: DataFrame,
-    shingled: DataFrame | None,
-    threshold: float | None = None,
-    sets: DataFrame | None = None,
+    pairs: DataFrame, sets: DataFrame, threshold: float | None = None
 ) -> DataFrame:
-    """(id_a, id_b, jaccard) — exact set Jaccard per candidate pair.
+    """(id_a, id_b, jaccard) — exact set Jaccard per candidate pair, from
+    the per-id (id, n, shs) set table that ``shingle_sets`` builds.
 
     PPJoin-style verify (VERDICT.md round-2 item 4): the old verify joined
     ``pairs`` against every shingle of side a — |pair| × |shingles(a)|
@@ -270,35 +235,12 @@ def exact_jaccard(
        per pair. A doc's array is replicated once per surviving pair it
        appears in (the standard verify cost), never exploded per shingle.
 
-    All joins remain on ids; document bodies never shuffle. Jaccard is
-    returned unfiltered — callers apply their own ≥ t cut.
-
-    The per-id sizes and shingle arrays come from ONE aggregation (one
-    shuffle of the exploded table, not two) and the result — one compact
-    row per document — is lazily locally checkpointed: it feeds FOUR join
-    builds (a/b sizes, a/b arrays), and without the checkpoint each build
-    re-runs the whole corpus-scan → shingle → groupBy chain (profiled: the
-    documents parquet was scanned 6× per dedup query). The length filter
-    still sees only (id, n) columns, so failing pairs never move arrays.
-
-    Aggregates are SET-semantics (collect_set + its size, r6), so the
-    exploded input need not be pre-deduped — and the Jaccard is unchanged
-    (array_intersect is set-valued either way). Callers that already hold
-    the row-local per-id set table (``shingle_sets``) pass it as ``sets``
-    and skip this aggregation entirely — the minhash path then runs with
-    NO shingle-keyed shuffle at all.
+    All joins remain on ids; document bodies never shuffle, and no join or
+    aggregate is keyed on shingles. The set table feeds FOUR join builds
+    (a/b sizes, a/b arrays), which is why ``shingle_sets`` checkpoints it.
+    Jaccard is returned unfiltered — callers apply their own ≥ t cut.
     """
-    per_id = (
-        sets
-        if sets is not None
-        else ckpt(
-            shingled.groupBy("id").agg(
-                F.size(F.collect_set("sh")).alias("n"),
-                F.collect_set("sh").alias("shs"),
-            )
-        )
-    )
-    sizes = per_id.select("id", "n")
+    sizes = sets.select("id", "n")
     p = pairs.join(
         sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a"
     ).join(sizes.withColumnsRenamed({"id": "id_b", "n": "n_b"}), "id_b")
@@ -308,10 +250,10 @@ def exact_jaccard(
             (F.lit(threshold) * F.col("n_a") <= F.col("n_b") + F.lit(1e-9))
             & (F.lit(threshold) * F.col("n_b") <= F.col("n_a") + F.lit(1e-9))
         )
-    sets = per_id.select("id", "shs")
+    arrays = sets.select("id", "shs")
     return (
-        p.join(sets.withColumnsRenamed({"id": "id_a", "shs": "shs_a"}), "id_a")
-        .join(sets.withColumnsRenamed({"id": "id_b", "shs": "shs_b"}), "id_b")
+        p.join(arrays.withColumnsRenamed({"id": "id_a", "shs": "shs_a"}), "id_a")
+        .join(arrays.withColumnsRenamed({"id": "id_b", "shs": "shs_b"}), "id_b")
         .withColumn("n_inter", F.size(F.array_intersect("shs_a", "shs_b")))
         .select(
             "id_a",
@@ -350,10 +292,10 @@ def minhash_dup_pairs(
     # candidate-pair verify joins — the parts that genuinely combine rows.
     # The set table is the one corpus-sized intermediate: materialized once
     # (DISK_ONLY), it feeds the signature AND both verify sides.
-    sets = shingle_sets(df, id_col, expr)
+    sets = _text_sets(df, id_col, text_col, expr)
     sig = ckpt(minhash_signature_from_sets(sets, num_perm))
     cands = lsh_candidate_pairs(sig, num_perm, bands)
-    return exact_jaccard(cands, None, threshold, sets=sets).filter(
+    return exact_jaccard(cands, sets, threshold).filter(
         F.col("jaccard") >= threshold
     )
 
@@ -423,10 +365,10 @@ def jaccard_dup_pairs(
     # Remaining shuffles: the document-frequency count + inverted-index
     # join inside prefix_filter_candidates and the pair-verify joins — the
     # genuinely cross-row parts of the SSJoin.
-    sets = shingle_sets(df, id_col, expr)
+    sets = _text_sets(df, id_col, text_col, expr)
     shingled = sets.select("id", F.explode("shs").alias("sh"))
     cands = prefix_filter_candidates(shingled, threshold)
-    return exact_jaccard(cands, None, threshold, sets=sets).filter(
+    return exact_jaccard(cands, sets, threshold).filter(
         F.col("jaccard") >= threshold
     )
 
@@ -525,9 +467,10 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     (cross-checked bit-identical in tests and against the unchanged SQL
     oracle). The input is spread to cluster parallelism first (no-op at
     scale) so the per-token md5s never run serially above a 1-task scan.
+    NULL text has no signature: its row is dropped.
     """
-    df = spread_input(df)
     quoted = "`" + text_col.replace("`", "``") + "`"
+    df = spread_input(df).filter(F.expr(f"{quoted} IS NOT NULL"))
     hashes = (
         f"transform(split({quoted}, ' '), t -> "
         f"cast(conv(substring(md5(concat(t, '#simhash')), 1, 15), 16, 10) as bigint))"
@@ -856,8 +799,8 @@ def incremental_minhash_dedup(
     expr = word_shingles(F.col(text_col), shingle_n)
     # row-local sets + signatures (r6): no shingle-keyed shuffle anywhere
     # in the incremental loop either (see minhash_dup_pairs)
-    sets_new = shingle_sets(new, id_col, expr)
-    sets_idx = shingle_sets(index, id_col, expr)
+    sets_new = _text_sets(new, id_col, text_col, expr)
+    sets_idx = _text_sets(index, id_col, text_col, expr)
     sig_new = minhash_signature_from_sets(sets_new, num_perm)
     sig_idx = minhash_signature_from_sets(sets_idx, num_perm)
 
@@ -900,7 +843,7 @@ def incremental_minhash_dedup(
     # arrays). The id spaces are disjoint, so the union IS a valid per-id
     # table.
     sets_all = sets_new.unionByName(sets_idx)
-    jac = exact_jaccard(cands, None, threshold, sets=sets_all).filter(
+    jac = exact_jaccard(cands, sets_all, threshold).filter(
         F.col("jaccard") >= threshold
     )
     w = Window.partitionBy("id_a").orderBy(F.col("jaccard").desc(), F.col("id_b"))

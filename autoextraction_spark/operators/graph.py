@@ -1170,25 +1170,13 @@ def entity_type_inference(
     )
 
 
-def rule_mining(triples: DataFrame, min_support: int = 5) -> DataFrame:
-    """AMIE-style chain-rule mining (Galárraga et al. 2013, WWW — *AMIE:
-    association rule mining under incomplete evidence*): discover the
-     2-atom property-chain rules ``body_a(s,x) ∧ body_b(x,o) ⇒
-    head(s,o)`` that :func:`rule_inference` APPLIES — the inverse
-    operator, and how a production KG proposes its inference rules in the
-    first place. For every body pair, ``n_pairs`` distinct (s,o) path
-    endpoints; for every candidate head predicate, ``support`` = how many
-    of those endpoints already hold a head fact; ``confidence`` =
-    support / n_pairs (CWA). On this corpus the miner rediscovers
-    ``acquired ∘ acquired ⇒ acquired`` — the transitivity kg_closure
-    materializes.
-
-    Scale shape: ONE entity-keyed self-join builds all rule bodies at
-    once (shuffle on the bridge entity, AQE-splittable under hub skew);
-    the path table is materialized once and feeds both the body count
-    and the head equi-join on (s, o); aggregations are map-side
-    combinable. No per-rule driver loop — the rule space IS a DataFrame.
-    """
+def _chain_rules(
+    triples: DataFrame, min_support: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(paths, heads, rules) shared by :func:`rule_mining` and
+    :func:`apply_mined_rules`: the materialized (body_a, body_b, s, o)
+    path table, the (head_pred, s, o) fact table, and the scored chain
+    rules with ``support ≥ min_support``."""
     t = ckpt(triples.select("subj", "pred", "obj").distinct())
     a = t.select(
         F.col("pred").alias("body_a"),
@@ -1214,7 +1202,7 @@ def rule_mining(triples: DataFrame, min_support: int = 5) -> DataFrame:
         .groupBy("body_a", "body_b", "head_pred")
         .agg(F.count(F.lit(1)).cast("long").alias("support"))
     )
-    return (
+    rules = (
         m.join(body, ["body_a", "body_b"])
         .filter(F.col("support") >= min_support)
         .select(
@@ -1229,6 +1217,29 @@ def rule_mining(triples: DataFrame, min_support: int = 5) -> DataFrame:
             ).alias("confidence"),
         )
     )
+    return paths, heads, rules
+
+
+def rule_mining(triples: DataFrame, min_support: int = 5) -> DataFrame:
+    """AMIE-style chain-rule mining (Galárraga et al. 2013, WWW — *AMIE:
+    association rule mining under incomplete evidence*): discover the
+     2-atom property-chain rules ``body_a(s,x) ∧ body_b(x,o) ⇒
+    head(s,o)`` that :func:`rule_inference` APPLIES — the inverse
+    operator, and how a production KG proposes its inference rules in the
+    first place. For every body pair, ``n_pairs`` distinct (s,o) path
+    endpoints; for every candidate head predicate, ``support`` = how many
+    of those endpoints already hold a head fact; ``confidence`` =
+    support / n_pairs (CWA). On this corpus the miner rediscovers
+    ``acquired ∘ acquired ⇒ acquired`` — the transitivity kg_closure
+    materializes.
+
+    Scale shape: ONE entity-keyed self-join builds all rule bodies at
+    once (shuffle on the bridge entity, AQE-splittable under hub skew);
+    the path table is materialized once and feeds both the body count
+    and the head equi-join on (s, o); aggregations are map-side
+    combinable. No per-rule driver loop — the rule space IS a DataFrame.
+    """
+    return _chain_rules(triples, min_support)[2]
 
 
 def implication_rules(triples: DataFrame, min_support: int = 2) -> DataFrame:
@@ -1298,55 +1309,12 @@ def apply_mined_rules(
     table (one bridge-entity self-join, materialized once and shared with
     the mining aggregates); novelty is one left_anti fact-key join.
     """
-    t = ckpt(triples.select("subj", "pred", "obj").distinct())
-    a = t.select(
-        F.col("pred").alias("body_a"),
-        F.col("subj").alias("s"),
-        F.col("obj").alias("x"),
-    )
-    b = t.select(
-        F.col("pred").alias("body_b"),
-        F.col("subj").alias("x"),
-        F.col("obj").alias("o"),
-    )
-    paths = ckpt(
-        a.join(b, "x").select("body_a", "body_b", "s", "o").distinct()
-    )
-    body = paths.groupBy("body_a", "body_b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs")
-    )
-    heads = t.select(
-        F.col("pred").alias("head_pred"),
-        F.col("subj").alias("s"),
-        F.col("obj").alias("o"),
-    )
-    m = (
-        paths.join(heads, ["s", "o"])
-        .groupBy("body_a", "body_b", "head_pred")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-    )
-    rules = (
-        m.join(body, ["body_a", "body_b"])
-        .filter(F.col("support") >= min_support)
-        .select(
-            "body_a",
-            "body_b",
-            "head_pred",
-            F.round(
-                F.col("support").cast("double")
-                / F.col("n_pairs").cast("double"),
-                6,
-            ).alias("confidence"),
-        )
-        .filter(F.col("confidence") >= min_confidence)
+    paths, heads, mined = _chain_rules(triples, min_support)
+    rules = mined.filter(F.col("confidence") >= min_confidence).select(
+        "body_a", "body_b", "head_pred", "confidence"
     )
     fired = paths.join(F.broadcast(rules), ["body_a", "body_b"])
-    known = t.select(
-        F.col("pred").alias("head_pred"),
-        F.col("subj").alias("s"),
-        F.col("obj").alias("o"),
-    )
-    novel = fired.join(known, ["head_pred", "s", "o"], "left_anti")
+    novel = fired.join(heads, ["head_pred", "s", "o"], "left_anti")
     return novel.select(
         F.col("s").alias("subj"),
         F.col("head_pred").alias("pred"),

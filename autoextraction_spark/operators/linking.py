@@ -1,19 +1,20 @@
-"""Stage E — entity linking: MinHash/LSH-blocked candidate generation over
-triple mentions, exact-Jaccard verification, connected-components
-canonicalization (north_rule stages E+F composed).
+"""Stage E — entity linking: exhaustive token-prefix blocking over the typed
+mention vocabulary, a precise abbreviation-variant verifier, and
+connected-components canonicalization (north_rule stages E+F composed).
 
-Flow (all DataFrame ops, one small shuffle chain over the MENTION vocabulary
-— orders of magnitude smaller than the corpus):
+Flow (one small shuffle chain over the MENTION vocabulary — orders of
+magnitude smaller than the corpus):
 
     triples ──> typed mention vocab (subj ∪ obj, tagged with entity type)
-            ──> char-3-gram shingles (lowercased)
-            ──> MinHash signatures ──> LSH band join (blocked by entity type)
-            ──> exact Jaccard ≥ threshold ──> variant edges
+            ──> block on (ent_type, per-token 3-char prefixes)
+            ──> is_variant_pair verify within each block ──> variant edges
             ──> connected components ──> mention → canonical mapping
             ──> triples rewritten through the mapping (two broadcast joins)
 
-Entity types come from the relation schema (a broadcast dimension), so
-people never link to orgs even when surface-similar.
+A vocabulary that fits the driver runs block → verify → union-find in one
+collect (``canonical_mapping``); a larger one runs the same chain as
+distributed joins. Entity types come from the relation schema (a broadcast
+dimension), so people never link to orgs even when surface-similar.
 """
 
 from __future__ import annotations
@@ -23,11 +24,8 @@ from pyspark.sql import functions as F
 
 from .. import schema as S
 from ..materialize import ckpt
-from . import dedup
 from .canonicalize import _min_labels, connected_components
 
-NUM_PERM = 16
-BANDS = 8  # r=2 rows/band: r=1 made the hottest band bucket quadratic at scale
 MIN_ABBREV_LEN = 3
 
 
@@ -91,53 +89,30 @@ def prefix_block_key(mention: Column) -> Column:
     return F.concat_ws(" ", F.transform(toks, lambda t: F.substring(t, 1, MIN_ABBREV_LEN)))
 
 
-def variant_edges(
-    mentions: DataFrame,
-    num_perm: int = NUM_PERM,
-    bands: int = BANDS,
-    blocker: str = "prefix",
-) -> DataFrame:
+def variant_edges(mentions: DataFrame) -> DataFrame:
     """(src, dst) edges between surface variants of the same entity.
 
-    Candidate BLOCKING (the scale mechanism — never all-pairs over a
-    web-scale mention vocabulary) has two modes; the precise
-    abbreviation-variant predicate is always the verifier:
-
-    - ``prefix`` (default): equi-join on ``prefix_block_key`` + ent_type.
-      Exhaustive for this verifier (zero recall loss, see key docstring) and
-      far more selective than an LSH band bucket — buckets only hold
-      mentions agreeing on EVERY token's 3-char prefix.
-    - ``lsh``: MinHash/LSH banding over lowercase char-3-grams
-      (dedup.lsh_candidate_pairs, 8 bands × r=2). The general-similarity
-      blocker — the right choice when the verifier widens beyond
-      abbreviation-prefix pairs (edit distance, token reorderings), at the
-      cost of probabilistic recall.
+    Candidate BLOCKING is an equi-join on ``prefix_block_key`` + ent_type —
+    never all-pairs over a web-scale mention vocabulary, and exhaustive for
+    the ``is_variant_pair`` verifier (zero recall loss, see the key's
+    docstring): a block only holds mentions agreeing on EVERY token's
+    3-char prefix.
     """
     keyed = mentions.select(
         F.concat_ws("\x1f", "ent_type", "mention").alias("key"),
         "ent_type",
         "mention",
-        F.lower(F.col("mention")).alias("norm"),
     )
-    if blocker == "lsh":
-        shingled = dedup.exploded_shingles(
-            keyed, "key", dedup.char_shingles(F.col("norm"), 3)
-        )
-        sig = dedup.minhash_signature(shingled, num_perm).join(
-            keyed.select(F.col("key").alias("id"), "ent_type"), "id"
-        )
-        cands = dedup.lsh_candidate_pairs(sig, num_perm, bands, block_col="ent_type")
-    else:
-        blocked = keyed.select(
-            F.col("key").alias("id"), "ent_type", prefix_block_key(F.col("mention")).alias("blk")
-        )
-        a = blocked.select(F.col("id").alias("id_a"), "ent_type", "blk")
-        b = blocked.select(F.col("id").alias("id_b"), "ent_type", "blk")
-        cands = (
-            a.join(b, ["ent_type", "blk"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
+    blocked = keyed.select(
+        F.col("key").alias("id"), "ent_type", prefix_block_key(F.col("mention")).alias("blk")
+    )
+    a = blocked.select(F.col("id").alias("id_a"), "ent_type", "blk")
+    b = blocked.select(F.col("id").alias("id_b"), "ent_type", "blk")
+    cands = (
+        a.join(b, ["ent_type", "blk"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
     ka = keyed.select(F.col("key").alias("id_a"), F.col("mention").alias("m_a"))
     kb = keyed.select(F.col("key").alias("id_b"), F.col("mention").alias("m_b"))
     verified = (
@@ -204,9 +179,13 @@ def _driver_canonical_mapping(rows: list) -> list:
     return [(et, m, labels[(et, m)][1]) for et, m in rows]
 
 
-def canonical_mapping(mentions: DataFrame, **kwargs) -> DataFrame:
+def canonical_mapping(mentions: DataFrame, blocker: str | None = None) -> DataFrame:
     """(ent_type, mention, canonical) — canonical = lexicographically
     smallest variant in the connected component; identity for singletons.
+
+    ``blocker``: ``None`` chooses the driver or distributed path from the
+    measured vocabulary size (below); ``"prefix"`` forces the distributed
+    prefix-blocked path; any other value raises ``ValueError``.
 
     Hybrid execution (r6, the connected_components union-find precedent
     extended one stage up): the mention vocabulary is materialized once and
@@ -218,6 +197,8 @@ def canonical_mapping(mentions: DataFrame, **kwargs) -> DataFrame:
     the distributed blocked-join + star-contraction path runs unchanged.
     Identical output by construction (cross-checked in tests and by the
     oracle)."""
+    if blocker not in (None, "prefix"):
+        raise ValueError(f"unknown blocker {blocker!r}: expected None or 'prefix'")
     # materialize the vocab ONCE: it is scanned four times inside the
     # blocked-join plan (a/b sides + both verify lookups), again by the CC
     # node/edge checkpoints, and once more by the final left join — without
@@ -231,7 +212,7 @@ def canonical_mapping(mentions: DataFrame, **kwargs) -> DataFrame:
         ).alias("avg_bytes"),
     ).collect()[0]
     est_bytes = stats["n"] * (stats["avg_bytes"] + _DRIVER_MAP_ROW_OVERHEAD)
-    if not kwargs and est_bytes <= _DRIVER_MAP_MAX_BYTES:
+    if blocker is None and est_bytes <= _DRIVER_MAP_MAX_BYTES:
         rows = [(r["ent_type"], r["mention"]) for r in mentions.collect()]
         from collections import Counter
 
@@ -244,7 +225,7 @@ def canonical_mapping(mentions: DataFrame, **kwargs) -> DataFrame:
                 _driver_canonical_mapping(rows),
                 "ent_type string, mention string, canonical string",
             )
-    edges = variant_edges(mentions, **kwargs)
+    edges = variant_edges(mentions)
     # check_every=2: the convergence probe is count + exceptAll (2 driver
     # jobs); probing every other round saves ~30% of driver actions on deep
     # graphs while the round count stays O(log n) + at most 1

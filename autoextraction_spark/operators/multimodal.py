@@ -142,7 +142,7 @@ def png_media_table(pages: DataFrame) -> DataFrame:
                     )
                     for y in range(h)
                 ]
-                payload = png.encode_png(rows, w, h, 3, filter_mode="cycle")
+                payload = png.encode_png(rows, w, h, 3)
                 out.append((url, "image", payload, w, h, None))
             yield pd.DataFrame(
                 out,

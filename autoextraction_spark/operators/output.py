@@ -15,15 +15,9 @@ from .. import schema as S
 from ..materialize import ckpt
 
 
-def completed_filter(states: DataFrame, keep_none: bool = False) -> DataFrame:
-    """O1 (predict.py:102-108): keep fully-filled states; drop '[None]' tuples.
-
-    ``keep_none=True`` mirrors the DuEE path that keeps them (DQN.py:305).
-    """
-    done = states.filter(F.size("remaining") == 0)
-    if keep_none:
-        return done
-    return done.filter(
+def completed_filter(states: DataFrame) -> DataFrame:
+    """O1 (predict.py:102-108): keep fully-filled states; drop '[None]' tuples."""
+    return states.filter(F.size("remaining") == 0).filter(
         ~F.array_contains(F.map_values("assigned"), S.NONE_SENTINEL)
     )
 

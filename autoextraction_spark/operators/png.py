@@ -90,13 +90,11 @@ def encode_png(
     width: int,
     height: int,
     channels: int = 3,
-    filter_mode: str = "cycle",
 ) -> bytes:
     """Encode raw scanlines (``height`` rows of ``width*channels`` bytes).
 
-    ``filter_mode``: 'none' writes filter 0 everywhere; 'cycle' applies
-    filter ``y % 5`` per row so a decoder must implement full filter
-    reconstruction to round-trip the image.
+    Row ``y`` uses filter ``y % 5``, so a decoder must implement full
+    filter reconstruction to round-trip the image.
     """
     if len(rows) != height or any(len(r) != width * channels for r in rows):
         raise ValueError("rows must be height × (width*channels) bytes")
@@ -106,7 +104,7 @@ def encode_png(
     prev = bytes(width * channels)
     for y, row in enumerate(rows):
         row = bytes(row)
-        ftype = 0 if filter_mode == "none" else y % 5
+        ftype = y % 5
         raw.append(ftype)
         raw += _filter_row(ftype, row, prev, bpp)
         prev = row

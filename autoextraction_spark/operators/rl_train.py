@@ -51,8 +51,8 @@ Spark-first reframing (NOT a port — no SumTree, no parameter server):
 At 100 TB: generation is one narrow map over the gated corpus (text crosses
 Arrow once, transitions are small numeric rows); the buffer persists
 DISK_ONLY; each training iteration is one sort-limit job over cached
-numerics. A 10^12-document corpus trains on a sampled buffer — pass
-``buffer_fraction`` to ``fitted_q_train``.
+numerics. A 10^12-document corpus trains on a sampled buffer — sample
+``detected`` before passing it to ``fitted_q_train``.
 """
 
 from __future__ import annotations
@@ -404,7 +404,6 @@ def fitted_q_train(
     epsilon_decay: float = 0.95,
     gold: DataFrame | None = None,
     reward_mode: str = "step",
-    buffer_fraction: float | None = None,
     seed: int = 0,
     workdir: str | None = None,
     resume: bool = True,
@@ -413,8 +412,7 @@ def fitted_q_train(
     """Outer loop: regenerate experience under the improved policy with
     decayed ε (the on-policy dimension of DQN.py:125-160; ε ×
     ``epsilon_decay`` per generation ≡ ``explore_update``, dqn.py:143),
-    then run ``iters_per_gen`` fitted-Q iterations. ``buffer_fraction``
-    samples the gated corpus before rollout — the 10^12-document knob.
+    then run ``iters_per_gen`` fitted-Q iterations.
 
     ``workdir`` makes training RESUMABLE with the same manifest scheme as
     the extraction pipeline (pipeline.KgPipeline; the reference checkpoints
@@ -428,15 +426,13 @@ def fitted_q_train(
     w: list[float] | None = None
     history: list[dict] = []
     eps = epsilon0
-    if buffer_fraction is not None:
-        detected = detected.sample(fraction=buffer_fraction, seed=seed)
     if workdir:
         os.makedirs(workdir, exist_ok=True)
     fp = ""
     for g in range(n_generations):
         cfg = (
             f"{g}|{seed}|{eps:.6f}|{iters_per_gen}|{reward_mode}|"
-            f"{buffer_fraction}|{sorted(train_kw.items())}|{fp}"
+            f"{sorted(train_kw.items())}|{fp}"
         )
         fp = hashlib.md5(cfg.encode()).hexdigest()
         manifest_path = (

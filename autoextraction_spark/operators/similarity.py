@@ -287,57 +287,43 @@ def embedding_neardup_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_col: str | None = None,
     n_planes: int | None = None,
     n_tables: int = 4,
     dim: int = 64,
 ) -> DataFrame:
     """Near-duplicate pairs by cosine ≥ threshold.
 
-    Default blocking is multi-table sign-LSH (candidates share a
-    (table, bucket) key) — the plan that survives 10^9 vectors: every join
-    is an equi-join, never all-pairs. Round 1 blocked on ``label``, which is
+    Blocking is multi-table sign-LSH (candidates share a (table, bucket)
+    key) — the plan that survives 10^9 vectors: every join is an
+    equi-join, never all-pairs. Round 1 blocked on ``label``, which is
     all-pairs within block and explodes when the block key is coarse
-    (VERDICT.md item 4); a hard ``block_col`` remains available for keys the
-    caller KNOWS are selective. Recall at the threshold is
+    (VERDICT.md item 4). Recall at the threshold is
     1-(1-p^n_planes)^n_tables with p = 1-θ/π — near-identical pairs
     (the near-dup regime) collide with probability ≈ 1; ``n_planes`` is
     auto-sized from the corpus count when not given (``auto_n_planes``), so
     buckets stay bounded as the corpus grows.
     """
-    if n_planes is None and not block_col:
+    if n_planes is None:
         n_planes = auto_n_planes(df.count())
-    if block_col:
-        a = df.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"),
-            F.col(block_col).alias("blk"),
-        )
-        b = df.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"),
-            F.col(block_col).alias("blk"),
-        )
-        joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
-        pairs = joined.select("id_a", "id_b", "v_a", "v_b")
-    else:
-        # the (table, bucket) projection — n_tables × n_planes dot products
-        # per vector — feeds BOTH sides of the self-join; one DISK_ONLY
-        # materialization instead of computing the projections twice
-        bucketed = ckpt(with_lsh_tables(df, vec_col, n_planes, n_tables, dim))
-        a = bucketed.select(
-            F.col(id_col).alias("id_a"), "table", "bucket"
-        )
-        b = bucketed.select(
-            F.col(id_col).alias("id_b"), "table", "bucket"
-        )
-        cand = (
-            a.join(b, ["table", "bucket"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-        vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
-        pairs = cand.join(va, "id_a").join(vb, "id_b")
+    # the (table, bucket) projection — n_tables × n_planes dot products
+    # per vector — feeds BOTH sides of the self-join; one DISK_ONLY
+    # materialization instead of computing the projections twice
+    bucketed = ckpt(with_lsh_tables(df, vec_col, n_planes, n_tables, dim))
+    a = bucketed.select(
+        F.col(id_col).alias("id_a"), "table", "bucket"
+    )
+    b = bucketed.select(
+        F.col(id_col).alias("id_b"), "table", "bucket"
+    )
+    cand = (
+        a.join(b, ["table", "bucket"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
+    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    pairs = cand.join(va, "id_a").join(vb, "id_b")
     scored = with_cosine(pairs, "v_a", "v_b")
     return scored.filter(F.col("cosine") >= threshold).select(
         "id_a", "id_b", F.round("cosine", 6).alias("cosine")

@@ -136,9 +136,7 @@ def containment_audit(
     return df.withColumn(out_col, passed)
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", method: str = "local"
-) -> DataFrame:
+def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, appendix A1.1),
     adapted to word level for single-line web text: documents dominated by
     a few repeated words/phrases are boilerplate or spam, and every large
@@ -154,55 +152,46 @@ def repetition_stats(
       - ``repetitive``: 1 if any fraction crosses its Gopher-ish threshold
         (0.5 / 0.18 / 0.30).
 
-    Two physical strategies, identical results (tested):
-      - ``method="local"`` (default): per-document higher-order functions —
-        ZERO shuffle, stays in one scan, but the top-bigram mode is
-        O(distinct x total) per document. The right plan when document
-        length is bounded (web pages post-truncation: a 1k-word doc is
-        ~1M cheap comparisons, still far cheaper than a shuffle).
-      - ``method="shuffle"``: posexplode + window lead + groupBy(doc, gram)
-        — linear in document length, two shuffles keyed by doc_id. The
-        right plan for unbounded documents (books, transcripts).
+    Per-document higher-order functions — ZERO shuffle, stays in one
+    scan, but the top-bigram mode is O(distinct x total) per document: the
+    right plan while document length is bounded (web pages
+    post-truncation: a 1k-word doc is ~1M cheap comparisons, still far
+    cheaper than a shuffle).
     """
     df = spread_input(df)
     t = F.col(text_col)
-    if method == "local":
-        words = F.split(t, "\\s+")
-        n_w = F.size(words)
-        bigrams = F.zip_with(
-            F.slice(words, F.lit(1), n_w - 1),
-            F.slice(words, F.lit(2), n_w - 1),
-            lambda a, b: F.concat(a, F.lit(" "), b),
+    words = F.split(t, "\\s+")
+    n_w = F.size(words)
+    bigrams = F.zip_with(
+        F.slice(words, F.lit(1), n_w - 1),
+        F.slice(words, F.lit(2), n_w - 1),
+        lambda a, b: F.concat(a, F.lit(" "), b),
+    )
+    trigrams = F.zip_with(
+        F.slice(bigrams, F.lit(1), n_w - 2),
+        F.slice(words, F.lit(3), n_w - 2),
+        lambda a, b: F.concat(a, F.lit(" "), b),
+    )
+    top_bg = F.array_max(
+        F.transform(
+            F.array_distinct(bigrams),
+            lambda b: F.size(F.filter(bigrams, lambda x: x == b)),
         )
-        trigrams = F.zip_with(
-            F.slice(bigrams, F.lit(1), n_w - 2),
-            F.slice(words, F.lit(3), n_w - 2),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-        top_bg = F.array_max(
-            F.transform(
-                F.array_distinct(bigrams),
-                lambda b: F.size(F.filter(bigrams, lambda x: x == b)),
-            )
-        )
-        dup_w = F.when(
-            n_w > 0, 1.0 - F.size(F.array_distinct(words)) / n_w
-        ).otherwise(F.lit(0.0))
-        top_bg_frac = F.when(
-            n_w > 1, top_bg / F.size(bigrams)
-        ).otherwise(F.lit(0.0))
-        dup_tg = F.when(
-            n_w > 2, 1.0 - F.size(F.array_distinct(trigrams)) / F.size(trigrams)
-        ).otherwise(F.lit(0.0))
-        out = (
-            df.withColumn("dup_word_frac", F.round(dup_w, 6))
-            .withColumn("top_bigram_frac", F.round(top_bg_frac, 6))
-            .withColumn("dup_trigram_frac", F.round(dup_tg, 6))
-        )
-    elif method == "shuffle":
-        out = _repetition_stats_shuffle(df, text_col)
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    )
+    dup_w = F.when(
+        n_w > 0, 1.0 - F.size(F.array_distinct(words)) / n_w
+    ).otherwise(F.lit(0.0))
+    top_bg_frac = F.when(
+        n_w > 1, top_bg / F.size(bigrams)
+    ).otherwise(F.lit(0.0))
+    dup_tg = F.when(
+        n_w > 2, 1.0 - F.size(F.array_distinct(trigrams)) / F.size(trigrams)
+    ).otherwise(F.lit(0.0))
+    out = (
+        df.withColumn("dup_word_frac", F.round(dup_w, 6))
+        .withColumn("top_bigram_frac", F.round(top_bg_frac, 6))
+        .withColumn("dup_trigram_frac", F.round(dup_tg, 6))
+    )
     return out.withColumn(
         "repetitive",
         (
@@ -253,72 +242,6 @@ def c4_filters(df: DataFrame, text_col: str = "text", min_words: int = 5) -> Dat
         .withColumn("has_banned", banned.cast("int"))
         .withColumn("c4_keep", keep.cast("int"))
     )
-
-
-def _repetition_stats_shuffle(df: DataFrame, text_col: str) -> DataFrame:
-    """Linear-in-length plan for unbounded docs: one posexplode, window
-    leads to form grams, groupBy(doc_id, gram) then per-doc re-agg. All
-    other columns of ``df`` are preserved via a final broadcast-eligible
-    join back on doc_id."""
-    from pyspark.sql import Window
-
-    toks = df.select(
-        "doc_id", F.posexplode(F.split(F.col(text_col), "\\s+")).alias("pos", "w")
-    )
-    win = Window.partitionBy("doc_id").orderBy("pos")
-    grams = toks.select(
-        "doc_id",
-        "w",
-        F.concat_ws(" ", "w", F.lead("w", 1).over(win)).alias("bg_raw"),
-        F.concat_ws(
-            " ", "w", F.lead("w", 1).over(win), F.lead("w", 2).over(win)
-        ).alias("tg_raw"),
-        F.lead("w", 1).over(win).isNotNull().alias("has_bg"),
-        F.lead("w", 2).over(win).isNotNull().alias("has_tg"),
-    )
-    # one groupBy per gram size over (doc_id, gram): partial map-side combine
-    # makes each linear; counts then re-agg to per-doc fractions
-    wstats = grams.groupBy("doc_id", "w").count().groupBy("doc_id").agg(
-        F.sum("count").alias("n_w"),
-        F.count(F.lit(1)).alias("n_w_distinct"),
-    )
-    bgstats = (
-        grams.filter("has_bg")
-        .groupBy("doc_id", "bg_raw")
-        .count()
-        .groupBy("doc_id")
-        .agg(F.max("count").alias("top_bg"), F.sum("count").alias("n_bg"))
-    )
-    tgstats = (
-        grams.filter("has_tg")
-        .groupBy("doc_id", "tg_raw")
-        .count()
-        .groupBy("doc_id")
-        .agg(
-            F.sum("count").alias("n_tg"),
-            F.count(F.lit(1)).alias("n_tg_distinct"),
-        )
-    )
-    stats = (
-        wstats.join(bgstats, "doc_id", "left")
-        .join(tgstats, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.round(
-                F.when(F.col("n_w") > 0, 1.0 - F.col("n_w_distinct") / F.col("n_w"))
-                .otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_word_frac"),
-            F.round(
-                F.coalesce(F.col("top_bg") / F.col("n_bg"), F.lit(0.0)), 6
-            ).alias("top_bigram_frac"),
-            F.round(
-                F.coalesce(1.0 - F.col("n_tg_distinct") / F.col("n_tg"), F.lit(0.0)),
-                6,
-            ).alias("dup_trigram_frac"),
-        )
-    )
-    return df.join(stats, "doc_id", "inner")
 
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -140,9 +140,9 @@ def test_exact_jaccard_values(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
     )
-    sh = dedup.exploded_shingles(docs, "doc_id", dedup.word_shingles(F.col("text"), 2))
+    sets = dedup.shingle_sets(docs, "doc_id", dedup.word_shingles(F.col("text"), 2))
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    j = dedup.exact_jaccard(pairs, sh).collect()[0]
+    j = dedup.exact_jaccard(pairs, sets).collect()[0]
     # shingles: {a b, b c, c d} vs {a b, b c, c e} -> 2/4
     assert j.jaccard == 0.5
 
@@ -157,14 +157,13 @@ def test_dedup_documents_simhash_rejects_threshold(dup_docs):
 def test_exact_jaccard_length_filter_keeps_boundary(spark):
     # |A|=4, |B|=2, t=0.5: t*|A| = |B| exactly — the boundary pair must
     # survive the length filter (FP rounding may not drop it)
-    sh = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (1, "c"), (1, "d"), (2, "a"), (2, "b"),
-         (3, "x")],
-        "id long, sh string",
+    sets = spark.createDataFrame(
+        [(1, 4, ["a", "b", "c", "d"]), (2, 2, ["a", "b"]), (3, 1, ["x"])],
+        "id long, n int, shs array<string>",
     )
     pairs = spark.createDataFrame([(1, 2), (1, 3)], "id_a long, id_b long")
     got = {(r.id_a, r.id_b): r.jaccard
-           for r in dedup.exact_jaccard(pairs, sh, threshold=0.5).collect()}
+           for r in dedup.exact_jaccard(pairs, sets, threshold=0.5).collect()}
     assert got == {(1, 2): 0.5}  # (1,3) killed by the length filter
 
 
@@ -305,6 +304,38 @@ def test_incremental_minhash_dedup_batch_first_occurrence_wins(spark):
     }
     assert out[10].keep                      # first occurrence in the batch
     assert not out[20].keep and out[20].dup_of == 10
+
+
+def test_null_text_is_never_a_near_duplicate(spark):
+    """NULL text has no shingle set, signature or pair; "" stays an
+    ordinary document."""
+    text = "one two three four five six seven"
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, text), (5, text)],
+        "doc_id long, text string",
+    )
+    want = {(4, 5)}
+    for pairs in (
+        dedup.minhash_dup_pairs(docs, "doc_id", "text", threshold=0.8),
+        dedup.jaccard_dup_pairs(docs, "doc_id", "text", threshold=0.5),
+    ):
+        assert {(r.id_a, r.id_b) for r in pairs.collect()} == want
+    labeled = {
+        r.doc_id: r.keep_id
+        for r in dedup.dedup_documents(docs, "doc_id", "text").collect()
+    }
+    assert labeled == {1: 1, 2: 2, 3: 3, 4: 4, 5: 4}
+    index = spark.createDataFrame(
+        [(100, None), (101, "unrelated words about query planners")],
+        "doc_id long, text string",
+    )
+    inc = {
+        r.doc_id: (r.keep, r.dup_of)
+        for r in dedup.incremental_minhash_dedup(docs, index).collect()
+    }
+    assert inc == {1: (True, None), 2: (True, None), 3: (True, None),
+                   4: (True, None), 5: (False, 4)}
+    assert {r.id for r in dedup.simhash64(docs, "doc_id", "text").collect()} == {3, 4, 5}
 
 
 def test_host_mirror_pairs_jaccard_and_stop_digest(spark):

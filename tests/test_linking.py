@@ -1,4 +1,4 @@
-"""Stage E entity linking: LSH blocking + precise variant verification."""
+"""Stage E entity linking: token-prefix blocking + precise variant verification."""
 
 from pyspark.sql import functions as F
 
@@ -83,3 +83,22 @@ def test_driver_mapping_equals_distributed(spark):
         assert sorted(map(key, fast.collect())) == sorted(map(key, slow.collect()))
     finally:
         L._DRIVER_MAP_MAX_BYTES = slow_bytes
+
+
+def test_canonical_mapping_blocker_option(spark):
+    """``blocker="prefix"`` forces the distributed path with the same
+    mapping as the size-chosen driver path; any other blocker raises."""
+    import pytest
+
+    rows = [("org", "Acme Corp"), ("org", "Acme Corporation"), ("person", "Ali Stone")]
+    mentions = spark.createDataFrame(rows, "ent_type string, mention string")
+    key = lambda r: (r.ent_type, r.mention, r.canonical)
+    auto = sorted(map(key, linking.canonical_mapping(mentions).collect()))
+    forced = linking.canonical_mapping(mentions, blocker="prefix")
+    # the driver path is one python-rows relation; the distributed one
+    # joins the vocabulary to its components
+    assert "Join" in forced._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(key, forced.collect())) == auto
+    for bad in ("lsh", "prefx"):
+        with pytest.raises(ValueError, match="blocker"):
+            linking.canonical_mapping(mentions, blocker=bad)

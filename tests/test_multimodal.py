@@ -54,7 +54,7 @@ def test_png_roundtrip_all_filters():
             bytes(((x * ch + c + 7 * y) % 256) for x in range(w) for c in range(ch))
             for y in range(h)
         ]
-        data = png.encode_png(rows, w, h, ch, filter_mode="cycle")
+        data = png.encode_png(rows, w, h, ch)
         w2, h2, ch2, rows2 = png.decode_png(data)
         assert (w2, h2, ch2) == (w, h, ch)
         assert [bytes(r) for r in rows2] == rows

@@ -61,23 +61,6 @@ def test_ivf_recall_improves_with_probes(vectors):
             assert abs(exact_cos[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
 
 
-def test_embedding_neardup_blocked(spark):
-    rows = [
-        (1, [1.0, 0.0], 0),
-        (2, [0.999, 0.01], 0),   # near-dup of 1, same block
-        (3, [1.0, 0.0], 1),      # identical to 1 but different block -> unseen
-        (4, [0.0, 1.0], 0),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in similarity.embedding_neardup_pairs(df, 0.99, block_col="label").collect()
-    }
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs  # hard blocking is explicit and intentional
-    assert (1, 4) not in pairs
-
-
 def test_embedding_neardup_lsh_default(vectors):
     # default blocking = multi-table sign-LSH; every emitted pair must meet
     # the threshold, and near-identical vectors must collide in some table

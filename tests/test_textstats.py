@@ -116,31 +116,31 @@ def test_repetition_stats_known_values(spark):
     assert rows[4].repetitive == 0
 
 
-def test_repetition_methods_agree(spark, sf_dir):
-    """The zero-shuffle HOF plan and the linear explode+groupBy plan are the
-    same operator: identical output on the real corpus sample."""
+def test_repetition_matches_oracle(spark, sf_dir):
+    """The zero-shuffle HOF plan equals the DuckDB oracle's list-function
+    definition on the real corpus sample."""
+    import duckdb
+
+    from autoextraction_spark import oracle
+
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
+        .orderBy("doc_id")
         .limit(200)
     )
     cols = [
         "doc_id", "dup_word_frac", "top_bigram_frac", "dup_trigram_frac",
         "repetitive",
     ]
-    local = {
-        r.doc_id: r
-        for r in textstats.repetition_stats(docs, method="local")
-        .select(*cols).collect()
-    }
-    shuf = {
-        r.doc_id: r
-        for r in textstats.repetition_stats(docs, method="shuffle")
-        .select(*cols).collect()
-    }
-    assert set(local) == set(shuf)
-    for doc_id, lr in local.items():
-        assert lr == shuf[doc_id], doc_id
+    got = sorted(
+        tuple(r) for r in textstats.repetition_stats(docs).select(*cols).collect()
+    )
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = sorted(map(tuple, con.sql(oracle.repetition_sql()).fetchall()))
+    assert len(got) == 200
+    assert got == want
 
 
 def test_c4_filters_known_values(spark):
