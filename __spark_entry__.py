@@ -501,15 +501,18 @@ def q_kg_rule_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _acquired_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``acquired`` org→org (src, dst) edges the closure family walks."""
+    return _pipeline_triples(spark, sf_dir).filter(F.col("pred") == "acquired").select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst")
+    )
+
+
 def q_kg_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-naive transitive closure of the ``acquired`` org→org edges: who
     transitively controls whom, with BFS-minimal depth. The oracle's
     WITH RECURSIVE enumeration min-collapses to the same pair set."""
-    t = _pipeline_triples(spark, sf_dir)
-    edges = t.filter(F.col("pred") == "acquired").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return graph.transitive_closure(edges, max_depth=8)
+    return graph.transitive_closure(_acquired_edges(spark, sf_dir), max_depth=8)
 
 
 def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,11 +520,7 @@ def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hop-bounded mutual reachability over the semi-naive closure): each
     scc_size > 1 component is an acquisition CYCLE the reasoner must
     collapse — the directed complement to connected_components."""
-    t = _pipeline_triples(spark, sf_dir)
-    edges = t.filter(F.col("pred") == "acquired").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return graph.strongly_connected(edges, max_depth=8)
+    return graph.strongly_connected(_acquired_edges(spark, sf_dir), max_depth=8)
 
 
 def q_kg_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,11 +528,7 @@ def q_kg_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``acquired`` graph: ONE deterministic minimal-depth witness path per
     (src, dst), chosen by the per-hop greedy-min rule — the explanation
     shown next to each inferred transitive-control fact."""
-    t = _pipeline_triples(spark, sf_dir)
-    edges = t.filter(F.col("pred") == "acquired").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return graph.canonical_paths(edges, max_depth=8)
+    return graph.canonical_paths(_acquired_edges(spark, sf_dir), max_depth=8)
 
 
 def q_kg_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,11 +546,7 @@ def q_kg_toposort(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``acquired`` graph — the parallel rule-evaluation schedule over a
     cyclic KG (level L runs after all levels < L). Composes
     strongly_connected with the condensation BFS-layer walk."""
-    t = _pipeline_triples(spark, sf_dir)
-    edges = t.filter(F.col("pred") == "acquired").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return graph.condensation_levels(edges, max_depth=8)
+    return graph.condensation_levels(_acquired_edges(spark, sf_dir), max_depth=8)
 
 
 def q_kg_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3007,11 +2998,7 @@ def q_kg_reach_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the how-deep-do-control-chains-go audit over the materialized KG
     (the effective-diameter table; at web scale the exact closure is
     replaced by HyperANF-style neighborhood sketches, same output shape)."""
-    t = _pipeline_triples(spark, sf_dir)
-    edges = t.filter(F.col("pred") == "acquired").select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    closure = graph.transitive_closure(edges, max_depth=8)
+    closure = graph.transitive_closure(_acquired_edges(spark, sf_dir), max_depth=8)
     d = closure.groupBy("depth").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
     )

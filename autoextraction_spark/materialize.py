@@ -1,14 +1,15 @@
 """The engine's one lineage cut: every derived table that an operator or
 query materializes once (a table feeding several plan branches, an
-iterative loop's per-round state) goes through ``ckpt``. Eager checkpoints
-write now, so a loop's convergence probe reads the checkpoint instead of
-re-running the round; ``level=None`` keeps Spark's default local-checkpoint
-level (memory and disk, deserialized). ``with_rank``, the engine's one
-global-id primitive, is built on an eager ``ckpt``."""
+iterative loop's per-round state) goes through ``ckpt``; ``level=None``
+keeps Spark's default local-checkpoint level (memory and disk,
+deserialized). ``ckpt_stats`` also returns aggregates observed by the
+checkpoint job itself, so a convergence test or a sizing decision needs no
+second job. ``with_rank``, the engine's one global-id primitive, is built
+on an eager ``ckpt``."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -18,6 +19,17 @@ def ckpt(
 ) -> DataFrame:
     """Local checkpoint of ``df`` at ``level`` (None: Spark's default)."""
     return df.localCheckpoint(eager=eager, storageLevel=level)
+
+
+def ckpt_stats(
+    df: DataFrame, level: StorageLevel | None, aggs: list[Column]
+) -> tuple[DataFrame, dict]:
+    """Eager local checkpoint of ``df`` at ``level`` and ``{alias: value}``
+    of the named aggregates ``aggs``, observed while the checkpoint job
+    writes the rows (no second job; exact under task retries, and 0 rows for
+    a plan AQE prunes to no partitions)."""
+    obs = Observation()
+    return ckpt(df.observe(obs, *aggs), eager=True, level=level), obs.get
 
 
 def with_rank(df: DataFrame, order: str) -> DataFrame:

@@ -57,8 +57,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from ..materialize import ckpt
+from ..materialize import ckpt, ckpt_stats
 
 #: end-of-word marker symbol (Sennrich et al. 2016 §3.2)
 END_OF_WORD = "</w>"
@@ -124,13 +125,14 @@ def _bpe_loop(
     )
     steps: list[DataFrame] = []
     for step in range(1, n_merges + 1):
-        best = ckpt(
+        best, stats = ckpt_stats(
             _adjacent_pairs(vocab)
             .orderBy(F.col("cnt").desc(), F.col("pair").asc())
             .limit(1),
-            eager=True,
+            StorageLevel.DISK_ONLY,
+            [F.count(F.lit(1)).alias("n")],
         )
-        if best.isEmpty():  # every word fused to one symbol already
+        if stats["n"] == 0:  # every word fused to one symbol already
             raise ValueError(
                 f"BPE merge {step}: no adjacent pairs remain — lower "
                 f"n_merges (requested {n_merges})"

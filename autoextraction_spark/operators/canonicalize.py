@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt
+from ..materialize import ckpt, ckpt_stats
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -82,7 +82,7 @@ def _min_labels(nodes, pairs) -> dict:
 def _driver_union_find(spark, raw_rows: list, node_type: str) -> DataFrame:
     """Small-graph fast path: exact union-find at the driver.
 
-    The distributed star loop costs ~10 driver jobs (2 star passes + probe +
+    The distributed star loop costs ~10 driver jobs (2 star passes +
     checkpoint per round) — pure scheduling latency when the edge set is
     vocabulary-scale. Below the threshold the whole graph is a model-sized
     artifact (like IVF centroids): ONE collect of the raw (u, v) rows
@@ -120,8 +120,8 @@ def connected_components(
     the lexicographically-smallest variant the canonical representative.
 
     Hybrid execution (what production graph engines do): the raw edge list
-    is materialized once, and ONE agg job yields both the edge count and the
-    average key width; when the estimated driver-side footprint —
+    is materialized once, and that checkpoint job also observes the edge
+    count and the average key width; when the estimated driver-side footprint —
     ``raw edges × (avg key bytes + per-edge Python object overhead)`` — fits in
     ``small_graph_max_bytes`` (default 64 MiB), the EXACT answer is computed
     by driver-side union-find in one collect (entity-variant / near-dup pair
@@ -140,26 +140,19 @@ def connected_components(
     # materialize the INPUT edge plan once: every consumer below forces a
     # job, and without this each would re-execute the caller's (expensive)
     # pair generation — a minhash/LSH/blocked-join chain in every
-    # production caller — instead of scanning a tiny materialized edge list
-    raw = ckpt(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), eager=True, level=None
-    )
-    # one agg job over RAW: edge count + mean key width (cast covers
-    # numeric ids). Sizing on raw (≥ the dedup'd edge set) keeps the
+    # production caller — instead of scanning a tiny materialized edge list.
+    # The same job observes edge count + mean key width over RAW (cast
+    # covers numeric ids): sizing on raw (≥ the dedup'd edge set) keeps the
     # driver-side bound conservative while letting the small path COLLECT
-    # raw directly — node derivation and self-loop/dup dropping are python
-    # work there, so the former nodes/e checkpoints (+ their collects,
-    # 4 driver jobs per call) disappear (r6).
-    stats = raw.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.avg(
-                F.length(F.col("u").cast("string"))
-                + F.length(F.col("v").cast("string"))
-            ),
-            F.lit(0.0),
-        ).alias("avg_key_bytes"),
-    ).collect()[0]
+    # raw directly (node derivation and self-loop/dup dropping are python
+    # work there).
+    count = F.count(F.lit(1)).alias("n")
+    key_bytes = F.length(F.col("u").cast("string")) + F.length(F.col("v").cast("string"))
+    raw, stats = ckpt_stats(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        None,
+        [count, F.coalesce(F.avg(key_bytes), F.lit(0.0)).alias("avg_key_bytes")],
+    )
     est_bytes = stats["n"] * (stats["avg_key_bytes"] + _UF_EDGE_OVERHEAD_BYTES)
     if est_bytes <= small_graph_max_bytes:
         node_type = raw.schema.fields[0].dataType.simpleString()
@@ -171,22 +164,19 @@ def connected_components(
         .select(F.col("u").alias("node")),
         eager=True, level=None,
     )
-    e = ckpt(
-        raw.filter(F.col("u") != F.col("v"))
-        .distinct(),
-        eager=True, level=None,
-    )
-    converged = False
+    e, stats = ckpt_stats(raw.filter(F.col("u") != F.col("v")).distinct(), None, [count])
     for it in range(max_iter):
-        new_e = ckpt(_small_star(_large_star(e)), eager=True, level=None)
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
-            # edge sets are distinct; equal count + empty difference ⇔ equal
-            if new_e.count() == e.count() and new_e.exceptAll(e).isEmpty():
-                converged = True
-                e = new_e
-                break
+        n = stats["n"]
+        new_e, stats = ckpt_stats(_small_star(_large_star(e)), None, [count])
+        probe = (it + 1) % check_every == 0 or it == max_iter - 1
+        # edge sets are distinct; equal count + empty difference ⇔ equal.
+        # Each checkpoint job counts its own edges, so only equal-count
+        # rounds pay a job for the test (the exceptAll)
+        converged = probe and stats["n"] == n and new_e.exceptAll(e).isEmpty()
         e = new_e
-    if not converged:
+        if converged:
+            break
+    else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )

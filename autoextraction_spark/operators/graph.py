@@ -29,10 +29,34 @@ inventory).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from ..materialize import ckpt, with_rank
+from ..materialize import ckpt, ckpt_stats, with_rank
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager DISK_ONLY checkpoint of ``df`` and its row count, from one job."""
+    cp, stats = ckpt_stats(df, StorageLevel.DISK_ONLY, [F.count(F.lit(1)).alias("n")])
+    return cp, stats["n"]
+
+
+def _frontier(first: DataFrame, step: Callable, rounds: range) -> Iterator:
+    """The graph fixpoints' frontier loop: for each ``d`` in ``rounds``,
+    checkpoint and count ``step(frontier, d)`` in one job, stop at the first
+    empty round, else yield ``(d, nxt)`` and make ``nxt`` the frontier. The
+    caller's loop body updates the state ``step`` reads (known pairs,
+    visited nodes, best costs)."""
+    frontier = first
+    for d in rounds:
+        nxt, n = _counted(step(frontier, d))
+        if n == 0:
+            return
+        yield d, nxt
+        frontier = nxt
 
 
 def triple_edges(
@@ -245,9 +269,9 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     Scale shape (billions of edges): the base edge set is materialized ONCE
     (eager DISK_ONLY checkpoint) and every round re-reads it; each round is
     one equi-join (frontier.dst = edges.src) + one left_anti join, both
-    shuffles keyed by entity id; per-round eager checkpoints cut lineage AND
-    provide the frontier-empty convergence probe (one count job per round —
-    the same cadence as connected_components). Depth is capped by
+    shuffles keyed by entity id; each round's eager checkpoint cuts lineage
+    AND counts the new frontier in the same job, so convergence costs no
+    extra job (the :func:`_frontier` driver). Depth is capped by
     ``max_depth`` so the plan and its SQL oracle enumerate the identical
     pair universe; production closures over deep hierarchies raise the cap
     or switch to the O(log d) doubling variant at the cost of join width.
@@ -255,22 +279,20 @@ def transitive_closure(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     paths = e.withColumn("depth", F.lit(1))
     known = e
-    frontier = paths
-    for d in range(2, max_depth + 1):
-        nxt = ckpt(
+
+    def step(frontier: DataFrame, d: int) -> DataFrame:
+        return (
             frontier.alias("p")
             .join(e.alias("q"), F.col("p.dst") == F.col("q.src"))
             .select(F.col("p.src").alias("src"), F.col("q.dst").alias("dst"))
             .distinct()
             .join(known, ["src", "dst"], "left_anti")
-            .withColumn("depth", F.lit(d)),
-            eager=True,
+            .withColumn("depth", F.lit(d))
         )
-        if nxt.isEmpty():
-            break
+
+    for _, nxt in _frontier(paths, step, range(2, max_depth + 1)):
         paths = paths.union(nxt)
         known = ckpt(known.union(nxt.select("src", "dst")))
-        frontier = nxt
     return paths
 
 
@@ -291,20 +313,18 @@ def bfs_distances(
     """
     e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     visited = ckpt(seeds.select("node").distinct().withColumn("dist", F.lit(0)), eager=True)
-    frontier = visited
-    for d in range(1, max_depth + 1):
-        nxt = ckpt(
+
+    def step(frontier: DataFrame, d: int) -> DataFrame:
+        return (
             frontier.join(e, frontier.node == e.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), ["node"], "left_anti")
-            .withColumn("dist", F.lit(d)),
-            eager=True,
+            .withColumn("dist", F.lit(d))
         )
-        if nxt.isEmpty():
-            break
+
+    for _, nxt in _frontier(visited, step, range(1, max_depth + 1)):
         visited = ckpt(visited.union(nxt), eager=True)
-        frontier = nxt
     return visited
 
 
@@ -388,15 +408,17 @@ def hash_random_walks(edges: DataFrame, steps: int = 3) -> DataFrame:
     stop early at sink nodes (no out-edges). Per step: ONE frontier⋈edges
     equi-join + the portable two-step argmin (min hash per walk position,
     then join back) — no window over the neighbor lists, no RNG. The edge
-    set is checkpointed once; each frontier is checkpointed (same loop
-    discipline as transitive_closure).
+    set is checkpointed once; each step's candidates are checkpointed, and
+    its frontier goes through :func:`_frontier`, which stops once all walks
+    hit sinks (empty frontiers add no rows, so oracle parity holds).
     """
     e = ckpt(edges.select("src", "dst").distinct(), eager=True)
-    frontier = e.select(F.col("src").alias("start")).distinct().select(
+    first = e.select(F.col("src").alias("start")).distinct().select(
         "start", F.col("start").alias("node")
     )
-    out = frontier.withColumn("step", F.lit(0))
-    for k in range(1, steps + 1):
+    out = first.withColumn("step", F.lit(0))
+
+    def step(frontier: DataFrame, k: int) -> DataFrame:
         cand = ckpt(
             frontier.join(e, frontier.node == e.src).select(
                 "start",
@@ -408,17 +430,9 @@ def hash_random_walks(edges: DataFrame, steps: int = 3) -> DataFrame:
             eager=True,
         )
         best = cand.groupBy("start").agg(F.min("h").alias("h"))
-        frontier = ckpt(
-            cand.join(best, ["start", "h"]).select(
-                "start", F.col("nxt").alias("node")
-            ),
-            eager=True,
-        )
-        if frontier.isEmpty():
-            # All walks hit sink nodes — same early exit as
-            # transitive_closure/bfs_distances; empty frontiers contribute
-            # no rows, so SQL-oracle parity is unaffected.
-            break
+        return cand.join(best, ["start", "h"]).select("start", F.col("nxt").alias("node"))
+
+    for k, frontier in _frontier(first, step, range(1, steps + 1)):
         out = out.union(frontier.withColumn("step", F.lit(k)))
     return out
 
@@ -659,31 +673,27 @@ def k_core(edges: DataFrame, k: int = 2, max_iter: int = 8) -> DataFrame:
     Peeling loop: drop nodes with degree < k, drop their incident edges,
     repeat to fixpoint. Each round is one map-side-combinable degree
     aggregation + two semi-joins keyed by entity id; per-round eager
-    DISK_ONLY checkpoints cut lineage and provide the convergence probe
-    (one count job per round — the transitive_closure cadence). Raises on
-    non-convergence within ``max_iter`` instead of returning a non-core
-    (the connected_components rule); the SQL oracle unrolls exactly
-    ``max_iter`` rounds, which agrees because post-fixpoint rounds are
-    no-ops.
+    DISK_ONLY checkpoints cut lineage and count the surviving edges in the
+    same job, so the fixpoint test (edge count unchanged) costs no job of
+    its own. Raises on non-convergence within ``max_iter`` instead of
+    returning a non-core (the connected_components rule); the SQL oracle
+    unrolls exactly ``max_iter`` rounds, which agrees because post-fixpoint
+    rounds are no-ops.
     """
     sym = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    e = ckpt(
+    e, n = _counted(
         sym.unionByName(
             sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct(),
-        eager=True,
+        ).distinct()
     )
-    n = e.count()
     for _ in range(max_iter):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("src")
-        new_e = ckpt(
+        new_e, new_n = _counted(
             e.join(keep, "src", "left_semi").join(
                 keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            ),
-            eager=True,
+            )
         )
-        new_n = new_e.count()
         if new_n == n:
             return deg.filter(F.col("degree") >= k).select(
                 F.col("src").alias("node"), F.col("degree")
@@ -785,8 +795,8 @@ def condensation_levels(
 
     Scale shape: the SCC labeling is checkpointed once and both mapping
     joins are entity-keyed; each level round is ONE equi-join + distinct
-    over the (small) condensation; per-round eager checkpoints provide the
-    convergence probe.
+    over the (small) condensation, whose eager checkpoint also counts the
+    frontier (:func:`_frontier`).
     """
     scc = ckpt(strongly_connected(edges, max_depth).select("node", "scc_id"), eager=True)
     ce = ckpt(
@@ -806,20 +816,19 @@ def condensation_levels(
         ce.select(F.col("dst").alias("c")).distinct(), "c", "left_anti"
     )
     arrivals = roots.withColumn("d", F.lit(0))
-    frontier = arrivals
-    for d in range(1, max_levels + 1):
-        nxt = ckpt(
+
+    def step(frontier: DataFrame, d: int) -> DataFrame:
+        return (
             frontier.join(ce, frontier["c"] == ce["src"])
             .select(F.col("dst").alias("c"))
             .distinct()
-            .withColumn("d", F.lit(d)),
-            eager=True,
+            .withColumn("d", F.lit(d))
         )
-        if nxt.isEmpty():
-            break
+
+    depth = 0
+    for depth, nxt in _frontier(arrivals, step, range(1, max_levels + 1)):
         arrivals = arrivals.union(nxt)
-        frontier = nxt
-    else:
+    if depth == max_levels:
         raise ValueError(
             f"condensation deeper than max_levels={max_levels} "
             "(should be impossible on a DAG of this size — raise the cap)"
@@ -902,7 +911,7 @@ def canonical_paths(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     witness", chosen by a fixed rule, not a specific global extremum.)
 
     Scale shape: the closure's semi-naive discipline (new pairs only via
-    anti-join against known pairs, per-round eager checkpoints, edge set
+    anti-join against known pairs, the :func:`_frontier` driver, edge set
     materialized once) with ONE extra per-round map-side-combinable
     min(path) aggregation; path strings carried only for surviving pairs,
     so state is O(closure), never O(all paths).
@@ -913,9 +922,9 @@ def canonical_paths(edges: DataFrame, max_depth: int = 8) -> DataFrame:
     ).withColumn("depth", F.lit(1))
     paths = p
     known = e
-    frontier = p
-    for d in range(2, max_depth + 1):
-        nxt = ckpt(
+
+    def step(frontier: DataFrame, d: int) -> DataFrame:
+        return (
             frontier.alias("p")
             .join(e.alias("q"), F.col("p.dst") == F.col("q.src"))
             .select(
@@ -926,14 +935,12 @@ def canonical_paths(edges: DataFrame, max_depth: int = 8) -> DataFrame:
             .join(known, ["src", "dst"], "left_anti")
             .groupBy("src", "dst")
             .agg(F.min("path").alias("path"))
-            .withColumn("depth", F.lit(d)),
-            eager=True,
+            .withColumn("depth", F.lit(d))
         )
-        if nxt.isEmpty():
-            break
+
+    for _, nxt in _frontier(p, step, range(2, max_depth + 1)):
         paths = paths.union(nxt)
         known = ckpt(known.union(nxt.select("src", "dst")))
-        frontier = nxt
     return paths.select("src", "dst", "depth", "path")
 
 
@@ -1000,16 +1007,16 @@ def weighted_shortest_paths(
     one frontier⋈edges equi-join keyed by src + one map-side-combinable
     min per dst + one left join against the current best (improvement
     filter) — all shuffles keyed by entity id, AQE-splittable under hub
-    skew; per-round eager checkpoints cut lineage and feed the isEmpty
-    convergence probe.
+    skew; each round's eager checkpoint cuts lineage and counts the
+    improvement frontier in the same job (:func:`_frontier`).
     """
     e = ckpt(edges.select("src", "dst", "w").distinct(), eager=True)
     best = ckpt(
         seeds.select("node").distinct().withColumn("cost", F.lit(0).cast("long")),
         eager=True,
     )
-    frontier = best
-    for _ in range(max_iter):
+
+    def step(frontier: DataFrame, _: int) -> DataFrame:
         cand = (
             frontier.join(e, frontier.node == e.src)
             .select(
@@ -1019,15 +1026,14 @@ def weighted_shortest_paths(
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
         )
-        improved = ckpt(
+        return (
             cand.alias("c")
             .join(best.alias("b"), "node", "left")
             .filter(F.col("b.cost").isNull() | (F.col("c.cost") < F.col("b.cost")))
-            .select("node", F.col("c.cost").alias("cost")),
-            eager=True,
+            .select("node", F.col("c.cost").alias("cost"))
         )
-        if improved.isEmpty():
-            break
+
+    for _, improved in _frontier(best, step, range(max_iter)):
         # merge = union + min per node (improvements are strictly better, so
         # this equals the anti-join+replace form; groupBy sidesteps a
         # Catalyst constraint-rewrite bug the USING-key anti-join over two
@@ -1039,7 +1045,6 @@ def weighted_shortest_paths(
             .agg(F.min("cost").alias("cost")),
             eager=True,
         )
-        frontier = improved
     return best
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema as S
-from ..materialize import ckpt
+from ..materialize import ckpt, ckpt_stats
 from .canonicalize import _min_labels, connected_components
 
 MIN_ABBREV_LEN = 3
@@ -188,15 +188,15 @@ def canonical_mapping(mentions: DataFrame, blocker: str | None = None) -> DataFr
     prefix-blocked path; any other value raises ``ValueError``.
 
     Hybrid execution (r6, the connected_components union-find precedent
-    extended one stage up): the mention vocabulary is materialized once and
-    sized with one agg job; when its estimated driver footprint fits
-    ``_DRIVER_MAP_MAX_BYTES`` AND the blocked pair budget is bounded, the
-    whole block → verify → CC → min-label chain runs at the driver in one
-    collect (3 driver jobs total vs ~12 for the distributed chain — pure
-    scheduling latency when the vocab is model-sized). Above either bound
-    the distributed blocked-join + star-contraction path runs unchanged.
-    Identical output by construction (cross-checked in tests and by the
-    oracle)."""
+    extended one stage up): the mention vocabulary is materialized once, and
+    that checkpoint job also observes its size; when its estimated driver
+    footprint fits ``_DRIVER_MAP_MAX_BYTES`` AND the blocked pair budget is
+    bounded, the whole block → verify → CC → min-label chain runs at the
+    driver in one collect (2 driver jobs total vs ~12 for the distributed
+    chain — pure scheduling latency when the vocab is model-sized). Above
+    either bound the distributed blocked-join + star-contraction path runs
+    unchanged. Identical output by construction (cross-checked in tests and
+    by the oracle)."""
     if blocker not in (None, "prefix"):
         raise ValueError(f"unknown blocker {blocker!r}: expected None or 'prefix'")
     # materialize the vocab ONCE: it is scanned four times inside the
@@ -204,13 +204,12 @@ def canonical_mapping(mentions: DataFrame, blocker: str | None = None) -> DataFr
     # node/edge checkpoints, and once more by the final left join — without
     # this every scan re-runs the upstream distinct over the triple table
     # (profiled at sf0.1: ~3.5s of pure recomputation on a 161-row vocab)
-    mentions = ckpt(mentions, eager=True, level=None)
-    stats = mentions.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.avg(F.length("mention") + F.length("ent_type")), F.lit(0.0)
-        ).alias("avg_bytes"),
-    ).collect()[0]
+    avg_bytes = F.avg(F.length("mention") + F.length("ent_type"))
+    mentions, stats = ckpt_stats(
+        mentions,
+        None,
+        [F.count(F.lit(1)).alias("n"), F.coalesce(avg_bytes, F.lit(0.0)).alias("avg_bytes")],
+    )
     est_bytes = stats["n"] * (stats["avg_bytes"] + _DRIVER_MAP_ROW_OVERHEAD)
     if blocker is None and est_bytes <= _DRIVER_MAP_MAX_BYTES:
         rows = [(r["ent_type"], r["mention"]) for r in mentions.collect()]
@@ -226,9 +225,9 @@ def canonical_mapping(mentions: DataFrame, blocker: str | None = None) -> DataFr
                 "ent_type string, mention string, canonical string",
             )
     edges = variant_edges(mentions)
-    # check_every=2: the convergence probe is count + exceptAll (2 driver
-    # jobs); probing every other round saves ~30% of driver actions on deep
-    # graphs while the round count stays O(log n) + at most 1
+    # check_every=2: a round whose edge count did not change pays one
+    # exceptAll job; testing every other round halves those at the cost of
+    # at most one extra round
     cc = connected_components(edges, check_every=2)
     keyed = mentions.select(
         F.concat_ws("\x1f", "ent_type", "mention").alias("node"), "ent_type", "mention"

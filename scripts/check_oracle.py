@@ -9,11 +9,14 @@ order-insensitive exact value comparison. Exit 1 on any mismatch.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -43,7 +46,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
     from autoextraction_spark.session import get_spark
 
@@ -102,7 +105,7 @@ def main() -> int:
         import subprocess
 
         head = subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+            ["git", "-C", REPO, "rev-parse", "HEAD"],
             capture_output=True, text=True,
         ).stdout.strip()
         with open(args.json_out, "w") as fh:

@@ -17,11 +17,12 @@ from __future__ import annotations
 
 import argparse
 import cProfile
+import os
 import pstats
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -20,9 +20,11 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = """
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[4])
 from autoextraction_spark.session import get_spark
 from autoextraction_spark import corpus
 from autoextraction_spark.materialize import ckpt
@@ -81,7 +83,7 @@ spark.stop()
 
 
 def run(cpus: int, sf_dir: str, replicate: int, pin: bool = False) -> dict:
-    cmd = [sys.executable, "-c", WORKER, str(cpus), sf_dir, str(replicate)]
+    cmd = [sys.executable, "-c", WORKER, str(cpus), sf_dir, str(replicate), REPO]
     if pin:
         # Pin the WHOLE worker process tree (JVM task threads, GC, Arrow
         # serialization, python workers) to exactly `cpus` vCPUs. Unpinned,

@@ -424,6 +424,25 @@ def test_condensation_levels_longest_path(spark):
     }
 
 
+@pytest.mark.parametrize("max_levels", [1, 3])
+def test_condensation_levels_raises_when_every_round_is_nonempty(spark, max_levels):
+    # the chain a->b->c->d has non-empty frontiers at levels 1..3; a cap
+    # reached without an empty round cannot tell "done" from "deeper"
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    with pytest.raises(ValueError, match="max_levels"):
+        graph.condensation_levels(df, max_levels=max_levels)
+
+
+def test_condensation_levels_converges_one_round_past_longest_path(spark):
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    got = {r.node: r.level for r in graph.condensation_levels(df, max_levels=4).collect()}
+    assert got == {"a": 0, "b": 1, "c": 2, "d": 3}
+
+
 def test_entity_pmi_hand_computed(spark):
     import math
 

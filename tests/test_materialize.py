@@ -1,13 +1,16 @@
-"""The one checkpoint primitive (materialize.ckpt), a guard that keeps it
-the only one, and the global-rank primitive built on it (with_rank)."""
+"""The one checkpoint primitive (materialize.ckpt) and its counted form
+(ckpt_stats), guards that keep them the only ones, and the global-rank
+primitive built on ckpt (with_rank)."""
 
 import ast
 import pathlib
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from autoextraction_spark.materialize import ckpt, with_rank
+from autoextraction_spark.materialize import ckpt, ckpt_stats, with_rank
+from autoextraction_spark.operators import graph
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
@@ -26,6 +29,61 @@ def test_ckpt_cuts_lineage_at_level(spark, kwargs, level):
     assert plan.nodeName() == "LogicalRDD"
     assert plan.rdd().getStorageLevel().toString() == level
     assert sorted(out.collect()) == sorted(df.collect())
+
+
+def test_ckpt_stats_observes_exact_values_in_the_checkpoint_job(spark):
+    df = spark.range(0, 100, 1, 4).selectExpr("id", "CAST(id AS STRING) AS k")
+    out, stats = ckpt_stats(
+        df, None, [F.count(F.lit(1)).alias("n"), F.avg(F.length("k")).alias("avg")]
+    )
+    assert out._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+    assert sorted(out.collect()) == sorted(ckpt(df, eager=True, level=None).collect())
+    # 10 one-digit ids + 90 two-digit ids
+    assert stats == {"n": 100, "avg": 1.9}
+
+
+def test_ckpt_stats_counts_zero_on_a_pruned_plan(spark):
+    # an empty join side lets AQE prune the plan to no partitions; the
+    # observation must still arrive (0 rows), not hang
+    df = spark.range(0, 50, 1, 2)
+    out, stats = ckpt_stats(
+        df.join(df.limit(0), "id"), StorageLevel.DISK_ONLY, [F.count(F.lit(1)).alias("n")]
+    )
+    assert stats["n"] == 0
+    assert out.collect() == []
+
+
+def _jobs_of(spark, action):
+    """Spark jobs ``action`` runs: the job ids between two marker jobs."""
+    sc = spark.sparkContext
+
+    def marker():
+        sc.setJobGroup("ckpt-marker", "marker")
+        sc.parallelize([0], 1).count()
+        return max(sc.statusTracker().getJobIdsForGroup("ckpt-marker"))
+
+    try:
+        m0 = marker()
+        sc.setJobGroup("ckpt-caller", "action")
+        action()
+        m1 = marker()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return m1 - m0 - 1
+
+
+def test_loops_take_their_counts_from_the_checkpoint_job(spark):
+    # a 5-edge chain: the closure runs 5 rounds (the last one empty), k_core
+    # (k=2) peels one end pair per round. Counting each round's new state in
+    # its own checkpoint job saves a job per round over a separate
+    # isEmpty()/count() probe, which ran 43 and 25 jobs here.
+    chain = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(5)], "src string, dst string"
+    )
+    tc = _jobs_of(spark, lambda: graph.transitive_closure(chain, max_depth=8).count())
+    kc = _jobs_of(spark, lambda: graph.k_core(chain, k=2).count())
+    assert (tc, kc) == (38, 17)
 
 
 def test_with_rank_stays_jvm_side(spark):
@@ -50,11 +108,18 @@ def _library_sources():
     yield ROOT / "__spark_entry__.py"
 
 
+def _enclosing_def(parents, node):
+    while node in parents and not isinstance(node, ast.FunctionDef):
+        node = parents[node]
+    return getattr(node, "name", None)
+
+
 def test_no_checkpoint_outside_materialize():
     offenders = []
     for path in _library_sources():
         tree = ast.parse(path.read_text())
         rel = path.relative_to(ROOT)
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)
@@ -63,6 +128,22 @@ def test_no_checkpoint_outside_materialize():
                 and path.name != "materialize.py"
             ):
                 offenders.append(f"{rel}:{node.lineno} localCheckpoint")
+            name = getattr(node, "id", None) or getattr(node, "attr", None)
+            if isinstance(node, ast.alias):
+                name = node.name
+            if name == "Observation" and path.name != "materialize.py":
+                offenders.append(f"{rel}:{node.lineno} Observation")
+            # row counts come from ckpt_stats; the one isEmpty() left is
+            # connected_components' exceptAll test, run only when the
+            # carried edge counts tie
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "isEmpty"
+                and (path.name, _enclosing_def(parents, node))
+                != ("canonicalize.py", "connected_components")
+            ):
+                offenders.append(f"{rel}:{node.lineno} isEmpty")
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
                 a = node.args
                 params = a.posonlyargs + a.args + a.kwonlyargs
