@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from autoextraction_spark import corpus, oracle  # noqa: E402
 from autoextraction_spark import metrics as kgmetrics  # noqa: E402
 from autoextraction_spark import schema as KS  # noqa: E402
-from autoextraction_spark.materialize import ckpt  # noqa: E402
+from autoextraction_spark.materialize import ckpt, local_table  # noqa: E402
 from autoextraction_spark.operators import (  # noqa: E402
     bpe, classifier, compose, dedup, detect, graph, kge, linking, lm,
     multimodal, nested, output, rl_train, similarity, sketch, slot_fill,
@@ -463,6 +463,11 @@ INFERENCE_RULES = [
 REACH_SEEDS = ["Acme Corp", "华信集团"]
 
 
+def _reach_seeds(spark: SparkSession) -> DataFrame:
+    """The REACH_SEEDS as a one-column (node) table."""
+    return local_table(spark, [(s,) for s in REACH_SEEDS], "node string")
+
+
 def q_kg_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Property-chain rule inference over the pipeline's own triples: each
     rule is ONE entity-keyed equi-join (works_for ∘ based_in ⇒ employed_in,
@@ -553,8 +558,7 @@ def q_kg_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distances from a 2-entity seed set over the full directed
     entity graph (all predicates) — the n-hop evidence-subgraph primitive."""
     t = _pipeline_triples(spark, sf_dir)
-    seeds = spark.createDataFrame([(s,) for s in REACH_SEEDS], "node string")
-    return graph.bfs_distances(graph.triple_edges(t), seeds, max_depth=6)
+    return graph.bfs_distances(graph.triple_edges(t), _reach_seeds(spark), max_depth=6)
 
 
 def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,8 +757,7 @@ def q_kg_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             % 5
         ).cast("long"),
     )
-    seeds = spark.createDataFrame([(s,) for s in REACH_SEEDS], "node string")
-    return graph.weighted_shortest_paths(e, seeds, max_iter=8)
+    return graph.weighted_shortest_paths(e, _reach_seeds(spark), max_iter=8)
 
 
 def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,8 +765,7 @@ def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     dangling mass return to the seeds — seeded KG exploration ranking, same
     checkpoint-per-iteration physical shape as kg_pagerank."""
     t = _pipeline_triples(spark, sf_dir)
-    seeds = spark.createDataFrame([(s,) for s in REACH_SEEDS], "node string")
-    return graph.personalized_pagerank(graph.triple_edges(t), seeds)
+    return graph.personalized_pagerank(graph.triple_edges(t), _reach_seeds(spark))
 
 
 def q_kg_schema(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -5,12 +5,16 @@ keeps Spark's default local-checkpoint level (memory and disk,
 deserialized). ``ckpt_stats`` also returns aggregates observed by the
 checkpoint job itself, so a convergence test or a sizing decision needs no
 second job. ``with_rank``, the engine's one global-id primitive, is built
-on an eager ``ckpt``."""
+on an eager ``ckpt``. ``local_table`` is the one way python rows held at
+the driver enter a plan."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 
@@ -30,6 +34,20 @@ def ckpt_stats(
     a plan AQE prunes to no partitions)."""
     obs = Observation()
     return ckpt(df.observe(obs, *aggs), eager=True, level=level), obs.get
+
+
+def local_table(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """``rows`` (tuples in ``ddl`` column order) as an Arrow-built
+    ``LocalRelation``: the rows travel inside the plan, so no consumer runs
+    a python stage to read them (``createDataFrame`` over python rows is a
+    ``LogicalRDD`` of pickles, re-evaluated on every broadcast build)."""
+    schema = StructType.fromDDL(ddl)
+    names = schema.fieldNames()
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+        )
+    )
 
 
 def with_rank(df: DataFrame, order: str) -> DataFrame:

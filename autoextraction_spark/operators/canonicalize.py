@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt, ckpt_stats
+from ..materialize import ckpt, ckpt_stats, local_table
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -91,11 +91,14 @@ def _driver_union_find(spark, raw_rows: list, node_type: str) -> DataFrame:
     self-loop/dup dropping, union-find with path compression and min-label
     per root all happen in python, then the mapping ships back. Identical
     output to the distributed path (cross-checked in tests and by the
-    driver oracle).
+    oracle), NULLs included: a NULL endpoint is a node labelled NULL, and a
+    pair with one adds no edge.
     """
     nodes = dict.fromkeys(n for edge in raw_rows for n in edge)
-    return spark.createDataFrame(
-        list(_min_labels(nodes, raw_rows).items()),
+    pairs = [(u, v) for u, v in raw_rows if u is not None and v is not None]
+    return local_table(
+        spark,
+        list(_min_labels(nodes, pairs).items()),
         f"node {node_type}, component {node_type}",
     )
 

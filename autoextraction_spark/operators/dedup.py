@@ -123,16 +123,9 @@ def minhash_signature_from_sets(
     return proj.select("id", *mins)
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """Distinct candidate (id_a, id_b) with id_a < id_b sharing ≥1 LSH band.
-
-    Banding: num_perm//bands rows per band; band key = md5 of the
-    concatenated row hashes.
-    """
+def _lsh_bands(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(id, band_idx, band_hash): one row per signature band, band key = md5
+    of the band's ``num_perm // bands`` concatenated row hashes."""
     r = num_perm // bands
     assert r * bands == num_perm, "bands must divide num_perm"
     band_structs = []
@@ -144,9 +137,19 @@ def lsh_candidate_pairs(
                 F.md5(F.concat_ws("_", *rows)).alias("band_hash"),
             )
         )
-    melted = sig.select(
+    return sig.select(
         "id", F.explode(F.array(*band_structs)).alias("band")
     ).select("id", "band.band_idx", "band.band_hash")
+
+
+def lsh_candidate_pairs(
+    sig: DataFrame,
+    num_perm: int = DEFAULT_NUM_PERM,
+    bands: int = DEFAULT_BANDS,
+) -> DataFrame:
+    """Distinct candidate (id_a, id_b) with id_a < id_b sharing ≥1 LSH band
+    (:func:`_lsh_bands`)."""
+    melted = _lsh_bands(sig, num_perm, bands)
     a = melted.alias("a")
     b = melted.alias("b")
     cond = (
@@ -804,27 +807,10 @@ def incremental_minhash_dedup(
     sig_new = minhash_signature_from_sets(sets_new, num_perm)
     sig_idx = minhash_signature_from_sets(sets_idx, num_perm)
 
-    r = num_perm // bands
-    assert r * bands == num_perm, "bands must divide num_perm"
-
-    def melt(sig: DataFrame) -> DataFrame:
-        band_structs = []
-        for b in range(bands):
-            rows = [F.col(f"mh{b * r + j}").cast("string") for j in range(r)]
-            band_structs.append(
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.md5(F.concat_ws("_", *rows)).alias("band_hash"),
-                )
-            )
-        return sig.select(
-            "id", F.explode(F.array(*band_structs)).alias("band")
-        ).select("id", "band.band_idx", "band.band_hash")
-
-    probe = melt(sig_new)
+    probe = _lsh_bands(sig_new, num_perm, bands)
     # the index side of the join: stored-index bands ∪ the batch's own
     # bands (in-batch dups suppress by smaller id — first occurrence wins)
-    build = melt(sig_idx).withColumn("is_idx", F.lit(True)).unionByName(
+    build = _lsh_bands(sig_idx, num_perm, bands).withColumn("is_idx", F.lit(True)).unionByName(
         probe.withColumn("is_idx", F.lit(False))
     )
     cands = (

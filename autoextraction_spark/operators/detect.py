@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema as S
+from ..materialize import local_table
 
 RC_PRIMARY_LOGIT = 2.5   # sigmoid -> 0.924
 RC_ALT_LOGIT = 1.5       # sigmoid -> 0.817
@@ -35,20 +36,9 @@ def relation_anchors(spark: SparkSession) -> DataFrame:
         rows.append(("zh", rel, zh[0][0], None))
     for etype, ev in S.EVENTS.items():
         rows.append((ev["lang"], etype, ev["anchor"], None))
-    # JVM literal relation (r6): createDataFrame would evaluate a pickled
-    # python RDD on every broadcast build of this dimension (~0.3 s of
-    # worker dispatch per build); inline(array(struct(...))) folds to a
-    # LocalRelation — zero python in the gate's plan.
-    structs = [
-        F.struct(
-            F.lit(lang).alias("lang"),
-            F.lit(rel).alias("rel"),
-            F.lit(primary).alias("primary_anchor"),
-            F.lit(alt).cast("string").alias("alt_anchor"),
-        )
-        for lang, rel, primary, alt in rows
-    ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    return local_table(
+        spark, rows, "lang string, rel string, primary_anchor string, alt_anchor string"
+    )
 
 
 #: detector-training hyperparameters: full-batch GD needs ~24 iterations at

@@ -826,9 +826,10 @@ def condensation_levels(
         )
 
     depth = 0
-    for depth, nxt in _frontier(arrivals, step, range(1, max_levels + 1)):
+    # round max_levels + 1 is probed: only a non-empty one is too deep
+    for depth, nxt in _frontier(arrivals, step, range(1, max_levels + 2)):
         arrivals = arrivals.union(nxt)
-    if depth == max_levels:
+    if depth > max_levels:
         raise ValueError(
             f"condensation deeper than max_levels={max_levels} "
             "(should be impossible on a DAG of this size — raise the cap)"

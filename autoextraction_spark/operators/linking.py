@@ -23,30 +23,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema as S
-from ..materialize import ckpt, ckpt_stats
+from ..materialize import ckpt, ckpt_stats, local_table
 from .canonicalize import _min_labels, connected_components
 
 MIN_ABBREV_LEN = 3
 
 
 def rel_types(spark: SparkSession) -> DataFrame:
-    """The (pred, subj_type, obj_type) relation-schema dimension as a PURE
-    JVM literal relation (r6): ``createDataFrame`` parallelizes pickled
-    python rows, so every broadcast build of the dimension re-ran a
-    32-task python stage (~0.3 s of worker dispatch for 10 rows, several
-    builds per canonical query — measured via the event log's
-    ``applySchemaToPythonRDD`` stages). ``inline(array(struct(...)))`` over
-    ``range(1)`` folds to a LocalRelation: zero python, broadcast builds in
-    milliseconds."""
-    structs = [
-        F.struct(
-            F.lit(r).alias("pred"),
-            F.lit(st).alias("subj_type"),
-            F.lit(ot).alias("obj_type"),
-        )
-        for r, st, ot in S.RELATIONS
-    ]
-    return spark.range(1).select(F.inline(F.array(*structs)))
+    """The (pred, subj_type, obj_type) relation-schema dimension."""
+    return local_table(spark, S.RELATIONS, "pred string, subj_type string, obj_type string")
 
 
 def mention_vocab(triples: DataFrame) -> DataFrame:
@@ -153,20 +138,26 @@ def _variant_pair_py(a: str, b: str) -> bool:
     return True
 
 
+def _prefix_block(mention: str) -> str:
+    """Block key of a mention: its tokens' 3-char lowercase prefixes."""
+    return " ".join(t[:MIN_ABBREV_LEN] for t in mention.lower().split(" "))
+
+
 def _driver_canonical_mapping(rows: list) -> list:
     """Exact (ent_type, mention, canonical) rows at the driver: prefix-block
     (provably exhaustive for the verifier), verify within buckets,
     union-find, min-mention label. Components cannot span buckets — the
     block key is a function of the mention alone, so every verified pair
     shares it — so the smallest ``(ent_type, mention)`` node of a component
-    carries its smallest mention. Returns None never; caller guards the
-    pair budget."""
+    carries its smallest mention. A NULL mention joins no bucket and is its
+    own canonical, as on the distributed path. Returns None never; caller
+    guards the pair budget."""
     from collections import defaultdict
 
     buckets: dict = defaultdict(list)
     for ent_type, mention in rows:
-        blk = " ".join(t[:MIN_ABBREV_LEN] for t in mention.lower().split(" "))
-        buckets[(ent_type, blk)].append(mention)
+        if mention is not None:
+            buckets[(ent_type, _prefix_block(mention))].append(mention)
 
     pairs = (
         ((et, ms[i]), (et, ms[j]))
@@ -215,12 +206,10 @@ def canonical_mapping(mentions: DataFrame, blocker: str | None = None) -> DataFr
         rows = [(r["ent_type"], r["mention"]) for r in mentions.collect()]
         from collections import Counter
 
-        blk_sizes = Counter(
-            (et, " ".join(t[:MIN_ABBREV_LEN] for t in m.lower().split(" ")))
-            for et, m in rows
-        )
+        blk_sizes = Counter((et, _prefix_block(m)) for et, m in rows if m is not None)
         if sum(c * c for c in blk_sizes.values()) <= _DRIVER_MAP_MAX_PAIRS:
-            return mentions.sparkSession.createDataFrame(
+            return local_table(
+                mentions.sparkSession,
                 _driver_canonical_mapping(rows),
                 "ent_type string, mention string, canonical string",
             )

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
+from ..materialize import local_table
 
 # reference sampling rule: ≥5 slots → 10 random shuffles instead of k!
 # (dataset/duee_fin.py:86-100)
@@ -145,25 +146,10 @@ def permutation_examples(
     order) and ``assigned map<string,string>``. The permutation space is a
     broadcast dimension joined on arity — never computed per row.
     """
-    spark = df.sparkSession
-    # JVM literal relation (r6): a createDataFrame dimension re-evaluates a
-    # pickled python RDD on every broadcast build; inline literals fold to
-    # a LocalRelation (zero python in the plan).
-    perms = spark.range(1).select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(a).alias("arity"),
-                        F.lit(pid).alias("perm_id"),
-                        F.array(*[F.lit(i) for i in ordv]).alias("ord"),
-                    )
-                    for a, pid, ordv in perm_dimension(
-                        list(range(1, max_arity + 1)), n_samples
-                    )
-                ]
-            )
-        )
+    perms = local_table(
+        df.sparkSession,
+        perm_dimension(list(range(1, max_arity + 1)), n_samples),
+        "arity int, perm_id int, ord array<int>",
     )
     slots, assigned = F.col(slots_col), F.col(assigned_col)
     # tuples wider than max_arity would silently produce ZERO examples (no

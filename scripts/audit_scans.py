@@ -10,7 +10,9 @@ Run this after adding or changing a query: a parquet-scan count above the
 query's inherent number of source tables is a recompute bug.
 
 ``explain('formatted')`` prints every node twice (tree + detail section);
-counts below are already halved.
+counts below are already halved. ``Scan ExistingRDD`` counts checkpoints
+only: driver-built rows enter plans as ``LocalTableScan``
+(``materialize.local_table``).
 
 ``tests/test_properties.py`` pins these counts per query so the recompute
 class of bug cannot silently return (VERDICT r3 item 10).

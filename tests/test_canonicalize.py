@@ -30,6 +30,15 @@ def test_cycle_and_self_loop(spark, thr):
     assert got["q"] == "q"
 
 
+@pytest.mark.parametrize("thr", [0, 64 * 2**20])
+def test_null_endpoint_is_its_own_component(spark, thr):
+    # both paths: NULL is a node labelled NULL and a pair with a NULL
+    # endpoint adds no edge, so b-NULL-c does not join {a, b} to {c, d}
+    got = _cc(spark, [("a", "b"), ("b", None), (None, "c"), ("c", "d")],
+              small_graph_max_bytes=thr)
+    assert got == {"a": "a", "b": "a", "c": "c", "d": "c", None: None}
+
+
 def test_long_chain_converges_in_log_rounds(spark):
     # 1000-node path: plain min-label propagation needs 999 rounds; the
     # large-star/small-star alternation must finish within O(log n) —

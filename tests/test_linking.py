@@ -1,5 +1,6 @@
 """Stage E entity linking: token-prefix blocking + precise variant verification."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from autoextraction_spark import corpus
@@ -88,17 +89,27 @@ def test_driver_mapping_equals_distributed(spark):
 def test_canonical_mapping_blocker_option(spark):
     """``blocker="prefix"`` forces the distributed path with the same
     mapping as the size-chosen driver path; any other blocker raises."""
-    import pytest
-
     rows = [("org", "Acme Corp"), ("org", "Acme Corporation"), ("person", "Ali Stone")]
     mentions = spark.createDataFrame(rows, "ent_type string, mention string")
     key = lambda r: (r.ent_type, r.mention, r.canonical)
     auto = sorted(map(key, linking.canonical_mapping(mentions).collect()))
     forced = linking.canonical_mapping(mentions, blocker="prefix")
-    # the driver path is one python-rows relation; the distributed one
+    # the driver path is one local relation; the distributed one
     # joins the vocabulary to its components
     assert "Join" in forced._jdf.queryExecution().analyzed().toString()
     assert sorted(map(key, forced.collect())) == auto
     for bad in ("lsh", "prefx"):
         with pytest.raises(ValueError, match="blocker"):
             linking.canonical_mapping(mentions, blocker=bad)
+
+
+@pytest.mark.parametrize("blocker", [None, "prefix"])  # driver and distributed
+def test_null_mention_is_its_own_canonical(spark, blocker):
+    rows = [("org", "Acme Corp"), ("org", None), ("org", "Acme Corporation")]
+    mentions = spark.createDataFrame(rows, "ent_type string, mention string")
+    got = linking.canonical_mapping(mentions, blocker=blocker).collect()
+    assert sorted(map(tuple, got), key=repr) == [
+        ("org", "Acme Corp", "Acme Corp"),
+        ("org", "Acme Corporation", "Acme Corp"),
+        ("org", None, None),
+    ]
