@@ -29,33 +29,20 @@ from autoextraction_spark.operators import (  # noqa: E402
     textstats, tokenize,
 )
 from autoextraction_spark.operators.canonicalize import connected_components  # noqa: E402
-from autoextraction_spark.pipeline import salted_host_counts, url_dedup  # noqa: E402
+from autoextraction_spark.pipeline import (  # noqa: E402
+    salted_host_counts, skeleton_triples, text_triples, url_dedup,
+)
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-def _pipeline_triples(
-    spark: SparkSession, sf_dir: str, policy: str = "rl", where=None
-) -> DataFrame:
-    # ONE python hop for stages A-C (r6, guide §4): generation, the frozen
-    # extract_text, the E1 anchor gate and the fused episode waves all run
-    # inside a single mapInPandas over the (doc_id, lang) skeleton — the
-    # corpus text never crosses the Arrow boundary at all (the two-hop
-    # layout re-serialized it between the generator pass and the episode
-    # pass, and paid the per-task python worker setup twice). Identical
-    # output to detect.detect_relations → ordered_slot_fill by construction
-    # (shared wave engine + the same anchor-presence gate; cross-checked in
-    # tests/test_slot_fill.py). ``where`` filters the doc skeleton BELOW the
-    # generator so it pushes into the parquet scan.
-    skel = corpus.doc_skeleton(spark, sf_dir, where=where)
-    # dedup inside the episode pass + assume_unique: the O4 set semantics
-    # without the full-output distinct() shuffle (see to_triples docstring)
-    completed = slot_fill.episodes_from_skeleton(
-        skel, policy=policy, dedup_assignments=True
-    )
-    return output.to_triples(output.completed_filter(completed), assume_unique=True)
+def _pipeline_triples(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
+    # stages A-D in ONE python hop over the (doc_id, lang) skeleton (see
+    # pipeline.skeleton_triples). ``where`` filters the doc skeleton BELOW
+    # the generator so it pushes into the parquet scan.
+    return skeleton_triples(corpus.doc_skeleton(spark, sf_dir, where=where))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -155,7 +142,7 @@ def q_kg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (P3 semantics), reified as (url, etype, role, value) rows."""
     pages = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
     det = detect.detect_relations(pages)
-    completed = slot_fill.ordered_slot_fill(det, carry_text=False)
+    completed = slot_fill.ordered_slot_fill(det)
     return output.to_event_rows(output.completed_filter(completed))
 
 
@@ -328,15 +315,14 @@ def q_order_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     adaptive policy recovers that the fixed schema-order baseline misses —
     the reference's 'hard' eval-split construction, end-to-end."""
     # the two policy runs ARE the semantics (O8) — but they share the
-    # generation → extraction → detection upstream, which is materialized
-    # once instead of running the corpus pass twice
-    txt = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
-    det = ckpt(detect.detect_relations(txt), eager=True, level=None)
-    runs = {}
-    for policy in ("rl", "sequence"):
-        completed = slot_fill.ordered_slot_fill(det, policy=policy, carry_text=False)
-        runs[policy] = output.to_triples(output.completed_filter(completed))
-    return runs["rl"].exceptAll(runs["sequence"])
+    # generation → extraction upstream, which is materialized once instead
+    # of running the corpus pass twice
+    txt = ckpt(
+        corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False),
+        eager=True,
+        level=None,
+    )
+    return text_triples(txt, "rl").exceptAll(text_triples(txt, "sequence"))
 
 
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,9 +14,12 @@ Pipeline stages (SURVEY.md §7):
   D. output semantics     operators/output.py         (completed filter, triples, F1)
   E. entity linking       operators/linking.py        (MinHash/LSH blocking)
   F. canonicalization     operators/canonicalize.py   (connected components)
-  G. materialization      pipeline.py                 (KgPipeline per-stage writes with
-                                                       _stage/_part_id lineage; triples
-                                                       partitioned by pred)
+  G. materialization      pipeline.py                 (KgPipeline stages text → triples →
+                                                       linking_map → canonical, written with
+                                                       _stage/_part_id lineage; canonical
+                                                       triples partitioned by pred)
+A-D run as one chain per input: pipeline.skeleton_triples (doc skeleton)
+and pipeline.text_triples (extracted text).
 Plus training-data-pipeline operators: dedup.py, similarity.py,
 textstats.py, multimodal.py.
 """

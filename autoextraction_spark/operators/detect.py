@@ -28,16 +28,10 @@ RC_THRESHOLD = 0.6       # reference gate, predict.py:19
 
 def relation_anchors(spark: SparkSession) -> DataFrame:
     """Tiny dimension table: (lang, rel, primary_anchor, alt_anchor)."""
-    rows = []
-    for rel, _, _ in S.RELATIONS:
-        en = S.EN_TEMPLATES[rel]
-        rows.append(("en", rel, en[0][0], en[1][0] if len(en) > 1 else None))
-        zh = S.ZH_TEMPLATES[rel]
-        rows.append(("zh", rel, zh[0][0], None))
-    for etype, ev in S.EVENTS.items():
-        rows.append((ev["lang"], etype, ev["anchor"], None))
     return local_table(
-        spark, rows, "lang string, rel string, primary_anchor string, alt_anchor string"
+        spark,
+        S.relation_anchor_rows(),
+        "lang string, rel string, primary_anchor string, alt_anchor string",
     )
 
 

@@ -36,13 +36,14 @@ def to_triples(completed: DataFrame, assume_unique: bool = False) -> DataFrame:
     a projection — the string grammar survives only in render_cond/parse_cond
     for fixture byte-compat.
 
-    ``assume_unique=True`` skips the ``distinct()`` shuffle. Valid iff the
-    upstream ran with ``dedup_assignments=True`` (fused slot fill): the
-    distinct key (url, pred, subj, obj) is a function of (url, rel,
-    assigned), duplicates of which can only arise inside one episode tree —
-    already dropped in-pass. At corpus scale this removes the only
-    full-output shuffle of the extraction pipeline (tested equal to the
-    shuffling plan).
+    ``assume_unique=True`` skips the ``distinct()`` shuffle. Valid iff each
+    (url, rel) has one episode tree and it ran with ``dedup_assignments``:
+    the distinct key (url, pred, subj, obj) is a function of (url, rel,
+    assigned), duplicates of which can then only arise inside one tree —
+    already dropped in-pass. ``pipeline.skeleton_triples`` is the chain
+    that holds this (doc ids are unique) and the one caller that sets it;
+    at corpus scale it removes the only full-output shuffle of the
+    extraction pipeline (tested equal to the shuffling plan).
     """
     proj = completed.select(
         "url",

@@ -428,11 +428,13 @@ def fitted_q_train(
     eps = epsilon0
     if workdir:
         os.makedirs(workdir, exist_ok=True)
+    from .. import pipeline
+
     fp = ""
     for g in range(n_generations):
         cfg = (
             f"{g}|{seed}|{eps:.6f}|{iters_per_gen}|{reward_mode}|"
-            f"{sorted(train_kw.items())}|{fp}"
+            f"{sorted(train_kw.items())}|{pipeline._source_digest()}|{fp}"
         )
         fp = hashlib.md5(cfg.encode()).hexdigest()
         manifest_path = (

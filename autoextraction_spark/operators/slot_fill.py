@@ -10,18 +10,19 @@ Spark-first design: the episode is a pure function of a single row
 (text, rel, lang) — no step of it ever needs data from another row — so the
 whole bounded fork recursion runs inside ONE Arrow-vectorized
 ``mapInPandas`` pass and emits the completed typed states
-``(url, rel, [text,] lang, assigned map<string,string>, remaining
+``(url, rel, lang, assigned map<string,string>, remaining
 array<string>, score double, step int)`` directly. One narrow map stage
 over (pages × gated relations): zero shuffles, zero per-round lineage or
 checkpoint barriers, and the (large) text column crosses the Arrow
-boundary once instead of once per round.
+boundary at most once, into the pass and never out of it.
 
 One episode engine (``_episode_frame``), two entry points:
 
 - ``episodes_from_skeleton`` — stages A-C from the (doc_id, lang)
-  skeleton in one hop (the queries' path);
+  skeleton in one hop (``pipeline.skeleton_triples``);
 - ``ordered_slot_fill`` — detected (url, rel, text, lang) rows, as emitted
-  by ``detect.detect_relations`` (pipeline, streaming, event queries).
+  by ``detect.detect_relations`` (``pipeline.text_triples``, the event
+  query).
 
 Loop depth is bounded by the max slot count (≤ ~6, cap 20 = reference
 episode cap DQN.py:21/predict.py:86). ``tests/test_slot_fill.py`` checks
@@ -41,7 +42,11 @@ from .. import schema as S
 
 MAX_STEPS = 20  # reference episode cap, DQN.py:21 / predict.py:86
 
-STATE_COLS = ["url", "rel", "text", "lang", "assigned", "remaining", "score", "step"]
+STATE_COLS = ["url", "rel", "lang", "assigned", "remaining", "score", "step"]
+_STATE_SCHEMA = (
+    "url string, rel string, lang string, assigned map<string,string>, "
+    "remaining array<string>, score double, step int"
+)
 
 
 def initial_remaining(rel: str, lang: str) -> list[str]:
@@ -51,25 +56,10 @@ def initial_remaining(rel: str, lang: str) -> list[str]:
     return list(S.ZH_SLOTS) if lang == "zh" else list(S.EN_SLOTS)
 
 
-def _episode_schema(carry_text: bool) -> str:
-    cols = ["url string", "rel string"]
-    if carry_text:
-        cols.append("text string")
-    cols += [
-        "lang string",
-        "assigned map<string,string>",
-        "remaining array<string>",
-        "score double",
-        "step int",
-    ]
-    return ", ".join(cols)
-
-
 def _episode_frame(
     rows: list[tuple],
     policy: str,
     max_steps: int,
-    carry_text: bool,
     dedup_assignments: bool,
 ) -> pd.DataFrame:
     """Run every (url, rel, text, lang) episode of one Arrow batch to
@@ -91,10 +81,9 @@ def _episode_frame(
             if key in seen[ri]:
                 return
             seen[ri].add(key)
-        url, rel, text, lang = rows[ri]
+        url, rel, _text, lang = rows[ri]
         out["url"].append(url)
         out["rel"].append(rel)
-        out["text"].append(text)
         out["lang"].append(lang)
         out["assigned"].append(assigned)
         out["remaining"].append(remaining)
@@ -137,37 +126,16 @@ def _episode_frame(
                 forked = dict(assigned)
                 forked[slot] = mention
                 wave.append((ri, forked, rem2, score + sc, step + 1))
-    if not carry_text:
-        del out["text"]
     return pd.DataFrame(out)
 
 
-def _episode_batches(
-    policy: str, max_steps: int, carry_text: bool, dedup_assignments: bool = False
-):
+def _episode_batches(policy: str, max_steps: int, dedup_assignments: bool):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = list(zip(pdf["url"], pdf["rel"], pdf["text"], pdf["lang"]))
-            yield _episode_frame(rows, policy, max_steps, carry_text, dedup_assignments)
+            yield _episode_frame(rows, policy, max_steps, dedup_assignments)
 
     return run
-
-
-def _anchors_by_lang() -> dict[str, list[tuple[str, str, str | None]]]:
-    """lang -> [(rel, primary_anchor, alt_anchor)] — the SAME rows as
-    ``detect.relation_anchors`` (schema-derived, deterministic), keyed for
-    the in-python gate of ``episodes_from_skeleton``."""
-    by_lang: dict[str, list[tuple[str, str, str | None]]] = {}
-    for rel, _, _ in S.RELATIONS:
-        en = S.EN_TEMPLATES[rel]
-        by_lang.setdefault("en", []).append(
-            (rel, en[0][0], en[1][0] if len(en) > 1 else None)
-        )
-        zh = S.ZH_TEMPLATES[rel]
-        by_lang.setdefault("zh", []).append((rel, zh[0][0], None))
-    for etype, ev in S.EVENTS.items():
-        by_lang.setdefault(ev["lang"], []).append((etype, ev["anchor"], None))
-    return by_lang
 
 
 def _skeleton_episode_batches(policy: str, max_steps: int, dedup_assignments: bool):
@@ -175,7 +143,10 @@ def _skeleton_episode_batches(policy: str, max_steps: int, dedup_assignments: bo
         from .. import corpus as C
         from .text_extract import extract_text
 
-        anchors = _anchors_by_lang()
+        # lang -> [(rel, primary, alt)]: the rows of detect.relation_anchors
+        anchors: dict[str, list[tuple[str, str, str | None]]] = {}
+        for lang, rel, primary, alt in S.relation_anchor_rows():
+            anchors.setdefault(lang, []).append((rel, primary, alt))
         for pdf in batches:
             rows: list[tuple] = []
             for d, lg in zip(pdf["doc_id"].astype("int64"), pdf["lang"]):
@@ -192,10 +163,7 @@ def _skeleton_episode_batches(policy: str, max_steps: int, dedup_assignments: bo
                 for rel, primary, alt in anchors.get(lang, ()):
                     if primary in text or (alt is not None and alt in text):
                         rows.append((url, rel, text, lang))
-            yield _episode_frame(
-                rows, policy, max_steps, carry_text=False,
-                dedup_assignments=dedup_assignments,
-            )
+            yield _episode_frame(rows, policy, max_steps, dedup_assignments)
 
     return run
 
@@ -222,13 +190,13 @@ def episodes_from_skeleton(
     zipimport directories, 150-290 ms per task (see corpus.doc_skeleton).
 
     Output is byte-identical to
-    ``ordered_slot_fill(detect_relations(web_pages(...)), carry_text=False)``:
+    ``ordered_slot_fill(detect_relations(web_pages(...)))``:
     the gate replicates the anchor-presence predicate and the episode
     interior is the shared ``_episode_frame``. Cross-checked in
     tests/test_slot_fill.py."""
     return skel.mapInPandas(
         _skeleton_episode_batches(policy, max_steps, dedup_assignments),
-        schema=_episode_schema(carry_text=False),
+        schema=_STATE_SCHEMA,
     )
 
 
@@ -236,27 +204,25 @@ def ordered_slot_fill(
     detected: DataFrame,
     policy: str = "rl",
     max_steps: int = MAX_STEPS,
-    carry_text: bool = True,
     dedup_assignments: bool = False,
 ) -> DataFrame:
     """Run every episode to completion in a single ``mapInPandas`` pass.
 
     Returns completed typed states (``remaining = []`` unless ``max_steps``
-    truncated the episode). ``carry_text=False`` drops the text column from
-    the output — downstream triple/event materialization never reads it, and
-    not re-serializing the corpus text through Arrow is a material win.
+    truncated the episode) without the text column: downstream
+    triple/event materialization never reads it, and not re-serializing
+    the corpus text through Arrow is a material win.
 
     ``dedup_assignments=True`` drops states that repeat an earlier state's
     (assigned, remaining) within the same episode tree, keeping the first
-    (highest-wave-priority) representative. Because ``detect_relations``
-    emits at most one row per (url, rel) and an episode tree never leaves
-    its row, this makes (url, rel, assigned) globally unique — consumers
-    with SET semantics over those columns (``to_triples``) can then skip
-    their shuffle-based ``distinct()`` entirely (pass
-    ``assume_unique=True``). Leave False for consumers that weight states
-    by multiplicity or score (RL transition collection keeps every path).
+    (highest-wave-priority) representative. Consumers with SET semantics
+    over (url, rel, assigned) lose nothing by it; leave False for consumers
+    that weight states by multiplicity or score (RL transition collection
+    keeps every path). The result is globally unique only if the input has
+    one row per (url, rel); ``pipeline.text_triples`` does not assume that
+    and keeps its ``distinct()``.
     """
     return detected.mapInPandas(
-        _episode_batches(policy, max_steps, carry_text, dedup_assignments),
-        schema=_episode_schema(carry_text),
+        _episode_batches(policy, max_steps, dedup_assignments),
+        schema=_STATE_SCHEMA,
     )

@@ -2,13 +2,17 @@
 lineage + metrics (north_rule: "checkpointed per stage with per-partition
 lineage and metrics for resumable execution").
 
-Each stage writes its output as parquet under ``workdir/stage=<name>/`` and a
-``manifest.json`` recording rows in/out, partition count, wall time, and the
-config fingerprint. ``run`` skips stages whose manifest + _SUCCESS marker
-already exist — resuming a killed job re-executes only unfinished stages.
+Each stage writes its output as parquet under ``workdir/stage=<name>/`` and
+``workdir/manifest_<name>.json`` recording rows out, partition count, wall
+time, sf_dir, policy and the config fingerprint. ``run`` skips stages whose
+manifest + _SUCCESS marker exist with a matching fingerprint — resuming a
+killed job re-executes only unfinished stages.
 (Iceberg snapshots would subsume this; the catalog jar is absent in this
 container, so the layout is plain partitioned parquet with the same
 semantics and a one-line swap point in ``_write``/``_read``.)
+
+``skeleton_triples`` and ``text_triples`` are the stage A-D chains, one per
+input shape; every extraction job builds its triples through one of them.
 
 Skew handling: web corpora are host-skewed (the synthetic corpus plants 20%
 of pages on one host). ``salted_host_counts`` shows the two-phase pattern
@@ -29,9 +33,8 @@ from pyspark.sql import functions as F
 
 from . import corpus
 from .operators import detect, linking, output, slot_fill
-from .operators.text_extract import with_extracted_text
 
-STAGES = ["pages", "text", "detected", "triples", "linking_map", "canonical"]
+STAGES = ["text", "triples", "linking_map", "canonical"]
 
 
 def host_col(url: str = "url") -> F.Column:
@@ -141,8 +144,30 @@ def _source_digest() -> str:
     return h.hexdigest()
 
 
+def skeleton_triples(skel: DataFrame, policy: str = "rl") -> DataFrame:
+    """Stages A-D over the (doc_id, lang) skeleton in one python hop
+    (``slot_fill.episodes_from_skeleton``) → distinct (url, pred, subj,
+    obj). Doc ids are unique, so each (url, rel) has one episode tree and
+    the in-pass assignment dedup makes the triples unique without the
+    ``distinct()`` shuffle."""
+    completed = slot_fill.episodes_from_skeleton(skel, policy, dedup_assignments=True)
+    return output.to_triples(output.completed_filter(completed), assume_unique=True)
+
+
+def text_triples(text: DataFrame, policy: str = "rl") -> DataFrame:
+    """Stages B-D over extracted (url, text, lang) pages: detection gate →
+    ordered slot filling → distinct (url, pred, subj, obj). Keeps the
+    ``distinct()``: the input may repeat a url (a stream micro-batch, a
+    re-landed page), so set semantics cannot come from the episode pass."""
+    completed = slot_fill.ordered_slot_fill(
+        detect.detect_relations(text), policy, dedup_assignments=True
+    )
+    return output.to_triples(output.completed_filter(completed))
+
+
 class KgPipeline:
-    """Stages A-F with checkpoint/resume + manifest metrics."""
+    """Stages A-F with checkpoint/resume + manifest metrics:
+    ``text`` → ``triples`` → ``linking_map`` → ``canonical``."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, workdir: str, policy: str = "rl"):
         self.spark = spark
@@ -217,38 +242,19 @@ class KgPipeline:
 
     # -- stages ---------------------------------------------------------------
     def run(self, resume: bool = True) -> DataFrame:
-        fp = self._fingerprint("pages", "")
-        pages = self._stage(
-            "pages", lambda: corpus.web_pages(self.spark, self.sf_dir), resume, fp
-        )
-        fp = self._fingerprint("text", fp)
+        fp = self._fingerprint("text", "")
         txt = self._stage(
             "text",
-            lambda: with_extracted_text(pages.drop("_stage", "_part_id")),
-            resume,
-            fp,
-        )
-        fp = self._fingerprint("detected", fp)
-        det = self._stage(
-            "detected",
-            lambda: detect.detect_relations(txt.drop("_stage", "_part_id")),
+            lambda: corpus.web_pages(
+                self.spark, self.sf_dir, with_text=True, emit_html=False
+            ),
             resume,
             fp,
         )
         fp = self._fingerprint("triples", fp)
         triples = self._stage(
             "triples",
-            lambda: output.to_triples(
-                output.completed_filter(
-                    slot_fill.ordered_slot_fill(
-                        det.drop("_stage", "_part_id"),
-                        policy=self.policy,
-                        carry_text=False,
-                        dedup_assignments=True,
-                    )
-                ),
-                assume_unique=True,
-            ),
+            lambda: text_triples(txt.drop("_stage", "_part_id"), self.policy),
             resume,
             fp,
         )

@@ -130,6 +130,21 @@ EVENT_NAMES_BY_LANG = {
     lg: [e for e, ev in EVENTS.items() if ev["lang"] == lg] for lg in ("en", "zh")
 }
 
+
+def relation_anchor_rows() -> list[tuple[str, str, str, str | None]]:
+    """(lang, rel, primary_anchor, alt_anchor) per relation and event type:
+    the anchor set of the E1 detection gate. Both gates derive from this
+    one list — ``detect.relation_anchors`` (the DataFrame gate) and the
+    in-python gate of ``slot_fill.episodes_from_skeleton``."""
+    rows = []
+    for rel, _, _ in RELATIONS:
+        en = EN_TEMPLATES[rel]
+        rows.append(("en", rel, en[0][0], en[1][0] if len(en) > 1 else None))
+        rows.append(("zh", rel, ZH_TEMPLATES[rel][0][0], None))
+    for etype, ev in EVENTS.items():
+        rows.append((ev["lang"], etype, ev["anchor"], None))
+    return rows
+
 # DuEE-fin-style ≥5-role event schema for the SAMPLED-permutation path
 # (P5, dataset/duee_fin.py:86-100: k! explodes at arity 5, so 10 random
 # shuffles replace the full enumeration). Deliberately NOT in EVENTS: the

@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import detect, output, slot_fill
 from ..operators.text_extract import with_extracted_text
+from ..pipeline import text_triples
 
 PAGES_DDL = (
     "doc_id long, url string, warc_ts timestamp, html binary, "
@@ -42,10 +42,7 @@ def stream_pages(spark: SparkSession, in_dir: str) -> DataFrame:
 
 def _process_batch(out_dir: str):
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        txt = with_extracted_text(batch_df)
-        det = detect.detect_relations(txt)
-        completed = slot_fill.ordered_slot_fill(det, carry_text=False)
-        triples = output.to_triples(output.completed_filter(completed))
+        triples = text_triples(with_extracted_text(batch_df))
         # idempotent per epoch: foreachBatch re-runs a failed epoch with the
         # SAME epoch_id, and a blind append would re-append rows the failed
         # attempt already wrote (ADVICE.md). Dynamic partition overwrite on

@@ -17,8 +17,8 @@ original novel set (same inputs, deterministic pipeline) and overwrite the
 partition with identical rows. This is the same upper-bound discipline as
 ``online_train``'s replay-window filter (ADVICE round-3).
 
-Scale shape: the per-batch work is stages A-D (one Arrow pass, see
-``slot_fill.ordered_slot_fill``) + ONE left_anti equi-join on the fact key
+Scale shape: the per-batch work is stages A-D (``pipeline.text_triples``
+over the extracted batch) + ONE left_anti equi-join on the fact key
 against a partitioned parquet store pruned to the key columns; within-batch fact
 dedup is a min-struct aggregation (map-side combinable). Epochs are
 sequential, so the `_epoch < epoch_id` read is consistent without
@@ -31,17 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from ..operators import detect, output, slot_fill
 from ..operators.text_extract import with_extracted_text
-from ..pipeline import incremental_delta
+from ..pipeline import incremental_delta, text_triples
 from .ingest import stream_pages
-
-
-def _batch_triples(batch_df: DataFrame) -> DataFrame:
-    txt = with_extracted_text(batch_df)
-    det = detect.detect_relations(txt)
-    completed = slot_fill.ordered_slot_fill(det, carry_text=False)
-    return output.to_triples(output.completed_filter(completed))
 
 
 def _first_seen_per_fact(triples: DataFrame) -> DataFrame:
@@ -55,7 +47,7 @@ def _first_seen_per_fact(triples: DataFrame) -> DataFrame:
 def _maintain_batch(store_dir: str):
     def run(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        novel = _first_seen_per_fact(_batch_triples(batch_df))
+        novel = _first_seen_per_fact(text_triples(with_extracted_text(batch_df)))
         # guard ONLY the store read: a missing path means first epoch
         # (everything novel), but an AnalysisException from the novelty
         # join itself (e.g. a foreign store with a renamed fact column)

@@ -9,8 +9,10 @@ Usage (local sandbox stands in for a cluster; same invocation shape):
         --out /tmp/kg_out --policy rl
 
 Runs stages A-D (text extraction → detection gate → ordered slot filling →
-triples) and writes the triple table partitioned parquet, then prints one
-JSON metrics line.
+triples) in one python pass over the document skeleton and writes the
+triple table as parquet, then prints one JSON metrics line. ``--workdir``
+runs the checkpointed ``KgPipeline`` instead (text → triples → linking_map
+→ canonical).
 """
 
 from __future__ import annotations
@@ -32,16 +34,16 @@ def main() -> int:
     ap.add_argument(
         "--workdir",
         default=None,
-        help="enable per-stage checkpoint/resume (stages A-F incl. linking); "
+        help="enable per-stage checkpoint/resume (stages A-F: text, triples, "
+        "linking_map, canonical); "
         "rerunning with the same workdir skips completed stages",
     )
     ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
     from autoextraction_spark import corpus
-    from autoextraction_spark.operators import detect, output, slot_fill
-    from autoextraction_spark.operators.text_extract import with_extracted_text
-    from autoextraction_spark.pipeline import KgPipeline
+    from autoextraction_spark.operators import output
+    from autoextraction_spark.pipeline import KgPipeline, skeleton_triples
     from autoextraction_spark.session import get_spark
 
     spark = get_spark(app_name="kg-pipeline", cpus=args.cpus)
@@ -63,15 +65,7 @@ def main() -> int:
         }))
         spark.stop()
         return 0
-    pages = corpus.web_pages(spark, args.sf_dir)
-    txt = with_extracted_text(pages)
-    det = detect.detect_relations(txt)
-    completed = slot_fill.ordered_slot_fill(
-        det, policy=args.policy, dedup_assignments=True
-    )
-    triples = output.to_triples(
-        output.completed_filter(completed), assume_unique=True
-    )
+    triples = skeleton_triples(corpus.doc_skeleton(spark, args.sf_dir), args.policy)
     if args.out:
         triples.write.mode("overwrite").parquet(args.out)
         triples = spark.read.parquet(args.out)

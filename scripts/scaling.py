@@ -28,7 +28,7 @@ sys.path.insert(0, sys.argv[4])
 from autoextraction_spark.session import get_spark
 from autoextraction_spark import corpus
 from autoextraction_spark.materialize import ckpt
-from autoextraction_spark.operators import detect, output, slot_fill
+from autoextraction_spark.pipeline import skeleton_triples
 
 cpus = int(sys.argv[1]); sf_dir = sys.argv[2]; replicate = int(sys.argv[3])
 spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus)
@@ -48,13 +48,9 @@ spark = get_spark(app_name=f"scaling-{cpus}", cpus=cpus)
 skel = ckpt(corpus.doc_skeleton(spark, sf_dir, replicate, waves_per_core=8), eager=True)
 
 def job():
-    # r6: the CURRENT stages A-D hot path — the fused single-hop pipeline
-    # (generation -> extract -> anchor gate -> episodes in one mapInPandas,
-    # see slot_fill.episodes_from_skeleton); byte-identical output to the
-    # staged chain this harness measured through r5.
-    completed = slot_fill.episodes_from_skeleton(skel, dedup_assignments=True)
-    return output.to_triples(output.completed_filter(completed),
-                             assume_unique=True).count()
+    # the stages A-D hot path: generation -> extract -> anchor gate ->
+    # episodes in one mapInPandas (pipeline.skeleton_triples)
+    return skeleton_triples(skel).count()
 
 # Untimed warm-up run: spawning the python-worker pool at high parallelism is
 # kernel-bound (fork + import storm, ~15s for 32 workers) and on a real
@@ -66,9 +62,7 @@ def job():
 warm_replicate = min(replicate, 64)
 warm_skel = corpus.doc_skeleton(spark, sf_dir, replicate=warm_replicate,
                                 waves_per_core=8)
-output.to_triples(output.completed_filter(
-    slot_fill.episodes_from_skeleton(warm_skel, dedup_assignments=True)),
-    assume_unique=True).count()
+skeleton_triples(warm_skel).count()
 walls, n = [], 0
 passes = int(os.environ.get("SPARK_GRAFT_SCALING_PASSES", "3"))
 for _ in range(passes):

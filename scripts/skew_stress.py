@@ -87,9 +87,9 @@ def build_pages(spark, n_docs: int):
 
 def run_job(spark, n_docs: int) -> dict:
     from autoextraction_spark.materialize import ckpt
-    from autoextraction_spark.operators import detect, linking, output, slot_fill
+    from autoextraction_spark.operators import linking
     from autoextraction_spark.operators.dedup import paragraph_dedup
-    from autoextraction_spark.pipeline import salted_host_counts
+    from autoextraction_spark.pipeline import salted_host_counts, text_triples
 
     # t0 BEFORE plan construction (linking.canonical_triples eagerly
     # checkpoints its input, so timing only the final count would exclude
@@ -100,16 +100,7 @@ def run_job(spark, n_docs: int) -> dict:
     # mapping build, broadcast construction, checkpoint barriers) that
     # only amortizes with corpus size.
     t0 = time.time()
-    pages = build_pages(spark, n_docs)
-    det = detect.detect_relations(pages)
-    completed = slot_fill.ordered_slot_fill(
-        det, policy="rl", carry_text=False, dedup_assignments=True
-    )
-    triples = ckpt(
-        output.to_triples(output.completed_filter(completed), assume_unique=True),
-        eager=True,
-        level=None,
-    )
+    triples = ckpt(text_triples(build_pages(spark, n_docs)), eager=True, level=None)
     wall_extract = round(time.time() - t0, 3)
     t0 = time.time()
     n_canonical = linking.canonical_triples(triples).count()

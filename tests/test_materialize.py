@@ -1,7 +1,7 @@
 """The one checkpoint primitive (materialize.ckpt) and its counted form
 (ckpt_stats), the one driver-rows primitive (local_table), guards that keep
-them the only ones, and the global-rank primitive built on ckpt
-(with_rank)."""
+them — and pipeline's two triple chains — the only ones, and the
+global-rank primitive built on ckpt (with_rank)."""
 
 import ast
 import pathlib
@@ -120,6 +120,34 @@ def test_with_rank_stays_jvm_side(spark):
 def _library_sources():
     yield from sorted((ROOT / "autoextraction_spark").rglob("*.py"))
     yield ROOT / "__spark_entry__.py"
+
+
+def _called_names(src: str):
+    """(line, name) of every call in ``src``, also inside string literals
+    that hold code (scripts/scaling.py runs its worker from one)."""
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Call):
+            f = node.func
+            yield node.lineno, getattr(f, "attr", None) or getattr(f, "id", None)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            try:
+                yield from _called_names(node.value)
+            except SyntaxError:
+                pass
+
+
+def test_triples_built_only_by_the_pipeline_chains():
+    # stages A-D end in to_triples only inside pipeline.skeleton_triples and
+    # pipeline.text_triples; every other job calls one of those
+    paths = [*_library_sources(), *sorted((ROOT / "scripts").glob("*.py"))]
+    offenders = [
+        f"{path.relative_to(ROOT)}:{line}"
+        for path in paths
+        if path != ROOT / "autoextraction_spark" / "pipeline.py"
+        for line, name in _called_names(path.read_text())
+        if name == "to_triples"
+    ]
+    assert offenders == []
 
 
 def _enclosing_def(parents, node):

@@ -107,7 +107,7 @@ def test_mlp_policy_full_corpus_parity(spark, sf_dir):
     )
     assert hist, "training produced no iterations"
     completed = slot_fill.ordered_slot_fill(
-        det, policy=neural.mlp_policy(model), carry_text=False
+        det, policy=neural.mlp_policy(model)
     )
     triples = output.to_triples(output.completed_filter(completed))
     gold_triples = corpus.gold_triples(spark, sf_dir).filter(

@@ -16,7 +16,7 @@ def test_full_run_writes_manifests(spark, sf_dir, tmp_path):
     canonical = p.run(resume=False)
     assert canonical.count() > 0
     m = {x["stage"]: x for x in p.metrics()}
-    assert set(m) == {"pages", "text", "detected", "triples", "linking_map", "canonical"}
+    assert set(m) == {"text", "triples", "linking_map", "canonical"}
     assert m["triples"]["rows"] > 0
     # lineage columns present in every checkpoint
     for stage in m:
@@ -30,9 +30,9 @@ def test_resume_skips_completed_stages(spark, sf_dir, tmp_path):
     wd = str(tmp_path / "run2")
     p = KgPipeline(spark, sf_dir, wd)
     p.run(resume=False)
-    before = {s: os.path.getmtime(p._manifest_path(s)) for s in ("pages", "text")}
+    before = {s: os.path.getmtime(p._manifest_path(s)) for s in ("text",)}
 
-    # simulate a crash after 'detected': delete downstream outputs
+    # simulate a crash after 'text': delete downstream outputs
     for stage in ("triples", "linking_map", "canonical"):
         os.remove(p._manifest_path(stage))
 
@@ -40,7 +40,7 @@ def test_resume_skips_completed_stages(spark, sf_dir, tmp_path):
     out = p2.run(resume=True)
     assert out.count() > 0
     # upstream manifests untouched -> stages were skipped, not recomputed
-    after = {s: os.path.getmtime(p2._manifest_path(s)) for s in ("pages", "text")}
+    after = {s: os.path.getmtime(p2._manifest_path(s)) for s in ("text",)}
     assert before == after
     assert os.path.exists(p2._manifest_path("canonical"))
 
@@ -51,17 +51,15 @@ def test_resume_rebuilds_on_config_change(spark, sf_dir, tmp_path):
     wd = str(tmp_path / "run3")
     KgPipeline(spark, sf_dir, wd, policy="rl").run(resume=False)
     p_seq = KgPipeline(spark, sf_dir, wd, policy="sequence")
-    fp = p_seq._fingerprint("pages", "")
-    assert not p_seq.is_done("pages", fp)  # recorded fingerprint differs
+    fp = p_seq._fingerprint("text", "")
+    assert not p_seq.is_done("text", fp)  # recorded fingerprint differs
     before = os.path.getmtime(p_seq._manifest_path("triples"))
     p_seq.run(resume=True)
     assert os.path.getmtime(p_seq._manifest_path("triples")) > before
     # sequence policy misses alt-phrased facts: strictly fewer triples
     m = {x["stage"]: x for x in p_seq.metrics()}
     assert m["triples"]["fingerprint"] == p_seq._fingerprint(
-        "triples", p_seq._fingerprint(
-            "detected", p_seq._fingerprint("text", p_seq._fingerprint("pages", ""))
-        )
+        "triples", p_seq._fingerprint("text", "")
     )
 
 
@@ -73,9 +71,9 @@ def test_resume_rebuilds_on_code_change(spark, sf_dir, tmp_path, monkeypatch):
     wd = str(tmp_path / "run4")
     p = KgPipeline(spark, sf_dir, wd)
     p.run(resume=False)
-    assert p.is_done("pages", p._fingerprint("pages", ""))
+    assert p.is_done("text", p._fingerprint("text", ""))
     monkeypatch.setattr(pipeline, "_source_digest", lambda: "changed-code")
-    assert not p.is_done("pages", p._fingerprint("pages", ""))
+    assert not p.is_done("text", p._fingerprint("text", ""))
     before = os.path.getmtime(p._manifest_path("triples"))
     p.run(resume=True)
     assert os.path.getmtime(p._manifest_path("triples")) > before

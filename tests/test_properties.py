@@ -123,12 +123,12 @@ def test_episode_transitions_invariants(data):
 # asserts counts never EXCEED these; drops are improvements - update the
 # table when a query legitimately changes shape.
 EXPECTED_PLAN_COUNTS = {
-    "kg_triples": (1, 1, 2),
-    "kg_detect": (1, 1, 1),
-    "kg_metric_f1": (2, 1, 3),
-    "kg_slot_f1": (2, 1, 3),
-    "kg_events": (1, 1, 2),
-    "kg_triples_canonical": (0, 4, 0),
+    "kg_triples": (1, 0, 1),
+    "kg_detect": (1, 0, 1),
+    "kg_metric_f1": (2, 0, 2),
+    "kg_slot_f1": (2, 0, 2),
+    "kg_events": (1, 0, 2),
+    "kg_triples_canonical": (0, 3, 0),
     "kg_linking": (0, 0, 0),
     "minhash_dedup": (0, 6, 0),
     "simhash": (1, 0, 0),
@@ -162,9 +162,9 @@ EXPECTED_PLAN_COUNTS = {
     "length_quantiles": (1, 0, 0),
     "weighted_sample": (1, 0, 0),
     "journey_transitions": (0, 2, 0),
-    "kg_fact_history": (1, 1, 2),
+    "kg_fact_history": (1, 0, 1),
     "vocab_growth": (1, 2, 0),
-    "kg_as_of": (1, 1, 2),
+    "kg_as_of": (1, 0, 1),
     "kg_snapshot_diff": (0, 2, 0),
     "kg_rule_mining": (0, 3, 0),
     "kg_implications": (0, 5, 0),
@@ -245,8 +245,8 @@ EXPECTED_PLAN_COUNTS = {
     # recompute bug.
     "incremental_dedup": (1, 11, 0),
     # distinct (subj,pred,obj) + codegen string formatting over the A-D
-    # pipeline (1 scan, 1 ckpt, 2 python stages — same as kg_triples)
-    "kg_ntriples": (1, 1, 2),
+    # pipeline (1 scan, 1 python stage — same as kg_triples)
+    "kg_ntriples": (1, 0, 1),
     # vector ckpt + per-iteration centroid ckpts (Lloyd's loop, no collect)
     "kmeans_centroids": (0, 3, 0),
     # final-assignment ckpt feeds both sides of the intra-cluster self-join
@@ -286,8 +286,8 @@ EXPECTED_PLAN_COUNTS = {
     "json_flatten": (1, 0, 0),
     "spo_flatten": (1, 0, 0),
     "budget_truncate": (1, 0, 0),
-    "perm_examples": (1, 1, 1),
-    "perm_examples_sampled": (1, 1, 0),
+    "perm_examples": (1, 0, 1),
+    "perm_examples_sampled": (1, 0, 0),
     "tokenize_offsets": (1, 0, 1),
     "span_labels_search": (1, 0, 2),
     "span_labels_char": (1, 0, 2),
@@ -305,13 +305,13 @@ EXPECTED_PLAN_COUNTS = {
     "kg_infer": (0, 4, 0),
     # semi-naive closure: final plan unions the depth-1 edge checkpoint +
     # one checkpoint per non-empty round (max_depth=8 bounds it)
-    "kg_closure": (0, 8, 0),
+    "kg_closure": (0, 5, 0),
     # BFS returns the last visited checkpoint — exactly one RDD scan
     "kg_reach": (0, 1, 0),
     # oriented-edge checkpoint ×0 in final plan; tri checkpoint ×3 branches
     "kg_triangles": (0, 3, 0),
     # two disjoint pipeline runs (new batch + snapshot), one anti-join
-    "kg_delta": (2, 2, 4),
+    "kg_delta": (2, 0, 2),
     # final update joins: prev ent/rel checkpoints + the violated-triple
     # checkpoint once per gradient-union branch (3 ent + 1 rel)
     "kg_transe": (0, 6, 0),
@@ -328,7 +328,7 @@ EXPECTED_PLAN_COUNTS = {
     # one checkpointed triple plan read per BGP pattern
     "kg_conjunctive": (0, 3, 0),
     # one pipeline pass (codegen CASE typing folds into the same stage)
-    "kg_schema": (1, 1, 2),
+    "kg_schema": (1, 0, 1),
     # edge ckpt: wedge legs ×2 + degree joins ×2
     "kg_similar": (0, 4, 0),
     # same final-plan shape as kg_pagerank (edges, base, last ranks ×2)
@@ -337,7 +337,7 @@ EXPECTED_PLAN_COUNTS = {
     "kg_communities": (0, 4, 0),
     # keyed-triple ckpt read by the max-key agg branch + the winner join
     "kg_resolve": (0, 2, 0),
-    "kg_fuse": (2, 2, 3),
+    "kg_fuse": (2, 0, 2),
     # scored ckpt read by the true-score branch + the rank join; the
     # n_dropped input-count branch reads the train-table ckpt once more
     "kg_rank_eval": (0, 3, 0),
@@ -352,11 +352,10 @@ EXPECTED_PLAN_COUNTS = {
     "classifier_score": (1, 0, 0),
     # detector GD: one checkpointed weight snapshot per iteration (24)
     "detector_train": (0, 24, 0),
-    # deploy: feature pass (pages scan + generator) + final-weight ckpt +
-    # the labeled-feature ckpt inside the training lineage
-    "detector_score": (1, 2, 1),
+    # deploy: feature pass (pages scan + generator) + final-weight ckpt
+    "detector_score": (1, 1, 1),
     # + the gold-label join: two generator python stages + their skeleton scans
-    "detector_calibration": (3, 2, 3),
+    "detector_calibration": (3, 1, 3),
     # ref-subset scan (inside the lazy ckpt lineage) + scoring scan are
     # different subsets of the source, as in decontaminate; counts/vocab
     # read the two checkpoints
@@ -371,10 +370,10 @@ EXPECTED_PLAN_COUNTS = {
     "domain_cap": (1, 0, 0),
     "hash_split": (1, 0, 0),
     "latest_event": (1, 0, 0),
-    "rl_transitions": (1, 1, 2),
-    "rl_event_transitions": (1, 1, 2),
-    "dqn_train": (1, 1, 2),
-    "rl_learned_policy": (1, 1, 2),
+    "rl_transitions": (1, 0, 2),
+    "rl_event_transitions": (1, 0, 2),
+    "dqn_train": (1, 0, 2),
+    "rl_learned_policy": (1, 0, 2),
 }
 
 

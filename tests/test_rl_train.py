@@ -220,7 +220,7 @@ def test_trained_policy_full_corpus_parity(spark, sf_dir):
         gold=gold, reward_mode="lookahead", seed=11, lr=0.1,
     )
     completed = slot_fill.ordered_slot_fill(
-        det, policy=rl_train.learned_policy(w), carry_text=False
+        det, policy=rl_train.learned_policy(w)
     )
     triples = output.to_triples(output.completed_filter(completed))
     gold_triples = corpus.gold_triples(spark, sf_dir).filter(
@@ -256,6 +256,34 @@ def test_fitted_q_train_checkpoint_resume(spark, tmp_path):
     new_files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=*/part-*"))
     assert {f: os.path.getmtime(f) for f in new_files} != mt
     assert w3 != w1
+
+
+def test_fitted_q_train_resume_retrains_on_code_change(spark, tmp_path, monkeypatch):
+    # a workdir trained by one version of the package sources must NOT serve
+    # stale weights and transitions to a resume under changed code
+    import glob
+    import json
+    import os
+
+    from autoextraction_spark import pipeline
+
+    det = _detected(spark, [(f"u{i}", "works_for", PRIM if i % 2 else ALT, "en")
+                            for i in range(10)])
+    wd = str(tmp_path / "rlwd_code")
+    kw = dict(n_generations=1, iters_per_gen=2, epsilon0=0.4, seed=3, workdir=wd)
+    rl_train.fitted_q_train(det, **kw)
+    manifest = os.path.join(wd, "rl_gen_0.json")
+    with open(manifest) as f:
+        fp_before = json.load(f)["fingerprint"]
+    files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=0/part-*"))
+    assert files, "transition checkpoints missing"
+    mt = {f: os.path.getmtime(f) for f in files}
+    monkeypatch.setattr(pipeline, "_source_digest", lambda: "changed-code")
+    rl_train.fitted_q_train(det, **kw)
+    with open(manifest) as f:
+        assert json.load(f)["fingerprint"] != fp_before  # generation 0 retrained
+    new_files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=0/part-*"))
+    assert {f: os.path.getmtime(f) for f in new_files} != mt
 
 
 # ------------------------------------------- oracle closed-form coefficients

@@ -106,9 +106,9 @@ def test_fused_equals_rounds(tiny_pages, norm_states, reference_states, policy):
     assert all(st[4] and st[6] == 1 for st in ref)  # max_steps=1 truncated all
 
 
-def test_fused_carry_text_false_drops_text(tiny_pages):
+def test_ordered_slot_fill_emits_no_text(tiny_pages):
     det = detect.detect_relations(tiny_pages)
-    out = slot_fill.ordered_slot_fill(det, carry_text=False)
+    out = slot_fill.ordered_slot_fill(det)
     assert "text" not in out.columns
     assert out.count() > 0
 
@@ -132,13 +132,11 @@ def test_dedup_assignments_equals_distinct_plan(spark, sf_dir):
     pages = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
     det = detect.detect_relations(pages)
     slow = output.to_triples(
-        output.completed_filter(slot_fill.ordered_slot_fill(det, carry_text=False))
+        output.completed_filter(slot_fill.ordered_slot_fill(det))
     )
     fast = output.to_triples(
         output.completed_filter(
-            slot_fill.ordered_slot_fill(
-                det, carry_text=False, dedup_assignments=True
-            )
+            slot_fill.ordered_slot_fill(det, dedup_assignments=True)
         ),
         assume_unique=True,
     )
@@ -167,9 +165,7 @@ def test_episodes_from_skeleton_equals_staged_pipeline(spark, sf_dir):
 
     pages = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
     det = detect.detect_relations(pages)
-    staged = slot_fill.ordered_slot_fill(
-        det, carry_text=False, dedup_assignments=True
-    )
+    staged = slot_fill.ordered_slot_fill(det, dedup_assignments=True)
     fused = slot_fill.episodes_from_skeleton(
         corpus.doc_skeleton(spark, sf_dir), dedup_assignments=True
     )
