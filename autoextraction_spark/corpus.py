@@ -116,8 +116,10 @@ def web_pages(
 #: B/doc on perfbench's generated corpora (2000 docs in ~510 kB);
 #: doc_skeleton's clamp to [parallelism, cap] bounds the error.
 _SKEL_BYTES_PER_DOC = 120
-#: Docs per python task: below this a task's fixed worker setup (150-290 ms,
-#: see doc_skeleton) outweighs its episode work (~300 ms per 2500 docs).
+#: Docs per python task. Chosen when a task's fixed worker setup was
+#: 150-290 ms (see doc_skeleton) against ~300 ms of episode work per 2500
+#: docs; ``pydaemon`` has since removed most of that setup, so the value
+#: needs re-measuring before it is trusted as a break-even point.
 _MIN_DOCS_PER_TASK = 2500
 
 
@@ -174,14 +176,15 @@ def doc_skeleton(
     # parallelism·_MIN_DOCS_PER_TASK docs runs one wave of parallelism
     # full-size tasks; at scale the cap keeps the straggler-absorbing waves
     # (it reproduces the r5 big-run layout). The per-task cost being
-    # amortized sits in the python worker, not the JVM protocol: at task
+    # amortized sat in the python worker, not the JVM protocol: at task
     # start pyspark's worker calls importlib.invalidate_caches()
     # (worker_util.setup_spark_files), which on Python 3.11 re-reads the zip
     # directory behind every zipimporter — ~14 pyspark.zip entries at 6-12 ms
     # and two spark-core_2.13-4.1.2.jar entries at 26-55 ms: 150-290 ms per
-    # task against ~7 ms of JVM CPU (4-vCPU VM, timed by wrapping the call in
-    # a worker sitecustomize). That is the installation's cost; the number of
-    # python tasks paying it is this function's.
+    # task against ~7 ms of JVM CPU (4-vCPU VM). That came from the session,
+    # not the install: session.get_spark starts workers from ``pydaemon``,
+    # which imports the installed pyspark instead of Spark's archives, and
+    # the call then costs under 0.2 ms.
     par = spark.sparkContext.defaultParallelism
     est_docs = _estimate_doc_count(spark, sf_dir)
     cap = max(par * int(waves_per_core), 16)

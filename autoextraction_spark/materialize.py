@@ -4,11 +4,14 @@ iterative loop's per-round state) goes through ``ckpt``; ``level=None``
 keeps Spark's default local-checkpoint level (memory and disk,
 deserialized). ``ckpt_stats`` also returns aggregates observed by the
 checkpoint job itself, so a convergence test or a sizing decision needs no
-second job. ``with_rank``, the engine's one global-id primitive, is built
-on an eager ``ckpt``. ``local_table`` is the one way python rows held at
+second job; ``observed`` does the same for any other writing job.
+``with_rank``, the engine's one global-id primitive, is built on an eager
+``ckpt``. ``local_table`` is the one way python rows held at
 the driver enter a plan."""
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
@@ -25,15 +28,23 @@ def ckpt(
     return df.localCheckpoint(eager=eager, storageLevel=level)
 
 
+def observed(df: DataFrame, aggs: list[Column]) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` with the named aggregates ``aggs`` observed by the next job
+    that runs it, and a function returning their ``{alias: value}`` once that
+    job has finished (no second job; exact under task retries, and 0 rows
+    for a plan AQE prunes to no partitions)."""
+    obs = Observation()
+    return df.observe(obs, *aggs), lambda: obs.get
+
+
 def ckpt_stats(
     df: DataFrame, level: StorageLevel | None, aggs: list[Column]
 ) -> tuple[DataFrame, dict]:
     """Eager local checkpoint of ``df`` at ``level`` and ``{alias: value}``
     of the named aggregates ``aggs``, observed while the checkpoint job
-    writes the rows (no second job; exact under task retries, and 0 rows for
-    a plan AQE prunes to no partitions)."""
-    obs = Observation()
-    return ckpt(df.observe(obs, *aggs), eager=True, level=level), obs.get
+    writes the rows (``observed``)."""
+    df, stats = observed(df, aggs)
+    return ckpt(df, eager=True, level=level), stats()
 
 
 def local_table(spark: SparkSession, rows: list, ddl: str) -> DataFrame:

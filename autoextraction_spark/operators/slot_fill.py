@@ -184,10 +184,12 @@ def episodes_from_skeleton(
     decision in between (the anchor gate) is a per-row pure function, so the
     whole chain is row-local — one python stage, the text NEVER crosses
     Arrow (only the completed typed states do), and the fixed per-task
-    python-worker setup is paid once instead of twice: event-log task
-    metrics at sf0.1 measured 480 ms median task wall vs 8 ms CPU, most of
-    the gap being the worker's importlib.invalidate_caches() re-reading its
-    zipimport directories, 150-290 ms per task (see corpus.doc_skeleton).
+    python-worker setup is paid once instead of twice. Event-log task
+    metrics at sf0.1 once measured 480 ms median task wall vs 8 ms CPU, most
+    of the gap being the worker's importlib.invalidate_caches() re-reading
+    Spark's zip archives, 150-290 ms per task; ``pydaemon`` workers import
+    the installed pyspark instead, so that call no longer touches an
+    archive (see corpus.doc_skeleton).
 
     Output is byte-identical to
     ``ordered_slot_fill(detect_relations(web_pages(...)))``:

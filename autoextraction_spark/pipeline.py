@@ -3,10 +3,11 @@ lineage + metrics (north_rule: "checkpointed per stage with per-partition
 lineage and metrics for resumable execution").
 
 Each stage writes its output as parquet under ``workdir/stage=<name>/`` and
-``workdir/manifest_<name>.json`` recording rows out, partition count, wall
-time, sf_dir, policy and the config fingerprint. ``run`` skips stages whose
-manifest + _SUCCESS marker exist with a matching fingerprint — resuming a
-killed job re-executes only unfinished stages.
+``workdir/manifest_<name>.json`` recording rows out (observed by the
+writing job), partition count, wall time, sf_dir, policy and the config
+fingerprint. ``run`` skips stages whose manifest + _SUCCESS marker exist
+with a matching fingerprint — resuming a killed job re-executes only
+unfinished stages.
 (Iceberg snapshots would subsume this; the catalog jar is absent in this
 container, so the layout is plain partitioned parquet with the same
 semantics and a one-line swap point in ``_write``/``_read``.)
@@ -31,7 +32,7 @@ from importlib import resources
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import corpus
+from . import corpus, materialize
 from .operators import detect, linking, output, slot_fill
 
 STAGES = ["text", "triples", "linking_map", "canonical"]
@@ -215,17 +216,16 @@ class KgPipeline:
         lineage = df.withColumn("_stage", F.lit(stage)).withColumn(
             "_part_id", F.spark_partition_id()
         )
+        lineage, stats = materialize.observed(lineage, [F.count(F.lit(1)).alias("rows")])
         writer = lineage.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._dir(stage))
         out = self._read(stage)
-        rows = out.count()
-        n_parts = out.rdd.getNumPartitions()
         manifest = {
             "stage": stage,
-            "rows": rows,
-            "partitions": n_parts,
+            "rows": stats()["rows"],
+            "partitions": out.rdd.getNumPartitions(),
             "wall_sec": round(time.time() - t0, 2),
             "sf_dir": self.sf_dir,
             "policy": self.policy,

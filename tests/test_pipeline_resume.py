@@ -18,12 +18,27 @@ def test_full_run_writes_manifests(spark, sf_dir, tmp_path):
     m = {x["stage"]: x for x in p.metrics()}
     assert set(m) == {"text", "triples", "linking_map", "canonical"}
     assert m["triples"]["rows"] > 0
-    # lineage columns present in every checkpoint
+    # lineage columns present in every checkpoint; rows observed by the write
     for stage in m:
         df = spark.read.parquet(os.path.join(wd, f"stage={stage}"))
         assert "_stage" in df.columns and "_part_id" in df.columns
+        assert m[stage]["rows"] == df.count()
     # stage G layout: canonical triples partitioned by predicate
     assert glob.glob(os.path.join(wd, "stage=canonical", "pred=*"))
+
+
+def test_write_observes_exact_rows_empty_and_partitioned(spark, sf_dir, tmp_path):
+    p = KgPipeline(spark, sf_dir, str(tmp_path / "w"))
+    df = spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 7)
+    p._write("part", df, partition_by=["k"])
+    p._write("empty", df.filter("id < 0"))
+
+    def rows(stage):
+        with open(p._manifest_path(stage)) as f:
+            return json.load(f)["rows"]
+
+    assert (rows("part"), rows("empty")) == (1000, 0)
+    assert spark.read.parquet(p._dir("part")).count() == 1000
 
 
 def test_resume_skips_completed_stages(spark, sf_dir, tmp_path):
