@@ -14,11 +14,13 @@ shuffle, no driver-side loop.
 from __future__ import annotations
 
 import datetime as _dt
+import json
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import schema as S
 
@@ -30,6 +32,13 @@ WEB_PAGES_SCHEMA = (
 WEB_PAGES_SCHEMA_NO_HTML = (
     "doc_id long, url string, warc_ts timestamp, text string, lang string"
 )
+
+#: The declared read of the skeleton's two columns (see _read_skeleton).
+SKELETON_SCHEMA = "doc_id long, lang string"
+_SKELETON_TYPES = {
+    "doc_id": (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
+    "lang": (T.StringType,),
+}
 
 _EPOCH = _dt.datetime(2024, 1, 1)
 
@@ -116,10 +125,15 @@ def web_pages(
 #: B/doc on perfbench's generated corpora (2000 docs in ~510 kB);
 #: doc_skeleton's clamp to [parallelism, cap] bounds the error.
 _SKEL_BYTES_PER_DOC = 120
-#: Docs per python task. Chosen when a task's fixed worker setup was
-#: 150-290 ms (see doc_skeleton) against ~300 ms of episode work per 2500
-#: docs; ``pydaemon`` has since removed most of that setup, so the value
-#: needs re-measuring before it is trusted as a break-even point.
+#: Docs per python task. Re-measured after ``pydaemon`` removed the
+#: per-task worker setup: local[4] on a 4-vCPU VM, a 40k-doc skeleton (sf0.1
+#: replicated 8x) sized by this value with the wave cap lifted,
+#: ``pipeline.skeleton_triples(skel).count()``, 8 interleaved passes each,
+#: median (min) wall: 500 docs/task (80 tasks) 2.92 (2.40) s, 1000 (40)
+#: 2.08 (2.00) s, 2500 (16) 2.02 (1.90) s, 5000 (8) 2.27 (2.21) s, 10000
+#: (4) 2.19 (1.96) s. 2500 stays, the fastest setting measured: below it
+#: each extra task pays 30-55 ms of fixed python-task cost, above it fewer,
+#: longer tasks leave a straggler's work unshared.
 _MIN_DOCS_PER_TASK = 2500
 
 
@@ -138,6 +152,56 @@ def _estimate_doc_count(spark: SparkSession, sf_dir: str) -> int | None:
         return None
 
 
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The Spark schema of one parquet file, converted from its footer on
+    the driver the way Spark's own inference converts it: a metadata read,
+    no Spark job."""
+    jvm = spark._jvm
+    meta = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader").readFooter(
+        spark._jsc.hadoopConfiguration(),
+        getattr(jvm, "org.apache.hadoop.fs.Path")(getattr(jvm, "java.net.URI")(path)),
+    )
+    converter = getattr(
+        jvm, "org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter"
+    )(spark._jsparkSession.sessionState().conf())
+    schema = converter.convert(meta.getFileMetaData().getSchema())
+    return T.StructType.fromJson(json.loads(schema.json()))
+
+
+def _read_skeleton(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``documents.parquet``'s (doc_id, lang) columns, read with the declared
+    ``SKELETON_SCHEMA``. Without a schema, ``spark.read.parquet`` runs a
+    one-task Spark job on every call to infer it from the footers: building
+    ``doc_skeleton`` at sf0.01 took 94-106 ms that way and 27-33 ms with the
+    declared schema and the footer check below (median of 20, 4-vCPU VM).
+
+    A declared read turns a missing column into NULLs, and a NULL ``lang``
+    means English, so a malformed skeleton would pass silently. One file's
+    footer is checked instead, as Spark's inference reads one file's footer
+    unless ``mergeSchema`` is set: ``doc_id`` must be an integer column and
+    ``lang`` a string column, else ``ValueError``."""
+    path = f"{sf_dir}/documents.parquet"
+    docs = spark.read.schema(SKELETON_SCHEMA).parquet(path)
+    # the JVM array, not DataFrame.inputFiles(): py4j would fetch every
+    # listed file name in its own round trip
+    files = docs._jdf.inputFiles()
+    if len(files) == 0:
+        raise ValueError(f"{path}: no parquet files to read the corpus skeleton from")
+    first = files[0]
+    found = {f.name: f.dataType for f in _footer_schema(spark, first).fields}
+    bad = [
+        f"{name} is {found[name].simpleString() if name in found else 'missing'}"
+        for name, types in _SKELETON_TYPES.items()
+        if not isinstance(found.get(name), types)
+    ]
+    if bad:
+        raise ValueError(
+            f"{first}: the corpus skeleton needs an integer doc_id and a "
+            f"string lang column; {', '.join(bad)}"
+        )
+    return docs
+
+
 def doc_skeleton(
     spark: SparkSession,
     sf_dir: str,
@@ -152,8 +216,14 @@ def doc_skeleton(
     bootstrap (tiny parquet read, repartition shuffle, max-id agg, replica
     explode) is sandbox scaffolding standing in for "the crawl is already in
     storage", not pipeline work.
+
+    The read declares ``doc_id long, lang string`` (``_read_skeleton``), so
+    planning it runs no Spark job; a file without an integer ``doc_id`` or
+    a string ``lang`` column is a ``ValueError``. Any ``lang`` value other
+    than ``'zh'``, NULL included, generates an English page
+    (``schema.doc_lang``), as the oracle's ``CASE WHEN lang = 'zh'`` does.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    docs = _read_skeleton(spark, sf_dir)
     if where is not None:
         # applied BELOW the generator mapInPandas: Catalyst pushes a doc_id
         # predicate into the parquet scan (incremental-crawl partition prune)
@@ -184,7 +254,8 @@ def doc_skeleton(
     # task against ~7 ms of JVM CPU (4-vCPU VM). That came from the session,
     # not the install: session.get_spark starts workers from ``pydaemon``,
     # which imports the installed pyspark instead of Spark's archives, and
-    # the call then costs under 0.2 ms.
+    # the call then costs under 0.2 ms; 30-55 ms of fixed cost per python
+    # task remains (measured at _MIN_DOCS_PER_TASK).
     par = spark.sparkContext.defaultParallelism
     est_docs = _estimate_doc_count(spark, sf_dir)
     cap = max(par * int(waves_per_core), 16)
@@ -229,7 +300,7 @@ def gold_triples(spark: SparkSession, sf_dir: str, canonical: bool = False) -> D
     Used as the gold side of MetricF1 and as pytest fixtures. ``canonical``
     selects post-entity-linking surfaces.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    docs = _read_skeleton(spark, sf_dir)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -255,7 +326,7 @@ def gold_fact_tuples(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the P10 (token-match) and P11 (char-span) span-labeling
     operators consume.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    docs = _read_skeleton(spark, sf_dir)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -287,7 +358,7 @@ def gold_fact_tuples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gold_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected (url, etype, role, value) rows of the event pipeline."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    docs = _read_skeleton(spark, sf_dir)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -75,10 +75,10 @@ def _objs_after_literal(text: str, prefix: str, lang: str) -> list[str]:
     same order, with the same non-overlap rule. Extracted mentions are
     unique per document, so the per-mention compiled patterns this replaces
     missed every lru cache at corpus scale — measured ~18% of single-core
-    episode time (scripts/profile_episode.py). The mirrored fixed-OBJECT
-    case keeps the compiled pattern: its literal is a suffix, and emulating
-    leftmost-start/greedy semantics for a variable-length entity prefix is
-    not provably equivalent.
+    episode time (r5, a cProfile of one worker's fused episode pass). The
+    mirrored fixed-OBJECT case keeps the compiled pattern: its literal is a
+    suffix, and emulating leftmost-start/greedy semantics for a
+    variable-length entity prefix is not provably equivalent.
     """
     pat = _ent_suffix(lang)
     out: list[str] = []

@@ -1,12 +1,17 @@
-"""Python-worker daemon (pydaemon): workers import the installed pyspark, not
-Spark's zip archives, and every other case keeps Spark's ``sys.path``."""
+"""The session's fixed settings. Python-worker daemon (pydaemon): workers
+import the installed pyspark, not Spark's zip archives, and every other case
+keeps Spark's ``sys.path``. DataFrame debugging off: building a column costs
+no call-site capture round trips."""
 
 import os
 import sys
 import zipfile
 
+import py4j.clientserver
 import pyspark
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from autoextraction_spark import pydaemon
 
@@ -33,6 +38,32 @@ def test_python_tasks_import_no_spark_archive(spark):
         assert archives == []
         assert version == pyspark.__version__
         assert ".zip" not in path
+
+
+def test_column_build_skips_call_site_capture(spark, monkeypatch):
+    """With DataFrame debugging on, ``F.col`` makes 13 py4j round trips:
+    10 of them capture and clear the Python call site."""
+    F.col("x")
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection,
+        "send_command",
+        lambda self, command: sent.append(command) or send(self, command),
+    )
+    F.col("x")
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 3
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_analysis_error_keeps_class_and_message(spark):
+    """What debugging off keeps: the error class and the message naming the
+    unresolved column."""
+    with pytest.raises(AnalysisException) as err:
+        spark.range(1).select(F.col("no_such_column")).schema
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+    assert "no_such_column" in str(err.value)
 
 
 def _zip(path, files):
