@@ -8,7 +8,7 @@ stages that must never leave whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..materialize import ckpt
@@ -447,8 +447,6 @@ def dsir_weights(
     # is a corpus subset) — separate .agg() scalars would re-execute the
     # raw/tgt aggregations and re-read the corpus-size gram checkpoint
     # twice more; the single-partition window moves only B rows
-    from pyspark.sql import Window
-
     w_all = Window.partitionBy()
     ratio = (
         raw.join(tgt, "bucket", "left")
@@ -505,7 +503,12 @@ def winnow_fingerprints(
     ``id_col`` must be a key: rows sharing an id are winnowed as one
     document.
 
-    Scale shape: one exchange, hash-partitioning (id, normalized text) by
+    Scale shape: the posting table is built once and then probed: it is a
+    lazy DISK_ONLY checkpoint (the ``shingle_sets`` rule), written by its
+    first consumer and read by every later one, so the window pass runs
+    once. Building it runs only the id exchange's map stage (AQE runs a
+    plan's shuffle stages when the checkpoint RDD is made). Under the
+    checkpoint is one exchange, hash-partitioning (id, normalized text) by
     id into ``spark.sql.shuffle.partitions`` parts, so the shuffle carries
     text (~1 byte per char), never per-gram rows. Above it are plain
     whole-stage-codegen operators and two window passes over that same
@@ -519,8 +522,11 @@ def winnow_fingerprints(
     repeated selections are adjacent and a ``lag`` filter replaces a
     ``distinct`` shuffle.
     """
-    from pyspark.sql import Window
+    return ckpt(_winnow_plan(df, id_col, text_col, k, w))
 
+
+def _winnow_plan(df: DataFrame, id_col: str, text_col: str, k: int, w: int) -> DataFrame:
+    """The window pass that ``winnow_fingerprints`` checkpoints."""
     from .dedup import portable_hash64
 
     # a fixed partition count: AQE would coalesce a by-column repartition
@@ -577,28 +583,23 @@ def shared_fingerprint_pairs(
     the viral-fingerprint quadratic blow-up and removes the
     false-positive signal.
 
-    Scale shape: one distinct (id, fp) projection, checkpointed, feeds
-    both the hot-fp count and the pair join; the join key is the
-    fingerprint (equi-join, AQE-splittable); the pair aggregation is
-    map-side combinable.
+    Scale shape: one fp exchange feeds the distinct (id, fp) projection,
+    the per-fp document count (a window, no aggregation or anti join) and
+    both sides of the fp equi-join (AQE reuses it: a ``ReusedExchange``),
+    so no checkpoint is needed for an input to be read once. The pair
+    aggregation is map-side combinable.
     """
-
-    f = ckpt(
+    f = (
         fps.select(F.col(id_col).alias("id"), F.col(fp_col).alias("fp"))
-        .distinct(),
-        eager=True,
+        .repartition("fp")
+        .distinct()
+        .withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("fp")))
+        .filter(F.col("c") <= max_docs_per_fp)
     )
-    hot = (
-        f.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > max_docs_per_fp)
-        .select("fp")
-    )
-    f2 = f.join(hot, "fp", "left_anti")
     return (
-        f2.alias("a")
+        f.alias("a")
         .join(
-            f2.alias("b"),
+            f.alias("b"),
             (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")),
         )
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
@@ -627,8 +628,6 @@ def tfidf_keywords(
     per-doc window partitions by doc_id — no global sort.
     """
     df = spread_input(df)
-    from pyspark.sql import Window as W
-
     tok = ckpt(
         df.select(
             F.col(id_col).alias("doc_id"),
@@ -651,7 +650,7 @@ def tfidf_keywords(
     score = F.round(
         F.col("tf") * F.log(F.col("n").cast("double") / F.col("df")), 6
     )
-    w = W.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         tf.join(dfreq, "term")
         .crossJoin(F.broadcast(n))

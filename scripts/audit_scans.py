@@ -16,6 +16,9 @@ only: driver-built rows enter plans as ``LocalTableScan``
 
 ``tests/test_properties.py`` pins these counts per query so the recompute
 class of bug cannot silently return (VERDICT r3 item 10).
+
+    python scripts/audit_scans.py                      # every query
+    python scripts/audit_scans.py winnow quote_pairs   # only these
 """
 
 from __future__ import annotations
@@ -28,9 +31,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def audit(spark, sf_dir: str) -> dict[str, tuple[int, int, int]]:
+def audit(
+    spark, sf_dir: str, names: list[str] | None = None
+) -> dict[str, tuple[int, int, int]]:
     """{query: (parquet_scans, checkpoint_rdd_scans, python_stages)} for
-    every entry in __spark_entry__.queries() whose plan builds lazily."""
+    every entry in __spark_entry__.queries() (or only the ``names`` given)
+    whose plan builds lazily."""
     import __spark_entry__ as entrymod
 
     # Audit on a clean cache: a session-wide .cache() left by an earlier
@@ -40,8 +46,11 @@ def audit(spark, sf_dir: str) -> dict[str, tuple[int, int, int]]:
     # query's own plan, not incidental session cache state.
     spark.catalog.clearCache()
 
+    queries = entrymod.queries()
+    if names is not None:
+        queries = {name: queries[name] for name in names}
     out: dict[str, tuple[int, int, int]] = {}
-    for name, fn in entrymod.queries().items():
+    for name, fn in queries.items():
         df = fn(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -60,7 +69,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     spark = get_spark(app_name="scan-audit", cpus=8, shuffle_partitions=8)
-    rows = sorted(audit(spark, sf_dir).items(), key=lambda kv: -kv[1][0])
+    rows = sorted(audit(spark, sf_dir, sys.argv[1:] or None).items(), key=lambda kv: -kv[1][0])
     print(f"{'query':24} {'parquet':>8} {'ckpt_rdd':>9} {'python':>7}")
     for name, (scans, rdd, mip) in rows:
         print(f"{name:24} {scans:>8} {rdd:>9} {mip:>7}")

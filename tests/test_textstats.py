@@ -327,6 +327,8 @@ WINNOW_TEXTS = [
     "x \t\t\n  y\n\n\nz   \t w " * 4,  # whitespace runs collapse
     "王伟任职于华信集团。" * 4,  # multi-byte chars
     "The Quick  brown\tFOX jumps over the lazy dog " * 3,
+    "a\U0001F600b\U0001F600cdef\U0001D538\U0001D539gh" * 3,  # astral: one code point each
+    "next\u0085line\u2028sep  \u2029par\u0085" * 3,  # NEL, LS, PS: not regex \s in Java or RE2
 ]
 
 
@@ -369,12 +371,73 @@ def test_winnow_plan_is_one_exchange_without_lambdas(spark):
     df = spark.createDataFrame(
         [(1, "some text here"), (2, "other text")], "doc_id long, text string"
     )
-    qe = textstats.winnow_fingerprints(df)._jdf.queryExecution()
+    qe = textstats._winnow_plan(df, "doc_id", "text", k=8, w=15)._jdf.queryExecution()
     optimized = qe.optimizedPlan().toString()
     physical = qe.executedPlan().toString()
     assert "lambdafunction" not in optimized.lower()
     assert physical.count("Exchange ") == 1, physical
     assert "Exchange hashpartitioning(id" in physical
+    # the public table is that plan materialized once (a checkpoint scan)
+    out = textstats.winnow_fingerprints(df)._jdf.queryExecution().analyzed()
+    assert out.nodeName() == "LogicalRDD"
+
+
+# k=4, w=1 selects every gram, so each 4-char run below is one fp; the
+# per-doc CJK filler keeps every boundary-crossing gram in its own doc.
+# With max_docs_per_fp=3: "wxyz" is on exactly 3 docs (kept; doc 3 holds
+# it twice), "hhhh" on 4 (dropped), and doc 1 holds "pqrs" twice.
+QUOTE_TEXTS = [
+    "pqrs一pqrs一wxyz一hhhh",
+    "pqrs二wxyz二hhhh",
+    "wxyz三wxyz三hhhh",
+    "hhhh四",
+    "abcd五",
+]
+QUOTE_PAIRS = {
+    1: [(1, 2, 2), (1, 3, 1), (2, 3, 1)],
+    2: [(1, 2, 2)],  # pqrs + wxyz: the min_shared boundary, pqrs once
+    3: [],
+}
+
+
+def _quote_oracle(sql):
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    documents = pd.DataFrame(list(enumerate(QUOTE_TEXTS, start=1)), columns=["doc_id", "text"])
+    con.register("documents", documents)
+    return sorted(map(tuple, con.sql(sql).fetchall()))
+
+
+@pytest.mark.parametrize("source", ["checkpointed", "plain"])
+@pytest.mark.parametrize("min_shared", [1, 2, 3])
+def test_shared_fingerprint_pairs_matches_oracle(spark, source, min_shared):
+    """The MOSS detector keeps an fp on exactly ``max_docs_per_fp`` docs,
+    drops one on one more, counts a doc's repeated fp once, and keeps a
+    pair at exactly ``min_shared``, equal to the DuckDB oracle, over the
+    checkpointed posting table and over a plain DataFrame alike. Building
+    the detector's plan runs no Spark job."""
+    from autoextraction_spark import oracle
+
+    if source == "checkpointed":
+        docs = spark.createDataFrame(list(enumerate(QUOTE_TEXTS, start=1)), "doc_id long, text string")
+        fps = textstats.winnow_fingerprints(docs, k=4, w=1)
+    else:
+        rows = _quote_oracle(oracle.winnow_sql(k=4, w=1))
+        fps = spark.createDataFrame(rows, "id long, pos long, fp long")
+    sc = spark.sparkContext
+    group = f"quote-pairs-build-{source}-{min_shared}"
+    try:
+        sc.setJobGroup(group, "plan build")
+        pairs = textstats.shared_fingerprint_pairs(fps, min_shared=min_shared, max_docs_per_fp=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    got = sorted(tuple(r) for r in pairs.collect())
+    assert got == QUOTE_PAIRS[min_shared]
+    assert got == _quote_oracle(oracle.quote_pairs_sql(k=4, w=1, min_shared=min_shared, max_docs=3))
 
 
 def test_tfidf_keywords_rare_term_outranks_common(spark):
