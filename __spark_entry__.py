@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from autoextraction_spark import corpus, oracle  # noqa: E402
 from autoextraction_spark import metrics as kgmetrics  # noqa: E402
 from autoextraction_spark import schema as KS  # noqa: E402
-from autoextraction_spark.materialize import ckpt, local_table  # noqa: E402
+from autoextraction_spark.materialize import ckpt, co_key_pairs, local_table  # noqa: E402
 from autoextraction_spark.operators import (  # noqa: E402
     bpe, classifier, compose, dedup, detect, graph, kge, linking, lm,
     multimodal, nested, output, rl_train, similarity, sketch, slot_fill,
@@ -1991,12 +1991,9 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dw = ckpt(words.distinct())
     sizes = dw.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    wa = dw.select(F.col("lang").alias("lang_a"), "w")
-    wb = dw.select(F.col("lang").alias("lang_b"), "w")
     inter = (
-        wa.join(wb, "w")
-        .filter(F.col("lang_a") < F.col("lang_b"))
-        .groupBy("lang_a", "lang_b")
+        co_key_pairs(dw, "lang", ["w"])
+        .groupBy(F.col("id_a").alias("lang_a"), F.col("id_b").alias("lang_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("exact_inter"))
     )
     na = sizes.withColumnsRenamed({"lang": "lang_a", "n": "na"})

@@ -27,7 +27,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt
+from ..materialize import cap_blocks, ckpt, co_key_pairs
 
 DEFAULT_NUM_PERM = 16
 DEFAULT_BANDS = 8
@@ -150,18 +150,7 @@ def lsh_candidate_pairs(
     """Distinct candidate (id_a, id_b) with id_a < id_b sharing ≥1 LSH band
     (:func:`_lsh_bands`)."""
     melted = _lsh_bands(sig, num_perm, bands)
-    a = melted.alias("a")
-    b = melted.alias("b")
-    cond = (
-        (F.col("a.id") < F.col("b.id"))
-        & (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-    )
-    return (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return co_key_pairs(melted, "id", ["band_idx", "band_hash"]).select("id_a", "id_b").distinct()
 
 
 #: Logical-plan node names above which spread_input must not probe
@@ -334,14 +323,7 @@ def prefix_filter_candidates(shingled: DataFrame, threshold: float) -> DataFrame
         )
         .select("id", "sh")
     )
-    a = prefix.select(F.col("id").alias("id_a"), "sh")
-    b = prefix.select(F.col("id").alias("id_b"), "sh")
-    return (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return co_key_pairs(prefix, "id", ["sh"]).select("id_a", "id_b").distinct()
 
 
 def jaccard_dup_pairs(
@@ -510,22 +492,10 @@ def simhash_dup_pairs(
     melted = sig.select("id", "simhash", F.explode(bands).alias("bd")).select(
         "id", "simhash", "bd.band_idx", "bd.band_val"
     )
-    a, b = melted.alias("a"), melted.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
-        .distinct()
+    pairs = co_key_pairs(melted, "id", ["band_idx", "band_val"]).select(
+        "id_a", "id_b", F.expr("bit_count(simhash_a ^ simhash_b)").alias("hamming")
     )
-    return pairs.filter(F.col("hamming") <= max_hamming)
+    return pairs.distinct().filter(F.col("hamming") <= max_hamming)
 
 
 def paragraph_dedup(
@@ -874,35 +844,29 @@ def host_mirror_pairs(
 
     Skew rule (the prefix-filter/stop-word analog): a digest present on
     more than ``max_hosts_per_digest`` hosts is template boilerplate, not
-    mirroring — it is EXCLUDED before the pair join, which both bounds the
-    quadratic blow-up of viral digests (a cookie banner on 10^6 hosts
-    would otherwise emit 10^12 pairs) and removes the false-positive
-    signal. Exclusion happens after the per-host digest sets are counted,
-    so ``n_a``/``n_b`` are comparable across pairs.
+    mirroring — ``materialize.cap_blocks`` EXCLUDES it before the pair
+    join (see ``co_key_pairs`` for what an uncapped block costs: a cookie
+    banner on 10^6 hosts would emit 10^12 pairs), which also removes the
+    false-positive signal. The per-host digest sets are counted AFTER the
+    exclusion, over the same capped table the pairs come from, so
+    ``n_a``/``n_b`` count only digests that could be shared. NULL text has
+    no digest and counts on no host.
 
-    Scale shape: ONE distinct (host, digest) projection, checkpointed, is
-    the only corpus-size pass; the pair join is digest-keyed with the hot
-    keys removed, the aggregations map-side combinable.
+    Scale shape: ONE capped distinct (host, digest) projection,
+    checkpointed, is the only corpus-size pass; the pair join is
+    digest-keyed, the aggregations map-side combinable.
     """
     hd = ckpt(
-        df.select(
-            F.col(host_col).alias("host"), F.md5(F.col(text_col)).alias("dg")
-        ).distinct()
+        cap_blocks(
+            df.select(F.col(host_col).alias("host"), F.md5(F.col(text_col)).alias("dg")),
+            ["dg"],
+            max_hosts_per_digest,
+        )
     )
-    hot = hd.groupBy("dg").agg(F.count(F.lit(1)).alias("c")).filter(
-        F.col("c") > max_hosts_per_digest
-    ).select("dg")
-    hd2 = ckpt(hd.join(hot, "dg", "left_anti"))
-    sz = hd2.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
+    sz = hd.groupBy("host").agg(F.count(F.lit(1)).alias("n"))
     sh = (
-        hd2.alias("a")
-        .join(
-            hd2.alias("b"),
-            (F.col("a.dg") == F.col("b.dg")) & (F.col("a.host") < F.col("b.host")),
-        )
-        .groupBy(
-            F.col("a.host").alias("host_a"), F.col("b.host").alias("host_b")
-        )
+        co_key_pairs(hd, "host", ["dg"])
+        .groupBy(F.col("id_a").alias("host_a"), F.col("id_b").alias("host_b"))
         .agg(F.count(F.lit(1)).alias("shared"))
     )
     return (

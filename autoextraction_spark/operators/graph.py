@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..materialize import ckpt, ckpt_stats, with_rank
+from ..materialize import ckpt, ckpt_stats, co_key_pairs, with_rank
 
 
 def _counted(df: DataFrame) -> tuple[DataFrame, int]:
@@ -177,23 +177,20 @@ def shared_neighbor_similarity(
     jaccard)`` for unordered pairs sharing ≥ ``min_shared`` out-neighbors —
     the classic co-citation / "entities like this one" KG feature.
 
-    The wedge self-join is keyed by the shared NEIGHBOR (dst): two sources
-    pair once per common neighbor, then one count-aggregation per pair.
-    Hub dst nodes fan out quadratically — the same celebrity-skew surface
-    as the dedup family's band buckets — so at web scale the dst side is
-    capped first (drop objects above an in-degree ceiling, exactly the
-    stop-shingle rule in minhash blocking); here the synthetic graph's max
-    in-degree is vocabulary-bounded and the cap is unnecessary. Jaccard is
-    rounded to 6 decimals for the SQL oracle (float-division parity).
+    The wedge self-join (``co_key_pairs``) is keyed by the shared
+    NEIGHBOR (dst): two sources pair once per common neighbor, then one
+    count-aggregation per pair. Hub dst nodes fan out quadratically — the
+    same celebrity-skew surface as the dedup family's band buckets — and
+    no cap is applied: the cost is ``co_key_pairs``' uncapped giant-block
+    contract, quadratic in the largest in-degree (the synthetic graph's is
+    vocabulary-bounded). Jaccard is rounded to 6 decimals for the SQL
+    oracle (float-division parity).
     """
     e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    a = e.select(F.col("src").alias("a"), "dst")
-    b = e.select(F.col("src").alias("b"), "dst")
     pairs = (
-        a.join(b, "dst")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
+        co_key_pairs(e, "src", ["dst"])
+        .groupBy(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )
@@ -869,12 +866,8 @@ def entity_pmi(triples: DataFrame, url_col: str = "url") -> DataFrame:
     nn = ue.agg(F.count_distinct("u").cast("double").alias("n_docs"))
     cx = ue.groupBy("e").agg(F.count(F.lit(1)).alias("c"))
     pr = (
-        ue.alias("a")
-        .join(
-            ue.alias("b"),
-            (F.col("a.u") == F.col("b.u")) & (F.col("a.e") < F.col("b.e")),
-        )
-        .groupBy(F.col("a.e").alias("e1"), F.col("b.e").alias("e2"))
+        co_key_pairs(ue, "e", ["u"])
+        .groupBy(F.col("id_a").alias("e1"), F.col("id_b").alias("e2"))
         .agg(F.count(F.lit(1)).alias("c_pair"))
     )
     return (
@@ -958,20 +951,17 @@ def adamic_adar(edges: DataFrame, min_shared: int = 2) -> DataFrame:
     (a, b, shared, aa), aa rounded to 6 (float-sum ordering rule).
 
     Scale shape: identical to shared_neighbor_similarity — the wedge
-    self-join keyed by the shared neighbor (hub-dst skew capped upstream
-    at web scale, the stop-shingle rule), one count+sum aggregation per
-    pair; the in-degree table joins on the wedge key BEFORE the pair
-    aggregation, so no post-agg lookups.
+    self-join keyed by the shared neighbor, uncapped (hub dsts cost what
+    ``co_key_pairs``' giant-block contract says), one count+sum
+    aggregation per pair; the in-degree table joins on the wedge key
+    BEFORE the pair aggregation, so no post-agg lookups.
     """
     e = ckpt(edges.select("src", "dst").distinct(), eager=True)
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("din"))
-    a = e.select(F.col("src").alias("a"), "dst")
-    b = e.select(F.col("src").alias("b"), "dst")
     return (
-        a.join(b, "dst")
-        .filter(F.col("a") < F.col("b"))
+        co_key_pairs(e, "src", ["dst"])
         .join(indeg, "dst")
-        .groupBy("a", "b")
+        .groupBy(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .agg(
             F.count(F.lit(1)).alias("shared"),
             F.round(F.sum(F.lit(1.0) / F.log(F.col("din"))), 6).alias("aa"),

@@ -17,7 +17,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt
+from ..materialize import ckpt, co_key_pairs
 
 
 def auto_n_planes(n_vectors: int, target_bucket: int = 1024) -> int:
@@ -309,17 +309,10 @@ def embedding_neardup_pairs(
     # per vector — feeds BOTH sides of the self-join; one DISK_ONLY
     # materialization instead of computing the projections twice
     bucketed = ckpt(with_lsh_tables(df, vec_col, n_planes, n_tables, dim))
-    a = bucketed.select(
-        F.col(id_col).alias("id_a"), "table", "bucket"
-    )
-    b = bucketed.select(
-        F.col(id_col).alias("id_b"), "table", "bucket"
-    )
     cand = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        co_key_pairs(bucketed.select(id_col, "table", "bucket"), id_col, ["table", "bucket"])
         .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+        .distinct()
     )
     va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
     vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
@@ -425,7 +418,8 @@ def semdedup(
 
     Scale shape: the quadratic comparison is confined to clusters (the
     whole point — k ≈ N/√N keeps cells ~√N); the intra-cluster self-join
-    is an equi-join on cluster id, AQE-splittable under cluster-size skew.
+    is ``co_key_pairs`` on cluster id, uncapped, so a giant cluster costs
+    what its giant-block contract says.
     """
 
     from .kge import QUANT_EPS
@@ -451,29 +445,23 @@ def semdedup(
         .agg(F.min(F.struct("dist", "cluster", "v")).alias("w"))
         .select("id", F.col("w.cluster").alias("cluster"), F.col("w.v").alias("v"))
     )
-    a = assigned.select(
-        F.col("id").alias("id_a"), F.col("cluster"), F.col("v").alias("v_a")
-    )
-    b = assigned.select(
-        F.col("id").alias("id_b"), F.col("cluster"), F.col("v").alias("v_b")
-    )
+    # id_b is the later vector; id_a its smaller-id cluster-mate
     pairs = (
-        a.join(b, "cluster")
-        .filter(F.col("id_b") < F.col("id_a"))
+        co_key_pairs(assigned, "id", ["cluster"])
         .withColumn(
             "cosine",
-            _dot(F.col("v_a"), F.col("v_b"))
-            / (_norm(F.col("v_a")) * _norm(F.col("v_b"))),
+            _dot(F.col("v_b"), F.col("v_a"))
+            / (_norm(F.col("v_b")) * _norm(F.col("v_a"))),
         )
         .filter(F.col("cosine") >= threshold)
     )
-    w = Window.partitionBy("id_a").orderBy(F.col("cosine").desc(), F.col("id_b"))
+    w = Window.partitionBy("id_b").orderBy(F.col("cosine").desc(), F.col("id_a"))
     best = (
         pairs.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("id_a").alias("id"),
-            F.col("id_b").alias("dup_of"),
+            F.col("id_b").alias("id"),
+            F.col("id_a").alias("dup_of"),
             F.round("cosine", 6).alias("cosine"),
         )
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import ckpt
+from ..materialize import cap_blocks, ckpt, co_key_pairs
 from .dedup import spread_input
 
 # BPE-ish tokenization: letter runs | digit runs | single non-space symbol
@@ -579,30 +579,21 @@ def shared_fingerprint_pairs(
     Skew rule (the host_mirror_pairs stop-digest analog, and it BITES
     here: 15% of this corpus's fingerprints sit on >20 docs): a
     fingerprint on more than ``max_docs_per_fp`` documents is template
-    boilerplate — excluded BEFORE the fp-keyed pair join, which bounds
-    the viral-fingerprint quadratic blow-up and removes the
-    false-positive signal.
+    boilerplate — ``materialize.cap_blocks`` excludes it BEFORE the
+    fp-keyed ``co_key_pairs`` join, which bounds the viral-fingerprint
+    quadratic blow-up and removes the false-positive signal.
 
     Scale shape: one fp exchange feeds the distinct (id, fp) projection,
-    the per-fp document count (a window, no aggregation or anti join) and
-    both sides of the fp equi-join (AQE reuses it: a ``ReusedExchange``),
-    so no checkpoint is needed for an input to be read once. The pair
-    aggregation is map-side combinable.
+    the per-fp document count and both sides of the fp equi-join (AQE
+    reuses it: a ``ReusedExchange``), so no checkpoint is needed for an
+    input to be read once. The pair aggregation is map-side combinable.
     """
-    f = (
-        fps.select(F.col(id_col).alias("id"), F.col(fp_col).alias("fp"))
-        .repartition("fp")
-        .distinct()
-        .withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("fp")))
-        .filter(F.col("c") <= max_docs_per_fp)
+    f = cap_blocks(
+        fps.select(F.col(id_col).alias("id"), F.col(fp_col).alias("fp")), ["fp"], max_docs_per_fp
     )
     return (
-        f.alias("a")
-        .join(
-            f.alias("b"),
-            (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        co_key_pairs(f, "id", ["fp"])
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )

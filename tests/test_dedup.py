@@ -349,14 +349,29 @@ def test_host_mirror_pairs_jaccard_and_stop_digest(spark):
         + [(h, "cookie banner") for h in ("A", "B", "C", "D")]
         # C and D share nothing real -> no pair row once boilerplate drops
         + [("C", "c only"), ("D", "d only")]
+        # NULL text has no digest: it counts on no host, whether fewer
+        # hosts than the cap hold it (A, B) or more (A-E)
+        + [("A", None), ("B", None)]
     )
     df = spark.createDataFrame(rows, "host string, text string")
-    got = {
-        (r.host_a, r.host_b): (r.shared, r.n_a, r.n_b, r.jaccard)
-        for r in host_mirror_pairs(df, max_hosts_per_digest=3).collect()
-    }
-    # jaccard over digest sets WITHOUT the boilerplate: 2 / (3 + 2 - 2)
-    assert got == {("A", "B"): (2, 3, 2, round(2 / 3, 6))}
+    wide = spark.createDataFrame(rows + [(h, None) for h in "CDE"], "host string, text string")
+    for pages in (df, wide):
+        got = {
+            (r.host_a, r.host_b): (r.shared, r.n_a, r.n_b, r.jaccard)
+            for r in host_mirror_pairs(pages, max_hosts_per_digest=3).collect()
+        }
+        # jaccard over digest sets WITHOUT the boilerplate: 2 / (3 + 2 - 2)
+        assert got == {("A", "B"): (2, 3, 2, round(2 / 3, 6))}
+
+
+def test_minhash_all_duplicate_corpus_is_one_quadratic_block(spark):
+    # co_key_pairs' uncapped giant-block contract: n identical documents
+    # share every LSH band, so all n(n-1)/2 pairs come back, each exact
+    docs = spark.range(100).selectExpr("id AS doc_id", "'one two three four five six' AS text")
+    rows = dedup.minhash_dup_pairs(docs, "doc_id", "text", threshold=0.8).collect()
+    assert len({(r.id_a, r.id_b) for r in rows}) == len(rows) == 4950
+    assert {r.jaccard for r in rows} == {1.0}
+    assert all(r.id_a < r.id_b for r in rows)
 
 
 def test_dup_profile_histogram(spark):

@@ -1,16 +1,26 @@
 """The one checkpoint primitive (materialize.ckpt) and its counted form
-(ckpt_stats), the one driver-rows primitive (local_table), guards that keep
-them — and pipeline's two triple chains — the only ones, and the
-global-rank primitive built on ckpt (with_rank)."""
+(ckpt_stats), the one driver-rows primitive (local_table), the one blocking
+self-join (co_key_pairs) and its cap (cap_blocks), guards that keep them —
+and pipeline's two triple chains — the only ones, and the global-rank
+primitive built on ckpt (with_rank)."""
 
 import ast
 import pathlib
+import random
+from collections import Counter, defaultdict
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from autoextraction_spark.materialize import ckpt, ckpt_stats, local_table, with_rank
+from autoextraction_spark.materialize import (
+    cap_blocks,
+    ckpt,
+    ckpt_stats,
+    co_key_pairs,
+    local_table,
+    with_rank,
+)
 from autoextraction_spark.operators import graph
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -117,6 +127,63 @@ def test_with_rank_stays_jvm_side(spark):
     assert [r.k for r in rows] == sorted(r.k for r in rows)
 
 
+BLOCK_DDL = "id long, k1 string, k2 int, p string"
+
+
+def _block_rows(seed: int) -> list[tuple]:
+    """Small keyed rows with colliding multi-column keys, NULL keys, NULL
+    ids and repeated rows."""
+    rng = random.Random(seed)
+    rows = [
+        (
+            rng.choice([None, *range(12)]),
+            rng.choice([None, "x", "y", "z"]),
+            rng.randrange(3),
+            rng.choice(["p", "q"]),
+        )
+        for _ in range(40)
+    ]
+    return rows + rows[:5]
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_co_key_pairs_matches_brute_force(spark, seed):
+    rows = _block_rows(seed)
+    got = co_key_pairs(local_table(spark, rows, BLOCK_DDL), "id", ["k1", "k2"])
+    assert got.columns == ["id_a", "id_b", "k1", "k2", "p_a", "p_b"]
+    want = Counter(
+        (a[0], b[0], a[1], a[2], a[3], b[3])
+        for a in rows
+        for b in rows
+        if None not in (a[0], b[0], a[1], b[1]) and a[0] < b[0] and a[1:3] == b[1:3]
+    )
+    assert Counter(tuple(r) for r in got.collect()) == want
+    assert sum(want.values()) > 0
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("max_block", [1, 2, 3])
+def test_cap_blocks_matches_brute_force(spark, seed, max_block):
+    rows = _block_rows(seed)
+    got = cap_blocks(local_table(spark, rows, BLOCK_DDL), ["k1", "k2"], max_block)
+    distinct = {r for r in rows if r[1] is not None}
+    size = Counter(r[1:3] for r in distinct)
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        (r for r in distinct if size[r[1:3]] <= max_block), key=repr
+    )
+
+
+def test_cap_blocks_boundary_and_duplicates(spark):
+    # block "a": exactly 3 distinct rows, one of them repeated -> kept;
+    # block "b": 4 distinct rows -> dropped; NULL keys never survive
+    rows = [(1, "a"), (2, "a"), (3, "a"), (3, "a"), (3, "a")]
+    rows += [(i, "b") for i in range(4)] + [(7, None), (8, None)]
+    got = cap_blocks(local_table(spark, rows, "id long, k string"), ["k"], 3)
+    assert sorted(tuple(r) for r in got.collect()) == [(1, "a"), (2, "a"), (3, "a")]
+    pairs = co_key_pairs(got, "id", ["k"]).select("id_a", "id_b").collect()
+    assert sorted(tuple(r) for r in pairs) == [(1, 2), (1, 3), (2, 3)]
+
+
 def _library_sources():
     yield from sorted((ROOT / "autoextraction_spark").rglob("*.py"))
     yield ROOT / "__spark_entry__.py"
@@ -154,6 +221,96 @@ def _enclosing_def(parents, node):
     while node in parents and not isinstance(node, ast.FunctionDef):
         node = parents[node]
     return getattr(node, "name", None)
+
+
+def _top_def(parents, node):
+    name = None
+    while node in parents:
+        node = parents[node]
+        if isinstance(node, ast.FunctionDef):
+            name = node.name
+    return name
+
+
+def _is_col_ref(node) -> bool:
+    """``F.col("x")``, ``col("x")`` or ``df["x"]``."""
+    if isinstance(node, ast.Call):
+        return (getattr(node.func, "attr", None) or getattr(node.func, "id", None)) == "col"
+    return isinstance(node, ast.Subscript) and isinstance(
+        getattr(node.slice, "value", None), str
+    )
+
+
+def _receiver_calls(call: ast.Call):
+    """Method names of the calls below ``call`` in its receiver chain."""
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute, ast.Subscript)):
+        if isinstance(node, ast.Call):
+            if not isinstance(node.func, ast.Attribute):
+                return
+            yield node.func.attr
+            node = node.func
+        node = node.value
+
+
+#: (file, top-level function) whose ordered column comparisons in a join are
+#: not blocking self-joins
+ORDERED_JOINS_ALLOWED = {
+    # an asymmetric probe: new docs against index ∪ earlier new docs
+    ("dedup.py", "incremental_minhash_dedup"),
+    # the relaxation keeps a strictly cheaper cost
+    ("graph.py", "weighted_shortest_paths"),
+    # large-star: neighbours above a node attach to its neighbourhood min
+    ("canonicalize.py", "_large_star"),
+    # the keyless cross product of the few sketch groups
+    ("sketch.py", "kmv_jaccard"),
+    # event-time order: a later funnel step, a purchase after a signup
+    ("__spark_entry__.py", "q_event_funnel"),
+    ("__spark_entry__.py", "q_cooccur_pairs"),
+}
+
+
+def test_no_ordered_pair_join_outside_materialize():
+    # an `id_a < id_b` pair join is a blocking self-join: it goes through
+    # co_key_pairs, whose docstring states what a giant block costs
+    hits = set()
+    for path in _library_sources():
+        if path.name in ("materialize.py", "oracle.py"):
+            continue
+        tree = ast.parse(path.read_text())
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        assigned = defaultdict(list)
+        for a in ast.walk(tree):
+            if isinstance(a, ast.Assign):
+                for t in a.targets:
+                    assigned[_top_def(parents, a), getattr(t, "id", None)].append(a.value)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            method = node.func.attr
+            if method != "join" and not (
+                method in ("filter", "where") and "join" in _receiver_calls(node)
+            ):
+                continue
+            fn = _top_def(parents, node)
+            args = [*node.args, *(k.value for k in node.keywords)]
+            # a condition built first (`cond = ...; a.join(b, cond)`)
+            args += [v for a in args if isinstance(a, ast.Name) for v in assigned[fn, a.id]]
+            for arg in args:
+                for cmp in ast.walk(arg):
+                    if not isinstance(cmp, ast.Compare):
+                        continue
+                    sides = [cmp.left, *cmp.comparators]
+                    if any(
+                        isinstance(op, (ast.Lt, ast.Gt))
+                        and _is_col_ref(x) and _is_col_ref(y)
+                        for op, x, y in zip(cmp.ops, sides, sides[1:])
+                    ):
+                        hits.add((path.name, fn, cmp.lineno))
+    offenders = sorted(h for h in hits if h[:2] not in ORDERED_JOINS_ALLOWED)
+    assert offenders == []
+    # every allowed function still holds such a join: the list stays exact
+    assert {h[:2] for h in hits} == ORDERED_JOINS_ALLOWED
 
 
 def test_no_checkpoint_outside_materialize():
