@@ -3088,8 +3088,9 @@ def _detected_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rl_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E13 experience collection: one Arrow pass over the detection gate
-    emits the replay-buffer table (ε = 0, zero-init weights → sequence
-    ordering; relations only so the oracle stays two-step)."""
+    emits the replay-buffer table (ε = 0 under the default ``sequence``
+    policy, which is what zero-init weights pick; relations only so the
+    oracle stays two-step)."""
     tr = rl_train.generate_transitions(_detected_relations(spark, sf_dir))
     return tr.select(
         "url", "rel", "step", "given", "action",
@@ -3101,7 +3102,7 @@ def q_rl_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rl_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E13 over the 3-role EVENT episodes (en + zh): the arity-3 fork path
-    of experience collection, sequence-ordered under ε = 0 / zero weights."""
+    of experience collection, sequence-ordered under ε = 0."""
     txt = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
     det = detect.detect_relations(txt).filter(F.col("rel").isin(KS.EVENT_NAMES))
     tr = rl_train.generate_transitions(det)

@@ -92,10 +92,8 @@ def _gen(with_text: bool, emit_html: bool = True):
 def web_pages(
     spark: SparkSession,
     sf_dir: str,
-    replicate: int = 1,
     with_text: bool = False,
     emit_html: bool = True,
-    where=None,
 ) -> DataFrame:
     """Synthesize the input table from the documents skeleton at ``sf_dir``.
 
@@ -105,10 +103,7 @@ def web_pages(
     reads pages from storage and extracts in ONE python stage, and fusing
     the (sandbox-only) generator with extraction restores that production
     python-op depth — the html bytes otherwise cross the Arrow boundary
-    twice, which measurably caps throughput. ``replicate=k`` scales the
-    corpus k× for load/scaling runs: replica r shifts ids by r·(max_id+1),
-    producing distinct urls AND distinct facts (all content is doc_id
-    arithmetic).
+    twice, which measurably caps throughput.
 
     ``emit_html=False`` omits the ``html`` column from the OUTPUT (the bytes
     are still built internally when extraction needs them). ``mapInPandas``
@@ -117,7 +112,7 @@ def web_pages(
     column — so every consumer that only wants extracted text should ask for
     the html-free schema here instead of dropping the column after.
     """
-    skel = doc_skeleton(spark, sf_dir, replicate, where=where)
+    skel = doc_skeleton(spark, sf_dir)
     return pages_from_skeleton(skel, with_text=with_text, emit_html=emit_html)
 
 
@@ -216,6 +211,10 @@ def doc_skeleton(
     bootstrap (tiny parquet read, repartition shuffle, max-id agg, replica
     explode) is sandbox scaffolding standing in for "the crawl is already in
     storage", not pipeline work.
+
+    ``replicate=k`` scales the corpus k× for load/scaling runs: replica r
+    shifts ids by r·(max_id+1), producing distinct urls AND distinct facts
+    (all content is doc_id arithmetic).
 
     The read declares ``doc_id long, lang string`` (``_read_skeleton``), so
     planning it runs no Spark job; a file without an integer ``doc_id`` or

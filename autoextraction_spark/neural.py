@@ -14,15 +14,16 @@ RL_utils/dqn.py:43-69). The repo's documented swap seams are:
   ``ordered_slot_fill(policy=...)`` call.
 
 This module proves those seams carry a non-linear model for real (verdict
-r3 item 3): ``MLPQ`` is a tanh-hidden-layer Q-head over ``featurize``;
-``fit_mlp_q`` trains it with the fitted-Q loop shape of
-``rl_train.fitted_q_train`` (generations of on-policy ε-greedy rollout →
-distributed TD pass → prioritized exponential-race minibatch → driver SGD
-step → periodic target sync); the TD pass is a ``mapInPandas`` job whose
-worker function deserializes the model ONCE per python worker before
-iterating Arrow batches (the iterator-UDF init pattern a torch model would
-use — swap ``MLPQ.from_json`` for ``torch.load`` and ``forward`` for the
-module call, and this file is the complete integration recipe).
+r3 item 3): ``MLPQ`` is a tanh-hidden-layer Q-head over ``featurize``. It
+trains through ``rl_train.fitted_q_train`` — the same loop as the linear
+head (generations of on-policy ε-greedy rollout → distributed TD pass →
+prioritized exponential-race minibatch → driver SGD step → periodic target
+sync, resumable from a workdir) — supplying only its own TD pass and SGD
+step. The TD pass is a ``mapInPandas`` job whose worker function
+deserializes the model ONCE per python worker before iterating Arrow
+batches (the iterator-UDF init pattern a torch model would use — swap
+``MLPQ.from_json`` for ``torch.load`` and ``forward`` for the module call,
+and this file is the complete integration recipe).
 
 numpy is the stand-in for torch (no GPU in this environment); the math is
 an ordinary MSE fitted-Q step, not a port of any reference code.
@@ -31,18 +32,14 @@ an ordinary MSE fitted-Q step, not a port of any reference code.
 from __future__ import annotations
 
 import json
-import zlib
 from collections.abc import Iterator
 from functools import lru_cache
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 from . import scorers
-
-GAMMA = 0.5  # same discount as the linear trainer (DQN.py:122)
 
 
 class MLPQ:
@@ -71,10 +68,78 @@ class MLPQ:
         h = np.tanh(phi @ self.w1.T + self.b1)
         return h @ self.w2 + self.b2
 
-    def grad_step(self, phi: np.ndarray, err: np.ndarray, lr: float) -> float:
+    def policy(self) -> str:
+        """Deployable policy string — same contract as rl_train.learned_policy."""
+        return "mlp:" + self.to_json()
+
+    def td_errors(self, buf: DataFrame, target: "MLPQ", gamma: float) -> DataFrame:
+        """Distributed TD pass: one ``mapInPandas`` job emits the TD error
+        of EVERY buffered transition (``url, rel, step, given, action,
+        feats, err``); rl_train.train_dqn samples the minibatch from it.
+
+        Worker-side batching: per Arrow batch, all q_pred features stack
+        into ONE forward, and all (fork, choice) next-state features across
+        the batch flatten into ONE target-net forward followed by a segment
+        max/mean — never a per-row model call.
+        """
+        m_blob, t_blob = self.to_json(), target.to_json()
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            # one-time per-worker model init (torch.load would live here)
+            m = MLPQ.from_json(m_blob)
+            t = MLPQ.from_json(t_blob)
+            for pdf in batches:
+                n = len(pdf)
+                if n == 0:
+                    continue
+                phi = np.asarray([list(v) for v in pdf["feats"]], dtype=float)
+                q_pred = m.forward(phi)
+                # flatten every next-state choice vector in the batch
+                flat: list[list[float]] = []
+                row_of: list[int] = []
+                fork_of: list[int] = []
+                fork_counts = np.zeros(n)
+                for i, nf in enumerate(pdf["next_feats"]):
+                    fork_counts[i] = len(nf)
+                    for j, choices in enumerate(nf):
+                        for v in choices:
+                            flat.append(list(v))
+                            row_of.append(i)
+                            fork_of.append(j)
+                next_q = np.zeros(n)
+                if flat:
+                    qs = t.forward(np.asarray(flat, dtype=float))
+                    # max over choices within a fork, then mean over forks
+                    fork_max: dict[tuple[int, int], float] = {}
+                    for q, i, j in zip(qs, row_of, fork_of):
+                        key = (i, j)
+                        if key not in fork_max or q > fork_max[key]:
+                            fork_max[key] = q
+                    sums = np.zeros(n)
+                    for (i, _j), q in fork_max.items():
+                        sums[i] += q
+                    nz = fork_counts > 0
+                    next_q[nz] = sums[nz] / fork_counts[nz]
+                tgt = pdf["reward"].to_numpy(dtype=float) + gamma * next_q * (
+                    1.0 - pdf["done"].to_numpy(dtype=float)
+                )
+                out = pdf[["url", "rel", "step", "given", "action", "feats"]].copy()
+                out["err"] = q_pred - tgt
+                yield out
+
+        return buf.mapInPandas(
+            run,
+            schema="url string, rel string, step int, given string, "
+            "action string, feats array<double>, err double",
+        )
+
+    def grad_step(self, phi, err, lr: float) -> float:
         """One SGD step on unweighted MSE of the TD errors (the reference
         computes importance ratios but does not fold them into the loss —
-        rl_train.py reproduces that; so does this). Returns the batch loss."""
+        rl_train.py reproduces that; so does this). ``phi`` and ``err`` may
+        be arrays or lists. Returns the batch loss."""
+        phi = np.asarray(phi, dtype=float)
+        err = np.asarray(err, dtype=float)
         n = len(err)
         z1 = phi @ self.w1.T + self.b1
         h = np.tanh(z1)
@@ -118,151 +183,6 @@ class MLPQ:
         return m
 
 
-def mlp_policy(model: MLPQ) -> str:
-    """Deployable policy string — same contract as rl_train.learned_policy."""
-    return "mlp:" + model.to_json()
-
-
 @lru_cache(maxsize=8)
 def parse_mlp(blob: str) -> MLPQ:
     return MLPQ.from_json(blob)
-
-
-def _hash_u(*parts: object) -> float:
-    key = "\x1f".join(str(p) for p in parts).encode("utf-8")
-    return zlib.crc32(key) / 2**32
-
-
-def _td_minibatch(
-    transitions: DataFrame,
-    model: MLPQ,
-    target: MLPQ,
-    gamma: float,
-    batch_size: int,
-    seed: int,
-    it: int,
-) -> list[tuple[np.ndarray, float]]:
-    """Distributed TD pass for the MLP: one ``mapInPandas`` job computes the
-    TD error of EVERY buffered transition and the exponential-race priority
-    key; the driver collects only the top-B minibatch (exactly the linear
-    trainer's shape, rl_train.train_dqn, with the codegen dot products
-    replaced by batched model forwards).
-
-    Worker-side batching: per Arrow batch, all q_pred features stack into
-    ONE forward, and all (fork, choice) next-state features across the batch
-    flatten into ONE target-net forward followed by a segment max/mean —
-    never a per-row model call.
-    """
-    m_blob, t_blob = model.to_json(), target.to_json()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one-time per-worker model init (torch.load would live here)
-        m = MLPQ.from_json(m_blob)
-        t = MLPQ.from_json(t_blob)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            phi = np.asarray([list(v) for v in pdf["feats"]], dtype=float)
-            q_pred = m.forward(phi)
-            # flatten every next-state choice vector in the batch
-            flat: list[list[float]] = []
-            row_of: list[int] = []
-            fork_of: list[int] = []
-            fork_counts = np.zeros(n)
-            for i, nf in enumerate(pdf["next_feats"]):
-                fork_counts[i] = len(nf)
-                for j, choices in enumerate(nf):
-                    for v in choices:
-                        flat.append(list(v))
-                        row_of.append(i)
-                        fork_of.append(j)
-            next_q = np.zeros(n)
-            if flat:
-                qs = t.forward(np.asarray(flat, dtype=float))
-                # max over choices within a fork, then mean over forks
-                fork_max: dict[tuple[int, int], float] = {}
-                for q, i, j in zip(qs, row_of, fork_of):
-                    key = (i, j)
-                    if key not in fork_max or q > fork_max[key]:
-                        fork_max[key] = q
-                sums = np.zeros(n)
-                for (i, _j), q in fork_max.items():
-                    sums[i] += q
-                nz = fork_counts > 0
-                next_q[nz] = sums[nz] / fork_counts[nz]
-            tgt = pdf["reward"].to_numpy(dtype=float) + gamma * next_q * (
-                1.0 - pdf["done"].to_numpy(dtype=float)
-            )
-            err = q_pred - tgt
-            race = np.empty(n)
-            for i, (url, rel, step, given, action) in enumerate(
-                zip(pdf["url"], pdf["rel"], pdf["step"], pdf["given"], pdf["action"])
-            ):
-                u = _hash_u(seed, it, url, rel, step, given, action)
-                race[i] = -np.log(u + 1e-12) / (abs(err[i]) + 1e-3)
-            yield pd.DataFrame(
-                {"race": race, "err": err, "feats": list(pdf["feats"])}
-            )
-
-    scored = transitions.mapInPandas(
-        run, schema="race double, err double, feats array<double>"
-    )
-    rows = scored.orderBy("race").limit(batch_size).collect()
-    return [
-        (np.asarray(r["feats"], dtype=float), float(r["err"])) for r in rows
-    ]
-
-
-def fit_mlp_q(
-    detected: DataFrame,
-    n_generations: int = 2,
-    iters_per_gen: int = 15,
-    epsilon0: float = 0.5,
-    epsilon_decay: float = 0.95,
-    gold: DataFrame | None = None,
-    reward_mode: str = "lookahead",
-    gamma: float = GAMMA,
-    lr: float = 0.05,
-    batch_size: int = 32,
-    target_update: int = 5,
-    hidden: int = 16,
-    seed: int = 0,
-) -> tuple[MLPQ, list[dict]]:
-    """fitted_q_train's loop shape with the non-linear head: per generation,
-    roll out ε-greedy ON-POLICY (exploitation through the deployable
-    ``mlp:`` string — the same choose_slot door inference uses), then run
-    fitted-Q iterations of distributed-TD → race-minibatch → SGD with a
-    target net synced every ``target_update`` iterations."""
-    from .operators import rl_train
-
-    model = MLPQ.init(hidden=hidden, seed=seed)
-    history: list[dict] = []
-    eps = epsilon0
-    for g in range(n_generations):
-        trans = rl_train.generate_transitions(
-            detected, epsilon=eps, seed=seed + g, gold=gold,
-            reward_mode=reward_mode, policy=mlp_policy(model),
-        ).select("url", "rel", "step", "given", "action", "reward", "done",
-                 "feats", "next_feats")
-        trans = trans.persist(StorageLevel.DISK_ONLY)
-        trans.count()
-        target = model.copy()
-        for it in range(iters_per_gen):
-            batch = _td_minibatch(
-                trans, model, target, gamma, batch_size, seed + g, it
-            )
-            if not batch:
-                break
-            phi = np.stack([b[0] for b in batch])
-            err = np.asarray([b[1] for b in batch])
-            loss = model.grad_step(phi, err, lr)
-            history.append(
-                {"generation": g, "iter": it, "loss": loss,
-                 "mean_abs_td": float(np.abs(err).mean()), "epsilon": eps}
-            )
-            if (it + 1) % target_update == 0:
-                target = model.copy()
-        trans.unpersist()
-        eps *= epsilon_decay
-    return model, history

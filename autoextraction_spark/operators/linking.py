@@ -99,9 +99,11 @@ def variant_edges(mentions: DataFrame) -> DataFrame:
 
 #: Driver fast-path bounds for canonical_mapping: the vocab must fit in
 #: this many estimated driver bytes AND the blocked pair budget (Σ over
-#: buckets of |bucket|²) must stay below _DRIVER_MAP_MAX_PAIRS — a
-#: pathologically hot block falls back to the distributed join, which
-#: produces the same pairs with AQE skew handling.
+#: buckets of |bucket|²) must stay below _DRIVER_MAP_MAX_PAIRS. A
+#: pathologically hot block falls back to ``variant_edges``' uncapped
+#: ``co_key_pairs`` self-join: the same pairs, at Σ|block|² join rows that
+#: AQE spreads over tasks but does not bound (``co_key_pairs``' giant-block
+#: contract).
 _DRIVER_MAP_MAX_BYTES = 16 * 2**20
 _DRIVER_MAP_MAX_PAIRS = 2_000_000
 #: CPython object overhead per vocab row (str headers + tuple/dict slots).

@@ -25,17 +25,22 @@ Spark-first reframing (NOT a port — no SumTree, no parameter server):
   machinery as the inference path) and emits a typed transitions table with
   the state-action feature vector AND every (next-state, choice) feature
   vector precomputed — so training never touches text again.
-- **Q is linear over hashed state-action features** (``scorers.featurize``
-  — the sandbox has no GPU; the feature map is the documented swap seam
-  for a neural encoder, exactly like ``scorers.batch_step``).
-- **One training iteration = broadcast weights → distributed TD pass →
-  tiny-minibatch SGD step.** Weights enter the plan as literal arrays
-  (D ≈ 20 doubles — cheaper than a broadcast var), the TD target/error for
-  EVERY buffered transition is pure-codegen array math (``zip_with`` dot
-  products, ``array_max``, ``aggregate`` — no Python in the scoring pass),
-  and the γ-discounted target uses the PREVIOUS broadcast's weights: the
-  target network of fitted-Q iteration is "the weights from the last sync",
-  which is precisely what a periodically-synced target net is.
+- **Two Q heads, one loop.** A head is any object with ``copy``,
+  ``policy``, ``td_errors``, ``grad_step``, ``to_json`` and ``from_json``:
+  ``LinearQ`` here (linear over the hashed ``scorers.featurize`` features)
+  and ``neural.MLPQ`` (a tanh MLP over the same features). The head
+  supplies only its TD pass and its driver-side SGD step; the rollout
+  (``generate_transitions``, exploiting through ``scorers.choose_slot``
+  under ``head.policy()``), the race sampler and target sync
+  (``train_dqn``) and the resumable generations (``fitted_q_train``) are
+  written once. The heads differ in which side of the Python boundary the
+  TD pass runs on: the linear head's weights enter the plan as literal
+  arrays (D ≈ 20 doubles — cheaper than a broadcast var) and its TD
+  target/error for EVERY buffered transition is pure-codegen array math
+  (``zip_with`` dot products, ``array_max``, ``aggregate``); the MLP's is
+  one batched-forward ``mapInPandas`` pass. Either way the γ-discounted
+  target uses the target head — "the weights from the last sync", which is
+  precisely what a periodically-synced target net is.
 - **Prioritized replay = exponential-race weighted sampling.** Sampling
   ∝ priority without replacement at any scale: key_i = -ln(u_i)/w_i with a
   deterministic per-(row, iteration) hash u_i, take the B smallest
@@ -59,7 +64,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import math
 import os
 import time
 import zlib
@@ -72,7 +76,6 @@ from pyspark.sql.column import Column
 from pyspark.storagelevel import StorageLevel
 
 from .. import scorers
-from .. import schema as S
 from .slot_fill import initial_remaining
 
 TRANSITION_SCHEMA = (
@@ -126,31 +129,20 @@ def _egreedy(
     lang: str,
     assigned: dict[str, str],
     remaining: list[str],
-    weights: list[float],
+    policy: str,
     epsilon: float,
     seed: int,
     url: str,
     step: int,
-    policy: str | None = None,
 ) -> str:
     """ε-greedy action over the Q function — ``dqn.py:43-48`` with the
     random draws made reproducible (hash of the full state identity + seed).
-    Exploitation uses the linear Q over ``weights`` by default; passing a
-    ``policy`` string instead routes through ``scorers.choose_slot`` so
-    rollouts can run under ANY deployable policy (``learned:``/``mlp:`` —
-    the non-linear swap seam trains on-policy through the same door it
-    deploys through)."""
+    Exploitation goes through ``scorers.choose_slot`` under ``policy``, so a
+    head trains on-policy through the same door it deploys through."""
     if epsilon > 0.0 and _hash_u("explore", seed, url, rel, step, *sorted(assigned.items())) < epsilon:
         pick = _hash_u("pick", seed, url, rel, step, *sorted(assigned.items()))
         return remaining[int(pick * len(remaining)) % len(remaining)]
-    if policy is not None:
-        return scorers.choose_slot(text, rel, lang, assigned, remaining, policy)
-    best_i, best_q = 0, float("-inf")
-    for i, slot in enumerate(remaining):
-        q = scorers.linear_q(weights, text, rel, lang, assigned, slot)
-        if q > best_q:  # first-max tie-break, like torch.argmax
-            best_i, best_q = i, q
-    return remaining[best_i]
+    return scorers.choose_slot(text, rel, lang, assigned, remaining, policy)
 
 
 def _episode_transitions(
@@ -158,13 +150,12 @@ def _episode_transitions(
     rel: str,
     text: str,
     lang: str,
-    weights: list[float],
+    policy: str,
     epsilon: float,
     seed: int,
     gold: list[dict[str, str]] | None,
     reward_mode: str,
     max_steps: int,
-    policy: str | None = None,
 ) -> list[tuple]:
     """Run ONE ε-greedy episode (all forks) and return its transition rows.
 
@@ -179,8 +170,8 @@ def _episode_transitions(
             if not remaining or step >= max_steps:
                 continue
             action = _egreedy(
-                text, rel, lang, assigned, remaining, weights, epsilon, seed,
-                url, step, policy,
+                text, rel, lang, assigned, remaining, policy, epsilon, seed,
+                url, step,
             )
             cands = scorers.extract_candidates(text, rel, lang, assigned, action)
             if reward_mode == "lookahead" and gold is not None:
@@ -218,24 +209,23 @@ def _episode_transitions(
 
 def generate_transitions(
     detected: DataFrame,
-    weights: list[float] | None = None,
+    policy: str = "sequence",
     epsilon: float = 0.0,
     seed: int = 0,
     gold: DataFrame | None = None,
     reward_mode: str = "step",
     max_steps: int = 20,
-    policy: str | None = None,
 ) -> DataFrame:
     """E13: one Arrow pass (detection gate → transitions table).
 
     ``detected``: (url, rel, text, lang, ...) from ``detect_relations``.
+    ``policy``: the deployable policy string the exploitation branch follows
+    (``head.policy()`` while training; ``sequence`` is what an untrained
+    zero-weight head picks, first-max on all-equal Q).
     ``gold``: optional (url, rel, slots map<string,string>) tuples for the
     two-step-lookahead shaped reward (``reward_mode='lookahead'``, E7);
     joined once before the pass — gold rows are tiny next to text.
-    ``policy``: optional deployable policy string for the exploitation
-    branch (``learned:``/``mlp:``) — overrides the linear ``weights``.
     """
-    w = list(weights) if weights is not None else [0.0] * scorers.FEATURE_DIM
     cols = ["url", "rel", "text", "lang"]
     if gold is not None and reward_mode == "lookahead":
         gold_sets = gold.groupBy("url", "rel").agg(
@@ -256,8 +246,8 @@ def generate_transitions(
                     g = [dict(m) for m in tup.gold_slots]
                 rows.extend(
                     _episode_transitions(
-                        tup.url, tup.rel, tup.text, tup.lang, w, epsilon,
-                        seed, g, reward_mode, max_steps, policy
+                        tup.url, tup.rel, tup.text, tup.lang, policy, epsilon,
+                        seed, g, reward_mode, max_steps,
                     )
                 )
             yield pd.DataFrame(
@@ -312,39 +302,82 @@ def td_columns(
     return transitions.withColumn("q_pred", q_pred).withColumn("td_target", target)
 
 
+class LinearQ:
+    """q(s, a) = w · φ(s, a): the linear head. Its TD pass is codegen
+    (``td_columns``); its SGD step is a driver loop over the B-row
+    minibatch."""
+
+    def __init__(self, w: list[float]):
+        self.w = list(w)
+
+    @classmethod
+    def zeros(cls) -> "LinearQ":
+        return cls([0.0] * scorers.FEATURE_DIM)
+
+    def copy(self) -> "LinearQ":
+        return LinearQ(self.w)
+
+    def policy(self) -> str:
+        return learned_policy(self.w)
+
+    def td_errors(self, buf: DataFrame, target: "LinearQ", gamma: float) -> DataFrame:
+        scored = td_columns(buf, self.w, target.w, gamma)
+        return scored.withColumn("err", F.col("q_pred") - F.col("td_target"))
+
+    def grad_step(self, feats: list[list[float]], errs: list[float], lr: float) -> float:
+        """One SGD step on unweighted MSE (``dqn.py:154-160``); returns the
+        batch loss."""
+        n = len(errs)
+        grad = [0.0] * len(self.w)
+        loss = 0.0
+        for e, f in zip(errs, feats):
+            loss += e * e
+            for j, fj in enumerate(f):
+                grad[j] += 2.0 * e * fj
+        self.w = [wj - lr * gj / n for wj, gj in zip(self.w, grad)]
+        return loss / n
+
+    def to_json(self) -> str:
+        return json.dumps(self.w)
+
+    @classmethod
+    def from_json(cls, blob: str) -> "LinearQ":
+        return cls(json.loads(blob))
+
+
 def train_dqn(
     transitions: DataFrame,
+    model=None,
     n_iters: int = 50,
     lr: float = 0.05,
     gamma: float = GAMMA,
     batch_size: int = BATCH_SZ,
     target_update: int = TARGET_UPDATE,
     seed: int = 0,
-    init_weights: list[float] | None = None,
-) -> tuple[list[float], list[dict]]:
-    """E14: fitted-Q iterations over the buffered transitions.
+):
+    """E14: fitted-Q iterations over the buffered transitions, for any head
+    (``model``; None is a zero ``LinearQ``; the caller's head is not
+    modified).
 
-    Per iteration: ONE distributed job — TD errors for every buffered row
-    against the broadcast (current, target) weights, prioritized minibatch
+    Per iteration: ONE distributed job — the head's TD errors for every
+    buffered row against (current, target) heads, prioritized minibatch
     selection via the exponential race (key = -ln(u)/|td|, deterministic u
-    per (row, iteration)), sort-limit B — then an SGD step on the driver
-    (unweighted MSE, ``dqn.py:154-160``). Target weights sync every
+    per (row, iteration)), sort-limit B — then the head's SGD step on the
+    driver (unweighted MSE, ``dqn.py:154-160``). The target head syncs every
     ``target_update`` iterations (``DQN.py:152-153``).
 
-    Returns (weights, history) where history has one row per iteration:
+    Returns (model, history) where history has one row per iteration:
     {iter, loss, mean_abs_td, batch}.
     """
-    D = scorers.FEATURE_DIM
-    w = list(init_weights) if init_weights is not None else [0.0] * D
-    w_target = list(w)
+    model = (model or LinearQ.zeros()).copy()
+    target = model.copy()
     buf = transitions.select("url", "rel", "step", "given", "action",
                              "reward", "done", "feats", "next_feats")
     buf = buf.persist(StorageLevel.DISK_ONLY)
     history: list[dict] = []
     for it in range(n_iters):
-        scored = td_columns(buf, w, w_target, gamma)
-        td_err = F.col("q_pred") - F.col("td_target")
-        priority = F.abs(td_err) + F.lit(PRIORITY_EPS)
+        scored = model.td_errors(buf, target, gamma)
+        priority = F.abs(F.col("err")) + F.lit(PRIORITY_EPS)
         # deterministic uniform per (row identity, iteration)
         u = (
             F.conv(
@@ -365,9 +398,7 @@ def train_dqn(
         )
         race = -F.log(u + F.lit(1e-12)) / priority
         batch = (
-            scored.select(
-                race.alias("race"), td_err.alias("err"), "feats",
-            )
+            scored.select(race.alias("race"), "err", "feats")
             .orderBy("race")
             .limit(batch_size)
             .collect()
@@ -375,29 +406,21 @@ def train_dqn(
         if not batch:
             break
         n = len(batch)
-        grad = [0.0] * D
-        loss = 0.0
-        abs_td = 0.0
-        for row in batch:
-            e = float(row["err"])
-            loss += e * e
-            abs_td += abs(e)
-            for j, fj in enumerate(row["feats"]):
-                grad[j] += 2.0 * e * fj
-        loss /= n
-        abs_td /= n
-        w = [wj - lr * gj / n for wj, gj in zip(w, grad)]
+        errs = [float(row["err"]) for row in batch]
+        loss = model.grad_step([row["feats"] for row in batch], errs, lr)
         history.append(
-            {"iter": it, "loss": loss, "mean_abs_td": abs_td, "batch": n}
+            {"iter": it, "loss": loss,
+             "mean_abs_td": sum(abs(e) for e in errs) / n, "batch": n}
         )
         if (it + 1) % target_update == 0:
-            w_target = list(w)
+            target = model.copy()
     buf.unpersist()
-    return w, history
+    return model, history
 
 
 def fitted_q_train(
     detected: DataFrame,
+    model=None,
     n_generations: int = 3,
     iters_per_gen: int = 20,
     epsilon0: float = 0.9,
@@ -408,29 +431,31 @@ def fitted_q_train(
     workdir: str | None = None,
     resume: bool = True,
     **train_kw,
-) -> tuple[list[float], list[dict]]:
-    """Outer loop: regenerate experience under the improved policy with
-    decayed ε (the on-policy dimension of DQN.py:125-160; ε ×
+):
+    """Outer loop: regenerate experience under the improved head's policy
+    with decayed ε (the on-policy dimension of DQN.py:125-160; ε ×
     ``epsilon_decay`` per generation ≡ ``explore_update``, dqn.py:143),
-    then run ``iters_per_gen`` fitted-Q iterations.
+    then run ``iters_per_gen`` fitted-Q iterations. ``model`` is the
+    initial head (None is a zero ``LinearQ``). Returns (model, history).
 
     ``workdir`` makes training RESUMABLE with the same manifest scheme as
     the extraction pipeline (pipeline.KgPipeline; the reference checkpoints
     weights every ``iters_save`` episodes, DQN.py:155-156): per generation,
     the rollout's transitions land as a parquet checkpoint with per-partition
-    lineage, and the trained weights + loss history land in a manifest whose
-    config FINGERPRINT chains through all prior generations — a killed job
-    re-runs only unfinished generations, and any config change (seed, ε
-    schedule, reward mode, optimizer knobs) invalidates everything
-    downstream instead of silently resuming stale state."""
-    w: list[float] | None = None
+    lineage, and the trained head (``to_json``) + loss history land in a
+    manifest whose config FINGERPRINT chains through all prior generations
+    from the initial head's JSON — a killed job re-runs only unfinished
+    generations, and any config change (initial head, seed, ε schedule,
+    reward mode, optimizer knobs) invalidates everything downstream instead
+    of silently resuming stale state."""
+    model = model or LinearQ.zeros()
     history: list[dict] = []
     eps = epsilon0
     if workdir:
         os.makedirs(workdir, exist_ok=True)
     from .. import pipeline
 
-    fp = ""
+    fp = model.to_json()
     for g in range(n_generations):
         cfg = (
             f"{g}|{seed}|{eps:.6f}|{iters_per_gen}|{reward_mode}|"
@@ -444,13 +469,13 @@ def fitted_q_train(
             with open(manifest_path) as f:
                 m = json.load(f)
             if m.get("fingerprint") == fp:
-                w = m["weights"]
+                model = model.from_json(m["model"])
                 history.extend(m["history"])
                 eps *= epsilon_decay
                 continue
         t0 = time.time()
         trans = generate_transitions(
-            detected, w, epsilon=eps, seed=seed + g, gold=gold,
+            detected, model.policy(), epsilon=eps, seed=seed + g, gold=gold,
             reward_mode=reward_mode,
         )
         if workdir:
@@ -466,8 +491,8 @@ def fitted_q_train(
                 )
                 open(fp_marker, "w").close()
             trans = detected.sparkSession.read.parquet(tdir)
-        w, h = train_dqn(trans, n_iters=iters_per_gen, seed=seed + g,
-                         init_weights=w, **train_kw)
+        model, h = train_dqn(trans, model, n_iters=iters_per_gen, seed=seed + g,
+                             **train_kw)
         for row in h:
             row["generation"] = g
             row["epsilon"] = eps
@@ -479,15 +504,14 @@ def fitted_q_train(
                         "generation": g,
                         "fingerprint": fp,
                         "epsilon": eps,
-                        "weights": w,
+                        "model": model.to_json(),
                         "history": h,
                         "wall_sec": round(time.time() - t0, 2),
                     },
                     f,
                 )
         eps *= epsilon_decay
-    assert w is not None
-    return w, history
+    return model, history
 
 
 def learned_policy(weights: list[float]) -> str:

@@ -53,17 +53,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or get) a SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
     On a real cluster these settings ship unchanged via spark-submit;
-    only ``master`` differs. ``rocksdb_state=True`` backs streaming state
-    with RocksDB — at web-crawl scale the stateful-dedup digest set exceeds
-    executor heap, and the HDFS-backed default store keeps state in memory;
-    it is also a runtime SQL conf, so an existing session can flip it with
-    ``spark.conf.set`` before starting a query.
+    only ``master`` differs.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
@@ -115,10 +110,6 @@ def get_spark(
         # NVMe/SSD local-dir setting.
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", _default_local_dir()))
     )
-    if rocksdb_state:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_PROVIDER
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -87,9 +87,12 @@ def stateful_exact_dedup(
 
     State = one boolean per digest group, so the state store holds exactly
     |distinct contents| single-byte entries, hash-partitioned (no skew
-    surface). At production scale back the store with RocksDB
-    (``session.get_spark(rocksdb_state=True)`` or ``spark.conf.set`` before
-    query start — the digest set of an unbounded crawl exceeds heap) and
+    surface). At production scale back the store with RocksDB — the digest
+    set of an unbounded crawl exceeds executor heap, and the default store
+    keeps state in memory: set ``spark.sql.streaming.stateStore.providerClass``
+    to ``session.ROCKSDB_STATE_PROVIDER``, either with ``spark.conf.set``
+    before query start (a runtime SQL conf) or through ``get_spark``'s
+    ``extra_conf`` — and
     pass ``ttl_ms`` to bound retention: each digest's state expires
     ``ttl_ms`` after it was last SEEN (duplicates refresh the clock), after
     which the same content is re-admitted once — the standard

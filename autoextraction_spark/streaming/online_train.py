@@ -113,9 +113,10 @@ class OnlineTrainer:
         w, eps, _prev = _latest_weights(self.workdir, epoch_id)
         if eps is None:
             eps = self.epsilon0
+        model = rl_train.LinearQ(w)
         det = detect.detect_relations(with_extracted_text(batch_df))
         trans = rl_train.generate_transitions(
-            det, w, epsilon=eps, seed=self.seed + epoch_id
+            det, model.policy(), epsilon=eps, seed=self.seed + epoch_id
         )
         (
             trans.withColumn("_epoch", F.lit(epoch_id))
@@ -135,16 +136,16 @@ class OnlineTrainer:
             buffer = buffer.filter(
                 F.col("_epoch") > epoch_id - self.window_epochs
             )
-        w2, hist = rl_train.train_dqn(
+        model, hist = rl_train.train_dqn(
             buffer,
+            model,
             n_iters=self.iters_per_batch,
             seed=self.seed + epoch_id,
-            init_weights=w,
             **self.train_kw,
         )
         artifact = {
             "epoch": int(epoch_id),
-            "weights": w2,
+            "weights": model.w,
             "epsilon": eps * self.epsilon_decay,
             "loss": hist[-1]["loss"] if hist else None,
             "buffer_rows_trained": int(buffer.count()),

@@ -1,6 +1,6 @@
 """Neural-scorer swap proof (neural.py): the featurize / batch_step /
-policy-string seams carry a NON-LINEAR model end-to-end — trained with the
-fitted-Q loop shape, deployed through the same fused inference pass, and
+policy-string seams carry a NON-LINEAR model end-to-end — trained through
+rl_train's fitted-Q loop, deployed through the same fused inference pass, and
 reaching the reference policy's extraction quality (VERDICT r3 item 3).
 """
 
@@ -46,7 +46,7 @@ def test_mlp_json_roundtrip_and_dim_guard():
 def test_batch_step_mlp_matches_per_state_choose_slot():
     """Contract: the wave-batched forward must agree with per-state scoring
     — output[i] == step_state(*states[i]) under the same mlp policy."""
-    pol = neural.mlp_policy(neural.MLPQ.init(hidden=8, seed=5))
+    pol = neural.MLPQ.init(hidden=8, seed=5).policy()
     slots = ["subject", "object"]
     states = [
         (PRIM, "works_for", "en", {}, list(slots)),
@@ -70,7 +70,7 @@ def test_fused_equals_rounds_with_mlp(spark, norm_states, reference_states):
         + [("uz", "works_for", "王伟任职于华信集团。", "zh")],
         "url string, rel string, text string, lang string",
     )
-    pol = neural.mlp_policy(neural.MLPQ.init(hidden=8, seed=9))
+    pol = neural.MLPQ.init(hidden=8, seed=9).policy()
     fused = slot_fill.ordered_slot_fill(det, policy=pol)
     assert norm_states(fused) == reference_states(det, pol)
 
@@ -83,7 +83,7 @@ def test_mlp_policy_full_corpus_parity(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from autoextraction_spark import corpus
-    from autoextraction_spark.operators import detect, output, slot_fill
+    from autoextraction_spark.operators import detect, output, rl_train, slot_fill
 
     txt = corpus.web_pages(spark, sf_dir, with_text=True, emit_html=False)
     det = (
@@ -101,14 +101,13 @@ def test_mlp_policy_full_corpus_parity(spark, sf_dir):
                      F.lit(KS.EN_SLOTS[1]), F.col("obj"))
     )
     gold = gft.select("url", "rel", slots.alias("slots"))
-    model, hist = neural.fit_mlp_q(
-        det, n_generations=3, iters_per_gen=15, epsilon0=0.6,
-        gold=gold, reward_mode="lookahead", seed=7, lr=0.1,
+    model, hist = rl_train.fitted_q_train(
+        det, neural.MLPQ.init(hidden=16, seed=7), n_generations=3,
+        iters_per_gen=15, epsilon0=0.6, gold=gold, reward_mode="lookahead",
+        seed=7, lr=0.1, target_update=5,
     )
     assert hist, "training produced no iterations"
-    completed = slot_fill.ordered_slot_fill(
-        det, policy=neural.mlp_policy(model)
-    )
+    completed = slot_fill.ordered_slot_fill(det, policy=model.policy())
     triples = output.to_triples(output.completed_filter(completed))
     gold_triples = corpus.gold_triples(spark, sf_dir).filter(
         F.col("pred").isin(KS.REL_NAMES)

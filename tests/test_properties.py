@@ -96,8 +96,7 @@ def test_episode_transitions_invariants(data):
 
     text = _random_doc_text(data.draw)
     eps = data.draw(st.sampled_from([0.0, 0.5]))
-    args = ("u0", "works_for", text, "en", [0.0] * scorers.FEATURE_DIM,
-            eps, 7, None, "step", 20)
+    args = ("u0", "works_for", text, "en", "sequence", eps, 7, None, "step", 20)
     rows = _episode_transitions(*args)
     assert rows == _episode_transitions(*args)  # deterministic
     step0 = [r for r in rows if r[3] == 0]

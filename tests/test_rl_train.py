@@ -11,9 +11,13 @@ claim, reproduced by actual training rather than the hand-coded policy).
 
 from __future__ import annotations
 
+import ast
 import math
+import pathlib
 
-from autoextraction_spark import scorers
+import pytest
+
+from autoextraction_spark import neural, scorers
 from autoextraction_spark import schema as S
 from autoextraction_spark.operators import rl_train
 
@@ -81,7 +85,9 @@ def test_transitions_lookahead_reward(spark):
     # force the object-first opening via a weight on the is_last feature
     w = [0.0] * scorers.FEATURE_DIM
     w[2] = 1.0
-    obj_first = rl_train.generate_transitions(det, weights=w, gold=gold, reward_mode="lookahead")
+    obj_first = rl_train.generate_transitions(
+        det, rl_train.learned_policy(w), gold=gold, reward_mode="lookahead"
+    )
     r0 = [r for r in obj_first.collect() if r["step"] == 0][0]
     # depth-2 product: the alt-connector object mention matches gold, then
     # anchored subject extraction matches gold via the alt pattern (logit 1.2)
@@ -137,9 +143,9 @@ def test_train_dqn_reduces_loss_and_is_deterministic(spark):
     det = _detected(spark, [(f"u{i}", "works_for", PRIM if i % 2 else ALT, "en")
                             for i in range(20)])
     trans = rl_train.generate_transitions(det)
-    w1, h1 = rl_train.train_dqn(trans, n_iters=10, target_update=5, seed=1)
-    w2, h2 = rl_train.train_dqn(trans, n_iters=10, target_update=5, seed=1)
-    assert w1 == w2 and h1 == h2
+    m1, h1 = rl_train.train_dqn(trans, n_iters=10, target_update=5, seed=1)
+    m2, h2 = rl_train.train_dqn(trans, n_iters=10, target_update=5, seed=1)
+    assert m1.w == m2.w and h1 == h2
     assert len(h1) == 10 and all(r["batch"] > 0 for r in h1)
     assert h1[-1]["loss"] < h1[0]["loss"]
 
@@ -168,14 +174,14 @@ def test_learned_policy_goes_object_first_on_alt_docs(spark):
          for u, rel, t, _ in alt_docs + prim_docs],
         "url string, rel string, slots map<string,string>",
     )
-    w, hist = rl_train.fitted_q_train(
+    model, hist = rl_train.fitted_q_train(
         det, n_generations=2, iters_per_gen=15, epsilon0=0.6,
         gold=gold, reward_mode="lookahead", seed=5, lr=0.1,
     )
     assert len(hist) == 30
     # the trained Q must rank object over subject when alt phrasing is
     # present, and recover EVERY alt fact through the deployed policy
-    pol = rl_train.learned_policy(w)
+    pol = model.policy()
     alt_text = alt_docs[0][2]
     assert scorers.choose_slot(alt_text, "works_for", "en", {}, ["subject", "object"], pol) == "object"
     from autoextraction_spark.operators import output, slot_fill
@@ -215,13 +221,11 @@ def test_trained_policy_full_corpus_parity(spark, sf_dir):
                      F.lit(KS.EN_SLOTS[1]), F.col("obj"))
     )
     gold = gft.select("url", "rel", slots.alias("slots"))
-    w, _ = rl_train.fitted_q_train(
+    model, _ = rl_train.fitted_q_train(
         det, n_generations=3, iters_per_gen=15, epsilon0=0.6,
         gold=gold, reward_mode="lookahead", seed=11, lr=0.1,
     )
-    completed = slot_fill.ordered_slot_fill(
-        det, policy=rl_train.learned_policy(w)
-    )
+    completed = slot_fill.ordered_slot_fill(det, policy=model.policy())
     triples = output.to_triples(output.completed_filter(completed))
     gold_triples = corpus.gold_triples(spark, sf_dir).filter(
         F.col("pred").isin(KS.REL_NAMES)
@@ -232,11 +236,16 @@ def test_trained_policy_full_corpus_parity(spark, sf_dir):
     assert m["precision"] == 1.0 and m["recall"] == 1.0, dict(m.asDict())
 
 
-def test_fitted_q_train_checkpoint_resume(spark, tmp_path):
-    """Training is resumable with the pipeline's manifest scheme: a rerun
-    with the same config re-runs NOTHING (weights come from manifests, the
-    transition parquet is untouched); a config change invalidates the
-    fingerprint chain and rebuilds."""
+@pytest.mark.parametrize(
+    "head",
+    [rl_train.LinearQ.zeros(), neural.MLPQ.init(hidden=8, seed=3)],
+    ids=["linear", "mlp"],
+)
+def test_fitted_q_train_checkpoint_resume(spark, tmp_path, head):
+    """Training is resumable with the pipeline's manifest scheme, whatever
+    the head: a rerun with the same config re-runs NOTHING (the model comes
+    from manifests, the transition parquet is untouched); a config change
+    invalidates the fingerprint chain and rebuilds."""
     import glob
     import os
 
@@ -244,18 +253,18 @@ def test_fitted_q_train_checkpoint_resume(spark, tmp_path):
                             for i in range(10)])
     wd = str(tmp_path / "rlwd")
     kw = dict(n_generations=2, iters_per_gen=4, epsilon0=0.4, seed=3, workdir=wd)
-    w1, h1 = rl_train.fitted_q_train(det, **kw)
+    m1, h1 = rl_train.fitted_q_train(det, head, **kw)
     files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=*/part-*"))
     assert files, "transition checkpoints missing"
     mt = {f: os.path.getmtime(f) for f in files}
-    w2, h2 = rl_train.fitted_q_train(det, **kw)
-    assert w1 == w2 and h1 == h2
+    m2, h2 = rl_train.fitted_q_train(det, head, **kw)
+    assert m1.to_json() == m2.to_json() and h1 == h2
     assert all(os.path.getmtime(f) == mt[f] for f in files)
     # config change -> fingerprint mismatch -> full rebuild of gen 0 onward
-    w3, _ = rl_train.fitted_q_train(det, **{**kw, "iters_per_gen": 5})
+    m3, _ = rl_train.fitted_q_train(det, head, **{**kw, "iters_per_gen": 5})
     new_files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=*/part-*"))
     assert {f: os.path.getmtime(f) for f in new_files} != mt
-    assert w3 != w1
+    assert m3.to_json() != m1.to_json()
 
 
 def test_fitted_q_train_resume_retrains_on_code_change(spark, tmp_path, monkeypatch):
@@ -352,3 +361,38 @@ def test_probe_policy_flips_on_alt_presence():
     assert scorers.choose_slot(PRIM + ALT, "works_for", "en", {}, slots, pol) == "object"
     zh = ["头实体", "尾实体"]
     assert scorers.choose_slot("王伟任职于华信集团。", "works_for", "zh", {}, zh, pol) == "头实体"
+
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+
+
+def _enclosing_def(parents, node):
+    while node in parents:
+        node = parents[node]
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            return node.name
+    return None
+
+
+def test_sgd_step_only_in_train_dqn():
+    """One sample-and-step loop: a Q head's ``grad_step`` is called only by
+    ``rl_train.train_dqn``, so no second trainer grows beside it."""
+    paths = [
+        *sorted((ROOT / "autoextraction_spark").rglob("*.py")),
+        ROOT / "__spark_entry__.py",
+        *sorted((ROOT / "scripts").rglob("*.py")),
+    ]
+    offenders = []
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "grad_step"
+                and (path.name, _enclosing_def(parents, node))
+                != ("rl_train.py", "train_dqn")
+            ):
+                offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert offenders == []
