@@ -34,10 +34,6 @@ from autoextraction_spark.pipeline import (  # noqa: E402
 )
 
 
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
-
-
 def _pipeline_triples(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
     # stages A-D in ONE python hop over the (doc_id, lang) skeleton (see
     # pipeline.skeleton_triples). ``where`` filters the doc skeleton BELOW
@@ -162,19 +158,19 @@ def q_kg_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs over documents (word-3-shingles,
     16 perms, 8 bands, exact-Jaccard verify ≥ 0.8)."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_dup_pairs(docs, "doc_id", "text", threshold=0.8)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash signatures over documents (portable hash)."""
-    return dedup.simhash64(_read(spark, sf_dir, "documents"), "doc_id", "text")
+    return dedup.simhash64(corpus.read_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage F connected components on the doc—lang bipartite star."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang")
     edges = docs.select(
         F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("src"),
         F.concat(F.lit("l"), F.col("lang")).alias("dst"),
@@ -186,7 +182,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via the prefix-filter inverted
     index (no blocking loss, no all-pairs — the round-1 within-language
     cartesian was quadratic, VERDICT.md item 3)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     pairs = dedup.jaccard_dup_pairs(docs, "doc_id", "text", threshold=0.5)
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -194,7 +190,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dup deduplication: minhash pairs → connected
     components → one canonical survivor per transitive cluster."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents")
     out = dedup.dedup_documents(docs, "doc_id", "text", method="minhash",
                                 threshold=0.8)
     return out.select("doc_id", "keep_id", "is_canonical")
@@ -206,7 +202,7 @@ def q_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels — the curve a curation report leads with (sum of n_excess =
     mass dedup would remove). Two map-side-combinable counts over (id,
     keep_id); bodies never shuffle."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents")
     labeled = dedup.dedup_documents(docs, "doc_id", "text", method="minhash",
                                     threshold=0.8)
     return dedup.dup_profile(labeled)
@@ -219,7 +215,7 @@ def q_host_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the minhash dedup labels in ONE lazy plan; the groupBy is map-side
     combinable so the hot host (20% of the corpus by construction) never
     concentrates rows on one reducer."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents")
     labeled = dedup.dedup_documents(docs, "doc_id", "text", method="minhash",
                                     threshold=0.8)
     scored = textstats.quality_score(labeled)
@@ -252,7 +248,7 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     selections — the posting table whose equi-join GUARANTEES detection of
     any shared substring ≥ w+k−1 chars (the local-selection property
     MinHash/global-min fingerprints lack)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.winnow_fingerprints(docs, k=8, w=15).withColumnRenamed(
         "id", "doc_id"
     )
@@ -264,7 +260,7 @@ def q_quote_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     guaranteed-detection floor. The stop-fingerprint rule bites on this
     corpus (15% of fps sit on >20 docs — template boilerplate excluded
     before the fp-keyed pair join)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     fps = textstats.winnow_fingerprints(docs, k=8, w=15)
     return textstats.shared_fingerprint_pairs(
         fps, min_shared=3, max_docs_per_fp=20
@@ -277,7 +273,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks) — the compression half of IVF-PQ, the layout that makes
     billion-vector ANN memory-resident. The oracle unrolls all four
     codebook trainings term-for-term (prefixed _kmeans_ctes chains)."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     return similarity.pq_codes(vecs, m=4, k=4, iters=2, dim=64)
 
 
@@ -288,7 +284,7 @@ def q_boilerplate_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines strip these before LM scoring. One checkpointed corpus
     explode feeds all three counts; the host filter runs before the
     gram-keyed joins."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     host = F.concat(
         F.lit("site"),
         F.when(F.col("doc_id") % 5 == 0, F.lit(0))
@@ -305,7 +301,7 @@ def q_jaccard_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     count and the cumulative pairs at-or-above the band — every candidate
     dedup threshold priced from ONE similarity join instead of one corpus
     join per threshold."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     pairs = dedup.jaccard_dup_pairs(docs, "doc_id", "text", threshold=0.3)
     return dedup.jaccard_threshold_sweep(pairs, buckets=20)
 
@@ -328,7 +324,7 @@ def q_order_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, LSH-bucket blocked (multi-table
     sign-LSH candidates + exact cosine verify — equi-joins only)."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     return similarity.embedding_neardup_pairs(
         vecs, threshold=0.4, n_planes=2, n_tables=4, dim=64
     )
@@ -383,7 +379,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic (embedding-cosine) DEDUPLICATION end-to-end: LSH-blocked
     cosine pairs → connected components → one canonical survivor per
     transitive cluster (dedup_documents method='embedding')."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     out = dedup.dedup_documents(
         vecs, "vec_id", "embedding", method="embedding",
         threshold=0.4, n_planes=2, n_tables=4, dim=64,
@@ -393,13 +389,13 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace + BPE-ish regex (training-data op)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.token_stats(docs).drop("text")
 
 
 def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/punct/stopword ratios + composite."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.quality_score(docs).select(
         "doc_id", "punct_ratio", "stopword_ratio", "avg_token_len", "quality"
     )
@@ -408,7 +404,7 @@ def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filter signals (dup-word / top-bigram /
     dup-trigram fractions) — zero-shuffle higher-order-function plan."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.repetition_stats(docs).select(
         "doc_id",
         "dup_word_frac",
@@ -421,7 +417,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style document filter signals (sentence/terminal-punct/banned
     markers + keep flag) — pure codegen per-document map."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.c4_filters(docs).select(
         "doc_id", "n_sentences", "ends_terminal", "n_words", "has_banned",
         "c4_keep",
@@ -678,7 +674,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     content and chunk-hash dedup survives boilerplate drift that resyncs
     fixed-width chunking never recovers from. Pure map-local codegen —
     no shuffle anywhere; text never leaves its partition."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.cdc_chunks(docs, k=8, mask=64)
 
 
@@ -788,7 +784,7 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-represented strata, fractional repeat epochs (≤4, the
     repetition-harm bound) for under-represented ones. Plans what
     temperature_mix executes."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang")
     return compose.mixture_plan(docs, tau=0.5, stratum_col="lang")
 
 
@@ -867,7 +863,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index; each new doc is kept unless a band-colliding partner (index doc,
     or smaller-id batch doc) verifies at Jaccard ≥ 0.8. The index side
     never self-joins (the 100 TB index is never re-deduped)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     new = docs.filter(F.col("doc_id") % 5 == 0)
     index = docs.filter(F.col("doc_id") % 5 != 0)
     return dedup.incremental_minhash_dedup(new, index, threshold=0.8)
@@ -886,13 +882,13 @@ def q_kg_rank_eval_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kge.rank_eval(ent, rel, test, known=tr)
 
 
-def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023): hashed-bigram
     log-likelihood ratio of every document under a target-domain bucket
     model (docs with doc_id % 10 == 7, the decontaminate convention) vs
     the raw-corpus model — the importance-resampling data-selection
     signal, complementing bm25_select's query-relevance signal."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.dsir_weights(docs, target=(F.col("doc_id") % 10 == 7))
 
 
@@ -923,7 +919,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast DataFrames (no collect in the loop). Emits the weight
     snapshot after every iteration; the oracle unrolls the identical GD
     in SQL CTEs — a closed-form check of the full training trajectory."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text", "lang")
     feats = classifier.quality_features(docs).withColumn(
         "y", (F.col("lang") == "en").cast("double")
     )
@@ -934,7 +930,7 @@ def q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deploy the trained quality classifier: weights are plan literals
     (model artifact), scoring is sigmoid(w·x) at scan speed — zero UDFs,
     zero shuffles, the 100 TB filter shape."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return classifier.classify(docs, CLASSIFIER_WEIGHTS).select(
         "doc_id", "score", "keep"
     )
@@ -946,7 +942,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     every document's perplexity via two equi-joins + one groupBy(doc) — the
     LM table is never broadcast (web-scale LMs outgrow broadcast) and never
     recomputed per consumer."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text", "lang")
     big, uni, voc = lm.train_bigram_lm(docs.filter(F.col("lang") == "en"))
     return lm.perplexity_score(
         docs.select("doc_id", "text"), big, uni, voc, k=0.5
@@ -959,7 +955,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (noisiest third, usually dropped). ntile(3) over the deterministic
     (rounded ppl, doc_id) order; one window per language partition on top
     of the lm_perplexity plan."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text", "lang")
     big, uni, voc = lm.train_bigram_lm(docs.filter(F.col("lang") == "en"))
     sc = lm.perplexity_score(docs.select("doc_id", "text"), big, uni, voc, k=0.5)
     j = sc.join(docs.select("doc_id", "lang"), "doc_id")
@@ -984,7 +980,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     an integer comparison (threshold fixed at plan build) — bit-identical
     across engines and retries.
     Pure map-side filter, zero shuffles."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang")
     return compose.mixture_sample(docs, MIXTURE_RATES)
 
 
@@ -993,7 +989,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shard token cumsum (one window, no global sort), sequences cut
     every 512 tokens; emits each doc's (shard, token offset, sequence
     span)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return compose.pack_sequences(docs, budget=512, n_shards=8)
 
 
@@ -1001,7 +997,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style per-domain cap: keep the first 10 docs (by doc_id)
     of each source — one bounded window per group, output size bounded
     regardless of host skew."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "source")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "source")
     return compose.cap_per_group(docs, group_col="source", n=10)
 
 
@@ -1010,7 +1006,7 @@ def q_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-max aggregation — one candidate per key per partition shuffles,
     vs the window form shuffling every row. Oracle is the equivalent
     row_number window (same winner: (ts, event_id) totally ordered)."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events")
     out = dedup.latest_by_key(
         ev, ["user_id", "event_type"], "ts", "event_id", ["value"]
     )
@@ -1024,7 +1020,7 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic disjoint train/val/test assignment (90/5/5): hash-range
     partition — every doc in exactly one split, membership stable under
     corpus growth, integer cut points fixed at plan build."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang")
     return compose.hash_split(
         docs, {"train": 0.9, "val": 0.05, "test": 0.05}
     )
@@ -1042,7 +1038,7 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r6, no-op at scale): the per-doc digest/classifier expressions
     otherwise run serially above the sandbox's 1-task parquet scan."""
     docs = dedup.spread_input(
-        _read(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+        corpus.read_table(spark, sf_dir, "documents", "doc_id", "text", "lang")
     )
     winners = dedup.exact_dup_groups(docs, "doc_id", "text").select(
         F.col("keep_id").alias("doc_id")
@@ -1066,7 +1062,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller's heavy per-row array work, which then still runs at the 1-task
     scan's parallelism — the repartition must sit at the scan."""
     docs = dedup.spread_input(
-        _read(spark, sf_dir, "documents").select("doc_id", "text")
+        corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     )
     chunk = 8
     words = F.split(F.col("text"), " ")
@@ -1089,7 +1085,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical input — the pii_scrub injection precedent) so the corpus
     contains cross-document duplicated runs; natural in-corpus repeats
     dedup too."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     boiled = docs.select(
         "doc_id",
         F.when(
@@ -1108,7 +1104,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: docs with doc_id % 10 == 7 act as the
     eval set; every other doc is scored by the fraction of its distinct
     word 5-grams that appear in the (broadcast) benchmark gram set."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 10 == 7)
     train = docs.filter(F.col("doc_id") % 10 != 7)
     return dedup.decontaminate(train, bench, n=5, threshold=0.05)
@@ -1118,7 +1114,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction over documents with deterministic injected PII
     (emails / phones / IPv4s as doc_id arithmetic, so the oracle plants
     byte-identical inputs): sequential count-then-replace, pure codegen."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     d = F.col("doc_id")
 
     def s(c):  # noqa: ANN001 - tiny cast helper
@@ -1152,22 +1148,22 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID (CJK + marker-stopword argmax)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.lang_id(docs).select("doc_id", "lang_pred")
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprints: normalized md5 + rolling polynomial hash."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.fingerprint(docs).select("doc_id", "fp_md5", "fp_rolling")
 
 
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd's k-means over the embeddings table — the engine's
     fifth trainer (model IS a DataFrame, no collect in the loop); output is
     the final centroids exploded to (cluster, d, val) rows so the compare
     is order-insensitive and exact. The oracle unrolls the iterations."""
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb = corpus.read_table(spark, sf_dir, "embeddings", "vec_id", "embedding")
     cents = similarity.kmeans_train(emb, k=8, iters=2)
     return cents.select(
         F.col("cluster").cast("long").alias("cluster"),
@@ -1191,7 +1187,7 @@ def _injected_link_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic corpus html has no links) plus a relative link every 4th doc
     to exercise same-host resolution. oracle._link_edges_ctes builds the
     byte-identical html."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id")
     d = F.col("doc_id")
     anchors = F.expr(
         "array_join(transform(sequence(0, CAST(doc_id % 3 AS INT)), j -> "
@@ -1248,7 +1244,7 @@ def q_crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = _injected_link_pages(spark, sf_dir)
     links = text_extract.page_links(pages)
-    known = _read(spark, sf_dir, "documents").select(
+    known = corpus.read_table(spark, sf_dir, "documents", "doc_id").select(
         _page_url_col(F.col("doc_id")).alias("target_url")
     )
     fr = (
@@ -1297,7 +1293,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     q ∝ p^0.5 realized as subsample-only — applied via the portable-hash
     threshold. en (44% of the corpus) is downsampled to ≈0.54, the rarest
     language keeps every row."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang")
     return compose.temperature_mixture(docs, tau=0.5, stratum_col="lang")
 
 
@@ -1309,7 +1305,7 @@ def q_mirror_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-content digests are scored by digest-set Jaccard, with the
     stop-digest skew rule bounding viral boilerplate. Hosts derive from
     the schema.host_id arithmetic."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     d = F.col("doc_id")
     mir = (
         docs.filter(d % 10 == 3)
@@ -1333,7 +1329,7 @@ def q_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap): the RAG-ingestion / long-document training split. Pure
     codegen, zero shuffles; every token covered, last chunk short but
     never empty."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return compose.chunk_tokens(docs, window=32, stride=24)
 
 
@@ -1413,7 +1409,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair counting + codegen string rewrite over the word vocabulary; output
     is the learned merge table in learning order. Integer/string-exact, so
     the unrolled DuckDB oracle matches bitwise."""
-    docs = _read(spark, sf_dir, "documents").select("text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "text")
     return bpe.bpe_train(docs, n_merges=8)
 
 
@@ -1422,7 +1418,7 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     applying the 8 learned merges to the word vocabulary — (token,
     corpus-frequency, distinct-words-containing) — i.e. the tokenizer's
     ``vocab.json`` materialized distributedly."""
-    docs = _read(spark, sf_dir, "documents").select("text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "text")
     return bpe.bpe_subword_vocab(docs, n_merges=8)
 
 
@@ -1432,7 +1428,7 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     which languages a shared tokenizer under-serves (they pay more
     sequence length per word). Trains corpus-wide, evaluates per lang via
     ONE word-keyed join against the trained vocabulary."""
-    docs = _read(spark, sf_dir, "documents").select("lang", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "lang", "text")
     return bpe.bpe_fertility(docs, n_merges=8, stratum_col="lang")
 
 
@@ -1444,7 +1440,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinate 1 — both engines synthesize identical inputs, the pii_scrub
     precedent) because the natural synthetic embeddings top out at
     intra-cluster cosine 0.51."""
-    base = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    base = corpus.read_table(spark, sf_dir, "embeddings", "vec_id", "embedding")
     donor = base.select(
         (F.col("vec_id") + 3).alias("vec_id"),
         F.col("embedding").cast("array<double>").alias("_donor"),
@@ -1468,13 +1464,13 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 (broadcast queries, zip_with dot, window)."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     return similarity.cosine_topk(vecs.filter(F.col("vec_id") < 10), vecs, k=5)
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 (multi-table sign-LSH, equi-join)."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     return similarity.ann_topk(
         vecs.filter(F.col("vec_id") < 10), vecs, k=5, n_planes=2, n_tables=4
     )
@@ -1483,7 +1479,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer ANN: nearest-centroid cells (codegen argmax over
     a centroid model artifact), n_probe-cell probing, exact re-rank."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         vecs.filter(F.col("vec_id") < 10), vecs, k=5, n_centroids=16, n_probe=4
     )
@@ -1498,13 +1494,13 @@ def q_host_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_QUERY = ["stream", "vector", "join", "customer", "slow"]
 
 
-def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bm25_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 relevance of every document against a fixed domain
     query — the targeted-data-selection primitive (score the corpus,
     keep the top mass). Token explode filters to the query terms before
     any shuffle; idf/N/avgdl are broadcast scalars; ln and the tf
     saturation stay in codegen."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return textstats.bm25_score(docs, BM25_QUERY)
 
 
@@ -1537,7 +1533,7 @@ def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical URL. The wrapper synthesizes messy URLs from doc_id
     arithmetic so both engines see identical inputs — the pii_scrub
     injection precedent."""
-    pages = _read(spark, sf_dir, "documents").select(
+    pages = corpus.read_table(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", _messy_url().alias("url")
     )
     return url_dedup(pages)
@@ -1551,7 +1547,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     concat-and-chunk sequence packing. The oracle recomputes the whole
     composition from the shared CTE fragments, so the stage interfaces are
     verified jointly — the training_pipeline precedent, for the r5 ops."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     pages = docs.select("doc_id", _messy_url().alias("url"))
     winners = (
         url_dedup(pages).filter(F.col("keep")).select("doc_id")
@@ -1648,7 +1644,7 @@ def q_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing-summary aggregate (hash agg with map-side combine). Money is
     summed in exact integer cents so Spark/DuckDB agree bit-for-bit."""
-    l = _read(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
+    l = corpus.read_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     disc = F.round(F.col("l_discount") * 100).cast("long")
     tax = F.round(F.col("l_tax") * 100).cast("long")
@@ -1664,9 +1660,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q3ish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-table join (customer ⋈ orders ⋈ lineitem): broadcast the dims,
     shuffle only the fact; revenue in exact integer cents."""
-    c = _read(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _read(spark, sf_dir, "orders")
-    l = _read(spark, sf_dir, "lineitem")
+    c = corpus.read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = corpus.read_table(spark, sf_dir, "orders")
+    l = corpus.read_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     disc = F.round(F.col("l_discount") * 100).cast("long")
     return (
@@ -1681,7 +1677,7 @@ def q_tpch_q3ish(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: lag + gap>30min cumsum over the event stream —
     the windowed-analytics pattern."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events", "event_id", "ts", "user_id", "value")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     # parquet ts is TIMESTAMP_NTZ: route through ltz (session TZ pinned UTC)
     tsec = F.col("ts").cast("timestamp_ltz").cast("long")
@@ -1706,7 +1702,7 @@ def q_event_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation and the z join (else the two-level aggregate re-scans the
     source — the recompute class the plan pins guard); zero-variance types
     are excluded by an exact integer predicate (n·Σc² > (Σc)²)."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events", "event_type", "ts")
     hour = F.date_format(
         F.date_trunc("hour", F.col("ts").cast("timestamp_ltz")),
         "yyyy-MM-dd HH:00:00",
@@ -1742,8 +1738,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of a shared constant), and the linear-counting ln is absorbed
     by round(·, 6). Source checkpointed once for the three consumers."""
     ev = ckpt(
-        _read(spark, sf_dir, "events")
-        .select("event_type", "user_id", "event_id"),
+        corpus.read_table(spark, sf_dir, "events", "event_type", "user_id", "event_id"),
         eager=True,
     )
     est_u = sketch.hll_estimate(
@@ -1787,7 +1782,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of an exactly-representable float constant by an exact long.
     The gram explode is checkpointed once and feeds both the sketch and
     the exact count."""
-    docs = _read(spark, sf_dir, "documents").select("lang", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "lang", "text")
     grams = ckpt(
         docs.select(
             "lang", F.explode(dedup.char_shingles(F.col("text"), 4)).alias("g")
@@ -1829,7 +1824,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("string"),
     )
     ev = ckpt(
-        _read(spark, sf_dir, "events")
+        corpus.read_table(spark, sf_dir, "events", "event_id")
         .select(hkey.alias("hkey")),
         eager=True,
     )
@@ -1865,14 +1860,13 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. n_missed (true matches the filter dropped) is the no-false-
     negative guarantee as an oracled column: always 0."""
     cust = ckpt(
-        _read(spark, sf_dir, "customer")
+        corpus.read_table(spark, sf_dir, "customer", "c_custkey", "c_nationkey")
         .filter(F.col("c_nationkey") == 2)
         .select("c_custkey"),
         eager=True,
     )
     ord_proj = ckpt(
-        _read(spark, sf_dir, "orders")
-        .select("o_custkey", "o_orderpriority"),
+        corpus.read_table(spark, sf_dir, "orders", "o_custkey", "o_orderpriority"),
         eager=True,
     )
     okeys = ord_proj.select("o_custkey").distinct()
@@ -1925,7 +1919,7 @@ def q_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     one estimate. Same register build as q_hll_distinct: map-side
     combinable max, at most 64 longs per (group, shard) cross the wire."""
     ev = ckpt(
-        _read(spark, sf_dir, "events")
+        corpus.read_table(spark, sf_dir, "events", "event_type", "user_id", "event_id")
         .select(
             "event_type",
             "user_id",
@@ -1976,7 +1970,7 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is quadratic in strata and linear in corpus. One checkpointed
     word explode feeds both the sketches and the exact sets."""
     words = ckpt(
-        _read(spark, sf_dir, "documents")
+        corpus.read_table(spark, sf_dir, "documents", "lang", "text")
         .select("lang", F.explode(F.split(F.col("text"), " ")).alias("w")),
         eager=True,
     )
@@ -2037,8 +2031,7 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     event history, no per-row Python); the event projection is
     checkpointed once and feeds all four step filters."""
     ev = ckpt(
-        _read(spark, sf_dir, "events")
-        .select("user_id", "event_type", "ts"),
+        corpus.read_table(spark, sf_dir, "events", "user_id", "event_type", "ts"),
         eager=True,
     )
     t1 = ckpt(
@@ -2099,8 +2092,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort table joins it user-keyed. Dates are UTC-session-stable and
     emitted as strings (the event_bursts idiom)."""
     ev = ckpt(
-        _read(spark, sf_dir, "events")
-        .select("user_id", "event_type", "ts"),
+        corpus.read_table(spark, sf_dir, "events", "user_id", "event_type", "ts"),
         eager=True,
     )
     coh = (
@@ -2142,7 +2134,7 @@ def q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join of two digest projections — bodies never move, and the
     output feeds fetch scheduling (recrawl changed, discover added)."""
     d = F.col("doc_id")
-    docs = _read(spark, sf_dir, "documents").select(
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text").select(
         F.concat(
             F.lit("https://h"),
             (d % 50).cast("string"),
@@ -2190,7 +2182,7 @@ def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     with linear interpolation over integer lengths (both engines define
     rank = p·(n-1) and interpolate identically in doubles; round-6
     absorbed); ONE percentile aggregation, no window over the corpus."""
-    docs = _read(spark, sf_dir, "documents").select("lang", "n_chars")
+    docs = corpus.read_table(spark, sf_dir, "documents", "lang", "n_chars")
     ps = [0.25, 0.5, 0.75, 0.9, 0.99]
     agg = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2218,7 +2210,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — rounded to 9 decimals with a doc_id tiebreak so the top-50
     cut is an engine-portable total order (the tfidf_keywords idiom).
     One window per language over a weight projection; bodies never move."""
-    docs = _read(spark, sf_dir, "documents").select(
+    docs = corpus.read_table(spark, sf_dir, "documents", "lang", "doc_id", "n_chars").select(
         "lang", "doc_id", F.col("n_chars").cast("long").alias("w")
     )
     u = (
@@ -2241,7 +2233,7 @@ def q_journey_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavioral model behind funnel design and next-action prediction.
     One window pass + one pair aggregation; the per-from normalizer is a
     second map-side-combinable count, never a broadcast of the corpus."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    ev = corpus.read_table(spark, sf_dir, "events", "user_id", "event_type", "ts", "event_id")
     win = W.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ckpt(
         ev.select(
@@ -2284,7 +2276,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     stops adding vocabulary. First occurrence = min(bucket) per type (one
     map-side-combinable agg, no ordered scan); the token explode is
     checkpointed once for its two consumers."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     tok = ckpt(
         docs.select(
             F.expr("doc_id div 100").alias("bucket"),
@@ -2398,7 +2390,7 @@ def q_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     token explode is checkpointed once (term pick + postings); the 3-row
     term set broadcasts; the intersection is a groupBy-having count, not
     an all-pairs join."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang", "text")
     tok = ckpt(
         docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tk")),
         eager=True,
@@ -2425,7 +2417,7 @@ def q_lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels: (true_lang, pred_lang, n, share of the true class) — the
     model-card evaluation table for the lang_id operator, composed from
     the same prediction the lang_id query emits."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang", "text")
     pred = textstats.lang_id(docs).select("doc_id", "lang_pred")
     joined = ckpt(
         docs.select("doc_id", F.col("lang").alias("true_lang"))
@@ -2455,7 +2447,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     community detection runs on. One (table, bucket) equi-join generates
     candidates; the edge table is materialized once and self-joined for
     mutuality."""
-    vecs = _read(spark, sf_dir, "embeddings")
+    vecs = corpus.read_table(spark, sf_dir, "embeddings")
     edges = ckpt(
         similarity.ann_topk(vecs, vecs, k=5, n_planes=3, n_tables=4), eager=True
     )
@@ -2484,7 +2476,7 @@ def q_dedup_best_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the `moved` flag counting where the policy disagrees with min-id.
     quality is exact 0.25 multiples, so the float-equality join is
     engine-safe."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents")
     labeled = dedup.dedup_documents(
         docs, "doc_id", "text", method="minhash", threshold=0.8
     )
@@ -2522,7 +2514,7 @@ def q_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs, the pre-training garbage filter. Two exact percentile
     aggregations (the proven interpolation-parity class), one broadcast
     join back onto the corpus; no window over the corpus."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang", "n_chars")
     med = docs.groupBy("lang").agg(
         F.expr("percentile(n_chars, 0.5)").alias("med")
     )
@@ -2563,7 +2555,7 @@ def q_host_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(".example.com"),
     )
     hl = ckpt(
-        _read(spark, sf_dir, "documents")
+        corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang")
         .select(host.alias("host"), "lang")
         .groupBy("host", "lang")
         .agg(F.count(F.lit(1)).cast("long").alias("c")),
@@ -2592,7 +2584,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     law). Ranking uses the portable (count desc, token asc) total order;
     the OLS sums are the one accepted float-sum class (round-6 absorbs
     ordering noise, the lm_perplexity/dsir precedent)."""
-    docs = _read(spark, sf_dir, "documents").select("lang", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "lang", "text")
     counts = (
         docs.select("lang", F.explode(F.split(F.col("text"), " ")).alias("tk"))
         .groupBy("lang", "tk")
@@ -2638,7 +2630,7 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     config before a 100 TB run. Banding uses the bitwise-portable
     floor(j·10) bucketing (the jaccard_sweep idiom) on the identical
     integer-ratio jaccard both engines compute."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     truth = dedup.jaccard_dup_pairs(docs, "doc_id", "text", threshold=0.5)
     pred = dedup.minhash_dup_pairs(
         docs, "doc_id", "text", threshold=0.5
@@ -2679,7 +2671,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-interpolation parity (length_quantiles). Output: one row —
     point estimate, 2.5% / 97.5% bootstrap bounds, resample count."""
     B = 32
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "n_chars")
     pairs = docs.select(
         "doc_id",
         "n_chars",
@@ -2738,7 +2730,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): grouping-sets aggregation."""
-    l = _read(spark, sf_dir, "lineitem")
+    l = corpus.read_table(spark, sf_dir, "lineitem")
     return (
         l.cube("l_returnflag", "l_linestatus")
         .agg(F.sum(F.round(F.col("l_quantity")).cast("long")).alias("sum_qty"),
@@ -2755,9 +2747,9 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (Spark has no native one): each 'error' event matched to
     the user's most recent 'signup' at or before it — union + last-value
     IGNORE NULLS window, one shuffle, no range explosion."""
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("signup", "error")
-    )
+    ev = corpus.read_table(
+        spark, sf_dir, "events", "event_id", "user_id", "event_type", "ts"
+    ).filter(F.col("event_type").isin("signup", "error"))
     tsec = F.col("ts").cast("timestamp_ltz").cast("long")
     u = ev.select("event_id", "user_id", "event_type", tsec.alias("tsec"))
     w = (
@@ -2779,7 +2771,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 nested-object flattening analog (dataset/duie.py:38-67): pull a
     typed field out of a JSON column, null-safe, then aggregate."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events", "event_type", "props")
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.withColumn("k_val", F.coalesce(k, F.lit(-1)))
@@ -2796,7 +2788,7 @@ def q_spo_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 DuIE nested-object flattening (dataset/duie.py:38-67): struct-typed
     spo with object/object_type role maps → composed slot map with '[None]'
     gap fill, exploded to scalar rows."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events")
     spo = F.struct(
         F.col("event_type").alias("predicate"),
         F.when(F.col("event_id") % 7 == 0, F.lit(""))
@@ -2852,7 +2844,7 @@ def q_perm_examples_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerates the same 10 orders and the full prefix-grammar expansion +
     sort-merge dedup in SQL."""
     roles = KS.SAMPLED_EVENT_ROLES
-    docs = _read(spark, sf_dir, "documents").select("doc_id").filter(
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id").filter(
         F.col("doc_id") % 10 == 2
     )
     vals = [
@@ -2885,7 +2877,7 @@ def q_perm_examples_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_budget_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 prompt-budget truncation (duee_fin.py:92-94): drop trailing cond
     segments until token(cond)+token(text)+3 fits the budget."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events", "event_id", "event_type", "props")
     m = F.get_json_object("props", "$.k").cast("int") % 40
     df = ev.select(
         "event_id",
@@ -2902,7 +2894,7 @@ def q_tokenize_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9 pair encoding with offsets (Environment.py:56-62, nyt.py:138-147):
     [CLS] cond [SEP] text [SEP] with token_type_ids + offset_mapping,
     truncated to 512 — one flat row per encoded position."""
-    docs = _read(spark, sf_dir, "documents").select(
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "lang", "text").select(
         "doc_id",
         F.concat(F.lit("language "), F.col("lang")).alias("cond"),
         "text",
@@ -2946,7 +2938,7 @@ def q_span_labels_char(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O9 frequency vocab (ljqpy.py:232-247): token counts, cutoff, dense id."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents", "text")
     tok = docs.select(F.explode(F.split("text", " ")).alias("token"))
     vc = tok.groupBy("token").count().filter(F.col("count") >= 100)
     w = W.orderBy(F.desc("count"), F.asc("token"))
@@ -2963,7 +2955,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode feeds tf, df and the one-row N broadcast; rank orders by the
     ROUNDED score with term tiebreak (engine-portable total order)."""
     return textstats.tfidf_keywords(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"), top_k=5
+        corpus.read_table(spark, sf_dir, "documents", "doc_id", "text"), top_k=5
     )
 
 
@@ -2973,7 +2965,7 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs are exact integer counts inside ONE ln (round-6 absorbed);
     pairs built with zip_with over array slices BEFORE the explode."""
     return textstats.collocations(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"), min_count=5
+        corpus.read_table(spark, sf_dir, "documents", "doc_id", "text"), min_count=5
     )
 
 
@@ -3005,7 +2997,7 @@ def q_kg_reach_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rel2id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 rel2id generation (predict.py:26-28, gen_rels.ipynb)."""
-    ev = _read(spark, sf_dir, "events").select("event_type").distinct()
+    ev = corpus.read_table(spark, sf_dir, "events", "event_type").distinct()
     w = W.orderBy("event_type")
     return ev.select(
         F.col("event_type").alias("rel_type"),
@@ -3015,7 +3007,7 @@ def q_rel2id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 co-occurrence self-join (dataset/nyt.py:62-90 second-hop analog)."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    ev = corpus.read_table(spark, sf_dir, "events", "user_id", "event_type", "ts")
     a = ev.filter(F.col("event_type") == "signup").alias("a")
     b = ev.filter(F.col("event_type") == "purchase").alias("b")
     return (
@@ -3027,7 +3019,7 @@ def q_cooccur_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup groups by full text (hash groupBy; S11 RemoveDupRows)."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = corpus.read_table(spark, sf_dir, "documents", "doc_id", "text")
     return docs.groupBy("text").agg(
         F.min("doc_id").cast("long").alias("keep_id"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -3037,7 +3029,7 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_score2prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4 score2prob (Environment.py:90-99) as a DataFrame aggregate:
     softmax over raw scores, prob = Σ softmax per group, score = max."""
-    ev = _read(spark, sf_dir, "events").select(
+    ev = corpus.read_table(spark, sf_dir, "events", "event_type", "value").select(
         "event_type", F.exp(F.col("value") / 100).alias("w"), "value"
     )
     total = ev.agg(F.sum("w").alias("total"))
@@ -3055,7 +3047,7 @@ def q_score2prob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_argmax_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9 greedy argmax ordering (predict.py:90-92) as windowed top-1."""
-    ev = _read(spark, sf_dir, "events")
+    ev = corpus.read_table(spark, sf_dir, "events", "user_id", "event_type", "event_id", "value")
     w = W.partitionBy("user_id").orderBy(
         F.desc("value"), F.asc("event_type"), F.asc("event_id")
     )
@@ -3069,7 +3061,7 @@ def q_argmax_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_metric_f1_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5 MetricF1 on two derived keysets (set-intersection P/R/F1)."""
-    orders = _read(spark, sf_dir, "orders")
+    orders = corpus.read_table(spark, sf_dir, "orders")
     pred = orders.filter(F.col("o_orderstatus") == "O").select("o_orderkey")
     gold = orders.filter(F.col("o_totalprice") > 150000).select("o_orderkey")
     m = output.metric_f1(pred, gold, keys=["o_orderkey"])
@@ -3151,177 +3143,8 @@ def q_rl_learned_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "kg_triples": q_kg_triples,
-        "kg_detect": q_kg_detect,
-        "detector_train": q_detector_train,
-        "detector_score": q_detector_score,
-        "detector_calibration": q_detector_calibration,
-        "kg_metric_f1": q_kg_metric_f1,
-        "kg_slot_f1": q_kg_slot_f1,
-        "kg_events": q_kg_events,
-        "kg_triples_canonical": q_kg_triples_canonical,
-        "kg_linking": q_kg_linking,
-        "minhash_dedup": q_minhash_dedup,
-        "simhash": q_simhash,
-        "connected_components": q_connected_components,
-        "ngram_jaccard": q_ngram_jaccard,
-        "doc_dedup": q_doc_dedup,
-        "dup_profile": q_dup_profile,
-        "host_profile": q_host_profile,
-        "jaccard_sweep": q_jaccard_sweep,
-        "boilerplate_grams": q_boilerplate_grams,
-        "pq_codes": q_pq_codes,
-        "winnow": q_winnow,
-        "quote_pairs": q_quote_pairs,
-        "order_split": q_order_split,
-        "char_f1": q_char_f1,
-        "cond_roundtrip": q_cond_roundtrip,
-        "embed_neardup": q_embed_neardup,
-        "semantic_dedup": q_semantic_dedup,
-        "token_stats": q_token_stats,
-        "quality": q_quality,
-        "repetition": q_repetition,
-        "c4_filters": q_c4_filters,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_infer": q_kg_infer,
-        "kg_closure": q_kg_closure,
-        "kg_reach": q_kg_reach,
-        "kg_triangles": q_kg_triangles,
-        "kg_kcore": q_kg_kcore,
-        "kg_scc": q_kg_scc,
-        "kg_toposort": q_kg_toposort,
-        "kg_pmi": q_kg_pmi,
-        "kg_paths": q_kg_paths,
-        "kg_centrality": q_kg_centrality,
-        "kg_delta": q_kg_delta,
-        "kg_transe": q_kg_transe,
-        "kg_distmult": q_kg_distmult,
-        "kg_complex": q_kg_complex,
-        "kg_link_predict": q_kg_link_predict,
-        "kg_link_predict_ann": q_kg_link_predict_ann,
-        "kg_export": q_kg_export,
-        "kg_conjunctive": q_kg_conjunctive,
-        "kg_schema": q_kg_schema,
-        "kg_similar": q_kg_similar,
-        "kg_adamic": q_kg_adamic,
-        "mixture_plan": q_mixture_plan,
-        "kg_ppr": q_kg_ppr,
-        "kg_communities": q_kg_communities,
-        "kg_modularity": q_kg_modularity,
-        "kg_shortest_paths": q_kg_shortest_paths,
-        "event_bursts": q_event_bursts,
-        "hll_distinct": q_hll_distinct,
-        "kmv_distinct": q_kmv_distinct,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "bloom_prune": q_bloom_prune,
-        "hll_merge": q_hll_merge,
-        "kmv_overlap": q_kmv_overlap,
-        "event_funnel": q_event_funnel,
-        "retention_cohorts": q_retention_cohorts,
-        "crawl_diff": q_crawl_diff,
-        "length_quantiles": q_length_quantiles,
-        "weighted_sample": q_weighted_sample,
-        "journey_transitions": q_journey_transitions,
-        "kg_fact_history": q_kg_fact_history,
-        "vocab_growth": q_vocab_growth,
-        "kg_as_of": q_kg_as_of,
-        "kg_snapshot_diff": q_kg_snapshot_diff,
-        "kg_rule_mining": q_kg_rule_mining,
-        "kg_rule_apply": q_kg_rule_apply,
-        "kg_implications": q_kg_implications,
-        "bootstrap_ci": q_bootstrap_ci,
-        "zipf_fit": q_zipf_fit,
-        "length_outliers": q_length_outliers,
-        "host_lang_entropy": q_host_lang_entropy,
-        "dedup_recall_eval": q_dedup_recall_eval,
-        "knn_graph": q_knn_graph,
-        "video_frames": q_video_frames,
-        "dedup_best_survivor": q_dedup_best_survivor,
-        "boolean_retrieval": q_boolean_retrieval,
-        "lang_id_eval": q_lang_id_eval,
-        "kg_resolve": q_kg_resolve,
-        "kg_fuse": q_kg_fuse,
-        "kg_rank_eval": q_kg_rank_eval,
-        "kg_rank_eval_filtered": q_kg_rank_eval_filtered,
-        "kg_ntriples": q_kg_ntriples,
-        "kg_walks": q_kg_walks,
-        "kg_infer_canonical": q_kg_infer_canonical,
-        "quality_classifier": q_quality_classifier,
-        "classifier_score": q_classifier_score,
-        "lm_perplexity": q_lm_perplexity,
-        "mixture_sample": q_mixture_sample,
-        "pack_sequences": q_pack_sequences,
-        "training_pipeline": q_training_pipeline,
-        "curation_pipeline": q_curation_pipeline,
-        "domain_cap": q_domain_cap,
-        "hash_split": q_hash_split,
-        "latest_event": q_latest_event,
-        "paragraph_dedup": q_paragraph_dedup,
-        "substring_dedup": q_substring_dedup,
-        "url_dedup": q_url_dedup,
-        "bm25_select": q_bm25,
-        "dsir_select": q_dsir,
-        "incremental_dedup": q_incremental_dedup,
-        "kmeans_centroids": q_kmeans,
-        "link_graph": q_link_graph,
-        "host_authority": q_host_authority,
-        "host_authority_weighted": q_host_authority_weighted,
-        "crawl_frontier": q_crawl_frontier,
-        "crawl_schedule": q_crawl_schedule,
-        "anchor_names": q_anchor_names,
-        "kg_degree_dist": q_kg_degree_dist,
-        "ccnet_buckets": q_ccnet_buckets,
-        "kg_entity_cards": q_kg_entity_cards,
-        "temperature_mix": q_temperature_mix,
-        "chunk_docs": q_chunk_docs,
-        "mirror_hosts": q_mirror_hosts,
-        "bpe_train": q_bpe_train,
-        "bpe_vocab": q_bpe_vocab,
-        "bpe_fertility": q_bpe_fertility,
-        "semdedup": q_semdedup,
-        "decontaminate": q_decontaminate,
-        "pii_scrub": q_pii_scrub,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "containment_audit": q_containment_audit,
-        "cosine_topk": q_cosine_topk,
-        "ann_topk": q_ann_topk,
-        "ivf_topk": q_ivf_topk,
-        "host_counts": q_host_counts,
-        "image_features": q_image_features,
-        "image_features_real": q_image_features_real,
-        "audio_features_real": q_audio_features_real,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3ish": q_tpch_q3ish,
-        "sessionize": q_sessionize,
-        "cube_agg": q_cube_agg,
-        "asof_join": q_asof_join,
-        "json_flatten": q_json_flatten,
-        "spo_flatten": q_spo_flatten,
-        "budget_truncate": q_budget_truncate,
-        "perm_examples": q_perm_examples,
-        "perm_examples_sampled": q_perm_examples_sampled,
-        "tokenize_offsets": q_tokenize_offsets,
-        "span_labels_search": q_span_labels_search,
-        "span_labels_char": q_span_labels_char,
-        "vocab_topk": q_vocab_topk,
-        "tfidf_keywords": q_tfidf_keywords,
-        "collocations": q_collocations,
-        "kg_reach_profile": q_kg_reach_profile,
-        "kg_entity_types": q_kg_entity_types,
-        "cdc_chunks": q_cdc_chunks,
-        "rel2id": q_rel2id,
-        "cooccur_pairs": q_cooccur_pairs,
-        "exact_dedup": q_exact_dedup,
-        "score2prob": q_score2prob,
-        "argmax_order": q_argmax_order,
-        "metric_f1_sets": q_metric_f1_sets,
-        "rl_transitions": q_rl_transitions,
-        "rl_event_transitions": q_rl_event_transitions,
-        "dqn_train": q_dqn_train,
-        "rl_learned_policy": q_rl_learned_policy,
-    }
+    """Every ``q_<name>`` function of this module, keyed by ``<name>``."""
+    return {k[2:]: f for k, f in globals().items() if k.startswith("q_")}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -33,12 +33,28 @@ WEB_PAGES_SCHEMA_NO_HTML = (
     "doc_id long, url string, warc_ts timestamp, text string, lang string"
 )
 
-#: The declared read of the skeleton's two columns (see _read_skeleton).
-SKELETON_SCHEMA = "doc_id long, lang string"
-_SKELETON_TYPES = {
-    "doc_id": (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    "lang": (T.StringType,),
+#: The declared columns of every input table an sf dir holds (see
+#: read_table), typed as Spark's footer inference types them. pyarrow
+#: writes tz-naive timestamps, which Spark reads as ``timestamp_ntz``.
+_TABLES = {
+    name: dict(col.split(" ", 1) for col in ddl.split(", "))
+    for name, ddl in {
+        "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+        "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+                  "value double, props string",
+        "embeddings": "vec_id bigint, embedding array<float>, label int",
+        "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+                    "l_quantity double, l_extendedprice double, l_discount double, "
+                    "l_tax double, l_returnflag string, l_linestatus string, "
+                    "l_shipdate timestamp_ntz",
+        "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+                  "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+        "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+                    "c_mktsegment string",
+    }.items()
 }
+#: footer integer types that a declared ``bigint`` column widens from
+_WIDENS_TO_BIGINT = ("tinyint", "smallint", "int")
 
 _EPOCH = _dt.datetime(2024, 1, 1)
 
@@ -163,38 +179,41 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
     return T.StructType.fromJson(json.loads(schema.json()))
 
 
-def _read_skeleton(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``documents.parquet``'s (doc_id, lang) columns, read with the declared
-    ``SKELETON_SCHEMA``. Without a schema, ``spark.read.parquet`` runs a
-    one-task Spark job on every call to infer it from the footers: building
-    ``doc_skeleton`` at sf0.01 took 94-106 ms that way and 27-33 ms with the
-    declared schema and the footer check below (median of 20, 4-vCPU VM).
+def read_table(spark: SparkSession, sf_dir: str, name: str, *columns: str) -> DataFrame:
+    """``{sf_dir}/{name}.parquet``, read with the catalog's declared types
+    (``_TABLES``) of ``columns``, or of every catalog column when none are
+    named. Without a schema, ``spark.read.parquet`` runs a one-task Spark
+    job on every call to infer it from the footers: building
+    ``doc_skeleton`` at sf0.01 took 94-106 ms that way and 27-33 ms with
+    the declared schema and the footer check below (median of 20, 4-vCPU
+    VM).
 
-    A declared read turns a missing column into NULLs, and a NULL ``lang``
-    means English, so a malformed skeleton would pass silently. One file's
-    footer is checked instead, as Spark's inference reads one file's footer
-    unless ``mergeSchema`` is set: ``doc_id`` must be an integer column and
-    ``lang`` a string column, else ``ValueError``."""
-    path = f"{sf_dir}/documents.parquet"
-    docs = spark.read.schema(SKELETON_SCHEMA).parquet(path)
+    A declared read turns a missing column into NULLs (and a NULL ``lang``
+    into English pages), so one file's footer is checked instead, as
+    Spark's inference reads one file's footer unless ``mergeSchema`` is
+    set: each column read must be there with its declared type, where a
+    narrower integer widens to a declared ``bigint``. Anything else is a
+    ``ValueError`` naming the file."""
+    types = _TABLES[name]
+    columns = columns or tuple(types)
+    ddl = ", ".join(f"{c} {types[c]}" for c in columns)
+    df = spark.read.schema(ddl).parquet(f"{sf_dir}/{name}.parquet")
     # the JVM array, not DataFrame.inputFiles(): py4j would fetch every
     # listed file name in its own round trip
-    files = docs._jdf.inputFiles()
+    files = df._jdf.inputFiles()
     if len(files) == 0:
-        raise ValueError(f"{path}: no parquet files to read the corpus skeleton from")
+        raise ValueError(f"{sf_dir}/{name}.parquet: no parquet files to read")
     first = files[0]
-    found = {f.name: f.dataType for f in _footer_schema(spark, first).fields}
+    found = {f.name: f.dataType.simpleString() for f in _footer_schema(spark, first).fields}
     bad = [
-        f"{name} is {found[name].simpleString() if name in found else 'missing'}"
-        for name, types in _SKELETON_TYPES.items()
-        if not isinstance(found.get(name), types)
+        f"{c} is {found.get(c, 'missing')}"
+        for c in columns
+        if found.get(c) != types[c]
+        and not (types[c] == "bigint" and found.get(c) in _WIDENS_TO_BIGINT)
     ]
     if bad:
-        raise ValueError(
-            f"{first}: the corpus skeleton needs an integer doc_id and a "
-            f"string lang column; {', '.join(bad)}"
-        )
-    return docs
+        raise ValueError(f"{first}: the read declares {ddl}; {', '.join(bad)}")
+    return df
 
 
 def doc_skeleton(
@@ -216,13 +235,13 @@ def doc_skeleton(
     shifts ids by r·(max_id+1), producing distinct urls AND distinct facts
     (all content is doc_id arithmetic).
 
-    The read declares ``doc_id long, lang string`` (``_read_skeleton``), so
-    planning it runs no Spark job; a file without an integer ``doc_id`` or
-    a string ``lang`` column is a ``ValueError``. Any ``lang`` value other
+    The read is ``read_table``'s declared ``doc_id bigint, lang string``,
+    so planning it runs no Spark job; a file without an integer ``doc_id``
+    or a string ``lang`` column is a ``ValueError``. Any ``lang`` value other
     than ``'zh'``, NULL included, generates an English page
     (``schema.doc_lang``), as the oracle's ``CASE WHEN lang = 'zh'`` does.
     """
-    docs = _read_skeleton(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents", "doc_id", "lang")
     if where is not None:
         # applied BELOW the generator mapInPandas: Catalyst pushes a doc_id
         # predicate into the parquet scan (incremental-crawl partition prune)
@@ -299,7 +318,7 @@ def gold_triples(spark: SparkSession, sf_dir: str, canonical: bool = False) -> D
     Used as the gold side of MetricF1 and as pytest fixtures. ``canonical``
     selects post-entity-linking surfaces.
     """
-    docs = _read_skeleton(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents", "doc_id", "lang")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -325,7 +344,7 @@ def gold_fact_tuples(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the P10 (token-match) and P11 (char-span) span-labeling
     operators consume.
     """
-    docs = _read_skeleton(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents", "doc_id", "lang")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -357,7 +376,7 @@ def gold_fact_tuples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gold_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected (url, etype, role, value) rows of the event pipeline."""
-    docs = _read_skeleton(spark, sf_dir)
+    docs = read_table(spark, sf_dir, "documents", "doc_id", "lang")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -49,6 +49,19 @@ def with_cosine(df: DataFrame, a: str, b: str) -> DataFrame:
     return df.withColumn("cosine", _dot(ca, cb) / (_norm(ca) * _norm(cb)))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, neighbor_id) pairs of ``scored`` per query
+    by ``cosine``, ties to the smaller neighbor_id, as (query_id,
+    neighbor_id, cosine rounded to 6 places, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
+                F.col("rank").cast("long").alias("rank"))
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -77,13 +90,7 @@ def cosine_topk(
         q.crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id")),
         "q_vec", "c_vec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
-                F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k)
 
 
 def hyperplane_weights(n_planes: int, dim: int, seed: str = "ann") -> list[list[float]]:
@@ -197,13 +204,7 @@ def ann_topk(
             / (F.col("q_norm") * F.col("c_norm")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
-                F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k)
 
 
 def ivf_topk(
@@ -273,13 +274,7 @@ def ivf_topk(
         q_assigned.join(c_assigned, "cell").filter(F.col("query_id") != F.col("neighbor_id")),
         "q_vec", "c_vec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
-                F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k)
 
 
 def embedding_neardup_pairs(

@@ -69,7 +69,7 @@ for _ in range(passes):
     t0 = time.time()
     n = job()
     walls.append(round(time.time() - t0, 2))
-n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count() * replicate
+n_docs = corpus.read_table(spark, sf_dir, "documents", "doc_id").count() * replicate
 print(json.dumps({"cpus": cpus, "wall": min(walls), "walls": walls,
                   "triples": n, "docs": n_docs}))
 spark.stop()

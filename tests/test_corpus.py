@@ -1,10 +1,11 @@
-"""The corpus skeleton read: a declared schema that plans without a Spark
-job, and a loud error for a skeleton that lacks its columns."""
+"""The input-table read: declared schemas that plan without a Spark job,
+and a loud error for a table that lacks its columns."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+import __spark_entry__ as entry
 from autoextraction_spark import corpus, pipeline
 
 
@@ -38,10 +39,40 @@ def test_building_the_skeleton_plan_runs_no_spark_job(spark, sf_dir):
 
 
 def test_declared_read_equals_inferred_read(spark, sf_dir):
-    inferred = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
-    declared = corpus._read_skeleton(spark, sf_dir)
-    assert declared.schema == inferred.schema
-    assert sorted(declared.collect()) == sorted(inferred.collect())
+    for table in corpus._TABLES:
+        inferred = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        declared = corpus.read_table(spark, sf_dir, table)
+        assert declared.schema == inferred.schema, table
+        assert sorted(map(repr, declared.collect())) == sorted(map(repr, inferred.collect()))
+        named = inferred.columns[::-2]  # a narrowed read, in another order
+        narrowed = corpus.read_table(spark, sf_dir, table, *named)
+        assert narrowed.schema == inferred.select(*named).schema, table
+
+
+@pytest.mark.parametrize("table", list(corpus._TABLES))
+@pytest.mark.parametrize("fault", ["missing", "mistyped"])
+def test_malformed_table_raises(spark, sf_dir, tmp_path, table, fault):
+    """Every catalog table: a dropped column and a column of the wrong type
+    are each a ValueError naming the file and the column."""
+    data = pq.read_table(f"{sf_dir}/{table}.parquet")
+    if fault == "missing":
+        col = data.column_names[0]
+        data, message = data.drop([col]), f"{col} is missing"
+    else:
+        col = data.column_names[-1]
+        data = data.set_column(data.num_columns - 1, col, pa.array([True] * data.num_rows))
+        message = f"{col} is boolean"
+    pq.write_table(data, str(tmp_path / f"{table}.parquet"))
+    with pytest.raises(ValueError, match=rf"{table}\.parquet: .*\b{message}$"):
+        corpus.read_table(spark, str(tmp_path), table)
+
+
+def test_building_headline_plans_runs_no_spark_job(spark, sf_dir):
+    """The declared reads leave these headline plans with no job at build
+    time; an undeclared read ran one footer-inference job in each."""
+    for name in ("simhash", "tpch_q1", "vocab_topk", "cooccur_pairs", "training_pipeline"):
+        query = entry.queries()[name]
+        assert _jobs_in_group(spark, f"{name}-plan-build", lambda: query(spark, sf_dir)) == 0, name
 
 
 def test_int32_doc_id_and_null_lang_read(spark, tmp_path):
@@ -57,7 +88,7 @@ def test_int32_doc_id_and_null_lang_read(spark, tmp_path):
     pages = {r.doc_id: r for r in corpus.pages_from_skeleton(skel, with_text=True).collect()}
     assert [pages[d].lang for d in (7, 8, 9)] == ["en", "en", "zh"]
     as_en = corpus.pages_from_skeleton(
-        spark.createDataFrame([(7, "en")], corpus.SKELETON_SCHEMA), with_text=True
+        spark.createDataFrame([(7, "en")], "doc_id long, lang string"), with_text=True
     ).first()
     assert (pages[7].html, pages[7].text) == (as_en.html, as_en.text)
 

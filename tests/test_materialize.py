@@ -189,18 +189,20 @@ def _library_sources():
     yield ROOT / "__spark_entry__.py"
 
 
-def _called_names(src: str):
-    """(line, name) of every call in ``src``, also inside string literals
-    that hold code (scripts/scaling.py runs its worker from one)."""
-    for node in ast.walk(ast.parse(src)):
+def _called_names(src, fn: str | None = None):
+    """(line, name, call, enclosing function) of every call in ``src``
+    (source text or a parsed node), also inside string literals that hold
+    code (scripts/scaling.py runs its worker from one)."""
+    for node in ast.iter_child_nodes(ast.parse(src) if isinstance(src, str) else src):
         if isinstance(node, ast.Call):
             f = node.func
-            yield node.lineno, getattr(f, "attr", None) or getattr(f, "id", None)
+            yield node.lineno, getattr(f, "attr", None) or getattr(f, "id", None), node, fn
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             try:
-                yield from _called_names(node.value)
+                yield from _called_names(node.value, fn)
             except SyntaxError:
                 pass
+        yield from _called_names(node, node.name if isinstance(node, ast.FunctionDef) else fn)
 
 
 def test_triples_built_only_by_the_pipeline_chains():
@@ -211,8 +213,24 @@ def test_triples_built_only_by_the_pipeline_chains():
         f"{path.relative_to(ROOT)}:{line}"
         for path in paths
         if path != ROOT / "autoextraction_spark" / "pipeline.py"
-        for line, name in _called_names(path.read_text())
+        for line, name, _, _ in _called_names(path.read_text())
         if name == "to_triples"
+    ]
+    assert offenders == []
+
+
+def test_input_tables_read_only_by_read_table():
+    # every read of an sf dir's tables goes through corpus.read_table, which
+    # declares their types and checks a footer; tables the library wrote
+    # itself (pipeline stages, streaming stores) are read from other dirs
+    paths = [*_library_sources(), *sorted((ROOT / "scripts").glob("*.py"))]
+    offenders = [
+        f"{path.relative_to(ROOT)}:{fn}:{line}"
+        for path in paths
+        for line, name, call, fn in _called_names(path.read_text())
+        if name == "parquet"
+        and any(getattr(n, "id", None) == "sf_dir" for a in call.args for n in ast.walk(a))
+        and (path.name, fn) != ("corpus.py", "read_table")
     ]
     assert offenders == []
 
