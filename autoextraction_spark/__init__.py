@@ -14,10 +14,11 @@ Pipeline stages (SURVEY.md §7):
   D. output semantics     operators/output.py         (completed filter, triples, F1)
   E. entity linking       operators/linking.py        (MinHash/LSH blocking)
   F. canonicalization     operators/canonicalize.py   (connected components)
-  G. materialization      pipeline.py                 (KgPipeline stages text → triples →
-                                                       linking_map → canonical, written with
-                                                       _stage/_part_id lineage; canonical
-                                                       triples partitioned by pred)
+  G. materialization      pipeline.py, store.py       (KgPipeline stages text → triples →
+                                                       linking_map → canonical, each a
+                                                       store.stage: _stage/_part_id lineage,
+                                                       manifest at stage=<name>/_manifest.json;
+                                                       canonical triples partitioned by pred)
 A-D run as one chain per input: pipeline.skeleton_triples (doc skeleton)
 and pipeline.text_triples (extracted text).
 Plus training-data-pipeline operators: dedup.py, similarity.py,

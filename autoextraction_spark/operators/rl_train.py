@@ -62,10 +62,8 @@ numerics. A 10^12-document corpus trains on a sampled buffer — sample
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import time
 import zlib
 from collections.abc import Iterator
 
@@ -75,7 +73,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 from pyspark.storagelevel import StorageLevel
 
-from .. import scorers
+from .. import scorers, store
 from .slot_fill import initial_remaining
 
 TRANSITION_SCHEMA = (
@@ -438,78 +436,52 @@ def fitted_q_train(
     then run ``iters_per_gen`` fitted-Q iterations. ``model`` is the
     initial head (None is a zero ``LinearQ``). Returns (model, history).
 
-    ``workdir`` makes training RESUMABLE with the same manifest scheme as
-    the extraction pipeline (pipeline.KgPipeline; the reference checkpoints
-    weights every ``iters_save`` episodes, DQN.py:155-156): per generation,
-    the rollout's transitions land as a parquet checkpoint with per-partition
-    lineage, and the trained head (``to_json``) + loss history land in a
-    manifest whose config FINGERPRINT chains through all prior generations
-    from the initial head's JSON — a killed job re-runs only unfinished
-    generations, and any config change (initial head, seed, ε schedule,
-    reward mode, optimizer knobs) invalidates everything downstream instead
-    of silently resuming stale state."""
+    ``workdir`` makes training RESUMABLE with the extraction pipeline's
+    checkpoint (``store.stage``; the reference checkpoints weights every
+    ``iters_save`` episodes, DQN.py:155-156): per generation, the rollout's
+    transitions land under ``workdir/stage=rl_transitions/gen=<g>`` with
+    per-partition lineage, and the trained head (``to_json``) + loss history
+    are added to that dir's one manifest, whose FINGERPRINT chains through
+    all prior generations from the initial head's JSON — a killed job
+    re-runs only unfinished generations (re-training from landed
+    transitions when only the head is missing), and any config change
+    (initial head, seed, ε schedule, reward mode, optimizer knobs)
+    invalidates everything downstream instead of silently resuming stale
+    state."""
     model = model or LinearQ.zeros()
     history: list[dict] = []
     eps = epsilon0
-    if workdir:
-        os.makedirs(workdir, exist_ok=True)
-    from .. import pipeline
-
     fp = model.to_json()
     for g in range(n_generations):
-        cfg = (
-            f"{g}|{seed}|{eps:.6f}|{iters_per_gen}|{reward_mode}|"
-            f"{sorted(train_kw.items())}|{pipeline._source_digest()}|{fp}"
+        fp = store.fingerprint(
+            g, seed, f"{eps:.6f}", iters_per_gen, reward_mode, sorted(train_kw.items()), fp
         )
-        fp = hashlib.md5(cfg.encode()).hexdigest()
-        manifest_path = (
-            os.path.join(workdir, f"rl_gen_{g}.json") if workdir else None
-        )
-        if manifest_path and resume and os.path.exists(manifest_path):
-            with open(manifest_path) as f:
-                m = json.load(f)
-            if m.get("fingerprint") == fp:
+
+        def rollout():
+            return generate_transitions(
+                detected, model.policy(), epsilon=eps, seed=seed + g, gold=gold,
+                reward_mode=reward_mode,
+            )
+
+        if workdir:
+            gen_dir = os.path.join(workdir, f"stage=rl_transitions/gen={g}")
+            m = store.manifest(gen_dir) if resume else None
+            if m and m.get("fingerprint") == fp and "model" in m:
                 model = model.from_json(m["model"])
                 history.extend(m["history"])
                 eps *= epsilon_decay
                 continue
-        t0 = time.time()
-        trans = generate_transitions(
-            detected, model.policy(), epsilon=eps, seed=seed + g, gold=gold,
-            reward_mode=reward_mode,
-        )
-        if workdir:
-            tdir = os.path.join(workdir, f"stage=rl_transitions/gen={g}")
-            success = os.path.join(tdir, "_SUCCESS")
-            fp_marker = os.path.join(tdir, f"_FP_{fp}")
-            if not (resume and os.path.exists(success) and os.path.exists(fp_marker)):
-                (
-                    trans.withColumn("_stage", F.lit(f"rl_transitions_g{g}"))
-                    .withColumn("_part_id", F.spark_partition_id())
-                    .write.mode("overwrite")
-                    .parquet(tdir)
-                )
-                open(fp_marker, "w").close()
-            trans = detected.sparkSession.read.parquet(tdir)
+            trans = store.stage(gen_dir, fp, rollout, resume=resume)
+        else:
+            trans = rollout()
         model, h = train_dqn(trans, model, n_iters=iters_per_gen, seed=seed + g,
                              **train_kw)
         for row in h:
             row["generation"] = g
             row["epsilon"] = eps
         history.extend(h)
-        if manifest_path:
-            with open(manifest_path, "w") as f:
-                json.dump(
-                    {
-                        "generation": g,
-                        "fingerprint": fp,
-                        "epsilon": eps,
-                        "model": model.to_json(),
-                        "history": h,
-                        "wall_sec": round(time.time() - t0, 2),
-                    },
-                    f,
-                )
+        if workdir:
+            store.record(gen_dir, model=model.to_json(), history=h)
         eps *= epsilon_decay
     return model, history
 

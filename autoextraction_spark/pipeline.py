@@ -2,15 +2,15 @@
 lineage + metrics (north_rule: "checkpointed per stage with per-partition
 lineage and metrics for resumable execution").
 
-Each stage writes its output as parquet under ``workdir/stage=<name>/`` and
-``workdir/manifest_<name>.json`` recording rows out (observed by the
-writing job), partition count, wall time, sf_dir, policy and the config
-fingerprint. ``run`` skips stages whose manifest + _SUCCESS marker exist
-with a matching fingerprint — resuming a killed job re-executes only
-unfinished stages.
-(Iceberg snapshots would subsume this; the catalog jar is absent in this
-container, so the layout is plain partitioned parquet with the same
-semantics and a one-line swap point in ``_write``/``_read``.)
+``KgPipeline`` runs each stage through ``store.stage``: the output lands as
+parquet under ``workdir/stage=<name>/`` with ``_stage``/``_part_id``
+lineage, and the manifest lives inside that dir as ``_manifest.json``,
+recording the rows the writing job observed, the wall time, the stage's
+fingerprint (sf_dir, policy, package source, upstream fingerprint) and the
+schema the stage is read back with. ``run`` skips a stage whose manifest
+records the current fingerprint, reading it back with no Spark job;
+resuming a killed job re-executes only unfinished stages, and a rebuild
+killed before its manifest landed is rebuilt, never served.
 
 ``skeleton_triples`` and ``text_triples`` are the stage A-D chains, one per
 input shape; every extraction job builds its triples through one of them.
@@ -22,17 +22,12 @@ used before any per-host grouped stage: salt → partial agg → final agg.
 
 from __future__ import annotations
 
-import functools
-import hashlib
-import json
 import os
-import time
-from importlib import resources
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import corpus, materialize
+from . import corpus, store
 from .operators import detect, linking, output, slot_fill
 
 STAGES = ["text", "triples", "linking_map", "canonical"]
@@ -125,26 +120,6 @@ def incremental_delta(new_triples: DataFrame, kg_snapshot: DataFrame) -> DataFra
     ).select(*new_triples.columns)
 
 
-def _digest_tree(node, h, prefix: str = "") -> None:
-    for child in sorted(node.iterdir(), key=lambda c: c.name):
-        path = f"{prefix}/{child.name}"
-        if child.is_dir():
-            _digest_tree(child, h, path)
-        elif child.name.endswith(".py"):
-            h.update(path.encode() + b"\0" + child.read_bytes())
-
-
-@functools.cache
-def _source_digest() -> str:
-    """Digest of every ``.py`` source of this package, computed once per
-    process — the code-version component of ``KgPipeline._fingerprint``.
-    Read through ``importlib.resources`` so a ``--py-files`` zip digests
-    the same as the source tree it was built from."""
-    h = hashlib.md5()
-    _digest_tree(resources.files(__package__), h)
-    return h.hexdigest()
-
-
 def skeleton_triples(skel: DataFrame, policy: str = "rl") -> DataFrame:
     """Stages A-D over the (doc_id, lang) skeleton in one python hop
     (``slot_fill.episodes_from_skeleton``) → distinct (url, pred, subj,
@@ -167,7 +142,7 @@ def text_triples(text: DataFrame, policy: str = "rl") -> DataFrame:
 
 
 class KgPipeline:
-    """Stages A-F with checkpoint/resume + manifest metrics:
+    """Stages A-F as ``store.stage`` checkpoints under ``workdir``:
     ``text`` → ``triples`` → ``linking_map`` → ``canonical``."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, workdir: str, policy: str = "rl"):
@@ -175,115 +150,49 @@ class KgPipeline:
         self.sf_dir = sf_dir
         self.workdir = workdir
         self.policy = policy
-        os.makedirs(workdir, exist_ok=True)
 
-    # -- checkpoint plumbing -------------------------------------------------
-    def _dir(self, stage: str) -> str:
-        return os.path.join(self.workdir, f"stage={stage}")
+    def fingerprints(self) -> dict[str, str]:
+        """Each stage's fingerprint: stage + sf_dir + policy + package source
+        + the UPSTREAM stage's fingerprint, so a config or code change
+        invalidates everything downstream."""
+        fps, fp = {}, ""
+        for name in STAGES:
+            fp = fps[name] = store.fingerprint(name, self.sf_dir, self.policy, fp)
+        return fps
 
-    def _manifest_path(self, stage: str) -> str:
-        return os.path.join(self.workdir, f"manifest_{stage}.json")
-
-    def _fingerprint(self, stage: str, upstream_fp: str) -> str:
-        """Config fingerprint: stage + sf_dir + policy + package source
-        digest + the UPSTREAM stage's fingerprint, so a config or code
-        change invalidates everything downstream."""
-        return hashlib.md5(
-            f"{stage}|{self.sf_dir}|{self.policy}|{_source_digest()}|{upstream_fp}".encode()
-        ).hexdigest()
-
-    def is_done(self, stage: str, fingerprint: str | None = None) -> bool:
-        """Stage is resumable iff manifest + _SUCCESS exist AND the recorded
-        fingerprint matches the current config and code — resume against a
-        workdir built from a different corpus/policy/package source rebuilds
-        instead of silently returning stale outputs (ADVICE.md)."""
-        if not (
-            os.path.exists(self._manifest_path(stage))
-            and os.path.exists(os.path.join(self._dir(stage), "_SUCCESS"))
-        ):
-            return False
-        if fingerprint is None:
-            return True
-        with open(self._manifest_path(stage)) as f:
-            return json.load(f).get("fingerprint") == fingerprint
-
-    def _read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._dir(stage))
-
-    def _write(self, stage: str, df: DataFrame, fingerprint: str = "",
-               partition_by: list[str] | None = None) -> DataFrame:
-        t0 = time.time()
-        lineage = df.withColumn("_stage", F.lit(stage)).withColumn(
-            "_part_id", F.spark_partition_id()
-        )
-        lineage, stats = materialize.observed(lineage, [F.count(F.lit(1)).alias("rows")])
-        writer = lineage.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._dir(stage))
-        out = self._read(stage)
-        manifest = {
-            "stage": stage,
-            "rows": stats()["rows"],
-            "partitions": out.rdd.getNumPartitions(),
-            "wall_sec": round(time.time() - t0, 2),
-            "sf_dir": self.sf_dir,
-            "policy": self.policy,
-            "fingerprint": fingerprint,
-        }
-        with open(self._manifest_path(stage), "w") as f:
-            json.dump(manifest, f)
-        return out
-
-    def _stage(self, name: str, build, resume: bool, fp: str, partition_by=None) -> DataFrame:
-        if resume and self.is_done(name, fp):
-            return self._read(name)
-        return self._write(name, build(), fp, partition_by)
-
-    # -- stages ---------------------------------------------------------------
     def run(self, resume: bool = True) -> DataFrame:
-        fp = self._fingerprint("text", "")
-        txt = self._stage(
+        fps = self.fingerprints()
+
+        def stage(name, build, partition_by=()):
+            path = os.path.join(self.workdir, f"stage={name}")
+            return store.stage(path, fps[name], build, partition_by, resume)
+
+        txt = stage(
             "text",
-            lambda: corpus.web_pages(
-                self.spark, self.sf_dir, with_text=True, emit_html=False
-            ),
-            resume,
-            fp,
+            lambda: corpus.web_pages(self.spark, self.sf_dir, with_text=True, emit_html=False),
         )
-        fp = self._fingerprint("triples", fp)
-        triples = self._stage(
-            "triples",
-            lambda: text_triples(txt.drop("_stage", "_part_id"), self.policy),
-            resume,
-            fp,
+        triples = stage(
+            "triples", lambda: text_triples(txt.drop(*store.LINEAGE), self.policy)
         )
-        map_fp = self._fingerprint("linking_map", fp)
-        mapping = self._stage(
+        mapping = stage(
             "linking_map",
             lambda: linking.canonical_mapping(
-                linking.mention_vocab(triples.drop("_stage", "_part_id"))
+                linking.mention_vocab(triples.drop(*store.LINEAGE))
             ),
-            resume,
-            map_fp,
         )
-        canonical = self._stage(
+        return stage(
             "canonical",
             lambda: linking.canonical_triples(
-                triples.drop("_stage", "_part_id"),
-                mapping.drop("_stage", "_part_id"),
+                triples.drop(*store.LINEAGE), mapping.drop(*store.LINEAGE)
             ),
-            resume,
-            self._fingerprint("canonical", map_fp),
             partition_by=["pred"],  # stage G: query-pruned triple layout
         )
-        return canonical
 
     def metrics(self) -> list[dict]:
-        out = []
-        for s in STAGES:
-            p = self._manifest_path(s)
-            if os.path.exists(p):
-                with open(p) as f:
-                    out.append(json.load(f))
-        return out
+        """The manifests of the written stages, each with its stage name and
+        without its schema."""
+        return [
+            {"stage": name, **{k: v for k, v in m.items() if k != "schema"}}
+            for name in STAGES
+            if (m := store.manifest(os.path.join(self.workdir, f"stage={name}")))
+        ]

@@ -25,26 +25,10 @@ approximate layer); engine-new per the training-data-pipeline mandate.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import sketch
 from .ingest import stream_pages
-
-
-def _sketch_batch(
-    store_dir: str, key_col: str, group_cols: list[str], seed: str
-):
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
-        regs = sketch.hll_registers(batch_df, key_col, group_cols, seed=seed)
-        (
-            regs.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(store_dir)
-        )
-
-    return run
 
 
 def stream_cardinality(
@@ -60,15 +44,12 @@ def stream_cardinality(
     (availableNow catch-up trigger); returns the StreamingQuery."""
     if group_cols is None:
         group_cols = ["lang"]
-    pages = stream_pages(spark, in_dir)
-    return (
-        pages.writeStream.foreachBatch(
-            _sketch_batch(store_dir, key_col, group_cols, seed)
-        )
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        regs = sketch.hll_registers(batch_df, key_col, group_cols, seed=seed)
+        store.write_epoch(regs, store_dir, epoch_id)
+
+    return store.run_available(stream_pages(spark, in_dir), run, ckpt_dir)
 
 
 def current_estimate(
@@ -81,7 +62,7 @@ def current_estimate(
     register store folded by per-bucket max, then the shared estimator."""
     if group_cols is None:
         group_cols = ["lang"]
-    regs = spark.read.parquet(store_dir).select(*group_cols, "bucket", "reg")
+    regs = store.read(spark, store_dir).select(*group_cols, "bucket", "reg")
     return sketch.hll_estimate(
         sketch.hll_merge(regs, group_cols), group_cols, out_col
     )

@@ -14,7 +14,11 @@ Design rules at scale:
   is per-micro-batch, never cross-batch state;
 - exactly-once = streaming checkpointLocation + an IDEMPOTENT epoch sink:
   each micro-batch dynamically overwrites its own ``_epoch=<id>`` partition,
-  so a retried epoch replaces rather than duplicates its output.
+  so a retried epoch replaces rather than duplicates its output. Every
+  streaming module starts its stream with ``store.run_available`` and
+  writes through ``store.write_epoch``, which keeps the store's schema in
+  ``_manifest.json`` beside the partitions, so reads of the store
+  (``store.read``) declare it instead of inferring it.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.text_extract import with_extracted_text
 from ..pipeline import text_triples
 
@@ -40,25 +45,6 @@ def stream_pages(spark: SparkSession, in_dir: str) -> DataFrame:
     )
 
 
-def _process_batch(out_dir: str):
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
-        triples = text_triples(with_extracted_text(batch_df))
-        # idempotent per epoch: foreachBatch re-runs a failed epoch with the
-        # SAME epoch_id, and a blind append would re-append rows the failed
-        # attempt already wrote (ADVICE.md). Dynamic partition overwrite on
-        # _epoch makes the retry REPLACE its own partition — this plus the
-        # streaming checkpoint is what makes the sink exactly-once.
-        (
-            triples.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_dir)
-        )
-
-    return run
-
-
 def stream_kg_pipeline(
     spark: SparkSession, in_dir: str, out_dir: str, ckpt_dir: str
 ):
@@ -67,13 +53,10 @@ def stream_kg_pipeline(
     ``availableNow`` drains everything currently landed then stops — the
     batch-catchup trigger; a production deployment uses processingTime.
     """
-    pages = stream_pages(spark, in_dir)
-    return (
-        pages.writeStream.foreachBatch(_process_batch(out_dir))
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        store.write_epoch(text_triples(with_extracted_text(batch_df)), out_dir, epoch_id)
+
+    return store.run_available(stream_pages(spark, in_dir), run, ckpt_dir)
 
 
 def stateful_exact_dedup(

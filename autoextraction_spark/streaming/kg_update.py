@@ -29,8 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
+from .. import store
 from ..operators.text_extract import with_extracted_text
 from ..pipeline import incremental_delta, text_triples
 from .ingest import stream_pages
@@ -46,28 +46,18 @@ def _first_seen_per_fact(triples: DataFrame) -> DataFrame:
 
 def _maintain_batch(store_dir: str):
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
         novel = _first_seen_per_fact(text_triples(with_extracted_text(batch_df)))
-        # guard ONLY the store read: a missing path means first epoch
-        # (everything novel), but an AnalysisException from the novelty
+        # guard ONLY the store read: a store with no manifest yet means first
+        # epoch (everything novel), but an AnalysisException from the novelty
         # join itself (e.g. a foreign store with a renamed fact column)
         # must PROPAGATE — swallowing it would silently disable dedup and
         # duplicate facts across every subsequent epoch
-        try:
-            prior = spark.read.parquet(store_dir)
-        except AnalysisException:
-            prior = None
-        if prior is not None:
+        if store.manifest(store_dir) is not None:
+            prior = store.read(batch_df.sparkSession, store_dir)
             novel = incremental_delta(
                 novel, prior.filter(F.col("_epoch") < F.lit(epoch_id))
             )
-        (
-            novel.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(store_dir)
-        )
+        store.write_epoch(novel, store_dir, epoch_id)
 
     return run
 
@@ -77,10 +67,4 @@ def stream_kg_maintenance(
 ):
     """Start the fact-store maintenance stream (availableNow catch-up
     trigger, as in stream_kg_pipeline); returns the StreamingQuery."""
-    pages = stream_pages(spark, in_dir)
-    return (
-        pages.writeStream.foreachBatch(_maintain_batch(store_dir))
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return store.run_available(stream_pages(spark, in_dir), _maintain_batch(store_dir), ckpt_dir)

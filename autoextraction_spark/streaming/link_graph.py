@@ -25,22 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.text_extract import host_link_graph
 from .ingest import stream_pages
-
-
-def _edge_batch(store_dir: str):
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = host_link_graph(batch_df).drop("is_intra")
-        (
-            delta.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(store_dir)
-        )
-
-    return run
 
 
 def stream_link_graph(
@@ -48,20 +35,17 @@ def stream_link_graph(
 ):
     """One availableNow pass: land every pending page file's link-edge
     deltas into ``store_dir`` exactly once."""
-    return (
-        stream_pages(spark, in_dir)
-        .writeStream.foreachBatch(_edge_batch(store_dir))
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        store.write_epoch(host_link_graph(batch_df).drop("is_intra"), store_dir, epoch_id)
+
+    return store.run_available(stream_pages(spark, in_dir), run, ckpt_dir)
 
 
 def current_link_graph(spark: SparkSession, store_dir: str) -> DataFrame:
     """The accumulated host-level link graph: epoch deltas re-aggregated —
     (src_host, dst_host, is_intra, n_links, n_pages)."""
     return (
-        spark.read.parquet(store_dir)
+        store.read(spark, store_dir)
         .groupBy("src_host", "dst_host")
         .agg(F.sum("n_links").alias("n_links"), F.sum("n_pages").alias("n_pages"))
         .select(

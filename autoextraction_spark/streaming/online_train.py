@@ -39,12 +39,11 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import scorers
+from .. import scorers, store
 from ..operators import detect, rl_train
 from ..operators.text_extract import with_extracted_text
 from .ingest import stream_pages
@@ -93,21 +92,6 @@ class OnlineTrainer:
         self.train_kw = train_kw
         os.makedirs(workdir, exist_ok=True)
 
-    def _retire_old_epochs(self, epoch_id: int) -> None:
-        """Drop ``_epoch=<k>`` partitions aged past the training window plus
-        the keep-margin. Partition directories are the retention unit — one
-        rmtree per retired epoch, no file-level bookkeeping."""
-        if self.window_epochs is None:
-            return
-        cutoff = epoch_id - self.window_epochs - self.retention_margin_epochs
-        for p in glob.glob(os.path.join(self.buffer_dir, "_epoch=*")):
-            try:
-                ep = int(p.rsplit("=", 1)[-1])
-            except ValueError:
-                continue
-            if ep <= cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         w, eps, _prev = _latest_weights(self.workdir, epoch_id)
@@ -118,18 +102,12 @@ class OnlineTrainer:
         trans = rl_train.generate_transitions(
             det, model.policy(), epsilon=eps, seed=self.seed + epoch_id
         )
-        (
-            trans.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(self.buffer_dir)
-        )
+        store.write_epoch(trans, self.buffer_dir, epoch_id)
         # upper bound _epoch <= epoch_id in BOTH branches: a replay from an
         # older streaming checkpoint (or a backfill with later-epoch
         # partitions present) must not train on the future — that would
         # break the retry-recomputes-from-the-same-inputs idempotency
-        buffer = spark.read.parquet(self.buffer_dir).filter(
+        buffer = store.read(spark, self.buffer_dir).filter(
             F.col("_epoch") <= epoch_id
         )
         if self.window_epochs is not None:
@@ -150,13 +128,14 @@ class OnlineTrainer:
             "loss": hist[-1]["loss"] if hist else None,
             "buffer_rows_trained": int(buffer.count()),
         }
-        tmp = os.path.join(self.workdir, f".weights_epoch_{epoch_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(artifact, f)
-        os.replace(tmp, os.path.join(self.workdir, f"weights_epoch_{epoch_id}.json"))
+        store.write_json(os.path.join(self.workdir, f"weights_epoch_{epoch_id}.json"), artifact)
         # retention runs AFTER the weight artifact lands: a crash between
-        # training and retirement retries the epoch with its window intact
-        self._retire_old_epochs(epoch_id)
+        # training and retirement retries the epoch with its window intact;
+        # it drops partitions aged past the window plus the keep-margin
+        if self.window_epochs is not None:
+            store.retire_epochs(
+                self.buffer_dir, epoch_id - self.window_epochs - self.retention_margin_epochs
+            )
 
 
 def stream_online_training(
@@ -169,12 +148,8 @@ def stream_online_training(
     """Start the online-training stream over a landing directory; returns
     the StreamingQuery. ``availableNow`` drains what's landed then stops
     (the batch-catchup trigger); production uses processingTime."""
-    pages = stream_pages(spark, in_dir)
-    return (
-        pages.writeStream.foreachBatch(OnlineTrainer(workdir, **trainer_kw))
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    return store.run_available(
+        stream_pages(spark, in_dir), OnlineTrainer(workdir, **trainer_kw), ckpt_dir
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .. import store
 from ..operators import classifier, compose
 from .ingest import stream_pages
 
@@ -60,18 +61,7 @@ def run_scored_ingest(
     swap for a continuous trigger in deployment)."""
     gated = score_stream(stream_pages(spark, in_dir), weights, rates, threshold)
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("_epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(out_dir)
-        )
-
-    return (
-        gated.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return store.run_available(
+        gated, lambda batch_df, epoch_id: store.write_epoch(batch_df, out_dir, epoch_id),
+        checkpoint_dir,
     )

@@ -68,7 +68,7 @@ def main() -> int:
     triples = skeleton_triples(corpus.doc_skeleton(spark, args.sf_dir), args.policy)
     if args.out:
         triples.write.mode("overwrite").parquet(args.out)
-        triples = spark.read.parquet(args.out)
+        triples = spark.read.schema(triples.schema).parquet(args.out)
     n_triples = triples.count()
     gold = corpus.gold_triples(spark, args.sf_dir)
     m = output.metric_f1(triples, gold).collect()[0]

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import time
 
 import pytest
 
@@ -23,6 +25,58 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """``count(group, action)``: the number of Spark jobs ``action()`` runs
+    under job group ``group``. A marker job after it makes sure the status
+    tracker has seen them all."""
+    sc = spark.sparkContext
+
+    def count(group, action):
+        try:
+            sc.setJobGroup(group, "counted")
+            action()
+            sc.setJobGroup(group + "-marker", "marker")
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        while not tracker.getJobIdsForGroup(group + "-marker"):
+            time.sleep(0.01)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count
+
+
+class Killed(Exception):
+    """A job killed mid-write."""
+
+
+@pytest.fixture(scope="session")
+def killed_manifest_write():
+    """``with killed_manifest_write(table_dir): ...`` makes the manifest
+    write of ``table_dir`` raise ``Killed``, as a job killed after the
+    parquet commit and before the manifest would, and expects the body to
+    be killed by it."""
+    from autoextraction_spark import store
+
+    @contextlib.contextmanager
+    def kill(table_dir):
+        real = store.write_json
+
+        def write_json(path, obj):
+            if os.path.dirname(path) == table_dir:
+                raise Killed(path)
+            real(path, obj)
+
+        with pytest.MonkeyPatch.context() as m, pytest.raises(Killed):
+            m.setattr(store, "write_json", write_json)
+            yield
+
+    return kill
 
 
 def _state_key(url, rel, lang, assigned, remaining, score, step):

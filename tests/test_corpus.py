@@ -16,25 +16,14 @@ def _skeleton(tmp_path, **columns):
     return str(d)
 
 
-def _jobs_in_group(spark, group, action):
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup(group, "counted")
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_building_the_skeleton_plan_runs_no_spark_job(spark, sf_dir):
+def test_building_the_skeleton_plan_runs_no_spark_job(spark, sf_dir, jobs_in_group):
     """Declaring the schema removes the footer-inference job that an
     undeclared ``spark.read.parquet`` runs on every call."""
     built = []
     build = lambda: built.append(pipeline.skeleton_triples(corpus.doc_skeleton(spark, sf_dir)))
-    assert _jobs_in_group(spark, "skeleton-plan-build", build) == 0
-    assert _jobs_in_group(spark, "skeleton-inferred-read",
-                          lambda: spark.read.parquet(f"{sf_dir}/documents.parquet")) == 1
+    assert jobs_in_group("skeleton-plan-build", build) == 0
+    assert jobs_in_group("skeleton-inferred-read",
+                         lambda: spark.read.parquet(f"{sf_dir}/documents.parquet")) == 1
     assert built[0].columns == ["url", "pred", "subj", "obj"]
 
 
@@ -67,12 +56,12 @@ def test_malformed_table_raises(spark, sf_dir, tmp_path, table, fault):
         corpus.read_table(spark, str(tmp_path), table)
 
 
-def test_building_headline_plans_runs_no_spark_job(spark, sf_dir):
+def test_building_headline_plans_runs_no_spark_job(spark, sf_dir, jobs_in_group):
     """The declared reads leave these headline plans with no job at build
     time; an undeclared read ran one footer-inference job in each."""
     for name in ("simhash", "tpch_q1", "vocab_topk", "cooccur_pairs", "training_pipeline"):
         query = entry.queries()[name]
-        assert _jobs_in_group(spark, f"{name}-plan-build", lambda: query(spark, sf_dir)) == 0, name
+        assert jobs_in_group(f"{name}-plan-build", lambda: query(spark, sf_dir)) == 0, name
 
 
 def test_int32_doc_id_and_null_lang_read(spark, tmp_path):

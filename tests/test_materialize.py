@@ -235,6 +235,44 @@ def test_input_tables_read_only_by_read_table():
     assert offenders == []
 
 
+def _store_bypasses(name: str, src: str):
+    """(line, kind) of every persisted write (``.write``), stream start
+    (``.writeStream``) and parquet read (``.read`` … ``.parquet``) in the
+    source ``src`` of file ``name`` that is not store.py's own, nor
+    ``corpus.read_table``'s input-table read."""
+    tree = ast.parse(src)
+    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute) or name == "store.py":
+            continue
+        if node.attr in ("write", "writeStream"):
+            yield node.lineno, node.attr
+        elif node.attr == "parquet" and (name, _enclosing_def(parents, node)) != (
+            "corpus.py", "read_table"
+        ):
+            recv = node.value
+            while isinstance(recv, (ast.Attribute, ast.Call)):
+                if isinstance(recv, ast.Attribute) and recv.attr == "read":
+                    yield node.lineno, "read.parquet"
+                    break
+                recv = recv.func if isinstance(recv, ast.Call) else recv.value
+
+
+def test_library_tables_written_and_read_only_through_store():
+    # every table the library writes goes through store.stage or
+    # store.write_epoch, every stream starts in store.run_available, and
+    # every parquet read is store.read (declared from the manifest) or
+    # corpus.read_table (declared from the input catalog)
+    offenders = [
+        f"{path.relative_to(ROOT)}:{line}:{kind}"
+        for path in _library_sources()
+        for line, kind in _store_bypasses(path.name, path.read_text())
+    ]
+    assert offenders == []
+    planted = "def op(df, path):\n    df.select('x').write.mode('append').parquet(path)\n"
+    assert list(_store_bypasses("graph.py", planted)) == [(2, "write")]
+
+
 def _enclosing_def(parents, node):
     while node in parents and not isinstance(node, ast.FunctionDef):
         node = parents[node]

@@ -1,13 +1,27 @@
-"""Checkpoint/resume orchestration + salted skew handling (pipeline.py)."""
+"""Checkpoint/resume orchestration (pipeline.py over store.stage) + salted
+skew handling."""
 
 import glob
-import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from autoextraction_spark import corpus
+from autoextraction_spark import corpus, store
 from autoextraction_spark.pipeline import KgPipeline, salted_host_counts
+
+
+def _dir(wd, stage):
+    return os.path.join(wd, f"stage={stage}")
+
+
+def _manifest_path(wd, stage):
+    return os.path.join(_dir(wd, stage), store.MANIFEST)
+
+
+def _is_done(p, stage):
+    m = store.manifest(_dir(p.workdir, stage))
+    return m is not None and m["fingerprint"] == p.fingerprints()[stage]
 
 
 def test_full_run_writes_manifests(spark, sf_dir, tmp_path):
@@ -27,37 +41,36 @@ def test_full_run_writes_manifests(spark, sf_dir, tmp_path):
     assert glob.glob(os.path.join(wd, "stage=canonical", "pred=*"))
 
 
-def test_write_observes_exact_rows_empty_and_partitioned(spark, sf_dir, tmp_path):
-    p = KgPipeline(spark, sf_dir, str(tmp_path / "w"))
+def test_write_observes_exact_rows_empty_and_partitioned(spark, tmp_path):
     df = spark.range(0, 1000, 1, 4).withColumn("k", F.col("id") % 7)
-    p._write("part", df, partition_by=["k"])
-    p._write("empty", df.filter("id < 0"))
+    part, empty = str(tmp_path / "stage=part"), str(tmp_path / "stage=empty")
+    store.stage(part, "fp", lambda: df, partition_by=["k"])
+    store.stage(empty, "fp", lambda: df.filter("id < 0"))
 
-    def rows(stage):
-        with open(p._manifest_path(stage)) as f:
-            return json.load(f)["rows"]
+    def rows(path):
+        return store.manifest(path)["rows"]
 
-    assert (rows("part"), rows("empty")) == (1000, 0)
-    assert spark.read.parquet(p._dir("part")).count() == 1000
+    assert (rows(part), rows(empty)) == (1000, 0)
+    assert spark.read.parquet(part).count() == 1000
 
 
 def test_resume_skips_completed_stages(spark, sf_dir, tmp_path):
     wd = str(tmp_path / "run2")
     p = KgPipeline(spark, sf_dir, wd)
     p.run(resume=False)
-    before = {s: os.path.getmtime(p._manifest_path(s)) for s in ("text",)}
+    before = {s: os.path.getmtime(_manifest_path(wd, s)) for s in ("text",)}
 
     # simulate a crash after 'text': delete downstream outputs
     for stage in ("triples", "linking_map", "canonical"):
-        os.remove(p._manifest_path(stage))
+        os.remove(_manifest_path(wd, stage))
 
     p2 = KgPipeline(spark, sf_dir, wd)
     out = p2.run(resume=True)
     assert out.count() > 0
     # upstream manifests untouched -> stages were skipped, not recomputed
-    after = {s: os.path.getmtime(p2._manifest_path(s)) for s in ("text",)}
+    after = {s: os.path.getmtime(_manifest_path(wd, s)) for s in ("text",)}
     assert before == after
-    assert os.path.exists(p2._manifest_path("canonical"))
+    assert os.path.exists(_manifest_path(wd, "canonical"))
 
 
 def test_resume_rebuilds_on_config_change(spark, sf_dir, tmp_path):
@@ -66,32 +79,73 @@ def test_resume_rebuilds_on_config_change(spark, sf_dir, tmp_path):
     wd = str(tmp_path / "run3")
     KgPipeline(spark, sf_dir, wd, policy="rl").run(resume=False)
     p_seq = KgPipeline(spark, sf_dir, wd, policy="sequence")
-    fp = p_seq._fingerprint("text", "")
-    assert not p_seq.is_done("text", fp)  # recorded fingerprint differs
-    before = os.path.getmtime(p_seq._manifest_path("triples"))
+    assert not _is_done(p_seq, "text")  # recorded fingerprint differs
+    before = os.path.getmtime(_manifest_path(wd, "triples"))
     p_seq.run(resume=True)
-    assert os.path.getmtime(p_seq._manifest_path("triples")) > before
+    assert os.path.getmtime(_manifest_path(wd, "triples")) > before
     # sequence policy misses alt-phrased facts: strictly fewer triples
     m = {x["stage"]: x for x in p_seq.metrics()}
-    assert m["triples"]["fingerprint"] == p_seq._fingerprint(
-        "triples", p_seq._fingerprint("text", "")
-    )
+    assert m["triples"]["fingerprint"] == p_seq.fingerprints()["triples"]
 
 
 def test_resume_rebuilds_on_code_change(spark, sf_dir, tmp_path, monkeypatch):
     # a workdir built by one version of the package sources must NOT serve
     # stale stage outputs to a resume under changed code
-    from autoextraction_spark import pipeline
-
     wd = str(tmp_path / "run4")
     p = KgPipeline(spark, sf_dir, wd)
     p.run(resume=False)
-    assert p.is_done("text", p._fingerprint("text", ""))
-    monkeypatch.setattr(pipeline, "_source_digest", lambda: "changed-code")
-    assert not p.is_done("text", p._fingerprint("text", ""))
-    before = os.path.getmtime(p._manifest_path("triples"))
+    assert _is_done(p, "text")
+    monkeypatch.setattr(store, "source_digest", lambda: "changed-code")
+    assert not _is_done(p, "text")
+    before = os.path.getmtime(_manifest_path(wd, "triples"))
     p.run(resume=True)
-    assert os.path.getmtime(p._manifest_path("triples")) > before
+    assert os.path.getmtime(_manifest_path(wd, "triples")) > before
+
+
+def test_killed_rebuild_is_not_served_under_the_old_fingerprint(spark, sf_dir, tmp_path,
+                                                               killed_manifest_write):
+    # a rebuild under another policy is killed after its triples committed:
+    # a resume under the first policy must rebuild them, not serve them
+    wd = str(tmp_path / "run5")
+    want = KgPipeline(spark, sf_dir, wd).run(resume=False).count()
+    with killed_manifest_write(_dir(wd, "triples")):
+        KgPipeline(spark, sf_dir, wd, policy="sequence").run()
+    assert store.manifest(_dir(wd, "triples")) is None
+    got = KgPipeline(spark, sf_dir, wd)
+    assert got.run().count() == want
+    m = {x["stage"]: x for x in got.metrics()}
+    assert m["triples"]["fingerprint"] == got.fingerprints()["triples"]
+
+
+@pytest.mark.parametrize("content", ["", '{"fingerprint": "A", "sch'], ids=["empty", "truncated"])
+def test_damaged_manifest_means_rebuild(spark, tmp_path, content):
+    path = str(tmp_path / "stage=x")
+    store.stage(path, "A", lambda: spark.range(3))
+    with open(os.path.join(path, store.MANIFEST), "w") as f:
+        f.write(content)
+    built = []
+    out = store.stage(path, "A", lambda: built.append(1) or spark.range(4))
+    assert built == [1] and out.count() == 4
+    assert store.manifest(path)["fingerprint"] == "A"
+
+
+def test_resume_of_a_completed_pipeline_runs_no_spark_job(spark, sf_dir, tmp_path, jobs_in_group):
+    # every stage is read back with the schema its manifest declares, so
+    # resuming builds the canonical plan without a footer-inference job
+    # (four of them, one per stage, before the manifests recorded schemas)
+    wd = str(tmp_path / "run6")
+    first = KgPipeline(spark, sf_dir, wd).run(resume=False)
+    out = []
+    assert jobs_in_group("kg-resume", lambda: out.append(KgPipeline(spark, sf_dir, wd).run())) == 0
+    assert out[0].columns == first.columns == spark.read.parquet(_dir(wd, "canonical")).columns
+    assert out[0].columns[-1] == "pred"
+    assert sorted(out[0].collect()) == sorted(first.collect())
+    # the checkpointed chain builds the same canonical graph as the query
+    import __spark_entry__ as entry
+
+    key = ["url", "pred", "subj", "obj"]
+    want = entry.q_kg_triples_canonical(spark, sf_dir).select(*key)
+    assert sorted(out[0].select(*key).collect()) == sorted(want.collect())
 
 
 def test_salted_host_counts_match_direct(spark, sf_dir):

@@ -271,28 +271,55 @@ def test_fitted_q_train_resume_retrains_on_code_change(spark, tmp_path, monkeypa
     # a workdir trained by one version of the package sources must NOT serve
     # stale weights and transitions to a resume under changed code
     import glob
-    import json
     import os
 
-    from autoextraction_spark import pipeline
+    from autoextraction_spark import store
 
     det = _detected(spark, [(f"u{i}", "works_for", PRIM if i % 2 else ALT, "en")
                             for i in range(10)])
     wd = str(tmp_path / "rlwd_code")
     kw = dict(n_generations=1, iters_per_gen=2, epsilon0=0.4, seed=3, workdir=wd)
     rl_train.fitted_q_train(det, **kw)
-    manifest = os.path.join(wd, "rl_gen_0.json")
-    with open(manifest) as f:
-        fp_before = json.load(f)["fingerprint"]
+    gen_dir = os.path.join(wd, "stage=rl_transitions", "gen=0")
+    fp_before = store.manifest(gen_dir)["fingerprint"]
     files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=0/part-*"))
     assert files, "transition checkpoints missing"
     mt = {f: os.path.getmtime(f) for f in files}
-    monkeypatch.setattr(pipeline, "_source_digest", lambda: "changed-code")
+    monkeypatch.setattr(store, "source_digest", lambda: "changed-code")
     rl_train.fitted_q_train(det, **kw)
-    with open(manifest) as f:
-        assert json.load(f)["fingerprint"] != fp_before  # generation 0 retrained
+    assert store.manifest(gen_dir)["fingerprint"] != fp_before  # generation 0 retrained
     new_files = sorted(glob.glob(wd + "/stage=rl_transitions/gen=0/part-*"))
     assert {f: os.path.getmtime(f) for f in new_files} != mt
+
+
+def test_fitted_q_train_killed_rebuild_is_not_served(spark, tmp_path, killed_manifest_write):
+    # a generation rebuilt under another config is killed after its
+    # transitions committed and before its manifest landed: a resume under
+    # the first config must rebuild that generation's transitions, not keep
+    # the other config's rows under its own fingerprint
+    import os
+
+    from autoextraction_spark import store
+
+    det = _detected(spark, [(f"u{i}", "works_for", PRIM if i % 2 else ALT, "en")
+                            for i in range(10)])
+    wd = str(tmp_path / "rlwd_kill")
+    gen_dir = os.path.join(wd, "stage=rl_transitions", "gen=0")
+    kw = dict(n_generations=1, iters_per_gen=2, seed=3, workdir=wd)
+
+    def transitions():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(gen_dir).drop(*store.LINEAGE).collect()
+        )
+
+    m_a, h_a = rl_train.fitted_q_train(det, epsilon0=0.4, **kw)
+    rows_a = transitions()
+    with killed_manifest_write(gen_dir):
+        rl_train.fitted_q_train(det, epsilon0=1.0, **kw)
+    assert store.manifest(gen_dir) is None and transitions() != rows_a
+    m_r, h_r = rl_train.fitted_q_train(det, epsilon0=0.4, **kw)
+    assert transitions() == rows_a
+    assert m_r.to_json() == m_a.to_json() and h_r == h_a
 
 
 # ------------------------------------------- oracle closed-form coefficients

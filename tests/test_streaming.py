@@ -481,3 +481,51 @@ def test_streaming_cardinality_matches_batch_sketch(spark, sf_dir, tmp_path):
     # at least two epoch partitions landed
     eps = spark.read.parquet(store).select("_epoch").distinct().count()
     assert eps >= 2
+
+
+def test_epoch_store_reads_are_declared(spark, sf_dir, tmp_path, monkeypatch, jobs_in_group):
+    """Every read of a store the streams wrote goes through store.read,
+    which declares the schema write_epoch recorded beside the partitions:
+    the fact store's prior-facts read and the trainer's replay-buffer read
+    (inside the micro-batches), current_link_graph and current_estimate
+    build with no Spark job and see the schema a footer read infers."""
+    import os
+
+    from autoextraction_spark import store
+    from autoextraction_spark.streaming import cardinality, kg_update, online_train
+    from autoextraction_spark.streaming import link_graph as lg
+    from autoextraction_spark.streaming.ingest import PAGES_DDL
+
+    in_dir = str(tmp_path / "landing")
+    dirs = {n: str(tmp_path / n) for n in ("facts", "links", "regs", "rl")}
+    buffer_dir = os.path.join(dirs["rl"], "replay_buffer")
+    links = spark.createDataFrame(
+        [(10**6 + i, f"https://a.com/p{i}", None, b'<a href="https://b.com/x">t</a>', None, "en")
+         for i in range(6)],
+        PAGES_DDL,
+    )
+    pages = corpus.web_pages(spark, sf_dir).filter(F.col("doc_id") < 40)
+    pages.unionByName(links).repartition(6).write.parquet(in_dir)
+
+    read, reads = store.read, []
+    monkeypatch.setattr(store, "read", lambda s, path: reads.append(path) or read(s, path))
+    for q in (
+        kg_update.stream_kg_maintenance(spark, in_dir, dirs["facts"], str(tmp_path / "c1")),
+        lg.stream_link_graph(spark, in_dir, dirs["links"], str(tmp_path / "c2")),
+        cardinality.stream_cardinality(spark, in_dir, dirs["regs"], str(tmp_path / "c3")),
+        online_train.stream_online_training(
+            spark, in_dir, dirs["rl"], str(tmp_path / "c4"), iters_per_batch=1
+        ),
+    ):
+        q.awaitTermination(300)
+    # six files at maxFilesPerTrigger=4 land as two micro-batches: the fact
+    # store's second epoch and every trainer epoch read their store
+    assert dirs["facts"] in reads and buffer_dir in reads
+
+    for path in (dirs["facts"], dirs["links"], dirs["regs"], buffer_dir):
+        assert jobs_in_group(f"read-{os.path.basename(path)}", lambda: read(spark, path)) == 0
+        assert read(spark, path).schema.simpleString() == (
+            spark.read.parquet(path).schema.simpleString()
+        )
+    assert jobs_in_group("link-graph", lambda: lg.current_link_graph(spark, dirs["links"])) == 0
+    assert jobs_in_group("estimate", lambda: cardinality.current_estimate(spark, dirs["regs"])) == 0
